@@ -14,7 +14,7 @@ import graft.queries.{CoreQueries, CurateQueries, ExtQueries, FidelityQueries, G
 object SparkEntry {
 
   /** All registered operators, merged from the query modules. */
-  def defs: Map[String, QueryDef] =
+  val defs: Map[String, QueryDef] =
     CoreQueries.all ++ ExtQueries.all ++ IngestQueries.all ++
       GeoQueries.all ++ StreamQueries.all ++ ScaleQueries.all ++
       FidelityQueries.all ++ TemporalQueries.all ++ TrainPrepQueries.all ++

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - S6 query-destination CTAS (`taxi_trips_etl.py:100-109`) → [[save]]
   *    with overwrite
   *  - S5 truncate-then-append load (`taxi_trips_etl.py:32-40,77-80`) →
-  *    [[save]](Overwrite) then [[append]]
+  *    [[save]] then [[append]]
   *  - S7 existence probe (`taxi_trips_etl.py:88-93`) → [[exists]]
   *  - S8 drop (`taxi_trips_etl.py:112,141`) → [[drop]]
   *  - S9 date-suffixed names (`taxi_trips_etl.py:118-124`) → plain string
@@ -37,23 +37,43 @@ final class Catalog(val spark: SparkSession, val warehouseDir: String) {
 
   def exists(name: String): Boolean = fs.exists(pathOf(name))
 
-  def save(name: String, df: DataFrame,
-           mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).parquet(pathOf(name).toString)
+  /** Write `df` as the table (overwrite). The pin is dropped before the
+    * write and `df.schema` pinned once it has succeeded, so a crash
+    * mid-write leaves no pin rather than a stale one. */
+  def save(name: String, df: DataFrame): Unit = {
+    unpin(name)
+    df.write.mode(SaveMode.Overwrite).parquet(pathOf(name).toString)
+    pinSchema(name, df.schema)
+  }
 
-  def append(name: String, df: DataFrame): Unit =
-    save(name, df, SaveMode.Append)
+  /** Append `df`. The pin survives only if it still describes every file:
+    * each appended field must be in it with the same type (a subset reads
+    * back null-filled); anything else drops the pin, and reads infer. */
+  def append(name: String, df: DataFrame): Unit = {
+    val covered = pinnedSchema(name).exists { pin =>
+      df.schema.forall(f =>
+        pin.find(_.name == f.name).exists(_.dataType == f.dataType))
+    }
+    if (!covered) unpin(name)
+    df.write.mode(SaveMode.Append).parquet(pathOf(name).toString)
+  }
 
-  def load(name: String): DataFrame =
-    spark.read.parquet(pathOf(name).toString)
+  /** Read the table through its pin when it has one (no schema-inference
+    * job); a table without a pin — written before pins, or outside the
+    * catalog — is read with footer inference. */
+  def load(name: String): DataFrame = read(name, pinnedSchema(name))
 
-  // ---- pinned schemas (schema evolution at catalog speed) ----------------
-  // `mergeSchema` footer reconciliation is an INGEST-time discovery tool:
-  // at 100 TB a million-file footer sweep is itself a job, so the superset
-  // schema is pinned here once (by the writer that evolved it, or by one
-  // discovery pass) and every query reads through [[loadPinned]] —
-  // `spark.read.schema(...)`, zero schema-inference I/O, missing columns
-  // null-filled per file by the vectorized reader.
+  // ---- pinned schemas (the catalog, not the footers, holds the schema) ---
+  // Every [[save]] pins the schema it wrote, and [[load]] reads through
+  // it, so reading a catalog-written table starts no schema-inference job
+  // (`ParquetFileFormat.inferSchema` is a one-task Spark job per read).
+  // [[append]], [[drop]] and [[rename]] keep the pin in step with the
+  // files. `mergeSchema` footer reconciliation stays an INGEST-time
+  // discovery tool: at 100 TB a million-file footer sweep is itself a
+  // job, so an evolved superset is pinned once (by the writer that
+  // evolved it, or by one discovery pass) and queries read through
+  // `spark.read.schema(...)`, missing columns null-filled per file by the
+  // vectorized reader.
 
   private def schemaPath(name: String): Path =
     new Path(root, s"_schemas/$name.json")
@@ -73,6 +93,8 @@ final class Catalog(val spark: SparkSession, val warehouseDir: String) {
       throw new IllegalStateException(s"failed to publish schema pin $dst")
   }
 
+  private def unpin(name: String): Unit = fs.delete(schemaPath(name), false)
+
   def pinnedSchema(name: String): Option[StructType] =
     if (!fs.exists(schemaPath(name))) None
     else {
@@ -87,8 +109,12 @@ final class Catalog(val spark: SparkSession, val warehouseDir: String) {
   def loadPinned(name: String): DataFrame = {
     val sch = pinnedSchema(name).getOrElse(throw new IllegalStateException(
       s"no pinned schema for table '$name' — pinSchema first"))
-    spark.read.schema(sch).parquet(pathOf(name).toString)
+    read(name, Some(sch))
   }
+
+  private def read(name: String, schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(s => spark.read.schema(s))
+      .parquet(pathOf(name).toString)
 
   /** Register under a logical name for spark.sql / dbt-style `ref` (S10/S11). */
   def view(name: String): Unit = load(name).createOrReplaceTempView(name)
@@ -96,13 +122,20 @@ final class Catalog(val spark: SparkSession, val warehouseDir: String) {
   /** Directory-rename table commit (staged single-action writes publish
     * through this; rename is atomic on the filesystems the catalog
     * targets). Fails loudly — a half-published table must not look like
-    * a clean short-circuit. */
-  def rename(from: String, to: String): Unit =
+    * a clean short-circuit. The pin moves with the table. */
+  def rename(from: String, to: String): Unit = {
+    unpin(to)
     if (!fs.rename(pathOf(from), pathOf(to)))
       throw new IllegalStateException(
         s"catalog rename $from -> $to failed under $warehouseDir")
+    pinnedSchema(from).foreach(pinSchema(to, _))
+    unpin(from)
+  }
 
+  /** Drop the table and its pin (pin first: a crash in between leaves an
+    * unpinned table, read by inference, never a pin without its files). */
   def drop(name: String): Unit = {
+    unpin(name)
     val p = pathOf(name)
     if (fs.exists(p)) fs.delete(p, true)
   }

@@ -148,7 +148,8 @@ object Runner {
   * the reference's BigQuery-table plumbing:
   *
   *  1. ingest    — date-path read (S1) + file-prefix glob (S2) →
-  *                 `temp_trips` (S5); gate: any rows? (C2)
+  *                 `temp_trips` (S5); gate: any rows? (C2), counted by
+  *                 the write itself
   *  2. normalize — keep-good filter (P2 shape) → `normalized_trips`
   *                 (WRITE_TRUNCATE, S6), drop `temp_trips` (S8)
   *  3. enrich    — W1 zone dedup + J1/J2 left joins + finish_rank=1 (P5) +
@@ -189,11 +190,18 @@ object TaxiPipeline {
       false
     } else {
       // S1 date-path prefix + S2 file-name prefix filter (FILE_PREFIX≙part-)
+      // C2 (any data this day?) rides the write: the day scan carries a
+      // CollectMetrics count, so the one write job also decides the gate
+      // and no re-read of `temp_trips` runs. An absent metric means no
+      // task saw a row (the zero-row-files day), the same rule as
+      // [[fusedRun]].
+      val gate = org.apache.spark.sql.Observation()
       val day = c.spark.read
         .option("pathGlobFilter", "part-*")
         .parquet(dayPath)
+        .observe(gate, count(lit(1)).as("rows"))
       c.save("temp_trips", day)
-      c.load("temp_trips").limit(1).count() > 0 // C2: any data this day?
+      gate.get.get("rows").exists(_.asInstanceOf[Long] > 0L)
     }
   })
 
@@ -310,8 +318,9 @@ object TaxiPipeline {
     * before `final_result`.
     *
     * Scale: 1 fact scan + 1 identity shuffle vs the staged mode's
-    * 4 writes + 4 re-reads + 2 scans + rejoin; the gate probe reads
-    * file metadata plus at most one row. */
+    * 4 writes + 3 re-reads (through the catalog's pinned schemas, so no
+    * inference jobs) + 2 scans + rejoin; the gate probe reads file
+    * metadata plus at most one row. */
   def fused(spark: SparkSession, sfDir: String, srcDir: String,
             ds: String): Option[DataFrame] =
     fusedObserved(spark, sfDir, srcDir, ds).flatMap { case (df, _) =>
@@ -343,7 +352,7 @@ object TaxiPipeline {
     *
     * Note the observation deliberately sits on the RAW day scan (the
     * gate counts pre-normalization rows, like the staged ingest's
-    * `temp_trips` probe), which pins the normalize filter ABOVE the
+    * observed `temp_trips` write), which pins the normalize filter ABOVE the
     * CollectMetrics node — pushing it into the scan would change the
     * observed count. The rows are read either way (the gate needs
     * them); only the scan-level filter skip is forgone, priced at one

@@ -17,4 +17,8 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** The fixture at another scale (e.g. "sf0.01"), next to [[sf]]. */
+  def fixture(scale: String): String =
+    java.nio.file.Paths.get(sf).resolveSibling(scale).toString
 }

@@ -7,10 +7,12 @@ import graft.core.Catalog
 
 class RunnerSpec extends SparkSpec {
 
-  private def freshCatalog(): Catalog =
-    new Catalog(spark, Files.createTempDirectory(
+  private def tempDir(prefix: String): String =
+    Files.createTempDirectory(
       java.nio.file.Paths.get(sys.props("user.dir"), "target"),
-      "wh_test").toString)
+      prefix).toString
+
+  private def freshCatalog(): Catalog = new Catalog(spark, tempDir("wh_test"))
 
   test("runner executes stages in order") {
     var order = Vector.empty[String]
@@ -37,6 +39,103 @@ class RunnerSpec extends SparkSpec {
     val missing = s"${cat.warehouseDir}/no_such_src"
     assert(TaxiPipeline.ingest(missing, "2099-01-01").run(cat) === false)
     assert(!cat.exists("temp_trips"))
+  }
+
+  /** Lays out the `events` rows of `ds` from fixture `dir` as the day's
+    * `part-*` directory under `base`; `keep = false` writes the part file
+    * with no rows. Runs on the shared session. */
+  private def writeDay(base: String, ds: String, keep: Boolean = true,
+                       dir: String = sf): Unit = {
+    import org.apache.spark.sql.functions._
+    val Array(y, m, d) = ds.split("-")
+    graft.eventsTbl(spark, dir)
+      .filter(to_date(col("ts")) === lit(ds).cast("date") && lit(keep))
+      .coalesce(1).write.parquet(s"$base/$y/$m/$d")
+  }
+
+  test("empty-day gate (C2): a day with part files but no rows stops the " +
+      "staged run after ingest") {
+    val cat = freshCatalog()
+    val src = tempDir("zsrc_test")
+    writeDay(src, "2024-01-06", keep = false)
+    val ran = Runner.run(cat,
+      TaxiPipeline.stages(spark, sf, src, "2024-01-06"))
+    assert(ran === Seq("ingest")) // normalize never runs
+    assert(cat.tables() === Seq("temp_trips"))
+    assert(cat.load("temp_trips").count() === 0L)
+  }
+
+  /** Spark jobs started under the Runner's stage job groups
+    * (`graft-stage-<stage>-<nanos>`) while `body` runs on this thread,
+    * counted per stage. Jobs are told apart from other suites' by a local
+    * property the stage threads inherit; a marker job delivered after
+    * them makes the count final without a sleep (the listener bus is
+    * FIFO). */
+  private def stageJobs(body: => Unit): Map[String, Int] = {
+    val sc = spark.sparkContext
+    val tag = s"runner-spec-${java.util.UUID.randomUUID()}"
+    val marker = s"graft-marker-$tag"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("graft.spec.tag").contains(tag))
+          prop("spark.jobGroup.id").foreach { g =>
+            if (g == marker) markerSeen.countDown()
+            else if (g.startsWith("graft-stage-")) groups.add(g)
+          }
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.tag", tag)
+    try {
+      body
+      sc.setJobGroup(marker, "job-count marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(10, java.util.concurrent.TimeUnit.SECONDS),
+        "marker job event never delivered")
+      groups.toArray(Array.empty[String]).toSeq
+        .map { g => val st = g.stripPrefix("graft-stage-")
+          st.take(st.lastIndexOf('-')) }
+        .groupBy(identity).map { case (st, js) => st -> js.size }
+    } finally {
+      sc.setLocalProperty("graft.spec.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("job budget: a staged day runs 16 Spark jobs, and loading a " +
+      "catalog-written table runs none") {
+    val cat = freshCatalog()
+    val src = tempDir("jsrc_test")
+    val ds = "2024-01-05"
+    // sf0.1 days hold ~3,300 rows, the benchmark's day size; AQE's stage
+    // count in enrich depends on it (one fewer job on smaller days)
+    val sf01 = fixture("sf0.1")
+    writeDay(src, ds, dir = sf01)
+    val jobs = stageJobs {
+      assert(Runner.run(cat, TaxiPipeline.stages(spark, sf01, src, ds))
+        .size === 4)
+    }
+    // ingest: source-day schema inference + the write, which also counts
+    // the C2 gate rows; normalize: the write (its read goes through the
+    // pin); enrich: `nation` schema inference + AQE stages and the write;
+    // final_result: AQE stages and the write
+    assert(jobs === Map("ingest" -> 2, "normalize" -> 1, "enrich" -> 7,
+      "final_result" -> 6))
+    assert(jobs.values.sum === 16)
+    def loadJobs(table: String): Int = stageJobs {
+      Runner.run(cat, Seq(Stage("load", { c => c.load(table); true })))
+    }.values.sum
+    assert(loadJobs(s"most_populars_${TaxiPipeline.dsNoDash(ds)}") === 0)
+    // control: a table written outside the catalog has no pin, so its
+    // read infers, and the counter must see that job
+    import spark.implicits._
+    Seq(1L).toDF("x").write.parquet(s"${cat.warehouseDir}/outside")
+    assert(loadJobs("outside") === 1)
   }
 
   test("existence gate (C3): normalize skips when temp_trips is missing") {
@@ -106,9 +205,7 @@ class RunnerSpec extends SparkSpec {
     // it out twice, and afterwards NO active query may remain in the
     // session — a leaked stream would also poison every later test in
     // this suite's shared session.
-    val srcDir = Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props("user.dir"), "target"),
-      "stream_hang").toString
+    val srcDir = tempDir("stream_hang")
     import spark.implicits._
     Seq(1L, 2L).toDF("x").write.mode("overwrite").parquet(srcDir)
     val before = spark.streams.active.length
@@ -146,12 +243,8 @@ class RunnerSpec extends SparkSpec {
       "write; commit only when the observed C2 gate passes") {
     import org.apache.spark.sql.functions._
     val s = spark.newSession()
-    val cat = new Catalog(s, Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props("user.dir"), "target"),
-      "wh_test").toString)
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props("user.dir"), "target"),
-      "fsrc_test").toString
+    val cat = new Catalog(s, tempDir("wh_test"))
+    val base = tempDir("fsrc_test")
     val ds = "2024-01-05"
     // fixture write runs on the OUTER shared session deliberately (r16
     // verdict item 1): ExecutionListenerBus delivers only events whose
@@ -161,9 +254,7 @@ class RunnerSpec extends SparkSpec {
     // async. Every event the listener below sees is an action of `s`,
     // and between registration and the marker the only code running
     // actions on `s` is fusedRun itself.
-    graft.eventsTbl(spark, sf)
-      .filter(to_date(col("ts")) === lit(ds).cast("date"))
-      .coalesce(1).write.parquet(s"$base/2024/01/05")
+    writeDay(base, ds)
     // session-scoped action counter: the single-action claim is the
     // point of the design (the old form ran a limit-1 gate count PLUS
     // the write — two actions)
