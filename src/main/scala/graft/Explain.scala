@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for every registered query (or
   * the names given as args) to `target/plans/<name>.txt`, for plan audits
   * — check PushedFilters reach the scan, small dims broadcast, top-k
@@ -11,21 +9,12 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = graft.core.GraftSession.local(4, "graft-explain", Map(
+      "spark.sql.shuffle.partitions" -> "4",
       // data-sized initial shuffle partitions — rationale + A/B numbers
       // on GraftSession.initialShufflePartitions
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.core.GraftSession.initialShufflePartitions(sfDir,
-          32).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        graft.core.GraftSession.initialShufflePartitions(sfDir, 32).toString))
     spark.sparkContext.setLogLevel("ERROR")
     val out = Paths.get("target", "plans")
     Files.createDirectories(out)

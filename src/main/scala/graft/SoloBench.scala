@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: min-of-N back-to-back timing for ANY registered query —
   * including non-headline twins (`c_pipeline_fused`, `q_taxi_fused`)
   * that `Bench` deliberately excludes to keep the headline series
@@ -15,16 +13,12 @@ object SoloBench {
     require(args.nonEmpty, "pass query names")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val samples = sys.env.getOrElse("SPARK_GRAFT_BENCH_SAMPLES", "5").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local(32, "graft-solobench", Map(
+      "spark.sql.shuffle.partitions" -> "32",
+      // data-sized initial shuffle partitions, as Bench sizes them
+      // (rationale on GraftSession.initialShufflePartitions)
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        graft.core.GraftSession.initialShufflePartitions(sfDir, 32).toString))
     spark.sparkContext.setLogLevel("ERROR")
     graft.core.TableStats.analyze(spark, sfDir)
     def fnOf(name: String) = {

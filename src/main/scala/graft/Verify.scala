@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,22 +16,14 @@ object Verify {
       sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // data-sized initial shuffle partitions — rationale + A/B numbers
-      // on GraftSession.initialShufflePartitions
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.core.GraftSession.initialShufflePartitions(sfDir, cpus.toInt)
-          .toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(cpus.toInt, "graft-verify",
+      Map(
+        "spark.sql.shuffle.partitions" -> cpus,
+        // data-sized initial shuffle partitions — rationale + A/B numbers
+        // on GraftSession.initialShufflePartitions
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+          graft.core.GraftSession.initialShufflePartitions(sfDir, cpus.toInt)
+            .toString))
     // ANALYZE: catalog stats for the cost-based skip-partial rule — the
     // once-per-load warehouse step (see Bench for rationale)
     graft.core.TableStats.analyze(spark, sfDir)

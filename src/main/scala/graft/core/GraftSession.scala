@@ -50,6 +50,39 @@ object GraftSession {
     math.min(1024, math.max(cores, bySize))
   }
 
+  /** Size of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100), sized to the
+    * engine's working set rather than to one query.
+    *
+    * The cache is an LRU over compiled (Janino) classes, and a repeated
+    * workload visits its classes in a cycle. An LRU smaller than a
+    * cyclic working set misses on EVERY access, so each pass recompiles
+    * all of it — mostly inside tasks, where it shows as task time, not
+    * as extra jobs. Measured at the default size, in compiles per
+    * repeated pass:
+    *  - one `corpus_curation` pass (the ten corpus operators): 282–331;
+    *  - one staged taxi backfill day: 66 (fits the default either way);
+    *  - one pass of Bench's 43 benched queries at sf0.01: 859–860, the
+    *    largest repeated set the engine has. A whole Bench run at this
+    *    size (ANALYZE, warm-up at sf0.001, three passes) compiles 855
+    *    distinct classes.
+    *
+    * At 2048 a repeated corpus pass compiles 0 classes (`CodegenCacheSpec`
+    * pins it). A repeated Bench pass compiles 0 too, except where a
+    * query's generated code varies from run to run: j_enrich_join_graph
+    * and x_containment_pairs generate a few classes not seen before on
+    * some runs (6 compiles in pass 2, 0 in pass 3). 4096 does the same
+    * (0, then 4), so those are new classes, not evictions.
+    * The cache size changes no plan: jobs, stages, tasks and shuffle
+    * bytes stay identical.
+    *
+    * Once per JVM: the cache is built when `CodeGenerator` is first
+    * used, from the conf active at that moment. A session must
+    * therefore be built here BEFORE anything in the JVM generates code;
+    * a session built outside this factory keeps the 100-entry cache and
+    * recompiles on every pass. */
+  val CodegenCacheEntries: Int = 2048
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             appName: String = "graft",
             extraConf: Map[String, String] = Map.empty): SparkSession = {
@@ -66,6 +99,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,7 @@
 package graft.core
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -99,13 +100,19 @@ object TableStats {
     }
   }
 
-  /** ANALYZE every fixture table under `dir` (idempotent per path). */
+  /** ANALYZE every fixture table under `dir` (idempotent per path). An
+    * absent table is skipped; an unreadable one gets no stats and one
+    * stderr line, and the others are still analyzed. Fatal errors and
+    * interrupts propagate. */
   def analyze(spark: SparkSession, dir: String): Unit =
     FixtureTables.foreach { t =>
       val p = s"$dir/$t.parquet"
       if (new java.io.File(p).exists() ||
           p.startsWith("hdfs:") || p.startsWith("s3"))
         try analyzeTable(spark.read.parquet(p))
-        catch { case _: Throwable => () } // absent/unreadable: no stats
+        catch { case NonFatal(e) =>
+          System.err.println(
+            s"[graft] TableStats: $t not analyzed: ${e.toString.linesIterator.next()}")
+        }
     }
 }
