@@ -27,13 +27,7 @@ object ScaleGen {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("target/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local(32, "graft-scalegen")
     spark.sparkContext.setLogLevel("ERROR")
     try run(spark, src, out, copies)
     finally spark.stop()

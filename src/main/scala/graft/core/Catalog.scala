@@ -122,8 +122,14 @@ final class Catalog(val spark: SparkSession, val warehouseDir: String) {
   /** Directory-rename table commit (staged single-action writes publish
     * through this; rename is atomic on the filesystems the catalog
     * targets). Fails loudly — a half-published table must not look like
-    * a clean short-circuit. The pin moves with the table. */
+    * a clean short-circuit. The pin moves with the table. An existing
+    * `to` is refused before any pin or file is touched: a directory
+    * rename onto it would nest `from` inside it. Drop `to` first. */
   def rename(from: String, to: String): Unit = {
+    if (exists(to))
+      throw new IllegalStateException(
+        s"catalog rename $from -> $to: table '$to' exists under " +
+          s"$warehouseDir; drop it first")
     unpin(to)
     if (!fs.rename(pathOf(from), pathOf(to)))
       throw new IllegalStateException(

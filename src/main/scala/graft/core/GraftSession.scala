@@ -1,5 +1,8 @@
 package graft.core
 
+import java.net.URI
+
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory (SURVEY.md §7.1 module 1).
@@ -83,6 +86,30 @@ object GraftSession {
     * recompiles on every pass. */
   val CodegenCacheEntries: Int = 2048
 
+  /** The `file:` filesystem bindings: Hadoop's `FileSystem` and
+    * `FileContext` (streaming checkpoints and state stores) both resolve
+    * `file:` to the graft classes in `LocalFs.scala`, which set
+    * permissions through `java.nio` instead of a forked `chmod`.
+    *
+    * Spark's distribution ships no libhadoop, so Hadoop's
+    * `RawLocalFileSystem` forks `chmod` for every directory and file it
+    * creates, `.crc` files included. JFR counted 44 forks per staged
+    * taxi day at sf0.1 (16 in task-side parquet file creation, 12 in the
+    * committer's `setupJob`, 8 in `commitJob`, 8 in `Catalog.pinSchema`)
+    * at 5.8–6.1 ms each in a 3 GB JVM, against 3–15 µs for the in-process
+    * `chmod(2)`. One `st_h3_enrich` run forked 170 (58 `chmod`, 112
+    * `readlink` from `FileContext` renames of checkpoint and state
+    * files). Bound, both fork none (`LocalFsSpec` pins it).
+    *
+    * Once per JVM: Hadoop caches `FileSystem` instances JVM-wide by
+    * scheme, authority and user, not by conf. If anything in the JVM
+    * resolved `file:` before this factory's first session, that cached
+    * instance wins, and [[local]] prints a loud stderr line. */
+  val LocalFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[GraftLocalFs].getName)
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             appName: String = "graft",
             extraConf: Map[String, String] = Map.empty): SparkSession = {
@@ -100,9 +127,15 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
-    extraConf.foreach { case (k, v) => b.config(k, v) }
+    (LocalFsConf ++ extraConf).foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val fileFs = FileSystem.get(URI.create("file:///"),
+      spark.sessionState.newHadoopConf())
+    if (!fileFs.isInstanceOf[GraftLocalFileSystem])
+      System.err.println(s"[graft] WARNING: file: resolves to " +
+        s"${fileFs.getClass.getName}, not GraftLocalFileSystem: it was " +
+        "cached before this session, so every local write forks chmod")
     spark
   }
 }

@@ -169,38 +169,44 @@ object TaxiPipeline {
   /** `ds` (e.g. "2024-01-05") → "yyyyMMdd" table suffix (F11). */
   def dsNoDash(ds: String): String = ds.replace("-", "")
 
-  def ingest(srcDir: String, ds: String): Stage = Stage("ingest", { c =>
+  /** S1: the day's source directory, `srcDir/yyyy/MM/dd`. */
+  private def dayPath(srcDir: String, ds: String): String = {
     val Array(y, m, d) = ds.split("-")
-    val dayPath = s"$srcDir/$y/$m/$d"
-    // An absent date path IS the reference's "empty day" (no blobs under
-    // the prefix, `taxi_trips_etl.py:33`): gate false, don't crash.
-    val fs = new org.apache.hadoop.fs.Path(dayPath)
-      .getFileSystem(c.spark.sessionState.newHadoopConf())
-    // A day directory that exists but holds no part-* files (e.g. only
-    // _SUCCESS after an empty write) is ALSO an empty day: reading it
-    // would throw "Unable to infer schema", not gate false.
-    // (globStatus may return null rather than an empty array on some
-    // Hadoop filesystems when nothing matches — treat both as empty.)
-    val hasData = fs.exists(new org.apache.hadoop.fs.Path(dayPath)) &&
-      Option(fs.globStatus(
-        new org.apache.hadoop.fs.Path(dayPath, "part-*")))
-        .exists(_.nonEmpty)
-    if (!hasData) {
-      println(s"[pipeline] no data under $dayPath; short-circuiting")
+    s"$srcDir/$y/$m/$d"
+  }
+
+  /** The metadata gate (C2/C3), decided from file listings without a
+    * job. An absent date path IS the reference's "empty day" (no blobs
+    * under the prefix, `taxi_trips_etl.py:33`). A day directory that
+    * exists but holds no part-* files (e.g. only _SUCCESS after an empty
+    * write) is ALSO an empty day: reading it would throw "Unable to infer
+    * schema". (globStatus may return null rather than an empty array on
+    * some Hadoop filesystems when nothing matches — both are empty.) */
+  private def hasDayFiles(spark: SparkSession, dayPath: String): Boolean = {
+    val dir = new org.apache.hadoop.fs.Path(dayPath)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.exists(dir) && Option(fs.globStatus(
+      new org.apache.hadoop.fs.Path(dir, "part-*"))).exists(_.nonEmpty)
+  }
+
+  /** S2: the day's `part-*` files (FILE_PREFIX ≙ part-). */
+  private def readDay(spark: SparkSession, dayPath: String): DataFrame =
+    spark.read.option("pathGlobFilter", "part-*").parquet(dayPath)
+
+  def ingest(srcDir: String, ds: String): Stage = Stage("ingest", { c =>
+    val day = dayPath(srcDir, ds)
+    if (!hasDayFiles(c.spark, day)) {
+      println(s"[pipeline] no data under $day; short-circuiting")
       false
     } else {
-      // S1 date-path prefix + S2 file-name prefix filter (FILE_PREFIX≙part-)
       // C2 (any data this day?) rides the write: the day scan carries a
       // CollectMetrics count, so the one write job also decides the gate
       // and no re-read of `temp_trips` runs. An absent metric means no
       // task saw a row (the zero-row-files day), the same rule as
       // [[fusedRun]].
       val gate = org.apache.spark.sql.Observation()
-      val day = c.spark.read
-        .option("pathGlobFilter", "part-*")
-        .parquet(dayPath)
-        .observe(gate, count(lit(1)).as("rows"))
-      c.save("temp_trips", day)
+      c.save("temp_trips",
+        readDay(c.spark, day).observe(gate, count(lit(1)).as("rows")))
       gate.get.get("rows").exists(_.asInstanceOf[Long] > 0L)
     }
   })
@@ -326,16 +332,9 @@ object TaxiPipeline {
     fusedObserved(spark, sfDir, srcDir, ds).flatMap { case (df, _) =>
       // eager row gate for the Option contract (one limit-1 job);
       // single-action callers use the observation instead (fusedRun)
-      val dayPath = fusedDayPath(srcDir, ds)
-      val day = spark.read.option("pathGlobFilter", "part-*")
-        .parquet(dayPath)
-      if (day.limit(1).count() == 0) None else Some(df)
+      if (readDay(spark, dayPath(srcDir, ds)).limit(1).count() == 0) None
+      else Some(df)
     }
-
-  private def fusedDayPath(srcDir: String, ds: String): String = {
-    val Array(y, m, d) = ds.split("-")
-    s"$srcDir/$y/$m/$d"
-  }
 
   /** The fused chain with the C2 ROW gate folded into the single plan
     * (round 15, verdict item 4) via `Dataset.observe`: the day scan
@@ -359,17 +358,10 @@ object TaxiPipeline {
     * column-pruned pass over one day's partition. */
   def fusedObserved(spark: SparkSession, sfDir: String, srcDir: String,
       ds: String): Option[(DataFrame, org.apache.spark.sql.Observation)] = {
-    val dayPath = fusedDayPath(srcDir, ds)
-    val fs = new org.apache.hadoop.fs.Path(dayPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val hasFiles = fs.exists(new org.apache.hadoop.fs.Path(dayPath)) &&
-      Option(fs.globStatus(
-        new org.apache.hadoop.fs.Path(dayPath, "part-*")))
-        .exists(_.nonEmpty)
-    if (!hasFiles) return None
+    val path = dayPath(srcDir, ds)
+    if (!hasDayFiles(spark, path)) return None
     val gate = org.apache.spark.sql.Observation()
-    val day = spark.read.option("pathGlobFilter", "part-*").parquet(dayPath)
-      .observe(gate, count(lit(1)).as("rows"))
+    val day = readDay(spark, path).observe(gate, count(lit(1)).as("rows"))
     val norm = day.filter(
       col("event_type") =!= "error" &&
         col("value") =!= 0 && col("value").isNotNull &&

@@ -144,6 +144,22 @@ class SchemaPinSpec extends SparkSpec {
       Seq(1L -> "a"))
   }
 
+  test("rename onto an existing table throws and leaves both tables and " +
+      "pins as they were") {
+    val cat = freshCat()
+    val a = Seq((1L, "a")).toDF("k", "s")
+    val b = Seq((2.0, 3L)).toDF("x", "y")
+    cat.save("a", a)
+    cat.save("b", b)
+    intercept[IllegalStateException](cat.rename("a", "b"))
+    assert(cat.tables() === Seq("a", "b"))
+    assert(cat.pinnedSchema("a") === Some(a.schema))
+    assert(cat.pinnedSchema("b") === Some(b.schema))
+    assert(cat.load("a").as[(Long, String)].collect().toSeq === Seq(1L -> "a"))
+    assert(cat.load("b").as[(Double, Long)].collect().toSeq === Seq(2.0 -> 3L))
+    assert(!Files.exists(Paths.get(cat.warehouseDir, "b", "a")))
+  }
+
   test("every staged table of a pipeline day reads back through its pin " +
       "with the inferred schema (sf0.01)") {
     val sf001 = fixture("sf0.01")
