@@ -174,10 +174,8 @@ object Bench {
       spark.catalog.clearCache()
       // blocking (round 13): with blocking=false the block-removal work
       // is enqueued async and lands INSIDE the next timed sample
-      val blockingUnpersist =
-        !sys.env.get("SPARK_GRAFT_BLOCKING_UNPERSIST").contains("0")
       spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = blockingUnpersist))
+        .foreach(_.unpersist(blocking = true))
       System.gc()
     }
 

@@ -507,9 +507,9 @@ object H3 {
           // bearing quantization yields the INVERSE rotation. The
           // digit-level cross-chart consistency law (for edge isometry
           // rotation c: rot_F − rot_G ≡ +c (mod 6), proven via the
-          // aperture-7/isometry commutation and verified exhaustively
-          // by probeCoordConsistency) picks the sign: with the raw
-          // nRot every c∈{1,5} edge pair violates it by 2c, with the
+          // aperture-7/isometry commutation and pinned exhaustively by
+          // H3Spec's cross-chart consistency laws) picks the sign: with
+          // the raw nRot every c∈{1,5} edge pair violates it by 2c, with the
           // negation all pairs satisfy it. c=3 edges (280 of 420 slot
           // pairs) are sign-blind, which is how the raw sign survived
           // ten rounds of single-chart tests.
@@ -803,17 +803,6 @@ object H3 {
         }
       }
       rec(0)
-      if (System.getProperty("graft.h3.debug") != null) {
-        println(s"pent $bc home=$homeFace faces=${faces.toList} " +
-          s"edges=${edges.map { case (e, ps) => s"$e:${ps.size}" }.toList}")
-        for (sv <- survivors.take(8)) {
-          val a = (0 to otherFaces.size).map { d =>
-            val f = if (d == 0) homeFace else otherFaces(d - 1)
-            s"$f->${combosOf(f)(sv(d))}"
-          }
-          println(s"  survivor: ${a.mkString(" ")}")
-        }
-      }
       require(survivors.nonEmpty, s"pentagon $bc: fan CSP has no solution")
       // rots must be pinned uniquely; cw flags may be unconstrained
       for (d <- 0 to otherFaces.size) {
@@ -1629,74 +1618,14 @@ object H3 {
     gridDisk(java.lang.Long.parseUnsignedLong(hex, 16), k)
       .map(c => f"$c%x")
 
-  /** Off-edge isometry probe for [[graft.functions.H3IsoDbg]]: sample
-    * points just INSIDE the neighbor face across edge `e` of face `f`,
-    * compare the neighbor chart's direct lattice rounding with the
-    * isometry image of the home chart's rounding. Returns
-    * (neighborFace, (samples, mismatches, first few axial offsets)). */
-  private[functions] def probeEdgeIso(f: Int, e: Int,
-      res: Int): (Int, (Int, Int, List[(Long, Long)])) = {
-    val g = EdgeFace(f)(e)
-    val (a1, b1) = FaceVertAxial(e)
-    val (a2, b2) = FaceVertAxial((e + 1) % 3)
-    val (vla1, vlo1) = hex2dToGeoRes0(f, a1.toDouble - 0.5 * b1, b1 * Sin60)
-    val (vla2, vlo2) = hex2dToGeoRes0(f, a2.toDouble - 0.5 * b2, b2 * Sin60)
-    val v1 = Array(cos(vla1) * cos(vlo1), cos(vla1) * sin(vlo1), sin(vla1))
-    val v2 = Array(cos(vla2) * cos(vlo2), cos(vla2) * sin(vlo2), sin(vla2))
-    val gC = Array(FaceX(g), FaceY(g), FaceZ(g))
-    val pitch = atan(Res0UGnomonic) / math.pow(Sqrt7, res)
-    var total = 0
-    var mis = 0
-    var offs = List.empty[(Long, Long)]
-    for (tI <- 1 to 19; dI <- 1 to 3) {
-      val t = tI / 20.0
-      // point on the edge chord, pushed toward G's center by dI·0.4
-      // pitch, renormalized to the sphere
-      val push = dI * 0.4 * pitch
-      val ex = v1(0) * (1 - t) + v2(0) * t
-      val ey = v1(1) * (1 - t) + v2(1) * t
-      val ez = v1(2) * (1 - t) + v2(2) * t
-      val en = sqrt(ex * ex + ey * ey + ez * ez)
-      var px = ex / en; var py = ey / en; var pz = ez / en
-      // tangential direction toward G's center
-      val dotG = px * gC(0) + py * gC(1) + pz * gC(2)
-      var tx = gC(0) - dotG * px; var ty = gC(1) - dotG * py
-      var tz = gC(2) - dotG * pz
-      val tn = sqrt(tx * tx + ty * ty + tz * tz)
-      tx /= tn; ty /= tn; tz /= tn
-      px += tx * push; py += ty * push; pz += tz * push
-      val pn = sqrt(px * px + py * py + pz * pz)
-      px /= pn; py /= pn; pz /= pn
-      val latR = asin(max(-1.0, min(1.0, pz)))
-      val lngR = atan2(py, px)
-      // direct: neighbor-chart rounding
-      val pg = projectRound(latR, lngR, res, g)
-      val ga = (pg >>> 32) - 1073741824L
-      val gb = (pg & 0xFFFFFFFFL) - 1073741824L
-      // home-chart rounding + isometry
-      val pf = projectRound(latR, lngR, res, f)
-      val fa = (pf >>> 32) - 1073741824L
-      val fb = (pf & 0xFFFFFFFFL) - 1073741824L
-      val c = EdgeRot(f)(e)(res)
-      var xa = fa; var xb = fb
-      var k = 0
-      while (k < c) { val tt = xa - xb; xb = xa; xa = tt; k += 1 }
-      xa += EdgeTA(f)(e)(res)
-      xb += EdgeTB(f)(e)(res)
-      total += 1
-      if (xa != ga || xb != gb) {
-        mis += 1
-        if (offs.size < 5) offs ::= ((xa - ga, xb - gb))
-      }
-    }
-    (g, (total, mis, offs))
-  }
-
   /** Count of HEXAGON cross-chart assembly disagreements at `res` —
     * the spec-pinned round-12 consistency invariant (must be 0; see
-    * `H3Spec`). Pentagon-base-cell ids are excluded: their digit
-    * strings live in the 5-sector quotient where the plain hexagonal
-    * isometry does not apply across the deleted axis. */
+    * `H3Spec`): a hexagon assembled in one chart must assemble to the
+    * same cell through the edge isometry (a pentagon on the other side
+    * counts as a disagreement). Pentagon-base-cell ids on the home side
+    * are excluded: their digit strings live in the 5-sector quotient
+    * where the plain hexagonal isometry does not apply across the
+    * deleted axis ([[pentIsoOrbitStats]] checks them). */
   private[functions] def countHexIsoMismatches(res: Int): Int = {
     var mis = 0
     val lim = TriW(res).map(w => max(abs(w._1), abs(w._2))).max + 4
@@ -1715,7 +1644,7 @@ object H3 {
             xa += EdgeTA(f)(e)(res)
             xb += EdgeTB(f)(e)(res)
             val hG = assembleFromChart(g, xa, xb, 0L, res)
-            if (hG >= 0 && !IsPent(getBaseCell(hG)) && hF != hG) mis += 1
+            if (hG >= 0 && hF != hG) mis += 1
           }
           b += 1
         }
@@ -1727,9 +1656,11 @@ object H3 {
 
   /** Pentagon-quotient consistency stats (round 12, the deleted-axis
     * analogue of [[countHexIsoMismatches]]): for every face edge and
-    * every coordinate X where BOTH charts assemble into the SAME
-    * pentagon base cell, the two canonical labels must lie in one
-    * order-5 pentagon-rotation orbit, and the orbit step must be the
+    * every coordinate X where BOTH charts assemble and the home chart's
+    * cell is a pentagon, the two canonical labels must lie in one
+    * order-5 pentagon-rotation orbit (so in particular share the base
+    * cell — a cross-chart base-cell disagreement counts as out of
+    * orbit), and the orbit step must be the
     * same for every such coordinate of that (face, edge, baseCell) —
     * the hexagonal edge isometry is off by exactly the vertex's
     * curvature defect inside the pentagon's 5-sector quotient, a
@@ -1759,7 +1690,7 @@ object H3 {
             xa += EdgeTA(f)(e)(res)
             xb += EdgeTB(f)(e)(res)
             val hG = assembleFromChart(g, xa, xb, 0L, res)
-            if (hG >= 0 && getBaseCell(hG) == getBaseCell(hF)) {
+            if (hG >= 0) {
               pairs += 1
               var k = 0
               var cur = hF
@@ -1782,98 +1713,6 @@ object H3 {
       }
     }
     (pairs, outOfOrbit, steps.toMap)
-  }
-
-  /** Coordinate-level label-consistency probe: for every edge and a
-    * dense coordinate patch, compare assembleF(X) with
-    * assembleG(iso_r(X)) wherever both are defined. */
-  private[functions] def probeCoordConsistency(res: Int): Unit = {
-    var both = 0
-    var mis = 0
-    val ex = scala.collection.mutable.ArrayBuffer.empty[String]
-    val lim = TriW(res).map(w => max(abs(w._1), abs(w._2))).max + 4
-    for (f <- 0 until 20; e <- 0 until 3) {
-      val g = EdgeFace(f)(e)
-      val c = EdgeRot(f)(e)(res)
-      var a = -lim
-      while (a <= lim) {
-        var b = -lim
-        while (b <= lim) {
-          val hF = assembleFromChart(f, a, b, 0L, res)
-          if (hF >= 0) {
-            var xa = a; var xb = b
-            var n = 0
-            while (n < c) { val t = xa - xb; xb = xa; xa = t; n += 1 }
-            xa += EdgeTA(f)(e)(res)
-            xb += EdgeTB(f)(e)(res)
-            val hG = assembleFromChart(g, xa, xb, 0L, res)
-            if (hG >= 0) {
-              both += 1
-              if (hF != hG) {
-                mis += 1
-                if (!IsPent(getBaseCell(hF)) && !IsPent(getBaseCell(hG)))
-                  ex += f"HEX MISMATCH f=$f e=$e g=$g X=($a,$b) " +
-                    f"iso=($xa,$xb) hF=0x$hF%x hG=0x$hG%x"
-                else if (ex.size < 4)
-                  ex += f"(pent) f=$f e=$e X=($a,$b) hF=0x$hF%x hG=0x$hG%x"
-              }
-            }
-          }
-          b += 1
-        }
-        a += 1
-      }
-    }
-    println(s"res $res: $both coords defined both sides, $mis mismatches")
-    ex.foreach(s => println("  " + s))
-  }
-
-  /** Table-consistency probe for [[graft.functions.H3TabDbg]]: for
-    * each edge, map every res-0 slot through the res-0 isometry and
-    * compare base cells and rotation deltas. */
-  private[functions] def probeTableConsistency(): Unit = {
-    var bcMis = 0
-    var slots = 0
-    // delta histogram keyed (c, rotF - rotG mod 6) for hexagon slots
-    val hist = scala.collection.mutable.Map.empty[(Int, Int), Int]
-    val mism = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (f <- 0 until 20; e <- 0 until 3) {
-      val g = EdgeFace(f)(e)
-      val c = EdgeRot(f)(e)(0)
-      for (i <- 0 to 2; j <- 0 to 2; k <- 0 to 2
-           if TabBc(tabIdx(f, i, j, k)) >= 0) {
-        val a0 = i.toLong - k; val b0 = j.toLong - k
-        var xa = a0; var xb = b0
-        var n = 0
-        while (n < c) { val t = xa - xb; xb = xa; xa = t; n += 1 }
-        xa += EdgeTA(f)(e)(0)
-        xb += EdgeTB(f)(e)(0)
-        val m = min(xa, min(xb, 0L))
-        val (gi, gj, gk) = (xa - m, xb - m, -m)
-        if (gi <= 2 && gj <= 2 && gk <= 2 &&
-            TabBc(tabIdx(g, gi, gj, gk)) >= 0) {
-          slots += 1
-          val bcF = TabBc(tabIdx(f, i, j, k))
-          val bcG = TabBc(tabIdx(g, gi, gj, gk))
-          if (bcF != bcG) {
-            bcMis += 1
-            if (mism.size < 20)
-              mism += s"bc mismatch f=$f($i,$j,$k)=$bcF vs g=$g($gi,$gj,$gk)=$bcG"
-          } else if (!IsPent(bcF)) {
-            val rF = TabRot(tabIdx(f, i, j, k))
-            val rG = TabRot(tabIdx(g, gi, gj, gk))
-            val d = ((rF - rG) % 6 + 6) % 6
-            hist((c, d)) = hist.getOrElse((c, d), 0) + 1
-          }
-        }
-      }
-    }
-    println(s"slots mapped in-table: $slots, bc mismatches: $bcMis")
-    mism.foreach(s => println("  " + s))
-    println("rot delta histogram (edgeRotC, (rotF-rotG) mod 6) -> count:")
-    hist.toSeq.sortBy(x => (x._1._1, x._1._2)).foreach { case ((c, d), n) =>
-      println(f"  c=$c d=$d : $n")
-    }
   }
 
   // ------------------------------------------------------------------

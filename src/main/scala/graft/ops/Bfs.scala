@@ -88,7 +88,7 @@ object Bfs {
     */
   def distances(seeds: DataFrame, edges: DataFrame, maxHops: Int,
       broadcastRowCap: Long = 1L << 20,
-      hotKeyThreshold: Long = Components.DefaultHotKeyThreshold,
+      hotKeyThreshold: Long = HotKeys.DefaultHotKeyThreshold,
       observer: Option[HotKeys.Stats => Unit] = None,
       undirected: Boolean = false,
       edgesAtHop: Option[Int => DataFrame] = None): Result = {
@@ -116,8 +116,8 @@ object Bfs {
     // fixture at the default cap — pays nothing).
     lazy val hotDegreeNodes: Option[DataFrame] = {
       val deg = edges.groupBy("a").agg(count(lit(1)).as("deg"))
-      HotKeys.detect(edges.sparkSession, deg, "a", "deg",
-        hotKeyThreshold, "BFS frontier join", observer)
+      HotKeys.detect(edges.sparkSession, deg, "deg", hotKeyThreshold,
+        "BFS frontier join", observer)
     }
     var prevFrontier: Option[DataFrame] = None
     var prevFrontierRows = 0L

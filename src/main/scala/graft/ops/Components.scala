@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components via the alternating large-star /
@@ -11,15 +10,14 @@ import org.apache.spark.sql.functions._
   *
   * Why not plain min-label propagation: label flooding needs O(diameter)
   * rounds; alternating star contraction converges in O(log² n) rounds on
-  * any graph, and each round is two map-side-combinable `groupBy.min`
-  * shuffles plus a join — no `collect_list` of neighborhoods, so a hub
-  * node with millions of neighbors (the 100 TB failure mode of
-  * groupByKey-based CC) never materializes an in-memory adjacency list.
+  * any graph, and each round attaches a per-key minimum twice — no
+  * `collect_list` of neighborhoods, so a hub node with millions of
+  * neighbors (the 100 TB failure mode of groupByKey-based CC) never
+  * materializes an in-memory adjacency list.
   *
   * Round structure, operating on a canonical down-edge set (hi > lo):
   *  - large-star: for each node u, every neighbor v > u is re-pointed at
-  *    m(u) = min(N(u) ∪ {u}) — computed as `groupBy(u).min(v)` over the
-  *    bidirectional view, then a join back (one shuffle + one join);
+  *    m(u) = min(N(u) ∪ {u}), over the bidirectional view;
   *  - small-star: for each node u over its down-neighbors B(u), emit
   *    (b, m) for b ∈ B(u) and (u, m) with m = min(B(u)).
   *
@@ -30,68 +28,44 @@ import org.apache.spark.sql.functions._
   * `localCheckpoint`ed so the iterative plan never grows (on a cluster
   * this would be a checkpoint to reliable storage).
   *
-  * == Giant-cluster (hot-key) path (round 14) ==
+  * == One round body, with the hot-key split ==
   *
-  * The per-key MIN is map-side combinable, so an emerging component
-  * root's hot key never funnels the aggregate. What DOES funnel is the
-  * min-JOIN back: every edge row of the hot key lands in one reduce
-  * partition of the `b ⋈ mins` shuffle (and AQE's skew split cannot
-  * rescue it — OptimizeSkewedJoin only matches joins whose children are
-  * bare shuffle stages, and the mins side is an inline aggregate). The
-  * fix is the canonical two-phase skew join, DETECTED per half-round:
-  * the `deg` count rides the same min aggregate (zero extra shuffle);
-  * keys whose multiplicity exceeds [[connected]]'s `hotKeyThreshold`
-  * have their (key → m) rows — provably unique per key — collected
-  * (bounded by [[MaxHotKeys]], loud failure past it) and BROADCAST, so
-  * hot edge rows take a map-side hash join and never enter the shuffle
-  * at all; cold keys keep the stock shuffled join, whose per-key
-  * multiplicity is now ≤ the threshold by construction. This is
-  * strictly stronger than salting (the hot rows shuffle zero times, not
-  * 1/F of a time) and exact — the same mins table feeds both arms.
+  * Each half-round attaches its per-key min through
+  * [[HotKeys.withKeyAgg]] (guide §2.4 "aggregation + join on the same
+  * key is a window"): cold keys take `min(...)` over a window on the
+  * key — ONE exchange per half-round, no join, and the small-star dedup
+  * rides that window's partitioning — so a round is 3 exchanges plus the
+  * convergence checksum. A key whose multiplicity exceeds
+  * `hotKeyThreshold` (an emerging giant-cluster root) would funnel all
+  * its rows into one window task; hot keys instead get their min from a
+  * broadcast table ([[HotKeys.detect]], min as payload: one aggregate
+  * plus one bounded collect per half-round) and never enter the shuffle.
+  * The split is exact: a key is wholly hot or wholly cold, and both arms
+  * attach the same min.
+  *
+  * Detection runs only when it can fire: a key's multiplicity in the
+  * bidirectional view is at most 2·|E|, and |E| is the previous round's
+  * checksum count — so small graphs (every fixture at the default
+  * threshold) run the windowed body with no detection job (detecting
+  * every half-round cost ~0.5 s on a 2.9 s query at sf0.1).
   */
 object Components {
 
   private val MaxRounds = 30 // O(log² n) bound; 30 covers n ≈ 2^5 billion
 
-  /** Driver-side bound on the broadcast hot-key table: 2^20 rows
-    * (~16 MB of (key, min) longs) — far above any real hub population
-    * at sane thresholds (|hot| ≤ |E| / threshold), and a LOUD failure
-    * (with the knobs named) rather than a silent driver OOM past it. */
-  private val MaxHotKeys = 1 << 20
-
-  /** Per-key multiplicity above which the min-join treats a key as hot.
-    * Default sized for a real cluster: ~2M rows ≈ 64 MB at typical edge
-    * widths — the same order as AQE's skew threshold — so ordinary
-    * graphs never pay the broadcast arm. Tests and the skew spec force
-    * it down to exercise the path. */
-  val DefaultHotKeyThreshold: Long = 2L * 1000 * 1000
-
-  /** Per-half-round observability for the skew spec: how many keys went
-    * the broadcast arm, and the max multiplicity left in the shuffled
-    * (cold) arm — the judge-facing "no single task exceeds the bound"
-    * witness. `maxColdDeg` is only computed when an observer is
-    * installed (it costs one extra tiny aggregate per half-round). */
-  final case class RoundStats(
-      round: Int, phase: String, nHotKeys: Int, maxColdDeg: Long)
-
   /** Connected components of the undirected graph given by `edges`
     * (columns `src`, `dst`). Returns one row per non-isolated node:
     * (`node`, `component`) where `component` is the minimum node id
     * reachable from `node`. Isolated nodes (no edges) are the caller's
-    * concern — they are their own component. */
+    * concern — they are their own component. `observer` receives the
+    * detection stats of every half-round that runs detection. */
   def connected(spark: SparkSession, edges: DataFrame,
-      hotKeyThreshold: Long = DefaultHotKeyThreshold,
-      observer: Option[RoundStats => Unit] = None): DataFrame = {
+      hotKeyThreshold: Long = HotKeys.DefaultHotKeyThreshold,
+      observer: Option[HotKeys.Stats => Unit] = None): DataFrame = {
     // canonical down-edges: hi > lo, self-loops dropped, deduplicated
     // Checkpoints are LAZY (eager=false, round 10): the convergence
     // checksum is the materializing action, so each round runs ONE
-    // action instead of checkpoint + checksum — 4 fewer driver-side
-    // jobs per query at the bench floor (39 → 35 jobs at sf0.001),
-    // identical lineage truncation. (The r10 repartition-sharing A/B —
-    // sharing ONLY the aggregate/join exchange, every distinct kept —
-    // measured neutral; the r19 form below additionally deletes the
-    // mid-round distinct's own exchange by riding the small-star key,
-    // which is what moved the job count.)
+    // action instead of checkpoint + checksum.
     var e = edges
       .select(greatest(col("src"), col("dst")).as("hi"),
         least(col("src"), col("dst")).as("lo"))
@@ -103,78 +77,33 @@ object Components {
     var prev = checksum(e)
     var converged = false
     while (!converged && rounds < MaxRounds) {
-      // Hot-key detection is FREE to skip when it provably cannot fire:
-      // a key's multiplicity in the bidirectional view is at most
-      // 2·|E|, and |E| is already known from the previous round's
-      // convergence checksum — so small graphs (every fixture at the
-      // default 2M threshold) run the stock r13 plan with ZERO
-      // detection overhead (A/B at sf0.1: detection-always cost ~0.5 s
-      // of +deg/checkpoint/collect per half-round on a 2.9 s query).
       val detect = 2 * prev._1 > hotKeyThreshold
+      // `df` plus m = min(v) over df's rows of the same key
+      def withKeyMin(df: DataFrame, key: String, v: String,
+          phase: String): DataFrame = {
+        val hot = if (!detect) None else HotKeys.detect(spark,
+          df.groupBy(key).agg(min(col(v)).as("m"), count(lit(1)).as("deg")),
+          "deg", hotKeyThreshold,
+          s"connected components $phase round $rounds", observer)
+        HotKeys.withKeyAgg(df, key, min(col(v)), "m", hot)
+      }
       // large-star over the bidirectional view: m(u) includes u itself
       val b = e.select(col("hi").as("u"), col("lo").as("v"))
         .unionAll(e.select(col("lo").as("u"), col("hi").as("v")))
-      val next = if (detect) {
-        // hot-key round (giant-cluster graphs only): the r14 two-phase
-        // broadcast split, structure unchanged
-        val withMin = joinGroupMin(spark, b, key = "u", v = "v",
-          keyInMin = true, hotKeyThreshold, observer, rounds,
-          "large-star")
-        val ls = withMin
-          .filter(col("v") > col("u")) // v > u ≥ m, so never a self-loop
-          .select(col("v").as("hi"), col("m").as("lo"))
-          .distinct()
-        // small-star over the down-edges produced by large-star
-        val withM = joinGroupMin(spark, ls, key = "hi", v = "lo",
-          keyInMin = false, hotKeyThreshold, observer, rounds,
-          "small-star")
-        withM
-          .select(col("lo").as("hi"), col("m").as("lo"))
-          .filter(col("hi") =!= col("lo"))
-          .unionAll(withM.select(col("hi"), col("m").as("lo")))
-          .distinct()
-          .localCheckpoint(false)
-      } else {
-        // Windowed round (r19, guide §2.4 "aggregation + join on the
-        // same key is a window"): the stock arm paid ~7 exchanges
-        // (= ~11 AQE stage-jobs at the measured ~55 ms/job driver
-        // floor) per round — each half-round planned a groupBy.min
-        // exchange, a join-probe exchange (the downstream v > u filter
-        // pushes into the probe copy of `b`, so the two exchanges are
-        // never canonical-equal and AQE cannot stage-reuse them), and
-        // the mid-round distinct its own (hi, lo) exchange. Attaching
-        // the per-key min AS A WINDOW deletes the join outright: each
-        // half-round is ONE exchange on its key, and the dedup rides
-        // the small-star window's hi-partitioning (a complete
-        // in-partition aggregate, no (hi, lo) exchange). 3 exchanges +
-        // the convergence checksum per round; jobs/query 47 → 29 at
-        // sf0.1 (CcLab), bench 2.73 → ~1.9 s. At scale the bidirectional
-        // view is shuffled ONCE per round instead of once for the
-        // aggregate and once for the probe. Per-group buffering in the
-        // window is bounded by this arm's precondition (the detect gate
-        // proves every key's multiplicity ≤ hotKeyThreshold, and the
-        // window buffer spills gracefully besides); giant-cluster
-        // graphs take the detect arm above, whose broadcast split
-        // never funnels a hot key through one task. Results are
-        // row-identical: same min per key, same edge set entering the
-        // next half-round (dedup placement only changes WHERE
-        // duplicates collapse).
-        val withMin = b.withColumn("m",
-          least(min(col("v")).over(Window.partitionBy(col("u"))), col("u")))
-        val ls = withMin
-          .filter(col("v") > col("u")) // v > u ≥ m, so never a self-loop
-          .select(col("v").as("hi"), col("m").as("lo"))
-        // small-star over the down-edges produced by large-star
-        val withM = ls
-          .withColumn("m", min(col("lo")).over(Window.partitionBy(col("hi"))))
-          .dropDuplicates("hi", "lo")
-        withM
-          .select(col("lo").as("hi"), col("m").as("lo"))
-          .filter(col("hi") =!= col("lo"))
-          .unionAll(withM.select(col("hi"), col("m").as("lo")))
-          .distinct()
-          .localCheckpoint(false)
-      }
+      val ls = withKeyMin(b, "u", "v", "large-star")
+        .withColumn("m", least(col("m"), col("u")))
+        .filter(col("v") > col("u")) // v > u ≥ m, so never a self-loop
+        .select(col("v").as("hi"), col("m").as("lo"))
+      // small-star over the down-edges produced by large-star; the
+      // dedup is a complete in-partition aggregate on the window's key
+      val withM = withKeyMin(ls, "hi", "lo", "small-star")
+        .dropDuplicates("hi", "lo")
+      val next = withM
+        .select(col("lo").as("hi"), col("m").as("lo"))
+        .filter(col("hi") =!= col("lo"))
+        .unionAll(withM.select(col("hi"), col("m").as("lo")))
+        .distinct()
+        .localCheckpoint(false)
       val cur = checksum(next)
       converged = cur == prev
       prev = cur
@@ -183,55 +112,6 @@ object Components {
     }
     require(converged, s"connected components did not converge in $MaxRounds rounds")
     e.select(col("hi").as("node"), col("lo").as("component"))
-  }
-
-  /** `df ⋈ groupBy(key).min(v)` with the two-phase hot-key treatment
-    * described in the object scaladoc — the DETECT arm only (graphs big
-    * enough that a key could exceed the threshold; small graphs take the
-    * shared-exchange round in [[connected]]). Returns `df`'s columns
-    * plus `m` (= min(v) over the key's group, including `key` itself
-    * when `keyInMin`). The mins frame is lazily checkpointed so the
-    * hot-key detection action and the join consume ONE aggregate
-    * computation. */
-  private def joinGroupMin(spark: SparkSession, df: DataFrame, key: String,
-      v: String, keyInMin: Boolean, threshold: Long,
-      observer: Option[RoundStats => Unit], round: Int,
-      phase: String): DataFrame = {
-    val mCol = if (keyInMin) least(col("mn"), col(key)) else col("mn")
-    val mins = df.groupBy(key)
-      .agg(min(col(v)).as("mn"), count(lit(1)).as("deg"))
-      .select(col(key), mCol.as("m"), col("deg"))
-      .localCheckpoint(false)
-    val hot = mins.filter(col("deg") > threshold)
-      .select(col(key), col("m")).limit(MaxHotKeys + 1).collect()
-    require(hot.length <= MaxHotKeys,
-      s"connected components: > $MaxHotKeys keys exceed the hot-key " +
-        s"threshold $threshold in $phase round $round — raise " +
-        "hotKeyThreshold (or MaxHotKeys) for this graph")
-    observer.foreach { obs =>
-      val maxCold = mins.filter(col("deg") <= threshold)
-        .agg(coalesce(max(col("deg")), lit(0L))).head().getLong(0)
-      obs(RoundStats(round, phase, hot.length, maxCold))
-    }
-    val outCols = (df.columns :+ "m").map(col).toSeq
-    if (hot.isEmpty) {
-      df.join(mins.select(col(key), col("m")), key).select(outCols: _*)
-    } else {
-      val hotDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(hot.toIndexedSeq, 1),
-        mins.select(col(key), col("m")).schema)
-      // hot rows: map-side broadcast hash join — zero shuffle, the hot
-      // key never funnels a reducer
-      val hotJoined = df.join(broadcast(hotDf), Seq(key))
-        .select(outCols: _*)
-      // cold rows: stock shuffled join; every key's multiplicity is
-      // ≤ threshold by construction of the split
-      val coldJoined = df
-        .join(broadcast(hotDf.select(col(key))), Seq(key), "left_anti")
-        .join(mins.select(col(key), col("m")), key)
-        .select(outCols: _*)
-      hotJoined.unionAll(coldJoined)
-    }
   }
 
   /** Order-independent edge-set fingerprint: (row count, xor of per-row

@@ -193,6 +193,45 @@ object TaxiPipeline {
   private def readDay(spark: SparkSession, dayPath: String): DataFrame =
     spark.read.option("pathGlobFilter", "part-*").parquet(dayPath)
 
+  /** P2: the normalize stage's keep-good filter. */
+  private def keepGood(trips: DataFrame): DataFrame = trips.filter(
+    col("event_type") =!= "error" &&
+      col("value") =!= 0 && col("value").isNotNull &&
+      col("user_id").isNotNull)
+
+  /** W1: `nation` as zones, each row ranked within its key by name
+    * length; the enrich joins keep `finish_rank = 1`. */
+  private def rankedZones(spark: SparkSession, sfDir: String): DataFrame =
+    graft.tbl(spark, sfDir, "nation")
+      .select(col("n_nationkey"), col("n_name"),
+        rank().over(Window.partitionBy("n_nationkey")
+          .orderBy(expr("octet_length(n_name)").desc)).as("finish_rank"))
+
+  /** A1/A2 + W2/O1 + J4: the top-100 routes, dropoffs and pickups of a
+    * (pickup_zone, dropoff_zone, route_count) frame, joined on
+    * `popularity`. Same rollup as TaxiOps.mostPopulars: marginal counts
+    * derive from the pair counts (count-per-zone ≡ Σ pair counts), so the
+    * three branches share one pair-count Exchange and the trips are
+    * aggregated once. */
+  private def mostPopulars(pairCounts: DataFrame): DataFrame = {
+    def topRanked(df: DataFrame, cnt: String, tie: Seq[String]): DataFrame =
+      graft.ops.Ranked.topK(df, cnt, 100, tie)
+    def marginal(zone: String, cnt: String, as: String): DataFrame =
+      topRanked(pairCounts.groupBy(zone).agg(sum("route_count").as(cnt)),
+        cnt, Seq(zone))
+        .select(col(zone).as(as), col(cnt), col("popularity"))
+    val routes = topRanked(pairCounts,
+      "route_count", Seq("pickup_zone", "dropoff_zone"))
+      .select(col("pickup_zone").as("route_pickup"),
+        col("dropoff_zone").as("route_dropoff"),
+        col("route_count"), col("popularity"))
+    routes
+      .join(marginal("dropoff_zone", "dropoff_count", "top_dropoff"),
+        Seq("popularity"), "inner")
+      .join(marginal("pickup_zone", "pickup_count", "top_pickup"),
+        Seq("popularity"), "inner")
+  }
+
   def ingest(srcDir: String, ds: String): Stage = Stage("ingest", { c =>
     val day = dayPath(srcDir, ds)
     if (!hasDayFiles(c.spark, day)) {
@@ -215,11 +254,7 @@ object TaxiPipeline {
     if (!c.exists("temp_trips")) { // C3 existence gate
       println("[pipeline] temp_trips missing; skipping normalize"); false
     } else {
-      val df = c.load("temp_trips").filter(
-        col("event_type") =!= "error" &&
-          col("value") =!= 0 && col("value").isNotNull &&
-          col("user_id").isNotNull)
-      c.save("normalized_trips", df)
+      c.save("normalized_trips", keepGood(c.load("temp_trips")))
       c.drop("temp_trips")
       true
     }
@@ -233,10 +268,7 @@ object TaxiPipeline {
         val trips = c.load("normalized_trips")
           .withColumn("pickup_zone_id", col("event_id") % 25)
           .withColumn("dropoff_zone_id", col("user_id") % 25)
-        val zones = graft.tbl(spark, sfDir, "nation")
-          .select(col("n_nationkey"), col("n_name"),
-            rank().over(Window.partitionBy("n_nationkey")
-              .orderBy(expr("octet_length(n_name)").desc)).as("finish_rank"))
+        val zones = rankedZones(spark, sfDir)
         val keys = Seq("event_id", "user_id", "pickup_zone_id",
           "dropoff_zone_id")
         val doff = trips
@@ -265,36 +297,9 @@ object TaxiPipeline {
     if (!c.exists(in)) {
       println(s"[pipeline] $in missing; skipping final_result"); false
     } else {
-      val trips = c.load(in)
-      def topRanked(df: DataFrame, cnt: String, tie: Seq[String]): DataFrame =
-        graft.ops.Ranked.topK(df, cnt, 100, tie)
-      // Same rollup as TaxiOps.mostPopulars: marginal counts derive from
-      // the (pickup, dropoff) pair counts (count-per-zone ≡ Σ pair
-      // counts), so the three branches share one pair-count Exchange and
-      // the trips table is aggregated once.
-      val pairCounts = trips.groupBy("pickup_zone", "dropoff_zone")
+      val pairCounts = c.load(in).groupBy("pickup_zone", "dropoff_zone")
         .agg(count(lit(1)).as("route_count"))
-      val routes = topRanked(pairCounts,
-        "route_count", Seq("pickup_zone", "dropoff_zone"))
-        .select(col("pickup_zone").as("route_pickup"),
-          col("dropoff_zone").as("route_dropoff"),
-          col("route_count"), col("popularity"))
-      val dropoffs = topRanked(
-        pairCounts.groupBy("dropoff_zone")
-          .agg(sum("route_count").as("dropoff_count")),
-        "dropoff_count", Seq("dropoff_zone"))
-        .select(col("dropoff_zone").as("top_dropoff"),
-          col("dropoff_count"), col("popularity"))
-      val pickups = topRanked(
-        pairCounts.groupBy("pickup_zone")
-          .agg(sum("route_count").as("pickup_count")),
-        "pickup_count", Seq("pickup_zone"))
-        .select(col("pickup_zone").as("top_pickup"),
-          col("pickup_count"), col("popularity"))
-      val result = routes
-        .join(dropoffs, Seq("popularity"), "inner")
-        .join(pickups, Seq("popularity"), "inner")
-      c.save(s"most_populars_${dsNoDash(ds)}", result)
+      c.save(s"most_populars_${dsNoDash(ds)}", mostPopulars(pairCounts))
       true
     }
   })
@@ -305,9 +310,9 @@ object TaxiPipeline {
     Seq(ingest(srcDir, ds), normalize, enrich(spark, sfDir, ds),
       finalResult(ds))
 
-  /** OPTIONAL fused execution of the same 4-stage chain: one declarative
-    * plan from the day's source files to the most-populars result, no
-    * staged tables. The staged [[stages]] runner stays the default — its
+  /** Fused execution of the same 4-stage chain: one declarative plan
+    * from the day's source files to the most-populars result, no staged
+    * tables. The staged [[stages]] runner stays the default — its
     * intermediate tables are the reference's observable surface — but
     * when only the final table is wanted, staging is pure overhead: this
     * mode reads the day once and lets Catalyst fuse ingest + normalize +
@@ -319,25 +324,11 @@ object TaxiPipeline {
     * normalized copies, and both zone names are functions of the
     * identity, so every (pickup_zone, dropoff_zone) count equals
     * Σ_identity n² — computed here as one identity-keyed count weighted
-    * n² into the pair rollup. The ingest gate (C2/C3: absent or empty
-    * day) returns None exactly where the staged runner short-circuits
-    * before `final_result`.
+    * n² into the pair rollup. Scale: 1 fact scan + 1 identity shuffle vs
+    * the staged mode's 4 writes + 3 re-reads + 2 scans + rejoin.
     *
-    * Scale: 1 fact scan + 1 identity shuffle vs the staged mode's
-    * 4 writes + 3 re-reads (through the catalog's pinned schemas, so no
-    * inference jobs) + 2 scans + rejoin; the gate probe reads file
-    * metadata plus at most one row. */
-  def fused(spark: SparkSession, sfDir: String, srcDir: String,
-            ds: String): Option[DataFrame] =
-    fusedObserved(spark, sfDir, srcDir, ds).flatMap { case (df, _) =>
-      // eager row gate for the Option contract (one limit-1 job);
-      // single-action callers use the observation instead (fusedRun)
-      if (readDay(spark, dayPath(srcDir, ds)).limit(1).count() == 0) None
-      else Some(df)
-    }
-
-  /** The fused chain with the C2 ROW gate folded into the single plan
-    * (round 15, verdict item 4) via `Dataset.observe`: the day scan
+    * The C2 ROW gate is folded into the single plan (round 15) via
+    * `Dataset.observe`: the day scan
     * carries a CollectMetrics count, so the gate quantity ("any rows
     * this day?") is computed BY the one action that executes the plan —
     * no separate limit-1 gate job. Returns None only on the METADATA
@@ -362,19 +353,12 @@ object TaxiPipeline {
     if (!hasDayFiles(spark, path)) return None
     val gate = org.apache.spark.sql.Observation()
     val day = readDay(spark, path).observe(gate, count(lit(1)).as("rows"))
-    val norm = day.filter(
-      col("event_type") =!= "error" &&
-        col("value") =!= 0 && col("value").isNotNull &&
-        col("user_id").isNotNull)
-    val idCnt = norm
+    val idCnt = keepGood(day)
       .withColumn("pickup_zone_id", col("event_id") % 25)
       .withColumn("dropoff_zone_id", col("user_id") % 25)
       .groupBy("event_id", "user_id", "pickup_zone_id", "dropoff_zone_id")
       .agg(count(lit(1)).as("graft_n"))
-    val zones = graft.tbl(spark, sfDir, "nation")
-      .select(col("n_nationkey"), col("n_name"),
-        rank().over(Window.partitionBy("n_nationkey")
-          .orderBy(expr("octet_length(n_name)").desc)).as("finish_rank"))
+    val zones = rankedZones(spark, sfDir)
     val withDoff = idCnt
       .join(zones, idCnt("dropoff_zone_id") === zones("n_nationkey"), "left")
       .filter(col("finish_rank") === 1)
@@ -388,28 +372,7 @@ object TaxiPipeline {
         col("graft_n"))
     val pairCounts = wide.groupBy("pickup_zone", "dropoff_zone")
       .agg(sum(col("graft_n") * col("graft_n")).as("route_count"))
-    def topRanked(df: DataFrame, cnt: String, tie: Seq[String]): DataFrame =
-      graft.ops.Ranked.topK(df, cnt, 100, tie)
-    val routes = topRanked(pairCounts,
-      "route_count", Seq("pickup_zone", "dropoff_zone"))
-      .select(col("pickup_zone").as("route_pickup"),
-        col("dropoff_zone").as("route_dropoff"),
-        col("route_count"), col("popularity"))
-    val dropoffs = topRanked(
-      pairCounts.groupBy("dropoff_zone")
-        .agg(sum("route_count").as("dropoff_count")),
-      "dropoff_count", Seq("dropoff_zone"))
-      .select(col("dropoff_zone").as("top_dropoff"),
-        col("dropoff_count"), col("popularity"))
-    val pickups = topRanked(
-      pairCounts.groupBy("pickup_zone")
-        .agg(sum("route_count").as("pickup_count")),
-      "pickup_count", Seq("pickup_zone"))
-      .select(col("pickup_zone").as("top_pickup"),
-        col("pickup_count"), col("popularity"))
-    Some((routes
-      .join(dropoffs, Seq("popularity"), "inner")
-      .join(pickups, Seq("popularity"), "inner"), gate))
+    Some((mostPopulars(pairCounts), gate))
   }
 
   /** Single-action gated fused run (round 15): executes the whole fused

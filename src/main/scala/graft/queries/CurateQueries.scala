@@ -769,7 +769,7 @@ object CurateQueries {
     * scoring arm (langs × observed char bigrams — alphabet²-bounded,
     * KBs on any real corpus). Past the cap the chain arm below runs
     * unchanged — the same bounded-collect-with-loud-degradation
-    * pattern as [[graft.ops.HotKeys]]/Components.MaxHotKeys. */
+    * pattern as [[graft.ops.HotKeys.MaxHotKeys]]. */
   private val NbModelRowCap = 1L << 20
 
   /** The NB train+score chain over any (doc_id, lang, s) frame —

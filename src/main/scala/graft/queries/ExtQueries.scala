@@ -381,12 +381,9 @@ object ExtQueries {
     * would otherwise alone generate 10¹⁶ candidate pairs. Mirrored in the
     * oracle; documented divergence: a pair whose ONLY shared shingles are
     * ultra-common is no longer reported (by construction such pairs have
-    * near-zero true Jaccard). */
-  private val MaxShingleDf =
-    // env-overridable for the round-11 cap sweep (tools + PLANS.md);
-    // the oracle SQL interpolates the same val, so Spark and DuckDB
-    // always agree on the cap in force
-    sys.env.get("SPARK_GRAFT_SHINGLE_DF_CAP").map(_.toInt).getOrElse(100)
+    * near-zero true Jaccard). The oracle SQL interpolates this val, so
+    * Spark and DuckDB always agree on the cap in force. */
+  private val MaxShingleDf = 100
 
   /** True n-gram Jaccard near-dup pairs (≥ 0.1 over distinct k=3 word
     * shingles): candidates from an inverted-index join on the shingle —
@@ -2295,11 +2292,11 @@ object ExtQueries {
       Some(containmentPairsSql), bench = true,
       benchFn = Some(containmentPairsRaw),
       benchNote = Some("exact containment is Sum(df^2) candidate work " +
-        "by construction; the hot-shingle df cap is the recall/time " +
-        "knob (SPARK_GRAFT_SHINGLE_DF_CAP, mirrored in the oracle). " +
-        "Round-11 sf10 sweep: cap 15 keeps pair recall 1.0 " +
-        "(x_containment_recall is the oracle-checked witness); " +
-        "default stays 100 - the 100 TB-safe conservative setting.")),
+        "by construction; the hot-shingle df cap (100, mirrored in the " +
+        "oracle) is the recall/time trade. Round-11 sf10 sweep: cap 15 " +
+        "keeps pair recall 1.0 (x_containment_recall is the " +
+        "oracle-checked witness); the cap stays 100 - the 100 TB-safe " +
+        "conservative setting.")),
     "x_containment_recall" -> QueryDef(containmentRecall,
       Some(containmentRecallSql)),
     "x_ngram_jaccard_pairs" -> QueryDef(ngramJaccardPairs,

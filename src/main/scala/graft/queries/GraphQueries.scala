@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.tbl
-import graft.ops.{Bfs, Components}
+import graft.ops.{Bfs, Components, HotKeys}
 
 /** Graph-shaped corpus operators: near-duplicate *cluster resolution*.
   *
@@ -31,7 +31,7 @@ object GraphQueries {
     * near-dup candidates are their own singleton component. */
   private def dedupComponentsRaw(s: SparkSession, dir: String,
       hotKeyThreshold: Long =
-        Components.DefaultHotKeyThreshold): DataFrame = {
+        HotKeys.DefaultHotKeyThreshold): DataFrame = {
     val (_, cand) = ExtQueries.lshCandParts(s, dir)
     val comp = Components.connected(s,
       cand.select(col("doc_a").as("src"), col("doc_b").as("dst")),
@@ -251,15 +251,14 @@ object GraphQueries {
     * @param nodes one column `node`; @param edges columns `src`, `dst` */
   private[graft] def pageRankLoop(nodes: DataFrame, edges: DataFrame,
       iters: Int,
-      hotKeyThreshold: Long = Components.DefaultHotKeyThreshold,
-      observer: Option[graft.ops.HotKeys.Stats => Unit] = None)
+      hotKeyThreshold: Long = HotKeys.DefaultHotKeyThreshold,
+      observer: Option[HotKeys.Stats => Unit] = None)
       : (DataFrame, Seq[Long]) = {
-    import graft.ops.HotKeys
     val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
       .localCheckpoint(false)
     // the bounded hot-key collect is also outdeg's materializing action
-    val hotKeys = HotKeys.detect(edges.sparkSession, outdeg, "src",
-      "outdeg", hotKeyThreshold, "pageRank contribution join", observer)
+    val hotKeys = HotKeys.detect(edges.sparkSession, outdeg, "outdeg",
+      hotKeyThreshold, "pageRank contribution join", observer)
     var ranks = nodes.select(col("node"), lit(1000000L).as("r"))
     val deltas = scala.collection.mutable.ListBuffer.empty[Long]
     var converged = false

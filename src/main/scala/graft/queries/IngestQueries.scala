@@ -276,15 +276,14 @@ object IngestQueries {
     cat.load(s"most_populars_${TaxiPipeline.dsNoDash(Ds)}")
   }
 
-  /** The same chain through [[TaxiPipeline.fused]] — the optional
-    * no-staging mode (C1 fused): identical gates and identical output
-    * (equality proof on the method), gated by the SAME oracle as
-    * `c_pipeline_e2e`. The only writes left are the source-day fixture
-    * this test lays out. */
+  /** The same chain through [[TaxiPipeline.fusedObserved]] — the
+    * no-staging mode (C1 fused): identical output (equality proof on the
+    * method), gated by the SAME oracle as `c_pipeline_e2e`. The only
+    * writes left are the source-day fixture this test lays out. */
   private def pipelineFused(s: SparkSession, dir: String): DataFrame = {
     val base = qtmp("pipeline_fused")
     writeDay(s, dir, s"$base/src", Ds)
-    val df = TaxiPipeline.fused(s, dir, s"$base/src", Ds)
+    val df = TaxiPipeline.fusedObserved(s, dir, s"$base/src", Ds).map(_._1)
       .getOrElse(sys.error("fused pipeline gated on a day with data"))
     df.orderBy("popularity", "route_pickup", "route_dropoff",
       "top_dropoff", "top_pickup")

@@ -419,7 +419,9 @@ class H3Spec extends AnyFunSuite {
     // The round-12 invariant that makes the whole system combinatorial:
     // for every face edge (f -> g, rotation c) and every coordinate X
     // where BOTH charts can assemble, assembleF(X) == assembleG(iso(X))
-    // for hexagon base cells. (Pentagon digit strings live in a
+    // for hexagon base cells — a pentagon on the far side counts as a
+    // mismatch, so at res 0 this is the table law "every in-table slot
+    // maps onto the same base cell". (Pentagon digit strings live in a
     // 5-sector quotient — the plain hexagonal isometry does not apply
     // across the deleted axis; their table-checked law is the
     // pentagon-quotient orbit test below, plus the class-init straddle
@@ -438,9 +440,10 @@ class H3Spec extends AnyFunSuite {
     // above): inside a pentagon base cell the hexagonal edge isometry
     // is exact on the sector both charts physically share and off by
     // the icosahedron vertex's curvature defect past it. So for every
-    // coordinate where both charts assemble into the same pentagon
-    // base cell: (a) the two canonical labels lie in ONE order-5
-    // pentagon-rotation orbit — zero exceptions; (b) per (face, edge,
+    // coordinate where both charts assemble and the home cell is a
+    // pentagon: (a) the two canonical labels lie in ONE order-5
+    // pentagon-rotation orbit — zero exceptions, so the far side is
+    // the same base cell; (b) per (face, edge,
     // pentagon) the observed steps are {0} ∪ at most one nonzero step;
     // (c) that step is a single sector (+1 or -1 ≡ 4), one direction
     // per unfolding, never a 2+ jump and never both directions. An
@@ -458,6 +461,12 @@ class H3Spec extends AnyFunSuite {
       }
       assert(bad.isEmpty,
         s"res $res: non-single-defect steps at ${bad.take(3)}")
+      // res 0 carries no digits: every pentagon slot mapped across a
+      // face edge is the same res-0 cell on both sides (the base-cell
+      // table law)
+      if (res == 0)
+        assert(pairs > 0 && steps.values.forall(_ == Set(0)),
+          s"res 0: pentagon slots disagree across a face edge: $steps")
       if (res > 0) {
         assert(pairs > 100,
           s"res $res: only $pairs pentagon pairs enumerated — weak law")

@@ -22,8 +22,23 @@ class ComponentsPropSpec extends SparkSpec {
     } yield (a, b))
   } yield edges
 
+  test("star contraction equals in-memory union-find on random graphs") {
+    val prop = Prop.forAllNoShrink(graphGen) { edges =>
+      val expect = ComponentsPropSpec.unionFind(edges)
+      val got = Components
+        .connected(spark, edges.toDF("src", "dst"))
+        .as[(Long, Long)].collect().toMap
+      Prop(got == expect) :| s"got $got want $expect"
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(res.passed, res.status.toString)
+  }
+}
+
+object ComponentsPropSpec {
   /** In-memory union-find with min-id labeling. */
-  private def reference(edges: List[(Long, Long)]): Map[Long, Long] = {
+  def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       val p = parent.getOrElseUpdate(x, x)
@@ -39,18 +54,5 @@ class ComponentsPropSpec extends SparkSpec {
     // the engine emits non-root rows only (the component minimum labels
     // everyone else, never itself — pinned by ComponentsSpec)
     nonIsolated.map(n => n -> find(n)).filter { case (n, r) => n != r }.toMap
-  }
-
-  test("star contraction equals in-memory union-find on random graphs") {
-    val prop = Prop.forAllNoShrink(graphGen) { edges =>
-      val expect = reference(edges)
-      val got = Components
-        .connected(spark, edges.toDF("src", "dst"))
-        .as[(Long, Long)].collect().toMap
-      Prop(got == expect) :| s"got $got want $expect"
-    }
-    val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
-    assert(res.passed, res.status.toString)
   }
 }

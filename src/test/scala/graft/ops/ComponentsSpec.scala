@@ -78,9 +78,9 @@ class ComponentsSpec extends SparkSpec {
     // ~2/3 of all edges and is STAR-shaPED from round 1 (every node
     // attached near the root), so the root's key multiplicity is the
     // full cluster size — the exact shape that funnels one reducer in
-    // the stock min-join. With the threshold forced down, the per-round
+    // the windowed min. With the threshold forced down, the per-round
     // observer proves (a) the hot arm actually engaged and (b) no key
-    // entering the SHUFFLED join ever exceeded the threshold — the
+    // entering the SHUFFLED window ever exceeded the threshold — the
     // per-task bound, since a shuffle task's rows for one key are that
     // key's multiplicity.
     val n = 20000
@@ -94,7 +94,7 @@ class ComponentsSpec extends SparkSpec {
     assert(giant.size > (giant.size + pairs.size) / 2,
       "fixture must hold >50% of edges in the giant cluster")
     val threshold = 64L
-    val stats = scala.collection.mutable.ListBuffer.empty[Components.RoundStats]
+    val stats = scala.collection.mutable.ListBuffer.empty[HotKeys.Stats]
     val got = Components.connected(spark,
       rnd.shuffle(giant ++ pairs).toDF("src", "dst"),
       hotKeyThreshold = threshold,
@@ -119,17 +119,74 @@ class ComponentsSpec extends SparkSpec {
   test("hot-key path equals the stock path on arbitrary graphs " +
       "(property, round 14)") {
     // threshold 1 forces EVERY multi-edge key through the broadcast arm
-    // every round; the labeling must be identical to the stock route
+    // every round; both routes run the same round body, so each is also
+    // checked against an in-memory union-find (a bug the two routes
+    // share would otherwise pass)
     val rnd = new scala.util.Random(41)
     (1 to 3).foreach { trial =>
       val edges = Seq.fill(300)(
         (rnd.nextInt(80).toLong + 1, rnd.nextInt(80).toLong + 1))
       val df = edges.toDF("src", "dst")
+      val want = ComponentsPropSpec.unionFind(edges)
       val stock = Components.connected(spark, df)
         .as[(Long, Long)].collect().toMap
       val hot = Components.connected(spark, df, hotKeyThreshold = 1L)
         .as[(Long, Long)].collect().toMap
-      assert(hot === stock, s"trial $trial diverged")
+      assert(stock === want, s"trial $trial: default threshold diverged")
+      assert(hot === want, s"trial $trial: threshold 1 diverged")
     }
+  }
+
+  /** Spark jobs `body` starts on this thread, told apart from other
+    * suites' by a local property; a marker job delivered after them
+    * makes the count final without a sleep (the listener bus is FIFO). */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"components-spec-${java.util.UUID.randomUUID()}"
+    val marker = s"graft-marker-$tag"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("graft.spec.tag").contains(tag)) {
+          if (prop("spark.jobGroup.id").contains(marker)) markerSeen.countDown()
+          else jobs.incrementAndGet()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.tag", tag)
+    try {
+      body
+      sc.setJobGroup(marker, "job-count marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(10, java.util.concurrent.TimeUnit.SECONDS),
+        "marker job event never delivered")
+      jobs.get
+    } finally {
+      sc.setLocalProperty("graft.spec.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("job budget: at the default threshold an empty hot set runs the " +
+      "windowed round body and no detection job") {
+    // a 64-node chain plus a 4-clique and a separate pair;
+    // the count is the windowed body's: the initial dedup + checksum,
+    // one checksum per round (its AQE stages included) and the final
+    // collect. A detection aggregate or collect would add jobs.
+    val edges = (1L until 64L).map(i => (i + 1, i)) ++
+      Seq((100L, 101L), (100L, 102L), (100L, 103L), (101L, 102L),
+        (101L, 103L), (102L, 103L), (200L, 201L))
+    val df = edges.toDF("src", "dst")
+    var got = Map.empty[Long, Long]
+    val jobs = jobsOf {
+      got = Components.connected(spark, df).as[(Long, Long)].collect().toMap
+    }
+    assert(got === ComponentsPropSpec.unionFind(edges))
+    assert(jobs === 39)
   }
 }

@@ -290,14 +290,14 @@ class RunnerSpec extends SparkSpec {
       s"fusedRun must be a single Spark action, saw ${counted.length}:\n" +
         counted.map(_.linesIterator.take(3).mkString(" | "))
           .mkString("\n"))
-    // committed content equals the eager-gate fused plan (itself
+    // committed content equals the uncommitted fused plan (itself
     // oracle-equal to the staged chain via c_pipeline_fused)
     val cols = Seq("popularity", "route_pickup", "route_dropoff",
       "top_dropoff", "top_pickup")
-    val viaEager = TaxiPipeline.fused(s, sf, base, ds).get
+    val viaPlan = TaxiPipeline.fusedObserved(s, sf, base, ds).map(_._1).get
       .orderBy(cols.map(col): _*).collect().toSeq
     assert(cat.load("most_populars_20240105")
-      .orderBy(cols.map(col): _*).collect().toSeq === viaEager)
+      .orderBy(cols.map(col): _*).collect().toSeq === viaPlan)
     // zero-ROW day (files exist): observed gate short-circuits — no
     // table, no staging residue
     graft.eventsTbl(s, sf).filter(lit(false))
