@@ -46,25 +46,14 @@ object Bench {
         }
       }
     }
-    // dev knob for conf A/Bs (PLANS.md round-11 floor sweep):
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap {
-      _.split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        k.trim -> v.trim
-      }
-    }
     val spark = graft.core.GraftSession.local(cpus.toInt, "graft-bench",
       Map(
         "spark.sql.shuffle.partitions" -> cpus,
-        "spark.sql.adaptive.enabled" ->
-          sys.env.getOrElse("SPARK_GRAFT_AQE", "true"),
         // data-sized initial shuffle partitions — rationale + A/B numbers
         // on GraftSession.initialShufflePartitions
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
-          sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
-            graft.core.GraftSession.initialShufflePartitions(sfDir, cpus.toInt)
-              .toString)) ++ extraConf)
+          graft.core.GraftSession.initialShufflePartitions(sfDir, cpus.toInt)
+            .toString))
     spark.sparkContext.setLogLevel("ERROR")
     // One known-benign stderr pattern, suppressed surgically (round 13,
     // narrowed round 14 per ADVICE): cleanSlate()'s System.gc() collects
@@ -139,13 +128,9 @@ object Bench {
     // every timed pass recompiled ~860 classes at sf0.01. A warm-up
     // failure (e.g. the warm-up fixture absent) must not mark the query
     // failed — only the timed runs at the target SF decide that.
-    val warmNames =
-      if (sys.env.get("SPARK_GRAFT_WARM_ALL").contains("1"))
-        SparkEntry.benchNames.filter(SparkEntry.benchQueries.contains)
-      else names
     val debug = sys.env.get("SPARK_GRAFT_BENCH_DEBUG").contains("1")
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    warmNames.foreach { name =>
+    names.foreach { name =>
       try SparkEntry.benchQueries(name)(spark, "/root/testdata/sf0.001")
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>

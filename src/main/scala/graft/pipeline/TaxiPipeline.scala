@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -152,17 +152,38 @@ object Runner {
   *                 the write itself
   *  2. normalize — keep-good filter (P2 shape) → `normalized_trips`
   *                 (WRITE_TRUNCATE, S6), drop `temp_trips` (S8)
-  *  3. enrich    — W1 zone dedup + J1/J2 left joins + finish_rank=1 (P5) +
-  *                 J3 4-key rejoin + daypart (F2) → `trips_{yyyyMMdd}` (S9),
-  *                 drop `normalized_trips`
+  *  3. enrich    — W1 zone dedup + J1/J2 zone lookups + finish_rank=1 (P5)
+  *                 + J3 4-key rejoin + daypart (F2) → `trips_{yyyyMMdd}`
+  *                 (S9), drop `normalized_trips`
   *  4. final     — A1/A2 + bounded-rank top-100 (W2/O1) + USING(popularity)
   *                 ×2 (J4) → `most_populars_{yyyyMMdd}`
   *
-  * Scale: each stage's plan is the scale-safe variant documented on the
-  * corresponding CoreQueries operator (bucketed joins, bounded windows);
-  * the inter-stage parquet materialization mirrors the reference's
-  * observable intermediate tables (SURVEY §4) — fusing the stages into one
-  * plan would be faster but intentionally changes observability.
+  * Enrich without joins. The zone dimension, capped at [[ZoneRowCap]]
+  * rows (over the cap the stage fails; nothing is truncated), becomes one
+  * `key → names` map value holding W1's `rank() = 1` names, evaluated
+  * once per query, so J1/J2 are map lookups ([[zoneNames]]). A trip
+  * whose lookup misses (NULL or negative id, absent key) explodes to no
+  * rows, as the reference's left join + `finish_rank = 1` drops it. The
+  * J3 rejoin needs no join either: both zone names are functions of the
+  * 4-key identity, so joining the dropoff branch (n·t_d rows for an
+  * identity with n copies) to the pickup branch (n·t_p rows) emits each
+  * dropoff row once per pickup name, n times over. Enrich computes n as
+  * one identity-keyed window count (one shuffle) and repeats each row n
+  * times.
+  *
+  * Final in one partition. The top-100 rollup ([[mostPopulars]]) reads
+  * the pair counts of one aggregate exchange. They hold at most one row
+  * per (pickup, dropoff) name pair, ≤ |zone names|² (625 on the 25-row
+  * dimension, ZoneRowCap² at most), so they are coalesced into a single
+  * partition, where the marginals, ranks and joins need no further
+  * exchange and no broadcast.
+  *
+  * A staged day runs 8 Spark jobs at every day size: ingest 2, normalize
+  * 1, enrich 3 (the zone-map subquery, the window's exchange, the write)
+  * and final_result 2 (the pair-count exchange, the write). The
+  * inter-stage parquet materialization mirrors the reference's
+  * observable intermediate tables (SURVEY §4); [[fusedRun]]
+  * is the no-staging mode.
   */
 object TaxiPipeline {
 
@@ -199,35 +220,94 @@ object TaxiPipeline {
       col("value") =!= 0 && col("value").isNotNull &&
       col("user_id").isNotNull)
 
-  /** W1: `nation` as zones, each row ranked within its key by name
-    * length; the enrich joins keep `finish_rank = 1`. */
-  private def rankedZones(spark: SparkSession, sfDir: String): DataFrame =
-    graft.tbl(spark, sfDir, "nation")
-      .select(col("n_nationkey"), col("n_name"),
-        rank().over(Window.partitionBy("n_nationkey")
-          .orderBy(expr("octet_length(n_name)").desc)).as("finish_rank"))
+  /** Rows the zone dimension may hold. [[zoneNames]] evaluates it as one
+    * value, and [[mostPopulars]] holds up to its square in one
+    * partition; every fixture's `nation` has 25. */
+  val ZoneRowCap: Long = 1000L
+
+  /** P5's zone ids: pickup ≙ `event_id % 25`, dropoff ≙ `user_id % 25`. */
+  private def withZoneIds(trips: DataFrame): DataFrame =
+    trips.withColumn("pickup_zone_id", col("event_id") % 25)
+      .withColumn("dropoff_zone_id", col("user_id") % 25)
+
+  /** W1 as one value: `nation` as a `n_nationkey → array<n_name>` map
+    * that keeps per key what `rank() OVER (PARTITION BY n_nationkey
+    * ORDER BY octet_length(n_name) DESC) = 1` keeps: every row of the
+    * largest byte length, so ties keep all tied names, or every row when
+    * no name has a length (NULLs sort last and tie with each other, as
+    * `<=>` against a NULL `max` does). NULL keys never match a join, so
+    * they are left out.
+    *
+    * The map is an uncorrelated scalar subquery over the dimension in one
+    * partition, where its two aggregates need no exchange: it is
+    * evaluated once per query, as one job inside the query's own action.
+    * So there is no join and no broadcast, and a [[fusedRun]] stays one
+    * SQL action. The two columns are read with a declared schema (an
+    * INT32 or INT64 key, a string name), which spares the schema
+    * inference job. It keeps at most `cap + 1` rows
+    * (`InRowModel.boundedCollect`'s cap law) and has no second arm: a
+    * dimension over the cap fails the query with an error naming the
+    * cap, rather than being truncated. */
+  private[graft] def zoneNames(spark: SparkSession, sfDir: String,
+      cap: Long): Column = {
+    val len = expr("octet_length(n_name)")
+    spark.read.schema("n_nationkey BIGINT, n_name STRING")
+      .parquet(s"$sfDir/nation.parquet")
+      .filter(col("n_nationkey").isNotNull)
+      .coalesce(1)
+      // position in the one partition: keeps cap + 1 rows without a
+      // limit, which would recompile its generated code on every query
+      .filter(monotonically_increasing_id() <= cap)
+      .groupBy(col("n_nationkey"))
+      .agg(count(lit(1)).as("rows"), max(len).as("top"),
+        collect_list(struct(len.as("len"), col("n_name"))).as("names"))
+      .agg(sum("rows").as("rows"), collect_list(struct(col("n_nationkey"),
+        transform(filter(col("names"), _("len") <=> col("top")),
+          _("n_name")))).as("zones"))
+      .select(when(col("rows") > cap, raise_error(lit(
+          s"zone dimension `nation` under $sfDir exceeds the zone row cap " +
+          s"of $cap rows; enrich looks zones up in one map and does not " +
+          "truncate it")))
+        .otherwise(map_from_entries(col("zones"))))
+      .scalar()
+  }
+
+  /** J1/J2: one row per matched (dropoff, pickup) zone-name pair of each
+    * row; a row whose either lookup misses explodes to none. */
+  private def lookupZones(trips: DataFrame, zones: Column): DataFrame =
+    trips.withColumn("dropoff_zone", explode(zones(col("dropoff_zone_id"))))
+      .withColumn("pickup_zone", explode(zones(col("pickup_zone_id"))))
 
   /** A1/A2 + W2/O1 + J4: the top-100 routes, dropoffs and pickups of a
     * (pickup_zone, dropoff_zone, route_count) frame, joined on
-    * `popularity`. Same rollup as TaxiOps.mostPopulars: marginal counts
-    * derive from the pair counts (count-per-zone ≡ Σ pair counts), so the
-    * three branches share one pair-count Exchange and the trips are
-    * aggregated once. */
+    * `popularity`. The marginal counts re-aggregate the pair counts
+    * (count-per-zone ≡ Σ pair counts). The frame is coalesced into one
+    * partition: it holds one row per zone-name pair, at most
+    * ZoneRowCap² (625 on the 25-row `nation`). There the marginal
+    * aggregates, the `Ranked.topK` ranks and the joins need no exchange,
+    * and the joins are hinted to shuffle-hash so neither becomes a
+    * broadcast, which would be a job of its own. */
   private def mostPopulars(pairCounts: DataFrame): DataFrame = {
+    val pairs = pairCounts.coalesce(1)
     def topRanked(df: DataFrame, cnt: String, tie: Seq[String]): DataFrame =
       graft.ops.Ranked.topK(df, cnt, 100, tie)
     def marginal(zone: String, cnt: String, as: String): DataFrame =
-      topRanked(pairCounts.groupBy(zone).agg(sum("route_count").as(cnt)),
+      topRanked(pairs.groupBy(zone).agg(sum("route_count").as(cnt)),
         cnt, Seq(zone))
         .select(col(zone).as(as), col(cnt), col("popularity"))
-    val routes = topRanked(pairCounts,
+        .hint("shuffle_hash")
+    val routes = topRanked(pairs,
       "route_count", Seq("pickup_zone", "dropoff_zone"))
       .select(col("pickup_zone").as("route_pickup"),
         col("dropoff_zone").as("route_dropoff"),
         col("route_count"), col("popularity"))
+    // a join of two one-partition sides reports a partitioning
+    // collection, which the next join re-shuffles; coalesce(1) restates it
+    // as one partition (no-op at run time)
     routes
       .join(marginal("dropoff_zone", "dropoff_count", "top_dropoff"),
         Seq("popularity"), "inner")
+      .coalesce(1)
       .join(marginal("pickup_zone", "pickup_count", "top_pickup"),
         Seq("popularity"), "inner")
   }
@@ -261,28 +341,25 @@ object TaxiPipeline {
   })
 
   def enrich(spark: SparkSession, sfDir: String, ds: String): Stage =
+    enrich(spark, sfDir, ds, ZoneRowCap)
+
+  /** Cap-explicit variant so specs can reach the zone row cap with a
+    * fixture-sized dimension. */
+  private[graft] def enrich(spark: SparkSession, sfDir: String, ds: String,
+      zoneCap: Long): Stage =
     Stage("enrich", { c =>
       if (!c.exists("normalized_trips")) {
         println("[pipeline] normalized_trips missing; skipping enrich"); false
       } else {
-        val trips = c.load("normalized_trips")
-          .withColumn("pickup_zone_id", col("event_id") % 25)
-          .withColumn("dropoff_zone_id", col("user_id") % 25)
-        val zones = rankedZones(spark, sfDir)
         val keys = Seq("event_id", "user_id", "pickup_zone_id",
           "dropoff_zone_id")
-        val doff = trips
-          .join(zones, trips("dropoff_zone_id") === zones("n_nationkey"),
-            "left")
-          .filter(col("finish_rank") === 1)
-          .select(keys.map(col) :+ col("ts") :+
-            col("n_name").as("dropoff_zone"): _*)
-        val pup = trips
-          .join(zones, trips("pickup_zone_id") === zones("n_nationkey"),
-            "left")
-          .filter(col("finish_rank") === 1)
-          .select(keys.map(col) :+ col("n_name").as("pickup_zone"): _*)
-        val enriched = doff.join(pup, keys, "inner")
+        // J3: each row n times, n = the identity's copies (scaladoc above)
+        val trips = withZoneIds(c.load("normalized_trips"))
+          .withColumn("graft_n",
+            count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+        val enriched = lookupZones(trips, zoneNames(spark, sfDir, zoneCap))
+          .withColumn("graft_copy",
+            explode(array_repeat(lit(true), col("graft_n").cast("int"))))
           .select(col("event_id"), col("user_id"),
             col("pickup_zone"), col("dropoff_zone"),
             DateTimeF.daypart(col("ts")).as("daypart"))
@@ -318,14 +395,15 @@ object TaxiPipeline {
     * mode reads the day once and lets Catalyst fuse ingest + normalize +
     * enrich projections into the scan.
     *
-    * Equality with the staged chain (same argument as
-    * [[graft.ops.TaxiOps.mostPopularsFused]]): the enrichment stage's
-    * branch-and-rejoin emits n² rows per 4-key identity with n
-    * normalized copies, and both zone names are functions of the
-    * identity, so every (pickup_zone, dropoff_zone) count equals
-    * Σ_identity n² — computed here as one identity-keyed count weighted
-    * n² into the pair rollup. Scale: 1 fact scan + 1 identity shuffle vs
-    * the staged mode's 4 writes + 3 re-reads + 2 scans + rejoin.
+    * Equality with the staged chain: enrich emits, per 4-key identity
+    * with n normalized copies, n² rows for each (dropoff, pickup) name
+    * pair of the identity (n copies, each repeated n times; see the
+    * object scaladoc), so every (pickup_zone, dropoff_zone) count equals
+    * Σ_identity n². This plan counts n per identity (one shuffle),
+    * looks both zones up in the same zone map as enrich, and weights
+    * each pair n² into the pair rollup shared with the final stage.
+    * Scale: 1 fact scan + 2 small shuffles vs the staged mode's 4 writes
+    * + 3 re-reads.
     *
     * The C2 ROW gate is folded into the single plan (round 15) via
     * `Dataset.observe`: the day scan
@@ -353,24 +431,11 @@ object TaxiPipeline {
     if (!hasDayFiles(spark, path)) return None
     val gate = org.apache.spark.sql.Observation()
     val day = readDay(spark, path).observe(gate, count(lit(1)).as("rows"))
-    val idCnt = keepGood(day)
-      .withColumn("pickup_zone_id", col("event_id") % 25)
-      .withColumn("dropoff_zone_id", col("user_id") % 25)
+    val idCnt = withZoneIds(keepGood(day))
       .groupBy("event_id", "user_id", "pickup_zone_id", "dropoff_zone_id")
       .agg(count(lit(1)).as("graft_n"))
-    val zones = rankedZones(spark, sfDir)
-    val withDoff = idCnt
-      .join(zones, idCnt("dropoff_zone_id") === zones("n_nationkey"), "left")
-      .filter(col("finish_rank") === 1)
-      .select(col("event_id"), col("user_id"), col("pickup_zone_id"),
-        col("graft_n"), col("n_name").as("dropoff_zone"))
-    val wide = withDoff
-      .join(zones, withDoff("pickup_zone_id") === zones("n_nationkey"),
-        "left")
-      .filter(col("finish_rank") === 1)
-      .select(col("dropoff_zone"), col("n_name").as("pickup_zone"),
-        col("graft_n"))
-    val pairCounts = wide.groupBy("pickup_zone", "dropoff_zone")
+    val pairCounts = lookupZones(idCnt, zoneNames(spark, sfDir, ZoneRowCap))
+      .groupBy("pickup_zone", "dropoff_zone")
       .agg(sum(col("graft_n") * col("graft_n")).as("route_count"))
     Some((mostPopulars(pairCounts), gate))
   }

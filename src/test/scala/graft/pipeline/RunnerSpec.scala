@@ -107,26 +107,30 @@ class RunnerSpec extends SparkSpec {
     }
   }
 
-  test("job budget: a staged day runs 16 Spark jobs, and loading a " +
-      "catalog-written table runs none") {
-    val cat = freshCatalog()
-    val src = tempDir("jsrc_test")
+  test("job budget: a staged day runs 8 Spark jobs at the sf0.1 and the " +
+      "sf0.001 day size, and loading a catalog-written table runs none") {
     val ds = "2024-01-05"
-    // sf0.1 days hold ~3,300 rows, the benchmark's day size; AQE's stage
-    // count in enrich depends on it (one fewer job on smaller days)
-    val sf01 = fixture("sf0.1")
-    writeDay(src, ds, dir = sf01)
-    val jobs = stageJobs {
-      assert(Runner.run(cat, TaxiPipeline.stages(spark, sf01, src, ds))
-        .size === 4)
+    // sf0.1 days hold ~3,300 rows, the benchmark's day size; sf0.001 days
+    // ~30. ingest: source-day schema inference + the write, which also
+    // counts the C2 gate rows; normalize: the write (its read goes
+    // through the pin); enrich: the zone-map subquery (`nation` is read
+    // with a declared schema), the identity window's exchange and the
+    // write; final_result: the pair-count exchange and the write
+    def dayJobs(dir: String): (Catalog, Map[String, Int]) = {
+      val cat = freshCatalog()
+      val src = tempDir("jsrc_test")
+      writeDay(src, ds, dir = dir)
+      cat -> stageJobs {
+        assert(Runner.run(cat, TaxiPipeline.stages(spark, dir, src, ds))
+          .size === 4)
+      }
     }
-    // ingest: source-day schema inference + the write, which also counts
-    // the C2 gate rows; normalize: the write (its read goes through the
-    // pin); enrich: `nation` schema inference + AQE stages and the write;
-    // final_result: AQE stages and the write
-    assert(jobs === Map("ingest" -> 2, "normalize" -> 1, "enrich" -> 7,
-      "final_result" -> 6))
-    assert(jobs.values.sum === 16)
+    val budget = Map("ingest" -> 2, "normalize" -> 1, "enrich" -> 3,
+      "final_result" -> 2)
+    assert(dayJobs(sf)._2 === budget)
+    val (cat, jobs) = dayJobs(fixture("sf0.1"))
+    assert(jobs === budget)
+    assert(jobs.values.sum === 8)
     def loadJobs(table: String): Int = stageJobs {
       Runner.run(cat, Seq(Stage("load", { c => c.load(table); true })))
     }.values.sum
