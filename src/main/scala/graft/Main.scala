@@ -20,7 +20,7 @@ object Main {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val ds = opts.getOrElse("ds", "2024-01-05")
+    val ds = TaxiPipeline.checkDs(opts.getOrElse("ds", "2024-01-05"))
     val sfDir = opts.getOrElse("sf-dir", "/root/testdata/sf0.01")
     val base = opts.getOrElse("warehouse",
       s"${sys.props("user.dir")}/target/taxi_wh")

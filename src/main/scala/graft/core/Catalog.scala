@@ -2,6 +2,8 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -39,10 +41,17 @@ final class Catalog(val spark: SparkSession, val warehouseDir: String) {
 
   /** Write `df` as the table (overwrite). The pin is dropped before the
     * write and `df.schema` pinned once it has succeeded, so a crash
-    * mid-write leaves no pin rather than a stale one. */
+    * mid-write leaves no pin rather than a stale one. A write that fails
+    * after the overwrite removed the old files leaves a directory with no
+    * part file; it is deleted, so no empty table stays listed. */
   def save(name: String, df: DataFrame): Unit = {
     unpin(name)
-    df.write.mode(SaveMode.Overwrite).parquet(pathOf(name).toString)
+    try df.write.mode(SaveMode.Overwrite).parquet(pathOf(name).toString)
+    catch { case NonFatal(e) =>
+      val parts = fs.globStatus(new Path(pathOf(name), "part-*"))
+      if (parts == null || parts.isEmpty) fs.delete(pathOf(name), true)
+      throw e
+    }
     pinSchema(name, df.schema)
   }
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * (a single-partition window over ≤k rows is free; over unbounded data
   * it would be the scale-killer, SURVEY §7.4). RANK is prefix-determined,
   * so ranking the deterministic top-k equals the global rank restricted
-  * to those rows. Shared by CoreQueries, TaxiOps, and TaxiPipeline. */
+  * to those rows. Shared by CoreQueries and TaxiOps' two rollups. */
 object Ranked {
   def topK(df: DataFrame, cnt: String, k: Int,
            tieBreak: Seq[String]): DataFrame =

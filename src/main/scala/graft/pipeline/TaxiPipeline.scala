@@ -1,11 +1,10 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Catalog
-import graft.functions.DateTimeF
+import graft.ops.{TaxiOps, TripSchema}
 
 /** One pipeline stage: returns false to short-circuit the rest (C2). */
 final case class Stage(name: String, run: Catalog => Boolean)
@@ -158,25 +157,11 @@ object Runner {
   *  4. final     — A1/A2 + bounded-rank top-100 (W2/O1) + USING(popularity)
   *                 ×2 (J4) → `most_populars_{yyyyMMdd}`
   *
-  * Enrich without joins. The zone dimension, capped at [[ZoneRowCap]]
-  * rows (over the cap the stage fails; nothing is truncated), becomes one
-  * `key → names` map value holding W1's `rank() = 1` names, evaluated
-  * once per query, so J1/J2 are map lookups ([[zoneNames]]). A trip
-  * whose lookup misses (NULL or negative id, absent key) explodes to no
-  * rows, as the reference's left join + `finish_rank = 1` drops it. The
-  * J3 rejoin needs no join either: both zone names are functions of the
-  * 4-key identity, so joining the dropoff branch (n·t_d rows for an
-  * identity with n copies) to the pickup branch (n·t_p rows) emits each
-  * dropoff row once per pickup name, n times over. Enrich computes n as
-  * one identity-keyed window count (one shuffle) and repeats each row n
-  * times.
-  *
-  * Final in one partition. The top-100 rollup ([[mostPopulars]]) reads
-  * the pair counts of one aggregate exchange. They hold at most one row
-  * per (pickup, dropoff) name pair, ≤ |zone names|² (625 on the 25-row
-  * dimension, ZoneRowCap² at most), so they are coalesced into a single
-  * partition, where the marginals, ranks and joins need no further
-  * exchange and no broadcast.
+  * The queries are `graft.ops.TaxiOps`' map-shaped chain over
+  * [[TripSchema.Events]]: enrich looks zones up in one `nation` map and
+  * repeats each row n times instead of rejoining two branches, and the
+  * rollup runs in one partition (the proofs are on `TaxiOps`). This object
+  * holds the stages' gates, their catalog calls and [[fusedRun]]'s commit.
   *
   * A staged day runs 8 Spark jobs at every day size: ingest 2, normalize
   * 1, enrich 3 (the zone-map subquery, the window's exchange, the write)
@@ -186,6 +171,17 @@ object Runner {
   * is the no-staging mode.
   */
 object TaxiPipeline {
+
+  /** `ds` unchanged when it is a strict ISO `yyyy-MM-dd` date; anything
+    * else throws before a job runs. The check keeps the derived names
+    * apart: [[dsNoDash]] is not injective on unpadded dates
+    * (`2024-11-5` and `2024-1-15` both give `2024115`). */
+  def checkDs(ds: String): String = {
+    val valid = ds.matches("\\d{4}-\\d{2}-\\d{2}") &&
+      scala.util.Try(java.time.LocalDate.parse(ds)).isSuccess
+    require(valid, s"ds '$ds' is not an ISO yyyy-MM-dd date")
+    ds
+  }
 
   /** `ds` (e.g. "2024-01-05") → "yyyyMMdd" table suffix (F11). */
   def dsNoDash(ds: String): String = ds.replace("-", "")
@@ -214,103 +210,14 @@ object TaxiPipeline {
   private def readDay(spark: SparkSession, dayPath: String): DataFrame =
     spark.read.option("pathGlobFilter", "part-*").parquet(dayPath)
 
-  /** P2: the normalize stage's keep-good filter. */
-  private def keepGood(trips: DataFrame): DataFrame = trips.filter(
-    col("event_type") =!= "error" &&
-      col("value") =!= 0 && col("value").isNotNull &&
-      col("user_id").isNotNull)
-
-  /** Rows the zone dimension may hold. [[zoneNames]] evaluates it as one
-    * value, and [[mostPopulars]] holds up to its square in one
-    * partition; every fixture's `nation` has 25. */
-  val ZoneRowCap: Long = 1000L
-
-  /** P5's zone ids: pickup ≙ `event_id % 25`, dropoff ≙ `user_id % 25`. */
-  private def withZoneIds(trips: DataFrame): DataFrame =
-    trips.withColumn("pickup_zone_id", col("event_id") % 25)
-      .withColumn("dropoff_zone_id", col("user_id") % 25)
-
-  /** W1 as one value: `nation` as a `n_nationkey → array<n_name>` map
-    * that keeps per key what `rank() OVER (PARTITION BY n_nationkey
-    * ORDER BY octet_length(n_name) DESC) = 1` keeps: every row of the
-    * largest byte length, so ties keep all tied names, or every row when
-    * no name has a length (NULLs sort last and tie with each other, as
-    * `<=>` against a NULL `max` does). NULL keys never match a join, so
-    * they are left out.
-    *
-    * The map is an uncorrelated scalar subquery over the dimension in one
-    * partition, where its two aggregates need no exchange: it is
-    * evaluated once per query, as one job inside the query's own action.
-    * So there is no join and no broadcast, and a [[fusedRun]] stays one
-    * SQL action. The two columns are read with a declared schema (an
-    * INT32 or INT64 key, a string name), which spares the schema
-    * inference job. It keeps at most `cap + 1` rows
-    * (`InRowModel.boundedCollect`'s cap law) and has no second arm: a
-    * dimension over the cap fails the query with an error naming the
-    * cap, rather than being truncated. */
-  private[graft] def zoneNames(spark: SparkSession, sfDir: String,
-      cap: Long): Column = {
-    val len = expr("octet_length(n_name)")
-    spark.read.schema("n_nationkey BIGINT, n_name STRING")
-      .parquet(s"$sfDir/nation.parquet")
-      .filter(col("n_nationkey").isNotNull)
-      .coalesce(1)
-      // position in the one partition: keeps cap + 1 rows without a
-      // limit, which would recompile its generated code on every query
-      .filter(monotonically_increasing_id() <= cap)
-      .groupBy(col("n_nationkey"))
-      .agg(count(lit(1)).as("rows"), max(len).as("top"),
-        collect_list(struct(len.as("len"), col("n_name"))).as("names"))
-      .agg(sum("rows").as("rows"), collect_list(struct(col("n_nationkey"),
-        transform(filter(col("names"), _("len") <=> col("top")),
-          _("n_name")))).as("zones"))
-      .select(when(col("rows") > cap, raise_error(lit(
-          s"zone dimension `nation` under $sfDir exceeds the zone row cap " +
-          s"of $cap rows; enrich looks zones up in one map and does not " +
-          "truncate it")))
-        .otherwise(map_from_entries(col("zones"))))
-      .scalar()
-  }
-
-  /** J1/J2: one row per matched (dropoff, pickup) zone-name pair of each
-    * row; a row whose either lookup misses explodes to none. */
-  private def lookupZones(trips: DataFrame, zones: Column): DataFrame =
-    trips.withColumn("dropoff_zone", explode(zones(col("dropoff_zone_id"))))
-      .withColumn("pickup_zone", explode(zones(col("pickup_zone_id"))))
-
-  /** A1/A2 + W2/O1 + J4: the top-100 routes, dropoffs and pickups of a
-    * (pickup_zone, dropoff_zone, route_count) frame, joined on
-    * `popularity`. The marginal counts re-aggregate the pair counts
-    * (count-per-zone ≡ Σ pair counts). The frame is coalesced into one
-    * partition: it holds one row per zone-name pair, at most
-    * ZoneRowCap² (625 on the 25-row `nation`). There the marginal
-    * aggregates, the `Ranked.topK` ranks and the joins need no exchange,
-    * and the joins are hinted to shuffle-hash so neither becomes a
-    * broadcast, which would be a job of its own. */
-  private def mostPopulars(pairCounts: DataFrame): DataFrame = {
-    val pairs = pairCounts.coalesce(1)
-    def topRanked(df: DataFrame, cnt: String, tie: Seq[String]): DataFrame =
-      graft.ops.Ranked.topK(df, cnt, 100, tie)
-    def marginal(zone: String, cnt: String, as: String): DataFrame =
-      topRanked(pairs.groupBy(zone).agg(sum("route_count").as(cnt)),
-        cnt, Seq(zone))
-        .select(col(zone).as(as), col(cnt), col("popularity"))
-        .hint("shuffle_hash")
-    val routes = topRanked(pairs,
-      "route_count", Seq("pickup_zone", "dropoff_zone"))
-      .select(col("pickup_zone").as("route_pickup"),
-        col("dropoff_zone").as("route_dropoff"),
-        col("route_count"), col("popularity"))
-    // a join of two one-partition sides reports a partitioning
-    // collection, which the next join re-shuffles; coalesce(1) restates it
-    // as one partition (no-op at run time)
-    routes
-      .join(marginal("dropoff_zone", "dropoff_count", "top_dropoff"),
-        Seq("popularity"), "inner")
-      .coalesce(1)
-      .join(marginal("pickup_zone", "pickup_count", "top_pickup"),
-        Seq("popularity"), "inner")
-  }
+  /** The `nation` zone map. The two columns are read with a declared
+    * schema (an INT32 or INT64 key, a string name), which spares the
+    * schema inference job. */
+  private def zones(spark: SparkSession, sfDir: String, cap: Long): Column =
+    TaxiOps.zoneMap(TripSchema.Events,
+      spark.read.schema("n_nationkey BIGINT, n_name STRING")
+        .parquet(s"$sfDir/nation.parquet"),
+      cap, s"`nation` under $sfDir")
 
   def ingest(srcDir: String, ds: String): Stage = Stage("ingest", { c =>
     val day = dayPath(srcDir, ds)
@@ -334,14 +241,15 @@ object TaxiPipeline {
     if (!c.exists("temp_trips")) { // C3 existence gate
       println("[pipeline] temp_trips missing; skipping normalize"); false
     } else {
-      c.save("normalized_trips", keepGood(c.load("temp_trips")))
+      c.save("normalized_trips",
+        TaxiOps.normalize(c.load("temp_trips"), TripSchema.Events))
       c.drop("temp_trips")
       true
     }
   })
 
   def enrich(spark: SparkSession, sfDir: String, ds: String): Stage =
-    enrich(spark, sfDir, ds, ZoneRowCap)
+    enrich(spark, sfDir, ds, TaxiOps.ZoneRowCap)
 
   /** Cap-explicit variant so specs can reach the zone row cap with a
     * fixture-sized dimension. */
@@ -351,18 +259,8 @@ object TaxiPipeline {
       if (!c.exists("normalized_trips")) {
         println("[pipeline] normalized_trips missing; skipping enrich"); false
       } else {
-        val keys = Seq("event_id", "user_id", "pickup_zone_id",
-          "dropoff_zone_id")
-        // J3: each row n times, n = the identity's copies (scaladoc above)
-        val trips = withZoneIds(c.load("normalized_trips"))
-          .withColumn("graft_n",
-            count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
-        val enriched = lookupZones(trips, zoneNames(spark, sfDir, zoneCap))
-          .withColumn("graft_copy",
-            explode(array_repeat(lit(true), col("graft_n").cast("int"))))
-          .select(col("event_id"), col("user_id"),
-            col("pickup_zone"), col("dropoff_zone"),
-            DateTimeF.daypart(col("ts")).as("daypart"))
+        val enriched = TaxiOps.enrichByMap(TripSchema.Events,
+          c.load("normalized_trips"), zones(spark, sfDir, zoneCap))
         c.save(s"trips_${dsNoDash(ds)}", enriched)
         c.drop("normalized_trips")
         true
@@ -374,70 +272,45 @@ object TaxiPipeline {
     if (!c.exists(in)) {
       println(s"[pipeline] $in missing; skipping final_result"); false
     } else {
-      val pairCounts = c.load(in).groupBy("pickup_zone", "dropoff_zone")
-        .agg(count(lit(1)).as("route_count"))
-      c.save(s"most_populars_${dsNoDash(ds)}", mostPopulars(pairCounts))
+      c.save(s"most_populars_${dsNoDash(ds)}",
+        TaxiOps.rollupPairCounts(TaxiOps.routeCounts(c.load(in))))
       true
     }
   })
 
   /** Build the 4-stage chain for one execution date (C4: `--ds`). */
   def stages(spark: SparkSession, sfDir: String, srcDir: String,
-             ds: String): Seq[Stage] =
+             ds: String): Seq[Stage] = {
+    checkDs(ds)
     Seq(ingest(srcDir, ds), normalize, enrich(spark, sfDir, ds),
       finalResult(ds))
+  }
 
   /** Fused execution of the same 4-stage chain: one declarative plan
     * from the day's source files to the most-populars result, no staged
-    * tables. The staged [[stages]] runner stays the default — its
-    * intermediate tables are the reference's observable surface — but
-    * when only the final table is wanted, staging is pure overhead: this
-    * mode reads the day once and lets Catalyst fuse ingest + normalize +
-    * enrich projections into the scan.
+    * tables (1 fact scan + 2 small shuffles vs the staged mode's 4 writes
+    * + 3 re-reads). `TaxiOps.pairCounts` equals the pair counts of the
+    * staged enrich (the n-copies proof on `TaxiOps`), and both feed the
+    * same rollup.
     *
-    * Equality with the staged chain: enrich emits, per 4-key identity
-    * with n normalized copies, n² rows for each (dropoff, pickup) name
-    * pair of the identity (n copies, each repeated n times; see the
-    * object scaladoc), so every (pickup_zone, dropoff_zone) count equals
-    * Σ_identity n². This plan counts n per identity (one shuffle),
-    * looks both zones up in the same zone map as enrich, and weights
-    * each pair n² into the pair rollup shared with the final stage.
-    * Scale: 1 fact scan + 2 small shuffles vs the staged mode's 4 writes
-    * + 3 re-reads.
-    *
-    * The C2 ROW gate is folded into the single plan (round 15) via
-    * `Dataset.observe`: the day scan
-    * carries a CollectMetrics count, so the gate quantity ("any rows
-    * this day?") is computed BY the one action that executes the plan —
-    * no separate limit-1 gate job. Returns None only on the METADATA
-    * gate (absent day dir / no part files — decidable from file listings
-    * without a job, exactly where the staged runner's ingest stage gates
-    * without reading data). The row gate's DECISION still precedes every
-    * visible write: [[fusedRun]] stages the action's output under a
-    * hidden name and only commits (renames) it into the catalog after
-    * the observed count passes — an empty day leaves the catalog
-    * without the table, same as the staged runner's short-circuit.
-    *
-    * Note the observation deliberately sits on the RAW day scan (the
-    * gate counts pre-normalization rows, like the staged ingest's
-    * observed `temp_trips` write), which pins the normalize filter ABOVE the
-    * CollectMetrics node — pushing it into the scan would change the
-    * observed count. The rows are read either way (the gate needs
-    * them); only the scan-level filter skip is forgone, priced at one
-    * column-pruned pass over one day's partition. */
+    * The C2 ROW gate is folded into the plan via `Dataset.observe`: the
+    * day scan carries a CollectMetrics count, so the one action that
+    * executes the plan also computes "any rows this day?", and no limit-1
+    * gate job runs. It counts pre-normalization rows, like the staged
+    * ingest's observed write, which keeps the normalize filter above the
+    * CollectMetrics node (a column-pruned pass over one day either way).
+    * Returns None only on the METADATA gate (absent day dir / no part
+    * files), decided from file listings without a job. [[fusedRun]]
+    * commits the output only after the observed count passes. */
   def fusedObserved(spark: SparkSession, sfDir: String, srcDir: String,
       ds: String): Option[(DataFrame, org.apache.spark.sql.Observation)] = {
-    val path = dayPath(srcDir, ds)
+    val path = dayPath(srcDir, checkDs(ds))
     if (!hasDayFiles(spark, path)) return None
     val gate = org.apache.spark.sql.Observation()
     val day = readDay(spark, path).observe(gate, count(lit(1)).as("rows"))
-    val idCnt = withZoneIds(keepGood(day))
-      .groupBy("event_id", "user_id", "pickup_zone_id", "dropoff_zone_id")
-      .agg(count(lit(1)).as("graft_n"))
-    val pairCounts = lookupZones(idCnt, zoneNames(spark, sfDir, ZoneRowCap))
-      .groupBy("pickup_zone", "dropoff_zone")
-      .agg(sum(col("graft_n") * col("graft_n")).as("route_count"))
-    Some((mostPopulars(pairCounts), gate))
+    val pairCounts = TaxiOps.pairCounts(TripSchema.Events, day,
+      zones(spark, sfDir, TaxiOps.ZoneRowCap))
+    Some((TaxiOps.rollupPairCounts(pairCounts), gate))
   }
 
   /** Single-action gated fused run (round 15): executes the whole fused

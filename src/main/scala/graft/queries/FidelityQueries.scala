@@ -35,9 +35,8 @@ object FidelityQueries {
     GeoQueries.zonesWkt(s, dir)
       .select(col("zone_id").cast("long").as("zone_id"), col("zone_geom"))
 
-  private def taxiFull(s: SparkSession, dir: String): DataFrame = {
-    val mp = TaxiOps.mostPopulars(
-      TaxiOps.enrich(TaxiOps.normalize(trips(s, dir)), zones(s, dir)))
+  /** The oracle's projection and total order of a most-populars frame. */
+  private def oracleOrder(mp: DataFrame): DataFrame =
     mp.select(col("popularity"),
       col("route.pickup_hexagons").as("route_pickup_hex"),
       col("route.dropoff_hexagons").as("route_dropoff_hex"),
@@ -46,22 +45,16 @@ object FidelityQueries {
       col("hex_pickup").as("top_pickup_hex"), col("pickup_count"))
       .orderBy("popularity", "route_pickup_hex", "route_dropoff_hex",
         "top_dropoff_hex", "top_pickup_hex")
-  }
 
-  /** The same chain through [[TaxiOps.mostPopularsFused]] — one scan +
-    * one identity-keyed aggregate instead of the staged branch-rejoin
-    * (algebraic-equality proof on the method). Gated by the SAME oracle
-    * as `q_taxi_full`: identical output is the claim being checked. */
+  private def taxiFull(s: SparkSession, dir: String): DataFrame =
+    oracleOrder(TaxiOps.mostPopulars(
+      TaxiOps.enrich(TaxiOps.normalize(trips(s, dir)), zones(s, dir))))
+
+  /** The same chain through [[TaxiOps.mostPopularsFused]] (equality
+    * proof on `TaxiOps`), gated by the SAME oracle as `q_taxi_full`:
+    * identical output is the claim being checked. */
   private def taxiFused(s: SparkSession, dir: String): DataFrame =
-    TaxiOps.mostPopularsFused(trips(s, dir), zones(s, dir))
-      .select(col("popularity"),
-        col("route.pickup_hexagons").as("route_pickup_hex"),
-        col("route.dropoff_hexagons").as("route_dropoff_hex"),
-        col("route_count"),
-        col("hex_dropoff").as("top_dropoff_hex"), col("dropoff_count"),
-        col("hex_pickup").as("top_pickup_hex"), col("pickup_count"))
-      .orderBy("popularity", "route_pickup_hex", "route_dropoff_hex",
-        "top_dropoff_hex", "top_pickup_hex")
+    oracleOrder(TaxiOps.mostPopularsFused(trips(s, dir), zones(s, dir)))
 
   private val taxiFullSql = {
     // true H3 res-9 ids per zone centroid; H3.latLngToCellString is

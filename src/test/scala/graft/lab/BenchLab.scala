@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Scratch harness for isolating bench regressions (not registered).
   * NOTE: never persist() here — CacheManager substitutes matching plan
   * fragments in LATER variants, silently faking their timings. */
@@ -9,20 +7,16 @@ object BenchLab {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // data-sized initial shuffle partitions — rationale + A/B numbers
-      // on GraftSession.initialShufflePartitions
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.core.GraftSession.initialShufflePartitions(sfDir, cpus.toInt)
-          .toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the engine config Bench runs (extensions, codegen cache, the `file:`
+    // binding) plus Bench's own settings
+    val spark = graft.core.GraftSession.local(cpus.toInt, "graft-benchlab",
+      Map(
+        "spark.sql.shuffle.partitions" -> cpus,
+        // data-sized initial shuffle partitions — rationale + A/B numbers
+        // on GraftSession.initialShufflePartitions
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+          graft.core.GraftSession.initialShufflePartitions(sfDir, cpus.toInt)
+            .toString))
     spark.sparkContext.setLogLevel("ERROR")
     // same ANALYZE step as Bench so lab plans match bench plans
     graft.core.TableStats.analyze(spark, sfDir)

@@ -65,6 +65,28 @@ class TaxiOpsSpec extends SparkSpec {
     assert(route.getString(0) !== route.getString(1)) // pickup ≠ dropoff hex
   }
 
+  /** The fused chain's rows equal the reference-shaped staged chain's,
+    * column for column; returns the staged result. */
+  private def fusedEqualsStaged(trips: DataFrame,
+      zones: DataFrame): Seq[org.apache.spark.sql.Row] = {
+    val staged = TaxiOps.mostPopulars(
+      TaxiOps.enrich(TaxiOps.normalize(trips), zones))
+    val fused = TaxiOps.mostPopularsFused(trips, zones)
+    assert(fused.columns.toSeq === staged.columns.toSeq)
+    val cols = staged.columns.map(org.apache.spark.sql.functions.col)
+    val want = staged.orderBy(cols: _*).collect().toSeq
+    assert(fused.orderBy(cols: _*).collect().toSeq === want)
+    want
+  }
+
+  /** A good trip (normalize keeps it) between two location ids. */
+  private def trip(pu: Option[Long], dropoff: Option[Long]): DataFrame =
+    Seq((ts("2023-02-16 15:00:00"), ts("2023-02-16 15:20:00"), 1L, 2.0,
+      10.0, 11.0, pu, dropoff)).toDF(trips.columns.toSeq: _*)
+
+  private def zone(id: Option[Long], wkt: Option[String]): DataFrame =
+    Seq((id, wkt)).toDF("zone_id", "zone_geom")
+
   test("mostPopularsFused equals the staged chain on duplicate identities" +
       " and zone ties") {
     // duplicate trip identities (n=2 → n²=4 in the staged rejoin) AND a
@@ -74,12 +96,25 @@ class TaxiOpsSpec extends SparkSpec {
     val tiedZones = zones.union(
       Seq((2L, "POLYGON((9 9, 9.5 9, 9.5 9.5, 9 9.5, 9 9))"))
         .toDF("zone_id", "zone_geom")) // same byte length as zone 2's row
-    val staged = TaxiOps.mostPopulars(
-      TaxiOps.enrich(TaxiOps.normalize(dup), tiedZones))
-    val fused = TaxiOps.mostPopularsFused(dup, tiedZones)
-    val cols = staged.columns.map(org.apache.spark.sql.functions.col)
-    assert(fused.select(cols: _*).orderBy(cols: _*).collect().toSeq ===
-      staged.select(cols: _*).orderBy(cols: _*).collect().toSeq)
+    fusedEqualsStaged(dup, tiedZones)
+
+    // the zone map's edge cases, each against the join shape
+    val base = fusedEqualsStaged(trips, zones)
+    // a NULL geometry is the label of a key whose only row it is, and
+    // loses to a WKT under its key; zone 3 becomes the top pickup
+    val fromNull = Seq.fill(3)(trip(Some(3L), Some(1L))).reduce(_ union _)
+    val nullGeom = fusedEqualsStaged(
+      trips.union(fromNull).union(trip(Some(2L), Some(3L))),
+      zones.union(zone(Some(3L), None)).union(zone(Some(1L), None)))
+    assert(nullGeom.exists(r => r.isNullAt(r.fieldIndex("hex_pickup"))))
+    // a NULL key matches nothing, not even a NULL location id
+    assert(fusedEqualsStaged(trips.union(trip(None, Some(2L))),
+      zones.union(zone(None, Some("POLYGON((5 5, 6 5, 6 6, 5 6, 5 5))")))) ===
+      base)
+    // a location id absent from the dimension drops its trip
+    assert(fusedEqualsStaged(
+      trips.union(trip(Some(7L), Some(2L))).union(trip(Some(1L), Some(9L))),
+      zones) === base)
   }
 
   test("tripss + dailyTripMetrics compute the dbt models") {

@@ -141,10 +141,9 @@ class EnrichEquivSpec extends SparkSpec {
       .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
     assert(messages.exists(_.contains(s"zone row cap of ${rows - 1} rows")),
       messages.mkString("\n"))
-    // the failed overwrite may leave the table's directory, but no rows
-    val parts = Option(new java.io.File(s"${over.warehouseDir}/trips_$day")
-      .list()).toSeq.flatten.filter(_.startsWith("part-"))
-    assert(parts.isEmpty && over.exists("normalized_trips"))
+    // the failed overwrite leaves no table behind
+    assert(!over.exists(s"trips_$day"))
+    assert(over.tables() === Seq("normalized_trips"))
     // at the cap itself the dimension fits
     val at = staged()
     assert(enrich(at, rows) === Seq("enrich"))

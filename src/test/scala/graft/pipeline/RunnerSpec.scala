@@ -142,6 +142,18 @@ class RunnerSpec extends SparkSpec {
     assert(loadJobs("outside") === 1)
   }
 
+  test("ds check: an unpadded or undashed date is refused before any job") {
+    val src = tempDir("dsrc_test")
+    // 2024-11-5 and 2024-1-15 would both name most_populars_2024115
+    for (ds <- Seq("2024-11-5", "2024-1-15", "20240105", "2024-02-30")) {
+      intercept[IllegalArgumentException](
+        TaxiPipeline.stages(spark, sf, src, ds))
+      intercept[IllegalArgumentException](
+        TaxiPipeline.fusedObserved(spark, sf, src, ds))
+    }
+    assert(TaxiPipeline.checkDs("2024-01-05") === "2024-01-05")
+  }
+
   test("existence gate (C3): normalize skips when temp_trips is missing") {
     val cat = freshCatalog()
     assert(!cat.exists("temp_trips"))

@@ -160,6 +160,23 @@ class SchemaPinSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(cat.warehouseDir, "b", "a")))
   }
 
+  test("a save whose write fails leaves no table and no pin") {
+    val cat = freshCat()
+    cat.save("t", Seq(1L, 2L).toDF("x"))
+    def raising(df: org.apache.spark.sql.DataFrame) =
+      df.select(when(col("x") >= 0, raise_error(lit("boom")))
+        .otherwise(col("x")).as("x"))
+    // a local relation is evaluated while planning, before the overwrite
+    // removes a file: the old table stays
+    intercept[Exception](cat.save("t", raising(Seq(1L).toDF("x"))))
+    assert(cat.load("t").count() === 2L)
+    // a job that raises fails after the old files are gone
+    intercept[Exception](cat.save("t", raising(spark.range(1).toDF("x"))))
+    assert(!cat.exists("t"))
+    assert(!cat.tables().contains("t"))
+    assert(cat.pinnedSchema("t") === None)
+  }
+
   test("every staged table of a pipeline day reads back through its pin " +
       "with the inferred schema (sf0.01)") {
     val sf001 = fixture("sf0.01")
