@@ -10,6 +10,24 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * a broken query must not contribute a fast wall-clock number.
   */
 object Bench {
+
+  /** Untimed between-runs hygiene, run before every timed sample: several
+    * queries localCheckpoint intermediates (dedup components, shortest
+    * path, the pair scorers), and those storage blocks stay alive until
+    * the ContextCleaner GCs the plan that references them. Left alone,
+    * 27 queries × N passes of stale blocks pile up in the block manager
+    * and the iterative queries degrade 2× mid-run (x_dedup_components
+    * measured 6.3 s solo vs 15.6 s late in a full pass). Every query gets
+    * the same clean slate the cold per-query DuckDB comparator gets. */
+  def cleanSlate(spark: org.apache.spark.sql.SparkSession): Unit = {
+    spark.catalog.clearCache()
+    // blocking (round 13): with blocking=false the block-removal work
+    // is enqueued async and lands INSIDE the next timed sample
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -46,17 +64,16 @@ object Bench {
         }
       }
     }
-    val spark = graft.core.GraftSession.local(cpus.toInt, "graft-bench",
-      Map(
-        "spark.sql.shuffle.partitions" -> cpus,
-        // data-sized initial shuffle partitions — rationale + A/B numbers
-        // on GraftSession.initialShufflePartitions
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
-          graft.core.GraftSession.initialShufflePartitions(sfDir, cpus.toInt)
-            .toString))
+    // ANALYZE: register (rows, NDV) catalog stats for the fixtures so the
+    // cost-based skip-partial rule (graft.plans.AutoSkipPartialAgg) can
+    // decide plan shapes — the standard once-per-load warehouse step,
+    // outside the timed region (the comparator's engine collects its own
+    // stats from parquet metadata on every read). forData analyzes sfDir,
+    // the warm-up fixture is analyzed before the warm-up.
+    val spark = graft.core.GraftSession.forData(sfDir, cpus.toInt, "graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
     // One known-benign stderr pattern, suppressed surgically (round 13,
-    // narrowed round 14 per ADVICE): cleanSlate()'s System.gc() collects
+    // narrowed round 14 per ADVICE): cleanSlate's System.gc() collects
     // the weakly-held accumulators of ALREADY-FINISHED actions, and a
     // late completion event from a limit-short-circuited job (e.g. a
     // convergence `.head()` whose remaining tasks were cancelled after
@@ -111,14 +128,6 @@ object Bench {
       sys.exit(2)
     }
 
-    // ANALYZE: register (rows, NDV) catalog stats for the fixtures so the
-    // cost-based skip-partial rule (graft.plans.AutoSkipPartialAgg) can
-    // decide plan shapes — the standard once-per-load warehouse step,
-    // outside the timed region (the comparator's engine collects its own
-    // stats from parquet metadata on every read).
-    graft.core.TableStats.analyze(spark, "/root/testdata/sf0.001")
-    graft.core.TableStats.analyze(spark, sfDir)
-
     // Warm every plan at the smallest SF first: JIT warm-up and the first
     // whole-stage codegen compile of each class land here, not in the
     // timed passes (measured 22 s cold vs 2.4 s warm on identical plans).
@@ -130,6 +139,7 @@ object Bench {
     // failed — only the timed runs at the target SF decide that.
     val debug = sys.env.get("SPARK_GRAFT_BENCH_DEBUG").contains("1")
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    graft.core.TableStats.analyze(spark, "/root/testdata/sf0.001")
     names.foreach { name =>
       try SparkEntry.benchQueries(name)(spark, "/root/testdata/sf0.001")
         .write.format("noop").mode("overwrite").save()
@@ -147,23 +157,6 @@ object Bench {
     // single query but at most one interleaved sample of each — min-of-N
     // then recovers the steady-state number for every query instead of
     // losing one query entirely.
-    // Untimed between-runs hygiene: several queries localCheckpoint
-    // intermediates (dedup components, shortest path, the pair scorers),
-    // and those storage blocks stay alive until the ContextCleaner GCs
-    // the plan that references them. Left alone, 27 queries × N passes
-    // of stale blocks pile up in the block manager and the iterative
-    // queries degrade 2× mid-run (x_dedup_components measured 6.3 s solo
-    // vs 15.6 s late in a full pass). Every query gets the same clean
-    // slate the cold per-query DuckDB comparator gets.
-    def cleanSlate(): Unit = {
-      spark.catalog.clearCache()
-      // blocking (round 13): with blocking=false the block-removal work
-      // is enqueued async and lands INSIDE the next timed sample
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-
     def gcMillis: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -215,7 +208,7 @@ object Bench {
     // generated-code cache (GraftSession.CodegenCacheEntries).
     val passCompiles = scala.collection.mutable.Map.empty[Int, Long]
     for ((pass, name) <- visits if !failed.contains(name)) {
-      cleanSlate()
+      cleanSlate(spark)
       val c0 = compiles
       try {
         val gc0 = if (debug) gcMillis else 0L
@@ -313,7 +306,7 @@ object Bench {
       if (notes.isEmpty) "" else notes.mkString(""","notes":{""", ",", "}")
     // machine-readable SOLO steady-state riders (r15 verdict item 4):
     // when an interleaved window's number is adjudicated against an
-    // out-of-window SoloBench measurement (GC/interleave noise), that
+    // out-of-window BenchLab measurement (GC/interleave noise), that
     // number belongs IN the artifact, not in PLANS.md prose. Format:
     // SPARK_GRAFT_BENCH_SOLO="name=sec,name=sec"; names must be benched.
     // strict like ONLY/EXCLUDE (ADVICE r16): a malformed entry —

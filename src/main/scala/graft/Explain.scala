@@ -9,12 +9,9 @@ import java.nio.file.{Files, Paths}
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = graft.core.GraftSession.local(4, "graft-explain", Map(
-      "spark.sql.shuffle.partitions" -> "4",
-      // data-sized initial shuffle partitions — rationale + A/B numbers
-      // on GraftSession.initialShufflePartitions
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
-        graft.core.GraftSession.initialShufflePartitions(sfDir, 32).toString))
+    // the bench's engine setup at 4 cores, ANALYZE included, so the
+    // dumped plans are the plans Bench runs
+    val spark = graft.core.GraftSession.forData(sfDir, 4, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val out = Paths.get("target", "plans")
     Files.createDirectories(out)

@@ -16,17 +16,9 @@ object Verify {
       sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession.local(cpus.toInt, "graft-verify",
-      Map(
-        "spark.sql.shuffle.partitions" -> cpus,
-        // data-sized initial shuffle partitions — rationale + A/B numbers
-        // on GraftSession.initialShufflePartitions
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
-          graft.core.GraftSession.initialShufflePartitions(sfDir, cpus.toInt)
-            .toString))
-    // ANALYZE: catalog stats for the cost-based skip-partial rule — the
-    // once-per-load warehouse step (see Bench for rationale)
-    graft.core.TableStats.analyze(spark, sfDir)
+    // the bench's engine setup, ANALYZE included: verified plans are
+    // the plans Bench times
+    val spark = graft.core.GraftSession.forData(sfDir, cpus.toInt, "graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

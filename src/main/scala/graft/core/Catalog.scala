@@ -6,6 +6,7 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parquet-backed named-table catalog (SURVEY.md §2.1 S6–S9).
@@ -43,8 +44,11 @@ final class Catalog(val spark: SparkSession, val warehouseDir: String) {
     * write and `df.schema` pinned once it has succeeded, so a crash
     * mid-write leaves no pin rather than a stale one. A write that fails
     * after the overwrite removed the old files leaves a directory with no
-    * part file; it is deleted, so no empty table stays listed. */
+    * part file; it is deleted, so no empty table stays listed. A `df`
+    * that reads the table itself is refused before anything is touched:
+    * the overwrite would delete the files the job then reads. */
   def save(name: String, df: DataFrame): Unit = {
+    refuseSelfRead(name, df)
     unpin(name)
     try df.write.mode(SaveMode.Overwrite).parquet(pathOf(name).toString)
     catch { case NonFatal(e) =>
@@ -53,6 +57,21 @@ final class Catalog(val spark: SparkSession, val warehouseDir: String) {
       throw e
     }
     pinSchema(name, df.schema)
+  }
+
+  /** Throws when a scan in `df`'s analyzed plan (subqueries included)
+    * reads the table's directory or a path under it. The analyzed plan
+    * already exists for a Dataset, so the check starts no Spark job. */
+  private def refuseSelfRead(name: String, df: DataFrame): Unit = {
+    val table = fs.makeQualified(pathOf(name)).toUri.toString
+    val self = df.queryExecution.analyzed.collectWithSubqueries {
+      case r: LogicalRelation => TableStats.keyOf(r)
+    }.flatten.find(p => p == table || p.startsWith(table + "/"))
+    self.foreach { p =>
+      throw new IllegalArgumentException(
+        s"catalog save '$name': the frame reads the table itself ($p), and " +
+          "the overwrite would delete those files before the job reads them")
+    }
   }
 
   /** Append `df`. The pin survives only if it still describes every file:

@@ -138,4 +138,19 @@ object GraftSession {
         "cached before this session, so every local write forks chmod")
     spark
   }
+
+  /** The session every evidence tool runs (`Bench`, `Verify`, `Explain`,
+    * `BenchLab`): [[local]] at `cores`, shuffle partitions = `cores`,
+    * AQE's initial partition count sized from `dataDir`
+    * ([[initialShufflePartitions]]), and the fixture tables under
+    * `dataDir` analyzed ([[TableStats.analyze]]), so the cost-based
+    * rules plan against the same stats in every tool. */
+  def forData(dataDir: String, cores: Int, appName: String): SparkSession = {
+    val spark = local(cores, appName, Map(
+      "spark.sql.shuffle.partitions" -> cores.toString,
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        initialShufflePartitions(dataDir, cores).toString))
+    TableStats.analyze(spark, dataDir)
+    spark
+  }
 }

@@ -18,20 +18,14 @@ import org.apache.spark.sql.functions._
   * udf-first surface per SURVEY §2.10), upgradeable to a codegen
   * `Expression` if the scan ever becomes hash-bound.
   *
-  * F6 — `hexCell(point, res)`, this library's slot for the reference's
-  * `H3_FROMGEOGPOINT` (`enrichment_query.py:10,17`). It is deliberately
-  * NOT H3 and does not claim H3 cell ids: carto-H3's numbering depends
-  * on its icosahedral base-cell tables (122 base cells × face IJK
-  * orientations), which cannot be reproduced in this offline build.
-  * What it IS: a deterministic hexagonal cell index — (lat, lng, res) →
-  * 19-char hex cell id, hexagonal tiling on a sinusoidal-projection
-  * axial lattice, the same aperture-7 edge-length schedule as H3
-  * (res-0 edge / √7ᵉʳ, so res 9 ≈ 174 m), equal ids ⟺ same cell. All
-  * uses in the reference only group/join on the id, which this
-  * preserves; columns derived from it are named `hex_*`, not `h3_*`, so
-  * the API never implies id-level compatibility with a carto-H3 run.
-  * Pure `Column` math (cos/round/when) → whole-stage codegen, no UDF on
-  * the 100 TB path.
+  * F6 — `h3Cell(lat, lng, res)`, the reference's `H3_FROMGEOGPOINT`
+  * (`enrichment_query.py:10,17`): true H3 cell ids from [[H3]] (the
+  * published algorithm, its base-cell tables derived from the
+  * icosahedron geometry and checked against published vectors in
+  * `H3Spec`) through a codegen expression, no UDF on the 100 TB path.
+  * The rest of the H3 surface follows it: cell centers, grid disk,
+  * distance and path, parent/children, compaction, boundaries and
+  * polyfill.
   */
 object GeoF {
 
@@ -222,9 +216,7 @@ object GeoF {
     * (`enrichment_query.py:10,17`). Backed by [[H3.latLngToCell]]
     * (published-algorithm implementation, validated against published
     * vectors in `H3Spec`) through the codegen expression
-    * [[graft.plans.H3Cell]] — whole-stage codegen, no UDF. Supersedes
-    * [[hexCell]] (the pre-H3 lattice stand-in, kept below for
-    * continuity). */
+    * [[graft.plans.H3Cell]] — whole-stage codegen, no UDF. */
   def h3Cell(lat: Column, lng: Column, res: Int): Column =
     org.apache.spark.sql.GraftBridge.column(
       graft.plans.H3Cell(
@@ -462,76 +454,4 @@ object GeoF {
     org.apache.spark.sql.GraftBridge.column(
       graft.plans.H3Polyfill(
         org.apache.spark.sql.GraftBridge.expression(geom), res))
-
-  // ------------------- legacy hex lattice (pre-H3 stand-in) --------------
-
-  /** Mean Earth radius (m), and H3's res-0 edge length (m); each res
-    * divides the edge by √7 (aperture-7 schedule, same as H3). */
-  private val EarthR = 6371007.180918475
-  private val Res0EdgeM = 1107712.591
-
-  def edgeLengthM(res: Int): Double =
-    Res0EdgeM / math.pow(math.sqrt(7.0), res)
-
-  /** (lat°, lng°, res) → cell id Column. Sinusoidal (equal-area-ish)
-    * projection to meters, axial hex coordinates, cube rounding, packed
-    * as `"9%02x%08x%08x"`-style 19-char hex (res byte + zigzag q + r).
-    * 8 hex chars per coordinate: the zigzagged axial coordinate is
-    * bounded by ~2·(π·R·(√3/3+1/3))/edge(res) < 2³² for every res ≤ 15,
-    * so `lpad` never sees an over-wide input and cannot truncate
-    * distinct cells into a collision (6 chars overflowed at res ≥ 14). */
-  def hexCell(lat: Column, lng: Column, res: Int): Column = {
-    require(res >= 0 && res <= 15,
-      s"hexCell resolution must be in [0, 15], got $res")
-    val s = edgeLengthM(res) // hex size parameter (center→vertex)
-    val phi = radians(lat)
-    val x = radians(lng) * cos(phi) * EarthR
-    val y = phi * EarthR
-    // axial coords (pointy-top): q = (√3/3·x − 1/3·y)/s, r = 2/3·y/s
-    val qf = (x * (math.sqrt(3.0) / 3.0) - y / 3.0) / s
-    val rf = y * (2.0 / 3.0) / s
-    val sf = -qf - rf
-    // cube rounding; nearest-integer via floor(x+0.5) — identical on
-    // every engine evaluating the same double (Spark's round() is
-    // BigDecimal HALF_UP, DuckDB's is half-away — they disagree on exact
-    // negative halves; a .5 axial coordinate is a cell-boundary tie, so
-    // any consistent choice is a valid tie-break)
-    val qr = floor(qf + 0.5); val rr = floor(rf + 0.5)
-    val sr = floor(sf + 0.5)
-    val dq = abs(qr - qf); val dr = abs(rr - rf); val ds = abs(sr - sf)
-    val q = when(dq > dr && dq > ds, -rr - sr).otherwise(qr).cast("long")
-    val r = when(!(dq > dr && dq > ds) && dr > ds, -qr - sr)
-      .otherwise(rr).cast("long")
-    // zigzag-encode to non-negatives, pack as hex: "9" + res + q + r
-    def zz(c: Column): Column =
-      when(c >= 0, c * 2).otherwise(c * -2 - 1)
-    concat(lit("9"), lpad(lower(hex(lit(res))), 2, "0"),
-      lpad(lower(hex(zz(q))), 8, "0"), lpad(lower(hex(zz(r))), 8, "0"))
-  }
-
-  /** Scala-side mirror of [[hexCell]] for unit tests. Rounding is the
-    * same floor(x+0.5) tie-break as the Column path (and the independent
-    * SQL oracle in GeoQueries), so all three implementations agree
-    * bit-for-bit on identical doubles. */
-  def hexCellScala(lat: Double, lng: Double, res: Int): String = {
-    require(res >= 0 && res <= 15,
-      s"hexCell resolution must be in [0, 15], got $res")
-    def rnd(x: Double): Double = math.floor(x + 0.5)
-    val s = edgeLengthM(res)
-    val phi = math.toRadians(lat)
-    val x = math.toRadians(lng) * math.cos(phi) * EarthR
-    val y = phi * EarthR
-    val qf = (x * (math.sqrt(3.0) / 3.0) - y / 3.0) / s
-    val rf = y * (2.0 / 3.0) / s
-    val sf = -qf - rf
-    var qr = rnd(qf)
-    var rr = rnd(rf)
-    val sr = rnd(sf)
-    val (dq, dr, ds) =
-      (math.abs(qr - qf), math.abs(rr - rf), math.abs(sr - sf))
-    if (dq > dr && dq > ds) qr = -rr - sr
-    else if (dr > ds) rr = -qr - sr
-    def zz(c: Long): Long = if (c >= 0) c * 2 else c * -2 - 1
-    f"9${res}%02x${zz(qr.toLong)}%08x${zz(rr.toLong)}%08x"
-  }
 }

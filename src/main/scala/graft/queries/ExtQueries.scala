@@ -2310,7 +2310,7 @@ object ExtQueries {
     // exclusion knob — the one silently-shaped window left once the
     // production regime (x_embed_neardup_prod, benched) became the
     // verified scale surface. Oracle kept: still correctness-gated
-    // every round; SoloBench reaches it for ad-hoc timings.
+    // every round; BenchLab times it ad hoc.
     "x_embed_neardup" -> QueryDef(embedNeardupPairs,
       Some(embedNeardupPairsSql)),
     // round 15 (verdict item 1): the production regime - cos >= 0.9,

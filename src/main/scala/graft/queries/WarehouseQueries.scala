@@ -616,7 +616,7 @@ object WarehouseQueries {
     * exact scale-4 product as a plain Long, and the sum aggregates in
     * Long instead of a precision-28 Decimal buffer (Spark backs
     * Decimal buffers over 18 digits with BigDecimal — measured
-    * 3.18 → 2.85 s at sf1 for this query, DecimalLab). The oracle
+    * 3.18 → 2.85 s at sf1 for this query, PLANS.md round 12). The oracle
     * stays in DECIMAL arithmetic, so the hash gate re-proves the
     * scaled-integer form equals the decimal quantization every round.
     * Exactness bound: per-group cent-products sum < 2^53 through

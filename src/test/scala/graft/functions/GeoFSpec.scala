@@ -171,51 +171,6 @@ class GeoFSpec extends SparkSpec {
     assert(viaSql.getDouble(0) === lng && viaSql.getDouble(1) === lat)
   }
 
-  test("hex cell ids: stable, local, resolution-scheduled") {
-    val a = GeoF.hexCellScala(40.7128, -74.0060, 9)
-    assert(a === GeoF.hexCellScala(40.7128, -74.0060, 9)) // deterministic
-    assert(a.length === 19 && a.startsWith("909"))
-    // ~15 m apart at res 7 (edge ≈ 1.2 km) → same cell (cell-center start)
-    val b7 = GeoF.hexCellScala(0.0, 0.0, 7)
-    val c7 = GeoF.hexCellScala(0.0001, 0.0001, 7)
-    assert(b7 === c7)
-    // ~50 km apart → different cells at res 7
-    assert(GeoF.hexCellScala(0.0, 0.0, 7) !== GeoF.hexCellScala(0.5, 0.5, 7))
-    // aperture-7 edge schedule like H3: res 9 ≈ 174 m
-    assert(math.abs(GeoF.edgeLengthM(9) - 174.375668) < 0.01)
-  }
-
-  test("Column hexCell matches the Scala mirror on fixture-like points") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val pts = Seq((40.7128, -74.0060), (-33.8688, 151.2093), (0.0, 0.0),
-      (51.5074, -0.1278))
-    val fromCol = pts.toDF("lat", "lng")
-      .select(GeoF.hexCell(col("lat"), col("lng"), 9)).as[String]
-      .collect().toSeq
-    val fromScala = pts.map { case (la, ln) => GeoF.hexCellScala(la, ln, 9) }
-    assert(fromCol === fromScala)
-  }
-
-  test("Column hexCell ≡ Scala mirror on randomized points, all resolutions") {
-    // the f6 oracle mirrors hexCellScala at the fixture's 25 centroids;
-    // this is the broad cross-check behind it — codegen'd Column math vs
-    // the independent Scala path on points it was never tuned for
-    // (this pairing caught a HALF_UP rounding divergence in round 2)
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val rnd = new scala.util.Random(42) // fixed seed: reproducible failures
-    for (res <- 0 to 12) {
-      val pts = Seq.fill(40)((rnd.nextDouble() * 170 - 85,
-        rnd.nextDouble() * 360 - 180))
-      val fromCol = pts.toDF("lat", "lng")
-        .select(GeoF.hexCell(col("lat"), col("lng"), res).as("c"))
-        .as[String].collect().toSeq
-      val fromScala = pts.map { case (la, ln) => GeoF.hexCellScala(la, ln, res) }
-      assert(fromCol === fromScala, s"divergence at res=$res")
-    }
-  }
-
   test("h3 polyfill: soundness, completeness, holes, empty, column parity") {
     import org.apache.spark.sql.functions._
     // 0.5-degree fixture-zone square at a representative location

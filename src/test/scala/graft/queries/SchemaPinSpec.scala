@@ -177,6 +177,24 @@ class SchemaPinSpec extends SparkSpec {
     assert(cat.pinnedSchema("t") === None)
   }
 
+  test("a save whose frame reads the table itself throws and leaves the " +
+      "table's rows and pin") {
+    val cat = freshCat()
+    val u = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
+    cat.save("u", u)
+    val e = intercept[IllegalArgumentException](cat.save("u", cat.load("u")))
+    assert(e.getMessage.contains("'u'"))
+    intercept[IllegalArgumentException](
+      cat.save("u", cat.load("u").filter(col("k") > 1)))
+    assert(cat.pinnedSchema("u") === Some(u.schema))
+    assert(cat.load("u").as[(Long, String)].collect().sorted.toSeq ===
+      Seq(1L -> "a", 2L -> "b"))
+    // a table whose name extends `u` is another table
+    cat.save("uu", cat.load("u"))
+    cat.save("u", cat.load("uu").filter(col("k") > 1))
+    assert(cat.load("u").as[(Long, String)].collect().toSeq === Seq(2L -> "b"))
+  }
+
   test("every staged table of a pipeline day reads back through its pin " +
       "with the inferred schema (sf0.01)") {
     val sf001 = fixture("sf0.01")
