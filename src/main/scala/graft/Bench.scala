@@ -255,18 +255,9 @@ object Bench {
     val paired: Option[String] =
       if (sys.env.get("SPARK_GRAFT_PAIRED").contains("0")) None
       else try {
-        def esc(str: String): String = "\"" + str.flatMap {
-          case '"'  => "\\\""
-          case '\\' => "\\\\"
-          case '\n' => "\\n"
-          case '\r' => "\\r"
-          case '\t' => "\\t"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\""
         val oracleJson = SparkEntry.oracleSql
           .filter { case (k, _) => results.exists(_._1 == k) }
-          .map { case (k, v) => s"${esc(k)}: ${esc(v)}" }
+          .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
           .mkString("{", ",", "}")
         val tmpO = java.nio.file.Files.createTempFile("oracle_bench", ".json")
         val tmpB = java.nio.file.Files.createTempFile("bench_names", ".json")
@@ -293,59 +284,11 @@ object Bench {
     val duckField = paired.map(j => s""","duckdb":$j""").getOrElse("")
     // per-query interpretation notes (QueryDef.benchNote): the artifact
     // must self-explain structurally-unequal comparisons
-    def escJ(str: String): String = "\"" + str.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val notes = SparkEntry.defs
       .filter { case (k, d) => d.benchNote.isDefined && results.exists(_._1 == k) }
-      .map { case (k, d) => s"${escJ(k)}:${escJ(d.benchNote.get)}" }
+      .map { case (k, d) => s"${jsonString(k)}:${jsonString(d.benchNote.get)}" }
     val notesField =
       if (notes.isEmpty) "" else notes.mkString(""","notes":{""", ",", "}")
-    // machine-readable SOLO steady-state riders (r15 verdict item 4):
-    // when an interleaved window's number is adjudicated against an
-    // out-of-window BenchLab measurement (GC/interleave noise), that
-    // number belongs IN the artifact, not in PLANS.md prose. Format:
-    // SPARK_GRAFT_BENCH_SOLO="name=sec,name=sec"; names must be benched.
-    // strict like ONLY/EXCLUDE (ADVICE r16): a malformed entry —
-    // missing '=', empty or non-numeric seconds — is a typo'd knob, and
-    // silently dropping it (or crashing with a raw NumberFormatException)
-    // would ship an artifact missing the rider the operator thought they
-    // embedded
-    val soloField = sys.env.get("SPARK_GRAFT_BENCH_SOLO").map { s =>
-      // ADVICE r17: a repeated name would emit duplicate JSON keys —
-      // most parsers keep only the last value SILENTLY, which is the
-      // same shipped-artifact-isn't-what-the-operator-typed failure
-      // the strict parsing exists to prevent. Fail loudly like the rest.
-      val seen = scala.collection.mutable.HashSet.empty[String]
-      val entries = s.split(",").map(_.trim).filter(_.nonEmpty).map { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) =>
-            val name = k.trim
-            if (!SparkEntry.benchNames.contains(name)) {
-              System.err.println(s"[bench] unknown query in SOLO: $name")
-              sys.exit(2)
-            }
-            if (!seen.add(name)) {
-              System.err.println(s"[bench] duplicate query in SOLO: $name")
-              sys.exit(2)
-            }
-            val secs = v.trim.toDoubleOption.getOrElse {
-              System.err.println(
-                s"[bench] unparsable SOLO seconds for $name: '${v.trim}'")
-              sys.exit(2)
-            }
-            s"${escJ(name)}:${num(secs)}"
-          case _ =>
-            System.err.println(s"[bench] SOLO entry missing '=': '$kv'")
-            sys.exit(2)
-        }
-      }
-      if (entries.isEmpty) ""
-      else entries.mkString(""","solo":{""", ",", "}")
-    }.getOrElse("")
     // Full artifact (per-query comparator block + notes) → a file: the
     // driver snapshots only the LAST ~2000 chars of stdout, and the r10
     // full line outgrew that window, leaving the round artifact
@@ -354,7 +297,7 @@ object Bench {
     // pairing lives in target/bench_full.json and is committed per
     // scale point (BENCH_sf1.json / BENCH_sf10.json pattern).
     val fullJson =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"failed":$fs,"sf":"$sfDir"$duckField$notesField$soloField}"""
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"failed":$fs,"sf":"$sfDir"$duckField$notesField}"""
     try {
       val out = java.nio.file.Paths.get(
         sys.props("user.dir"), "target", "bench_full.json")

@@ -1,7 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.KernelCall
 
 /** Geo scalar surface (SURVEY.md §2.8 F3–F6).
   *
@@ -14,15 +19,16 @@ import org.apache.spark.sql.functions._
   * cancellation). BigQuery's is spherical; at taxi-zone extents (< 0.2°)
   * the planar/spherical drift is < 1e-6°, far below a res-9 cell edge —
   * divergence documented here rather than hidden (SURVEY §7.4).
-  * Implemented as a registered Scala UDF (string parsing; the sanctioned
-  * udf-first surface per SURVEY §2.10), upgradeable to a codegen
-  * `Expression` if the scan ever becomes hash-bound.
+  * Every column function here is a kernel call
+  * ([[graft.plans.KernelCall]]): a Scala method on this object or on
+  * [[H3]], called the same way by interpreted and generated code; the
+  * `…Utf8` methods are the kernels' UTF8String entry points.
   *
   * F6 — `h3Cell(lat, lng, res)`, the reference's `H3_FROMGEOGPOINT`
   * (`enrichment_query.py:10,17`): true H3 cell ids from [[H3]] (the
   * published algorithm, its base-cell tables derived from the
   * icosahedron geometry and checked against published vectors in
-  * `H3Spec`) through a codegen expression, no UDF on the 100 TB path.
+  * `H3Spec`) through a kernel call, no UDF on the 100 TB path.
   * The rest of the H3 surface follows it: cell centers, grid disk,
   * distance and path, parent/children, compaction, boundaries and
   * polyfill.
@@ -164,50 +170,36 @@ object GeoF {
     } catch { case _: Exception => None }
   }
 
-  /** Java-friendly static forms for generated code (null = no centroid). */
-  def centroidLngJava(w: String): java.lang.Double =
-    wktCentroid(w) match {
-      case Some((lng, _)) => java.lang.Double.valueOf(lng)
-      case None => null
-    }
-  def centroidLatJava(w: String): java.lang.Double =
-    wktCentroid(w) match {
-      case Some((_, lat)) => java.lang.Double.valueOf(lat)
-      case None => null
-    }
-  def centroidSphLngJava(w: String): java.lang.Double =
-    wktCentroidSpherical(w) match {
-      case Some((lng, _)) => java.lang.Double.valueOf(lng)
-      case None => null
-    }
-  def centroidSphLatJava(w: String): java.lang.Double =
-    wktCentroidSpherical(w) match {
-      case Some((_, lat)) => java.lang.Double.valueOf(lat)
-      case None => null
-    }
-
-  /** F5 as columns: native codegen expressions (no UDF SerDe; stays in
-    * whole-stage codegen — see [[graft.plans.WktCentroidBase]]).
-    * Spark 4 Columns wrap ColumnNodes, not Expressions; the classic
-    * bridge is `classic.ExpressionUtils`. */
+  /** F5 as columns: kernel calls ([[graft.plans.KernelCall]]) — no UDF
+    * SerDe, inside whole-stage codegen. Degenerate or unparseable WKT
+    * yields NULL. */
   def centroidLng(geom: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.WktCentroidLng(
-        org.apache.spark.sql.GraftBridge.expression(geom)))
+    centroid("wkt_centroid_lng", "centroidLngUtf8", geom)
   def centroidLat(geom: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.WktCentroidLat(
-        org.apache.spark.sql.GraftBridge.expression(geom)))
+    centroid("wkt_centroid_lat", "centroidLatUtf8", geom)
 
-  /** Spherical-centroid columns (BigQuery semantics) — same codegen path. */
+  /** Spherical-centroid columns (BigQuery semantics) — same call path. */
   def centroidSphLng(geom: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.WktCentroidSphLng(
-        org.apache.spark.sql.GraftBridge.expression(geom)))
+    centroid("wkt_centroid_sph_lng", "centroidSphLngUtf8", geom)
   def centroidSphLat(geom: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.WktCentroidSphLat(
-        org.apache.spark.sql.GraftBridge.expression(geom)))
+    centroid("wkt_centroid_sph_lat", "centroidSphLatUtf8", geom)
+
+  private def centroid(name: String, method: String, geom: Column): Column =
+    KernelCall.column(name, this, method, DoubleType, Seq(geom -> StringType),
+      returnNullable = true)
+
+  /** The centroid kernels (null = no centroid). */
+  def centroidLngUtf8(w: UTF8String): java.lang.Double =
+    boxed(wktCentroid(w.toString).map(_._1))
+  def centroidLatUtf8(w: UTF8String): java.lang.Double =
+    boxed(wktCentroid(w.toString).map(_._2))
+  def centroidSphLngUtf8(w: UTF8String): java.lang.Double =
+    boxed(wktCentroidSpherical(w.toString).map(_._1))
+  def centroidSphLatUtf8(w: UTF8String): java.lang.Double =
+    boxed(wktCentroidSpherical(w.toString).map(_._2))
+
+  private def boxed(v: Option[Double]): java.lang.Double =
+    v.map(java.lang.Double.valueOf).orNull
 
   // ----------------------------- F6: H3 index ----------------------------
 
@@ -215,41 +207,47 @@ object GeoF {
     * string), the reference's `H3_FROMGEOGPOINT(point, res)`
     * (`enrichment_query.py:10,17`). Backed by [[H3.latLngToCell]]
     * (published-algorithm implementation, validated against published
-    * vectors in `H3Spec`) through the codegen expression
-    * [[graft.plans.H3Cell]] — whole-stage codegen, no UDF. */
-  def h3Cell(lat: Column, lng: Column, res: Int): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.H3Cell(
-        org.apache.spark.sql.GraftBridge.expression(lat),
-        org.apache.spark.sql.GraftBridge.expression(lng), res))
+    * vectors in `H3Spec`) through a kernel call — whole-stage codegen,
+    * no UDF; `res` is a plan constant. */
+  def h3Cell(lat: Column, lng: Column, res: Int): Column = {
+    require(res >= 0 && res <= H3.MaxRes,
+      s"h3_fromgeogpoint: resolution must be in [0, ${H3.MaxRes}], got $res")
+    KernelCall.column("h3_fromgeogpoint", this, "h3CellUtf8", StringType,
+      Seq(lat -> DoubleType, lng -> DoubleType), Seq(res))
+  }
+  def h3CellUtf8(lat: Double, lng: Double, res: Int): UTF8String =
+    UTF8String.fromString(H3.latLngToCellString(lat, lng, res))
 
   /** Inverse of [[h3Cell]] — exact cell-center lat/lng (degrees) from a
-    * canonical hex cell-id string. Backed by [[H3.cellToLatLng]] through
-    * the codegen expressions [[graft.plans.H3CenterLat]]/[[graft.plans.H3CenterLng]]. */
+    * canonical hex cell-id string ([[H3.cellToLatLng]]). */
   def h3CenterLat(cell: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.H3CenterLat(
-        org.apache.spark.sql.GraftBridge.expression(cell)))
+    KernelCall.column("h3_cell_lat", this, "h3CenterLatUtf8", DoubleType,
+      Seq(cell -> StringType))
   def h3CenterLng(cell: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.H3CenterLng(
-        org.apache.spark.sql.GraftBridge.expression(cell)))
+    KernelCall.column("h3_cell_lng", this, "h3CenterLngUtf8", DoubleType,
+      Seq(cell -> StringType))
+  def h3CenterLatUtf8(cell: UTF8String): Double = H3.cellCenterLat(cell.toString)
+  def h3CenterLngUtf8(cell: UTF8String): Double = H3.cellCenterLng(cell.toString)
 
   /** Grid traversal: sorted hex ids of every cell within grid distance
     * `k` of `cell`, including `cell` itself — the ring-expansion
-    * primitive for H3 spatial joins. Backed by [[graft.plans.H3Disk]]
-    * (codegen) over [[H3.gridDisk]] — exact (complete and
-    * false-positive-free) since the round-12 overage-normalization
+    * primitive for H3 spatial joins (index points to cells, explode the
+    * k-disk of one side, equi-join on the cell id; the join cost is
+    * collision volume, never n²). [[H3.gridDisk]] is exact (complete
+    * and false-positive-free) since the round-12 overage-normalization
     * repair. */
-  def h3GridDisk(cell: Column, k: Int): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.H3Disk(
-        org.apache.spark.sql.GraftBridge.expression(cell), k))
+  def h3GridDisk(cell: Column, k: Int): Column = {
+    require(k >= 0 && k <= 10, s"h3_grid_disk: k must be in [0, 10], got $k")
+    KernelCall.column("h3_grid_disk", this, "h3GridDiskUtf8", StringArray,
+      Seq(cell -> StringType), Seq(k))
+  }
+  def h3GridDiskUtf8(cell: UTF8String, k: Int): ArrayData =
+    utf8Array(H3.gridDiskHex(cell.toString, k))
 
   /** h3lib `cellToBoundary` as WKT — the cell's polygon (6 corners, 5
-    * for pentagons), composable with the WKT surface here (ST_ASTEXT /
-    * centroid / polyfill). Backed by [[H3.cellToBoundary]] through the
-    * codegen expression [[graft.plans.H3Boundary]].
+    * for pentagons), lng-lat vertex order, ring closed — composable
+    * with the WKT surface here (ST_ASTEXT / centroid / polyfill).
+    * Backed by [[H3.cellToBoundary]].
     *
     * Corner geometry (round 14): every corner is computed EXACTLY in
     * its owning chart through the substrate (3×-lattice) edge
@@ -265,9 +263,10 @@ object GeoF {
     * hexagon) use [[h3BoundaryFull]]. Closure laws (centroid re-indexes
     * to the cell) are oracle-gated at res 9 in `x_h3_boundary`. */
   def h3Boundary(cell: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.H3Boundary(
-        org.apache.spark.sql.GraftBridge.expression(cell)))
+    KernelCall.column("h3_cell_boundary", this, "h3BoundaryUtf8", StringType,
+      Seq(cell -> StringType))
+  def h3BoundaryUtf8(cell: UTF8String): UTF8String =
+    UTF8String.fromString(H3.cellBoundaryWkt(cell.toString))
 
   /** [[h3Boundary]] plus h3lib's edge-crossing DISTORTION vertices
     * (round 13): wherever a cell edge crosses an icosahedron face edge
@@ -277,60 +276,88 @@ object GeoF {
     * the plain form emits the 6 true corners only. Same WKT surface;
     * laws spec-pinned exhaustively at res 0–2 in `H3Spec`. */
   def h3BoundaryFull(cell: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.H3BoundaryFull(
-        org.apache.spark.sql.GraftBridge.expression(cell)))
+    KernelCall.column("h3_cell_boundary_full", this, "h3BoundaryFullUtf8",
+      StringType, Seq(cell -> StringType))
+  def h3BoundaryFullUtf8(cell: UTF8String): UTF8String =
+    UTF8String.fromString(H3.cellBoundaryFullWkt(cell.toString))
 
   // ------------------- H3 hierarchy (parent / children) ------------------
+  // The multi-res containment machinery: polyfill a polygon fine,
+  // [[graft.ops.H3Compact]] the cover, index facts by point, and join each
+  // fact's parent chain against the compacted cover. The underlying ops
+  // are pure 64-bit digit arithmetic ([[H3]] hierarchy section).
 
   /** h3lib `cellToParent` — the res-`res` ancestor by digit truncation
-    * ([[H3.cellToParent]], codegen via [[graft.plans.H3Parent]]). `res`
-    * may be a runtime column so a fact row can take parents at each
-    * resolution present in a compacted cover. */
+    * ([[H3.cellToParent]]). `res` may be a runtime column so a fact row
+    * can take parents at each resolution present in a compacted cover. */
   def h3Parent(cell: Column, res: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.H3Parent(
-        org.apache.spark.sql.GraftBridge.expression(cell),
-        org.apache.spark.sql.GraftBridge.expression(res)))
-
-  def h3Parent(cell: Column, res: Int): Column =
-    h3Parent(cell, org.apache.spark.sql.functions.lit(res))
+    KernelCall.column("h3_cell_to_parent", this, "h3ParentUtf8", StringType,
+      Seq(cell -> StringType, res -> IntegerType))
+  def h3Parent(cell: Column, res: Int): Column = h3Parent(cell, lit(res))
+  def h3ParentUtf8(cell: UTF8String, res: Int): UTF8String =
+    UTF8String.fromString(H3.cellToParentHex(cell.toString, res))
 
   /** h3lib `cellToChildren` — all res-`childRes` descendants, ascending,
-    * pentagon-aware ([[H3.cellToChildren]], codegen via
-    * [[graft.plans.H3Children]]). Fan-out is 7^(childRes−res); call
-    * sites state the bound in the plan by passing a literal res. */
-  def h3Children(cell: Column, childRes: Int): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.H3Children(
-        org.apache.spark.sql.GraftBridge.expression(cell), childRes))
+    * pentagon-aware ([[H3.cellToChildren]]: center paths lose the
+    * deleted-K subtree). Fan-out is 7^(childRes−res); `childRes` is a
+    * plan constant, so call sites state the bound in the plan. */
+  def h3Children(cell: Column, childRes: Int): Column = {
+    require(childRes >= 0 && childRes <= H3.MaxRes,
+      s"h3_cell_to_children: res must be in [0, ${H3.MaxRes}], got $childRes")
+    KernelCall.column("h3_cell_to_children", this, "h3ChildrenUtf8",
+      StringArray, Seq(cell -> StringType), Seq(childRes))
+  }
+  def h3ChildrenUtf8(cell: UTF8String, childRes: Int): ArrayData =
+    utf8Array(H3.cellToChildrenHex(cell.toString, childRes))
 
   /** h3lib `gridDistance` — shortest-grid-path length between two
-    * same-res cells ([[H3.gridDistance]], codegen via
-    * [[graft.plans.H3GridDistance]]). */
+    * same-res cells ([[H3.gridDistance]]: flat chart formula through the
+    * derived face-neighbor isometries, exact-BFS fallback for
+    * pentagon-involved or non-adjacent-chart pairs). The proximity-filter
+    * primitive (`h3_grid_distance(a, b) <= k`) when the disk-explode join
+    * shape doesn't fit. */
   def h3GridDistance(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.H3GridDistance(
-        org.apache.spark.sql.GraftBridge.expression(a),
-        org.apache.spark.sql.GraftBridge.expression(b)))
+    KernelCall.column("h3_grid_distance", this, "h3GridDistanceUtf8",
+      IntegerType, Seq(a -> StringType, b -> StringType))
+  def h3GridDistanceUtf8(a: UTF8String, b: UTF8String): Int =
+    H3.gridDistanceHex(a.toString, b.toString)
 
   /** h3lib `gridPathCells`, canonicalized — the min-id-greedy minimal
-    * path, gridDistance+1 cells inclusive ([[H3.gridPathCells]], codegen
-    * via [[graft.plans.H3GridPath]]; h3lib disclaims WHICH minimal path
-    * it returns, so the engine defines the deterministic one an
-    * independent oracle can restate). */
+    * path, gridDistance+1 cells inclusive ([[H3.gridPathCells]]; h3lib
+    * disclaims WHICH minimal path it returns, so the engine defines the
+    * deterministic one an independent oracle can restate). */
   def h3GridPath(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.H3GridPath(
-        org.apache.spark.sql.GraftBridge.expression(a),
-        org.apache.spark.sql.GraftBridge.expression(b)))
+    KernelCall.column("h3_grid_path", this, "h3GridPathUtf8", StringArray,
+      Seq(a -> StringType, b -> StringType))
+  def h3GridPathUtf8(a: UTF8String, b: UTF8String): ArrayData =
+    utf8Array(H3.gridPathCellsHex(a.toString, b.toString))
 
   /** h3lib `compactCells` over an in-row array of uniform-res cells —
-    * the per-ancestor-group kernel of [[graft.ops.H3Compact]]. */
+    * the per-ancestor-group kernel of [[graft.ops.H3Compact]]: cells are
+    * first co-grouped by a shared ancestor, so every merge decision is
+    * local to the array and the result is exact. */
   def h3CompactArray(cells: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.H3CompactArray(
-        org.apache.spark.sql.GraftBridge.expression(cells)))
+    KernelCall.column("h3_compact_array", this, "h3CompactArrayData",
+      StringArray, Seq(cells -> ArrayType(StringType)))
+  def h3CompactArrayData(cells: ArrayData): ArrayData = {
+    val in = new Array[String](cells.numElements())
+    var i = 0
+    while (i < in.length) {
+      // SQL array literals may hold NULLs: fail with the function's
+      // name, not an NPE
+      if (cells.isNullAt(i))
+        throw new IllegalArgumentException(
+          "h3_compact_cells: null cell id in input array")
+      in(i) = cells.getUTF8String(i).toString
+      i += 1
+    }
+    utf8Array(H3.compactCellsHex(in))
+  }
+
+  private val StringArray = ArrayType(StringType, containsNull = false)
+
+  private def utf8Array(ids: Array[String]): ArrayData =
+    new GenericArrayData(ids.map(UTF8String.fromString(_).asInstanceOf[Any]))
 
   /** Resolution of a canonical 15-hex cell id — the H3 res field is
     * bits 52–55, exactly the id's second hex digit, so this is a pure
@@ -448,10 +475,17 @@ object GeoF {
     arr.map(c => f"$c%x")
   }
 
-  /** Column form of [[h3PolyfillScala]] — codegen expression
-    * ([[graft.plans.H3Polyfill]]), array of sorted hex cell ids. */
-  def h3Polyfill(geom: Column, res: Int): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.H3Polyfill(
-        org.apache.spark.sql.GraftBridge.expression(geom), res))
+  /** Column form of [[h3PolyfillScala]]: array of sorted hex cell ids.
+    * The intended 100 TB shape is polyfill-the-DIMENSION (few polygons),
+    * explode, and equi-join fact rows indexed by [[h3Cell]] — polygon
+    * containment priced as hash-join collision volume, never per-row
+    * point-in-polygon over the fact table. */
+  def h3Polyfill(geom: Column, res: Int): Column = {
+    require(res >= 0 && res <= 15,
+      s"h3_polyfill: resolution must be in [0, 15], got $res")
+    KernelCall.column("h3_polyfill", this, "h3PolyfillUtf8", StringArray,
+      Seq(geom -> StringType), Seq(res))
+  }
+  def h3PolyfillUtf8(wkt: UTF8String, res: Int): ArrayData =
+    utf8Array(h3PolyfillScala(wkt.toString, res))
 }

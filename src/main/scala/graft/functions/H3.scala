@@ -39,8 +39,8 @@ import java.lang.Math._
   *
   * Scale: pure per-row arithmetic (trig + integer digit loop, no
   * allocation on the hot path beyond one 3-long array), exposed to Spark
-  * as a codegen expression in [[graft.plans.H3CellExpr]] — stays inside
-  * whole-stage codegen like the other hot-path functions.
+  * as a kernel call ([[GeoF.h3Cell]]) — stays inside whole-stage
+  * codegen like the other hot-path functions.
   */
 object H3 {
 

@@ -2,16 +2,21 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.KernelCall
 
 /** Text-analysis scalar surface for the training-data-pipeline extension ops
   * (tokenization, quality scoring, language-ID, fingerprinting, shingling).
   *
   * Everything here is built from `org.apache.spark.sql.functions._` or
-  * native codegen Expressions (graft.plans) — no UDFs — so a 100 TB
+  * kernel calls ([[graft.plans.KernelCall]] of the kernels in
+  * `TextKernels.scala` and `InRowModels.scala`) — no UDFs — so a 100 TB
   * documents scan keeps whole-stage codegen end-to-end and the work
   * parallelizes per input split with zero shuffles. Where a built-in
   * higher-order function (filter/aggregate — INTERPRETED in Catalyst)
-  * sat on the per-token hot path, a native expression replaced it with
+  * sat on the per-token hot path, a kernel replaced it with
   * the composed form kept as the spec-asserted reference
   * (TokenStatSpec).
   *
@@ -24,15 +29,17 @@ object TextF {
   /** Whitespace tokenizer: trim then split on runs of whitespace.
     * Empty/whitespace-only input tokenizes to an EMPTY array (a bare
     * split("") would yield [""], a phantom token); NULL stays NULL.
-    * Since round 9 this is the byte-level codegen scanner
-    * ([[graft.plans.WsTokens]]) — identical semantics to the composed
+    * Since round 9 this is the byte-level scanner kernel
+    * ([[WsTokens]]) — identical semantics to the composed
     * trim+split form (including its leading/trailing-empty-token quirks
     * for non-space whitespace at the ends), property-proven in
     * `WsTokensSpec`; no java.util.regex on any tokenizing scan. */
-  def tokens(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.plans.WsTokens(GraftBridge.expression(text)))
-  }
+  def tokens(text: Column): Column =
+    KernelCall.column("ws_tokens", WsTokens, "compute", StringArray,
+      Seq(text -> StringType))
+
+  private val StringArray = ArrayType(StringType, containsNull = false)
+  private val Tokens = ArrayType(StringType)
 
   /** The composed reference form of [[tokens]], kept for the
     * equivalence spec. */
@@ -50,62 +57,57 @@ object TextF {
     Seq("the", "a", "an", "of", "and", "to", "in", "is", "it", "that")
 
   /** Fused corpus-clean transform — mask emails then URLs then
-    * trim+collapse whitespace — as the single-pass codegen scanner
-    * ([[graft.plans.CleanText]] / [[TextMaskF]]); property-proven equal
-    * to the regexp_replace chain it replaces (`TextMaskSpec`). */
-  def cleanText(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.plans.CleanText(GraftBridge.expression(text)))
-  }
+    * trim+collapse whitespace — as the single-pass scanner kernel
+    * ([[TextMaskF.cleanText]]); property-proven equal to the
+    * regexp_replace chain it replaces (`TextMaskSpec`). */
+  def cleanText(text: Column): Column =
+    KernelCall.column("clean_text", this, "cleanTextUtf8", StringType,
+      Seq(text -> StringType))
+  def cleanTextUtf8(s: UTF8String): UTF8String =
+    UTF8String.fromString(TextMaskF.cleanText(s.toString))
 
   /** Extended PII-clean (r16): e-mails, URLs, phones, IPv4, then
-    * trim+collapse — the codegen [[graft.plans.CleanTextPii]] scanner;
+    * trim+collapse — the [[TextMaskF.cleanTextPii]] scanner kernel;
     * scanner-vs-regex equality property-proven in `TextMaskSpec`. */
-  def cleanTextPii(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(
-      graft.plans.CleanTextPii(GraftBridge.expression(text)))
-  }
+  def cleanTextPii(text: Column): Column =
+    KernelCall.column("clean_text_pii", this, "cleanTextPiiUtf8", StringType,
+      Seq(text -> StringType))
+  def cleanTextPiiUtf8(s: UTF8String): UTF8String =
+    UTF8String.fromString(TextMaskF.cleanTextPii(s.toString))
 
   /** Card-extended PII-clean (r18): e-mails, URLs, Luhn-checked credit
-    * cards, phones, IPv4, then trim+collapse — the codegen
-    * [[graft.plans.CleanTextPiiCard]] scanner; the card arm has no
+    * cards, phones, IPv4, then trim+collapse — the
+    * [[TextMaskF.cleanTextPiiCard]] scanner kernel; the card arm has no
     * regex equivalent (Luhn), so `TextMaskSpec` property-checks the
     * scanner against a candidate-extractor + integer-checksum
     * reference and the adversarial oracle restates planted outcomes
     * through SQL integer arithmetic. */
-  def cleanTextPiiCard(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(
-      graft.plans.CleanTextPiiCard(GraftBridge.expression(text)))
-  }
+  def cleanTextPiiCard(text: Column): Column =
+    KernelCall.column("clean_text_pii_card", this, "cleanTextPiiCardUtf8",
+      StringType, Seq(text -> StringType))
+  def cleanTextPiiCardUtf8(s: UTF8String): UTF8String =
+    UTF8String.fromString(TextMaskF.cleanTextPiiCard(s.toString))
 
   /** In-row character-bigram histogram `(term, tf)` of a string — the
-    * native codegen [[graft.plans.CharBigramHistogram]] expression
-    * (`x_lang_id`'s scan stage; the composed transform+substring HOF
-    * pays an interpreted lambda per character). */
-  def charBigramHistogram(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(
-      graft.plans.CharBigramHistogram(GraftBridge.expression(text)))
-  }
+    * [[CharBigramHistogram]] kernel (`x_lang_id`'s scan stage; the
+    * composed transform+substring HOF pays an interpreted lambda per
+    * character). */
+  def charBigramHistogram(text: Column): Column =
+    KernelCall.column("char_bigram_histogram", CharBigramHistogram,
+      "compute", TermHistogram.OutType, Seq(text -> StringType))
 
   /** Raw code-point bigram instances of a string (no histogram) — the
-    * native codegen [[graft.plans.CharBigrams]] expression; feed it to
-    * an aggregating consumer whose partial aggregate does the collapse. */
-  def charBigrams(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(
-      graft.plans.CharBigrams(GraftBridge.expression(text)))
-  }
+    * [[CharBigrams]] kernel; feed it to an aggregating consumer whose
+    * partial aggregate does the collapse. */
+  def charBigrams(text: Column): Column =
+    KernelCall.column("char_bigrams", CharBigrams, "compute", StringArray,
+      Seq(text -> StringType))
 
-  /** Count of tokens belonging to a small constant word set, as the
-    * native single-pass expression ([[graft.plans.TokenSetCount]]). */
-  def tokenSetCount(lt: Column, words: Seq[String]): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.plans.TokenSetCount(
-      GraftBridge.expression(lt), words))
-  }
+  /** Count of tokens belonging to a small constant word set, as one
+    * single-pass kernel call ([[TokenSetCount]]). */
+  def tokenSetCount(lt: Column, words: Seq[String]): Column =
+    KernelCall.column("token_set_count", TokenSetCount, "compute",
+      IntegerType, Seq(lt -> Tokens), Seq(TokenSetCount.wordSet(words)))
 
   /** Composed (interpreted-HOF) reference form of [[tokenSetCount]],
     * kept for the equivalence spec. */
@@ -194,11 +196,9 @@ object TextF {
     * column. */
   val RollB = 1000003L
   val RollP = 4294967311L
-  def rollingHash(lt: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.plans.RollingTokenHash(
-      GraftBridge.expression(lt), RollB, RollP))
-  }
+  def rollingHash(lt: Column): Column =
+    KernelCall.column("rolling_token_hash", RollingTokenHash, "compute",
+      LongType, Seq(lt -> Tokens), Seq(RollB, RollP), returnNullable = true)
 
   /** Composed (interpreted-HOF) reference form of [[rollingHash]], kept
     * for the equivalence spec: the `aggregate` lambda re-evaluates the
@@ -236,13 +236,14 @@ object TextF {
     * latter).
     *
     * Deterministic; empty array for docs shorter than k tokens.
-    * Backed by the native codegen [[graft.plans.WordShingles]]
-    * expression — the HOF form (`transform(sequence…)` + `concat_ws`)
-    * evaluates interpreted per emitted shingle. */
-  def shinglesFromTokens(toks: Column, k: Int): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.WordShingles(
-        org.apache.spark.sql.GraftBridge.expression(toks), k))
+    * Backed by the [[WordShingles]] kernel — the HOF form
+    * (`transform(sequence…)` + `concat_ws`) evaluates interpreted per
+    * emitted shingle. */
+  def shinglesFromTokens(toks: Column, k: Int): Column = {
+    require(k >= 1, s"word_shingles: shingle width must be ≥ 1, got $k")
+    KernelCall.column("word_shingles", WordShingles, "compute", StringArray,
+      Seq(toks -> Tokens), Seq(k))
+  }
 
   /** One-expression convenience form — ONLY for tiny/test inputs; hot
     * paths must project tokens first (see [[shinglesFromTokens]]). */
@@ -253,13 +254,52 @@ object TextF {
     array_distinct(wordShingles(text, k))
 
   /** In-row term-frequency histogram `(term, tf)` over a token array —
-    * the native codegen [[graft.plans.TermHistogram]] expression. Use
+    * the [[TermHistogram]] kernel. Use
     * this (exploded) instead of `explode(tokens) → groupBy(doc, term)`:
     * per-document counts are document-local, so the histogram keeps them
     * out of the hash aggregate and downstream operators see each doc's
     * DISTINCT terms weighted by `tf`, not every occurrence. */
   def termHistogram(toks: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.plans.TermHistogram(
-        org.apache.spark.sql.GraftBridge.expression(toks)))
+    KernelCall.column("term_histogram", TermHistogram, "compute",
+      TermHistogram.OutType, Seq(toks -> Tokens))
+
+  // --- in-row scorers over a collected model (InRowModels.scala) ---
+
+  /** How many of the array's strings are in `set` (`count_in_set`);
+    * a NULL array counts 0. */
+  def countInSet(arr: Column, set: Utf8Set): Column =
+    KernelCall.column("count_in_set", CountInSet, "compute", LongType,
+      Seq(arr -> Tokens), Seq(set), propagateNull = false)
+
+  /** `nb_lang_score(s)`: struct<pred_lang, n_bigrams, score_q>; a NULL
+    * string scores as the empty document. */
+  def nbLangScore(s: Column, model: NbLangModel): Column =
+    KernelCall.column("nb_lang_score", NbLangScore, "compute",
+      NbLangScore.OutType, Seq(s -> StringType), Seq(model),
+      propagateNull = false)
+
+  /** `ngram_lm_sum(toks)`: struct<n_grams, sq> over the width-`width`
+    * windows; NULL or short input gives (0, 0). */
+  def ngramLmSum(toks: Column, model: NgramLmModel, width: Int): Column = {
+    require(width >= 1, s"ngram_lm_sum: n-gram width must be ≥ 1, got $width")
+    KernelCall.column("ngram_lm_sum", NgramLmSum, "compute",
+      NgramLmSum.OutType, Seq(toks -> Tokens), Seq(model, width),
+      propagateNull = false)
+  }
+
+  /** `tfidf_topk(toks)`: the top `k` (term, tf, score) by score DESC,
+    * term ASC. */
+  def tfidfTopK(toks: Column, model: TfidfModel, k: Int): Column = {
+    require(k >= 1, s"tfidf_topk: top-k width must be ≥ 1, got $k")
+    KernelCall.column("tfidf_topk", TfidfTopTerms, "compute",
+      TfidfTopTerms.OutType, Seq(toks -> Tokens), Seq(model, k))
+  }
+
+  /** `bm25_topk(toks)`: the top `k` (term, tf, score) by BM25 score DESC,
+    * term ASC. */
+  def bm25TopK(toks: Column, model: Bm25Model, k: Int): Column = {
+    require(k >= 1, s"bm25_topk: top-k width must be ≥ 1, got $k")
+    KernelCall.column("bm25_topk", Bm25TopTerms, "compute",
+      Bm25TopTerms.OutType, Seq(toks -> Tokens), Seq(model, k))
+  }
 }

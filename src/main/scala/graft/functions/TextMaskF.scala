@@ -4,7 +4,7 @@ package graft.functions
   * corpus-cleaning hot path (`x_text_clean`, `c_corpus_pipeline`).
   *
   * The sf10 measurements made the cost concrete: the queries built on
-  * custom codegen expressions beat the comparator (x_text_stats 43 s vs
+  * custom codegen kernels beat the comparator (x_text_stats 43 s vs
   * 169 s) while the two leaning on `regexp_replace` lost
   * (c_corpus_pipeline 46 s vs 12 s) — java.util.regex pays per-char
   * interpreter overhead a hand-rolled scanner doesn't. These helpers

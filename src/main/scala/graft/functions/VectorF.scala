@@ -2,6 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+
+import graft.plans.KernelCall
 
 /** Embedding-vector math over `array<float>`/`array<double>` columns, for
   * the similarity-search / near-dup extension ops.
@@ -28,37 +31,32 @@ object VectorF {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / nullif(norm2(a) * norm2(b), lit(0.0))
 
-  /** [[cosine]] as a native single-pass codegen expression
-    * ([[graft.plans.CosineSim]]) — same bits, one fused loop, no
-    * intermediate product arrays. Inputs must be `array<double>`. */
-  def cosineNative(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.plans.CosineSim(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
+  /** [[cosine]] as one kernel call ([[CosineSim]]) — same bits, one
+    * fused loop, no intermediate product arrays. */
+  def cosineNative(a: Column, b: Column): Column =
+    KernelCall.column("cosine_sim", CosineSim, "compute", DoubleType,
+      Seq(a -> DoubleArray, b -> DoubleArray), returnNullable = true)
 
   /** L2 distance as the composed HOF form — kept as the spec reference
     * for [[euclideanNative]]. */
   def euclideanComposed(a: Column, b: Column): Column =
     sqrt(arraySum(zip_with(a, b, (x, y) => (x - y) * (x - y))))
 
-  /** [[euclideanComposed]] as a native single-pass codegen expression
-    * ([[graft.plans.EuclideanDist]]) — same bits, one fused loop, no
-    * intermediate difference arrays. Inputs must be `array<double>`. */
-  def euclideanNative(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.plans.EuclideanDist(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
+  /** [[euclideanComposed]] as one kernel call ([[EuclideanDist]]) — same
+    * bits, one fused loop, no intermediate difference arrays. */
+  def euclideanNative(a: Column, b: Column): Column =
+    KernelCall.column("euclidean_dist", EuclideanDist, "compute", DoubleType,
+      Seq(a -> DoubleArray, b -> DoubleArray), returnNullable = true)
 
-  /** All dot products against a plane family in one native scan
-    * ([[graft.plans.PlaneDots]]); element k is `<v, plane(planeIdxs(k))>`
-    * with the composed fold's bits. */
-  def planeDots(v: Column, planeIdxs: Seq[Int], dim: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.plans.PlaneDots(
-      GraftBridge.expression(v), planeIdxs, dim))
-  }
+  /** All dot products against a plane family in one scan ([[PlaneDots]]);
+    * element k is `<v, plane(planeIdxs(k))>` with the composed fold's
+    * bits. */
+  def planeDots(v: Column, planeIdxs: Seq[Int], dim: Int): Column =
+    KernelCall.column("plane_dots", PlaneDots, "compute",
+      ArrayType(DoubleType, containsNull = false), Seq(v -> DoubleArray),
+      Seq(PlaneSignBits.family(planeIdxs, dim)), returnNullable = true)
+
+  private val DoubleArray = ArrayType(DoubleType)
 
   /** Random-hyperplane LSH bucket: sign-bit signature over `nPlanes`
     * deterministic pseudo-hyperplanes derived from the vector itself is NOT
@@ -87,20 +85,19 @@ object VectorF {
     * dot product and a constant-size plan.
     *
     * Composed (interpreted-HOF) reference form — production callers go
-    * through [[planeSignBits]], the native codegen expression; the
-    * equivalence is spec-asserted ([[graft.plans.PlaneSignBitsSpec]]). */
+    * through [[planeSignBits]], the kernel call; the equivalence is
+    * spec-asserted (`PlaneSignBitsSpec`). */
   def planeSignBitComposed(v: Column, p: Int, dim: Int): Column =
     when(dot(v, typedlit(plane(p, dim))) >= 0, 1L).otherwise(0L)
 
-  /** Packed sign bits of <v, plane_k> for a plane family, as the native
-    * single-scan expression ([[graft.plans.PlaneSignBits]]): bit k of
-    * the result is the sign bit against `planeIdxs(k)`. The coalesce
-    * pins the composed form's NULL-vector edge (dot NULL → when → 0). */
-  def planeSignBits(v: Column, planeIdxs: Seq[Int], dim: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    coalesce(GraftBridge.column(graft.plans.PlaneSignBits(
-      GraftBridge.expression(v), planeIdxs, dim)), lit(0L))
-  }
+  /** Packed sign bits of <v, plane_k> for a plane family, as one
+    * single-scan kernel call ([[PlaneSignBits]]): bit k of the result is
+    * the sign bit against `planeIdxs(k)`. The coalesce pins the composed
+    * form's NULL-vector edge (dot NULL → when → 0). */
+  def planeSignBits(v: Column, planeIdxs: Seq[Int], dim: Int): Column =
+    coalesce(KernelCall.column("plane_sign_bits", PlaneSignBits, "compute",
+      LongType, Seq(v -> DoubleArray),
+      Seq(PlaneSignBits.family(planeIdxs, dim))), lit(0L))
 
   /** `nPlanes`-bit LSH bucket id for a vector column of dimension `dim`
     * (native; bit p = sign against plane p, matching the composed

@@ -17,8 +17,8 @@ import graft.functions.GeoF
   *     set is complete depends only on cells below that parent. So one
   *     shuffle that co-groups cells by their res-(r−Span) ancestor
   *     decides ALL merges across `Span` levels at once, with the pure
-  *     kernel ([[graft.functions.H3.compactCells]] via the codegen
-  *     [[graft.plans.H3CompactArray]]) running per group.
+  *     kernel ([[graft.functions.H3.compactCells]] via
+  *     [[graft.functions.GeoF.h3CompactArray]]) running per group.
   *   - Group state is bounded by construction: ≤ 7^Span = 2401 cells
   *     (~40 KB of hex ids) per ancestor group — no skew can exceed it,
   *     so executor memory is safe at any input scale.

@@ -109,4 +109,17 @@ package object graft {
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else df.withColumn("ts", col("ts").cast("timestamp"))
   }
+
+  /** `s` as a JSON string literal: quote, backslash and ALL control chars
+    * (< 0x20) escaped — a tab or CR in builder-authored SQL would otherwise
+    * break the consumer's `json.load`. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

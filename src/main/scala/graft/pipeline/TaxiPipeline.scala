@@ -227,15 +227,20 @@ object TaxiPipeline {
     } else {
       // C2 (any data this day?) rides the write: the day scan carries a
       // CollectMetrics count, so the one write job also decides the gate
-      // and no re-read of `temp_trips` runs. An absent metric means no
-      // task saw a row (the zero-row-files day), the same rule as
-      // [[fusedRun]].
+      // and no re-read of `temp_trips` runs.
       val gate = org.apache.spark.sql.Observation()
       c.save("temp_trips",
         readDay(c.spark, day).observe(gate, count(lit(1)).as("rows")))
-      gate.get.get("rows").exists(_.asInstanceOf[Long] > 0L)
+      gateRows(gate) > 0L
     }
   })
+
+  /** Rows the observed day scan saw, read after its action ran. A
+    * MISSING metric means zero rows: CollectMetrics reports nothing when
+    * no task ever updated its accumulator (the zero-row-files day), so
+    * absent ⇒ 0 is the exact gate semantic, not a default-for-safety. */
+  private def gateRows(gate: org.apache.spark.sql.Observation): Long =
+    gate.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)
 
   def normalize: Stage = Stage("normalize", { c =>
     if (!c.exists("temp_trips")) { // C3 existence gate
@@ -327,12 +332,7 @@ object TaxiPipeline {
       val table = s"most_populars_${dsNoDash(ds)}"
       val staging = s"_staging_$table" // underscore: invisible to tables()
       cat.save(staging, df) // THE one action; evaluates the gate metric
-      // A MISSING metric means zero rows flowed through the observed
-      // scan: CollectMetrics reports nothing when no task ever updated
-      // its accumulator (the zero-row-files day), so absent ⇒ 0 is the
-      // exact gate semantic, not a default-for-safety.
-      val rows = gate.get.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (rows == 0L) {
+      if (gateRows(gate) == 0L) {
         cat.drop(staging)
         println(s"[pipeline] day $ds has files but no rows; " +
           "fused gate short-circuited (staging dropped)")

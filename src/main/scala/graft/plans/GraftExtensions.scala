@@ -1,13 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, GraftBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** SparkSessionExtensions hook registering graft's native expressions as
-  * SQL functions, so `spark.sql("SELECT wkt_centroid_lng(geom) …")` works
-  * next to the DataFrame API (SURVEY.md §7.3's extension point; enabled
-  * via `GraftSession` or `spark.sql.extensions=graft.plans.GraftExtensions`).
+import graft.functions.{GeoF, TextF}
+
+/** SparkSessionExtensions hook: graft's operator strategies and rules,
+  * and its SQL functions, so `spark.sql("SELECT wkt_centroid_lng(geom) …")`
+  * works next to the DataFrame API (SURVEY.md §7.3's extension point;
+  * enabled via `GraftSession` or
+  * `spark.sql.extensions=graft.plans.GraftExtensions`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -21,130 +24,60 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // cost-based skip-partial: near-unique grouping keys per catalog NDV
     // stats (graft.core.TableStats) get the hint automatically
     ext.injectOptimizerRule(_ => AutoSkipPartialAgg)
-    ext.injectFunction((
-      FunctionIdentifier("wkt_centroid_lng"),
-      new ExpressionInfo(classOf[WktCentroidLng].getName,
-        "wkt_centroid_lng"),
-      (children: Seq[Expression]) => WktCentroidLng(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("wkt_centroid_lat"),
-      new ExpressionInfo(classOf[WktCentroidLat].getName,
-        "wkt_centroid_lat"),
-      (children: Seq[Expression]) => WktCentroidLat(children.head)))
-    // spherical (BigQuery-semantics) centroid option
-    ext.injectFunction((
-      FunctionIdentifier("wkt_centroid_sph_lng"),
-      new ExpressionInfo(classOf[WktCentroidSphLng].getName,
-        "wkt_centroid_sph_lng"),
-      (children: Seq[Expression]) => WktCentroidSphLng(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("wkt_centroid_sph_lat"),
-      new ExpressionInfo(classOf[WktCentroidSphLat].getName,
-        "wkt_centroid_sph_lat"),
-      (children: Seq[Expression]) => WktCentroidSphLat(children.head)))
-    // res arrives as a SQL literal (the reference always passes one);
-    // resolve it at registration so the expression keeps its
-    // compile-time-int codegen constant
-    ext.injectFunction((
-      FunctionIdentifier("h3_fromgeogpoint"),
-      new ExpressionInfo(classOf[H3Cell].getName, "h3_fromgeogpoint"),
-      (children: Seq[Expression]) => children match {
-        case Seq(lat, lng, org.apache.spark.sql.catalyst.expressions
-          .Literal(res: Int, org.apache.spark.sql.types.IntegerType)) =>
-          H3Cell(lat, lng, res)
-        case _ => throw new IllegalArgumentException(
-          "h3_fromgeogpoint(<double lat>, <double lng>, <int literal res>)")
-      }))
-    // inverse of h3_fromgeogpoint: exact cell-center coordinates
-    ext.injectFunction((
-      FunctionIdentifier("h3_cell_lat"),
-      new ExpressionInfo(classOf[H3CenterLat].getName, "h3_cell_lat"),
-      (children: Seq[Expression]) => H3CenterLat(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("h3_cell_lng"),
-      new ExpressionInfo(classOf[H3CenterLng].getName, "h3_cell_lng"),
-      (children: Seq[Expression]) => H3CenterLng(children.head)))
-    // hierarchy + boundary (h3lib cellToParent / cellToChildren /
-    // compactCells / cellToBoundary). Parent res is a runtime column
-    // (multi-res cover joins); children res is a literal (the 7^k
-    // fan-out bound belongs in the plan text).
-    ext.injectFunction((
-      FunctionIdentifier("h3_cell_to_parent"),
-      new ExpressionInfo(classOf[H3Parent].getName, "h3_cell_to_parent"),
-      (children: Seq[Expression]) => children match {
-        case Seq(cell, res) => H3Parent(cell, res)
-        case _ => throw new IllegalArgumentException(
-          "h3_cell_to_parent(<string cell>, <int res>)")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("h3_cell_to_children"),
-      new ExpressionInfo(classOf[H3Children].getName,
-        "h3_cell_to_children"),
-      (children: Seq[Expression]) => children match {
-        case Seq(cell, org.apache.spark.sql.catalyst.expressions
-          .Literal(res: Int, org.apache.spark.sql.types.IntegerType)) =>
-          H3Children(cell, res)
-        case _ => throw new IllegalArgumentException(
-          "h3_cell_to_children(<string cell>, <int literal res>)")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("h3_compact_cells"),
-      new ExpressionInfo(classOf[H3CompactArray].getName,
-        "h3_compact_cells"),
-      (children: Seq[Expression]) => H3CompactArray(children.head)))
-    // NOTE: h3_cell_boundary emits the 6 true corners only (round 14:
-    // substrate-exact in the owning chart, bit-canonical across
-    // neighbors — see GeoF.h3Boundary's scaladoc);
-    // h3_cell_boundary_full additionally inserts h3lib's edge-crossing
-    // distortion vertices for face-straddling cells (full vertex
-    // parity; laws spec-pinned in H3Spec)
-    ext.injectFunction((
-      FunctionIdentifier("h3_cell_boundary"),
-      new ExpressionInfo(classOf[H3Boundary].getName, "h3_cell_boundary"),
-      (children: Seq[Expression]) => H3Boundary(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("h3_cell_boundary_full"),
-      new ExpressionInfo(classOf[H3BoundaryFull].getName,
-        "h3_cell_boundary_full"),
-      (children: Seq[Expression]) => H3BoundaryFull(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("h3_grid_distance"),
-      new ExpressionInfo(classOf[H3GridDistance].getName,
-        "h3_grid_distance"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => H3GridDistance(a, b)
-        case _ => throw new IllegalArgumentException(
-          "h3_grid_distance(<string cell>, <string cell>)")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("h3_grid_path"),
-      new ExpressionInfo(classOf[H3GridPath].getName, "h3_grid_path"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => H3GridPath(a, b)
-        case _ => throw new IllegalArgumentException(
-          "h3_grid_path(<string cell>, <string cell>)")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("term_histogram"),
-      new ExpressionInfo(classOf[TermHistogram].getName,
-        "term_histogram"),
-      (children: Seq[Expression]) => children match {
-        case Seq(arr) => TermHistogram(arr)
-        case _ => throw new IllegalArgumentException(
-          "term_histogram(array<string>) takes exactly one argument")
-      }))
-    // k arrives as a SQL literal; resolve it at registration time so the
-    // expression keeps its compile-time-int fast path
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName,
-        "word_shingles"),
-      (children: Seq[Expression]) => children match {
-        case Seq(arr, org.apache.spark.sql.catalyst.expressions
-          .Literal(k: Int, org.apache.spark.sql.types.IntegerType)) =>
-          WordShingles(arr, k)
-        case _ => throw new IllegalArgumentException(
-          "word_shingles(array<string>, <int literal k>)")
-      }))
+    GraftExtensions.SqlFunctions.foreach { case (name, arity, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[KernelCall].getName, name),
+        (args: Seq[Expression]) => {
+          if (args.length != arity)
+            throw new IllegalArgumentException(
+              s"$name takes $arity argument(s), got ${args.length}")
+          GraftBridge.expression(build(args.map(GraftBridge.column)))
+        }))
+    }
   }
+}
+
+object GraftExtensions {
+
+  /** The value of an integer literal argument of SQL function `name`. */
+  private def intLiteral(name: String, what: String, arg: Column): Int =
+    GraftBridge.expression(arg) match {
+      case Literal(v: Int, _) => v
+      case other => throw new IllegalArgumentException(
+        s"$name: $what must be an integer literal, got ${other.sql}")
+    }
+
+  /** The SQL functions: name, arity, and the DataFrame builder each one
+    * calls, so a function's kernel, result type, nullability and argument
+    * checks are stated once, in the builder. Arguments the builder takes
+    * as plan constants must be integer literals in SQL. */
+  val SqlFunctions: Seq[(String, Int, Seq[Column] => Column)] = Seq(
+    ("wkt_centroid_lng", 1, a => GeoF.centroidLng(a(0))),
+    ("wkt_centroid_lat", 1, a => GeoF.centroidLat(a(0))),
+    // spherical (BigQuery-semantics) centroid option
+    ("wkt_centroid_sph_lng", 1, a => GeoF.centroidSphLng(a(0))),
+    ("wkt_centroid_sph_lat", 1, a => GeoF.centroidSphLat(a(0))),
+    ("h3_fromgeogpoint", 3, a => GeoF.h3Cell(a(0), a(1),
+      intLiteral("h3_fromgeogpoint", "res", a(2)))),
+    // inverse of h3_fromgeogpoint: exact cell-center coordinates
+    ("h3_cell_lat", 1, a => GeoF.h3CenterLat(a(0))),
+    ("h3_cell_lng", 1, a => GeoF.h3CenterLng(a(0))),
+    // hierarchy (h3lib cellToParent / cellToChildren / compactCells):
+    // parent res is a runtime column (multi-res cover joins); children
+    // res is a literal (the 7^k fan-out bound belongs in the plan text)
+    ("h3_cell_to_parent", 2, a => GeoF.h3Parent(a(0), a(1))),
+    ("h3_cell_to_children", 2, a => GeoF.h3Children(a(0),
+      intLiteral("h3_cell_to_children", "res", a(1)))),
+    ("h3_compact_cells", 1, a => GeoF.h3CompactArray(a(0))),
+    // h3_cell_boundary emits the 6 true corners only (substrate-exact in
+    // the owning chart, bit-canonical across neighbors — see
+    // GeoF.h3Boundary); h3_cell_boundary_full also inserts h3lib's
+    // edge-crossing distortion vertices for face-straddling cells
+    ("h3_cell_boundary", 1, a => GeoF.h3Boundary(a(0))),
+    ("h3_cell_boundary_full", 1, a => GeoF.h3BoundaryFull(a(0))),
+    ("h3_grid_distance", 2, a => GeoF.h3GridDistance(a(0), a(1))),
+    ("h3_grid_path", 2, a => GeoF.h3GridPath(a(0), a(1))),
+    ("term_histogram", 1, a => TextF.termHistogram(a(0))),
+    ("word_shingles", 2, a => TextF.shinglesFromTokens(a(0),
+      intLiteral("word_shingles", "k", a(1)))))
 }

@@ -67,7 +67,7 @@ object CurateQueries {
   /** OPTIMIZATION r18 (guide §2.3/§2.4): with the benchmark shingle set
     * collected, contamination counting is document-local — the primary
     * arm probes each doc's distinct shingles IN-ROW through
-    * [[graft.plans.CountInSet]], deleting the corpus-side explode →
+    * [[graft.functions.CountInSet]], deleting the corpus-side explode →
     * broadcast join → per-doc hit aggregation → doc-keyed rejoin.
     * `DecontaminateSpec` pins the two arms row-for-row equal; the DuckDB
     * oracle gates the primary arm every round. */
@@ -87,11 +87,9 @@ object CurateQueries {
         .select(col("shingle").cast("binary").as("sb")),
       setRowCap, "x_decontaminate")
     if (collected.isDefined) {
-      val set = new graft.plans.Utf8Set(
+      val set = new graft.functions.Utf8Set(
         collected.get.map(_.getAs[Array[Byte]](0)))
-      import org.apache.spark.sql.GraftBridge
-      val nHits = GraftBridge.column(graft.plans.CountInSet(
-        GraftBridge.expression(distinctSh), set))
+      val nHits = TextF.countInSet(distinctSh, set)
       docs.filter(!isBench)
         .select(col("doc_id"), nHits.as("n_hits"))
         .select(col("doc_id"), col("n_hits"),
@@ -414,7 +412,7 @@ object CurateQueries {
     * width 1): collect the vocabulary counts (row-capped, loud
     * fallback), fold n_total and the µ-nat law on the driver with the
     * chain's exact double expression trees, and score each document
-    * IN-ROW through [[graft.plans.NgramLmSum]] — deleting the scoring
+    * IN-ROW through [[graft.functions.NgramLmSum]] — deleting the scoring
     * join, the per-doc groupBy exchange and the final doc-keyed left
     * join. `LmScoreSpec` pins the two arms row-for-row equal; the
     * DuckDB oracle gates the primary arm every round. */
@@ -425,7 +423,7 @@ object CurateQueries {
     val docs = graft.parallelScanDense(s,
         tbl(s, dir, "documents").select(col("doc_id"), col("text")))
       .select(col("doc_id"), TextF.lowerTokens(col("text")).as("toks"))
-    // per-doc token histogram (codegen expression): the vocabulary
+    // per-doc token histogram (kernel call): the vocabulary
     // aggregate consumes distinct-terms-per-doc weighted by in-doc
     // count `c`, not the raw token stream
     val collectedOpt = InRowModel.boundedCollect(
@@ -451,10 +449,8 @@ object CurateQueries {
           nTotal.toDouble)
         i += 1
       }
-      val m = new graft.plans.NgramLmModel(tokBytes, lpq)
-      import org.apache.spark.sql.GraftBridge
-      val summed = GraftBridge.column(graft.plans.NgramLmSum(
-        GraftBridge.expression(col("toks")), m, 1))
+      val m = new graft.functions.NgramLmModel(tokBytes, lpq)
+      val summed = TextF.ngramLmSum(col("toks"), m, 1)
       docs.select(col("doc_id"), summed.as("r"))
         .select(col("doc_id"),
           col("r.n_grams").as("n_tok"),
@@ -554,7 +550,7 @@ object CurateQueries {
     * collects the bigram counts (row-capped, loud fallback), folds the
     * left-context totals and the µ-nat law on the driver with the
     * chain's exact double expression trees, and scores each document
-    * IN-ROW through [[graft.plans.NgramLmSum]] — deleting the chain's
+    * IN-ROW through [[graft.functions.NgramLmSum]] — deleting the chain's
     * corpus-sized exploded-bigram localCheckpoint, the n-row scoring
     * join, the per-doc groupBy exchange and the final doc-keyed left
     * join. `LmBigramSpec` pins the two arms row-for-row equal; the
@@ -587,7 +583,7 @@ object CurateQueries {
 
   /** Primary arm: driver-built model, one scoring scan, zero corpus
     * shuffle. Arithmetic is the chain's, restated exactly (see
-    * [[graft.plans.NgramLmModel]]). */
+    * [[graft.functions.NgramLmModel]]). */
   private def bigramLmScoreInRow(docs: DataFrame,
       collected: Array[org.apache.spark.sql.Row]): DataFrame = {
     import org.apache.spark.unsafe.types.UTF8String
@@ -626,10 +622,8 @@ object CurateQueries {
         (cw1.get(w1Of(b)) + v).toDouble)
       i += 1
     }
-    val m = new graft.plans.NgramLmModel(bgBytes, lpq)
-    import org.apache.spark.sql.GraftBridge
-    val summed = GraftBridge.column(graft.plans.NgramLmSum(
-      GraftBridge.expression(col("toks")), m, 2))
+    val m = new graft.functions.NgramLmModel(bgBytes, lpq)
+    val summed = TextF.ngramLmSum(col("toks"), m, 2)
     // two stacked selects: CollapseProject keeps the non-cheap scorer
     // single-evaluated. n_bigrams = 0 → NULL avg_nll, exactly the
     // chain's missing-perDoc-row left-join case.
@@ -783,7 +777,7 @@ object CurateQueries {
     * so scoring does not need to shuffle the corpus at all. The primary
     * arm collects the model (row-capped, loud fallback) and scores
     * every language IN-ROW through the baked
-    * [[graft.plans.NbLangScore]] expression — deleting the per-(doc,
+    * [[graft.functions.NbLangScore]] expression — deleting the per-(doc,
     * lang) `seen` exchange, the n·L scored join, and the per-doc
     * argmax window sort that the chain pays (3 corpus-keyed exchanges
     * + 1 corpus scan). The µ-nat integer law is restated through the
@@ -796,7 +790,7 @@ object CurateQueries {
     // model aggregate over RAW bigram instances (r18: char_bigrams, no
     // per-doc histogram sort — the hash aggregate's map-side combine
     // already collapses instances, so the sort bought nothing; see
-    // graft.plans.CharBigrams). groupBy counts instances, identical to
+    // graft.functions.CharBigrams). groupBy counts instances, identical to
     // the old sum-of-histogram-tf by construction.
     val model = d
       .select(col("lang"), explode(TextF.charBigrams(col("s"))).as("bg"))
@@ -816,7 +810,7 @@ object CurateQueries {
 
   /** Primary arm: driver-built model, one scoring scan, zero corpus
     * shuffle. Arithmetic is the chain's, restated exactly (see
-    * [[graft.plans.NbLangModel]]). */
+    * [[graft.functions.NbLangModel]]). */
   private def langIdScoreInRow(d: DataFrame,
       collected: Array[org.apache.spark.sql.Row]): DataFrame = {
     import org.apache.spark.unsafe.types.UTF8String
@@ -852,10 +846,8 @@ object CurateQueries {
         (nl(l) + v).toDouble)
       delta(i)(l) = lp - lpu(l)
     }
-    val nbModel = new graft.plans.NbLangModel(langs, lpu, bgBytes, delta)
-    import org.apache.spark.sql.GraftBridge
-    val scored = GraftBridge.column(
-      graft.plans.NbLangScore(GraftBridge.expression(col("s")), nbModel))
+    val nbModel = new graft.functions.NbLangModel(langs, lpu, bgBytes, delta)
+    val scored = TextF.nbLangScore(col("s"), nbModel)
     // two stacked selects: CollapseProject keeps the non-cheap scorer
     // single-evaluated (one nb_lang_score per row in the final plan)
     d.select(col("doc_id"), col("lang"), scored.as("r"))

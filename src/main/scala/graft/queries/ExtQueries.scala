@@ -684,8 +684,8 @@ object ExtQueries {
 
   /** Rounded cosine: both engines compute the identical sequential double
     * fold; round(…, 6) + vec_id tie-break makes top-k selection robust to
-    * any last-bit divergence. Native single-pass expression
-    * ([[graft.plans.CosineSim]]) — same bits as the composed form, no
+    * any last-bit divergence. Single-pass kernel
+    * ([[graft.functions.CosineSim]]) — same bits as the composed form, no
     * per-row intermediate arrays. */
   private def simCol(a: Column, b: Column): Column =
     round(VectorF.cosineNative(a, b), 6)
@@ -1849,7 +1849,7 @@ object ExtQueries {
     * distortion bound (`JlProjectionSpec` measures the empirical
     * original↔projected distance correlation).
     *
-    * Plan shape: pure scan-side map — ONE native [[graft.plans.PlaneDots]]
+    * Plan shape: pure scan-side map — ONE [[graft.functions.PlaneDots]] kernel
     * scan produces all [[ProjDim]] dot products (the per-plane HOF form
     * is interpreted and walks the vector twice per plane), zero
     * shuffles, one pass. Projections round 6dp; the left-to-right fold

@@ -141,10 +141,10 @@ object FidelityQueries {
     * views (the reference's code builds SQL strings and submits them,
     * `taxi_trips_etl.py:105-109`; this is the surface its user brings).
     * Substitutions from the BigQuery dialect, each a registered function
-    * on this engine: `ST_CENTROID` → `wkt_centroid_lat/lng` (native
-    * codegen expressions injected by [[graft.plans.GraftExtensions]]),
-    * `H3_FROMGEOGPOINT` → `h3_fromgeogpoint` (TRUE H3; the native
-    * codegen expression injected by [[graft.plans.GraftExtensions]] —
+    * on this engine: `ST_CENTROID` → `wkt_centroid_lat/lng` (kernel
+    * calls registered by [[graft.plans.GraftExtensions]]),
+    * `H3_FROMGEOGPOINT` → `h3_fromgeogpoint` (TRUE H3; the kernel
+    * call registered by [[graft.plans.GraftExtensions]] —
     * the reference's SQL line ports verbatim modulo the
     * dataset-qualifier), `byte_length(ST_ASTEXT(g))` →
     * `octet_length(g)`, `EXTRACT(TIME)` comparisons → µs-of-day (the

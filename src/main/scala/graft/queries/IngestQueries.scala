@@ -17,14 +17,11 @@ import graft.pipeline.{Runner, TaxiPipeline}
   */
 object IngestQueries {
 
-  private def qtmp(name: String): String =
-    s"${sys.props("user.dir")}/target/qtmp/$name"
-
   /** The manifest-snapshot table's DATA directory (v1 commit + concurrent
     * append land here) — exposed so `SnapshotKmvSpec` reuses the layout
     * instead of duplicating the private path convention. */
   private[queries] def manifestEventsDataDir: String =
-    s"${qtmp("manifest/events")}/data"
+    s"${QTmp("manifest/events")}/data"
 
   /** The ingest day every datepath/pipeline query uses (exists at every
     * fixture SF: events span 2024-01). */
@@ -47,7 +44,7 @@ object IngestQueries {
     * day's files are ever listed/opened; the glob prunes at file-listing
     * time, before any reads. */
   private def datepathGlob(s: SparkSession, dir: String): DataFrame = {
-    val base = qtmp("datepath")
+    val base = QTmp("datepath")
     writeDay(s, dir, base, Ds)
     writeDay(s, dir, base, "2024-01-06") // decoy day that must NOT be read
     val Array(y, m, d) = Ds.split("-")
@@ -66,7 +63,7 @@ object IngestQueries {
     * `taxi_trips_etl.py:43-59`): round-trip `nation` through a header CSV
     * and read it back with `header` + `inferSchema`. */
   private def csvRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val path = qtmp("csv/nation")
+    val path = QTmp("csv/nation")
     tbl(s, dir, "nation").coalesce(1)
       .write.mode("overwrite").option("header", "true").csv(path)
     s.read.option("header", "true").option("inferSchema", "true").csv(path)
@@ -82,7 +79,7 @@ object IngestQueries {
     * actually runs at scale. */
   private def csvExplicitSchema(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val path = qtmp("csv_explicit/nation")
+    val path = QTmp("csv_explicit/nation")
     tbl(s, dir, "nation").coalesce(1)
       .write.mode("overwrite").option("header", "true").csv(path)
     val schema = StructType(Seq(
@@ -101,7 +98,7 @@ object IngestQueries {
     * stripe-skipping — same pushdown contract as the parquet scans.
     * Doubles pass through unaggregated, so bits are preserved. */
   private def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val path = qtmp("orc/supplier")
+    val path = QTmp("orc/supplier")
     tbl(s, dir, "supplier").coalesce(1)
       .write.mode("overwrite").orc(path)
     s.read.orc(path)
@@ -119,7 +116,7 @@ object IngestQueries {
     * the declared order. Scale: like s4b, a 100 TB JSONL ingest supplies
     * the schema instead of paying the inference pre-pass. */
   private def jsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val path = qtmp("jsonl/nation")
+    val path = QTmp("jsonl/nation")
     tbl(s, dir, "nation").coalesce(1)
       .write.mode("overwrite").json(path)
     s.read.json(path)
@@ -142,7 +139,7 @@ object IngestQueries {
   private def dbtModels(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     import graft.functions.DateTimeF
-    val cat = new Catalog(s, qtmp("dbt_wh"))
+    val cat = new Catalog(s, QTmp("dbt_wh"))
     // model `tripss` (+materialized: table; ref models/tripss.sql:1-7)
     val tripss = tbl(s, dir, "lineitem")
       .join(tbl(s, dir, "orders"),
@@ -210,7 +207,7 @@ object IngestQueries {
     * `taxi_trips_etl.py:32-40,77-80,88-93,112`). The probe outcomes ride
     * along as a literal column so the oracle can check them. */
   private def catalogLifecycle(s: SparkSession, dir: String): DataFrame = {
-    val cat = new Catalog(s, qtmp("wh_lifecycle"))
+    val cat = new Catalog(s, QTmp("wh_lifecycle"))
     val region = tbl(s, dir, "region")
     cat.drop("region_t")
     cat.save("region_t", region.filter(col("r_regionkey") < 3)) // S5 truncate
@@ -236,7 +233,7 @@ object IngestQueries {
     * (`taxi_trips_etl.py:199-238`); see [[graft.pipeline.TaxiPipeline]].
     * The oracle recomputes all four stages as one SQL pipeline. */
   private def pipelineE2E(s: SparkSession, dir: String): DataFrame = {
-    val base = qtmp("pipeline")
+    val base = QTmp("pipeline")
     writeDay(s, dir, s"$base/src", Ds)
     val cat = new Catalog(s, s"$base/wh")
     val ran = Runner.run(cat, TaxiPipeline.stages(s, dir, s"$base/src", Ds))
@@ -255,7 +252,7 @@ object IngestQueries {
   private def pipelineE2EBench(s: SparkSession, dir: String): DataFrame = {
     // keyed by source dir: the bench warms plans at sf0.001 before timing
     // the target SF — the two must not share a fixture path
-    val base = qtmp("pipeline_bench_" + graft.core.PathTag.tag(dir))
+    val base = QTmp("pipeline_bench_" + graft.core.PathTag.tag(dir))
     val Array(y, m, d) = Ds.split("-")
     // Reuse the laid-out source day only if it is COMPLETE (_SUCCESS from
     // a finished write, not a crashed partial) and FRESH (the stamp of
@@ -281,7 +278,7 @@ object IngestQueries {
     * method), gated by the SAME oracle as `c_pipeline_e2e`. The only
     * writes left are the source-day fixture this test lays out. */
   private def pipelineFused(s: SparkSession, dir: String): DataFrame = {
-    val base = qtmp("pipeline_fused")
+    val base = QTmp("pipeline_fused")
     writeDay(s, dir, s"$base/src", Ds)
     val df = TaxiPipeline.fusedObserved(s, dir, s"$base/src", Ds).map(_._1)
       .getOrElse(sys.error("fused pipeline gated on a day with data"))
@@ -300,7 +297,7 @@ object IngestQueries {
     * spec-pinned in `RunnerSpec`; metadata-gate stays eager, as in the
     * staged runner). */
   private def pipelineFusedBench(s: SparkSession, dir: String): DataFrame = {
-    val base = qtmp("pipeline_fused_bench_" + graft.core.PathTag.tag(dir))
+    val base = QTmp("pipeline_fused_bench_" + graft.core.PathTag.tag(dir))
     val Array(y, m, d) = Ds.split("-")
     val stamp = graft.core.FixtureMeta.sourceStamp(s, dir, Seq("events"))
     if (!(graft.core.FixtureMeta.complete(s, s"$base/src/$y/$m/$d") &&
@@ -394,7 +391,7 @@ object IngestQueries {
     * of table size — the property that makes backfills O(day), not
     * O(history). */
   private def dynamicOverwrite(s: SparkSession, dir: String): DataFrame = {
-    val base = qtmp("dynover/events")
+    val base = QTmp("dynover/events")
     val ev = eventsTbl(s, dir)
       .select(col("event_id"), col("event_type"), col("value"),
         to_date(col("ts")).cast("string").as("day"))
@@ -441,7 +438,7 @@ object IngestQueries {
     * 100 TB) with one small file read; real formats shard manifests and
     * index them by partition values. */
   private def manifestSnapshot(s: SparkSession, dir: String): DataFrame = {
-    val base = qtmp("manifest/events")
+    val base = QTmp("manifest/events")
     val ev = eventsTbl(s, dir).select("event_id", "event_type", "value")
     val dataDir = new java.io.File(s"$base/data")
     if (dataDir.exists()) {
@@ -499,7 +496,7 @@ object IngestQueries {
     * without any global side channel. */
   private[queries] def manifestPruneWithCounts(
       s: SparkSession, dir: String): (DataFrame, (Int, Int)) = {
-    val base = qtmp("manifest_prune/events")
+    val base = QTmp("manifest_prune/events")
     val ev = eventsTbl(s, dir).select("event_id", "event_type", "value")
     ev.repartitionByRange(8, col("event_id"))
       .sortWithinPartitions("event_id")
@@ -548,7 +545,7 @@ object IngestQueries {
     * single pass. */
   private def csvPermissive(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val path = qtmp("csv_permissive/nation")
+    val path = QTmp("csv_permissive/nation")
     tbl(s, dir, "nation")
       .select(concat_ws(",", col("n_nationkey"), col("n_name"),
         when(col("n_nationkey") % 5 === 0, lit("not_a_number"))
@@ -594,7 +591,7 @@ object IngestQueries {
     * the one-off ingest-time discovery tool. `SchemaPinSpec` asserts the
     * read schema comes from the catalog entry, not the footers. */
   private def schemaMerge(s: SparkSession, dir: String): DataFrame = {
-    val cat = new graft.core.Catalog(s, qtmp("schema_merge"))
+    val cat = new graft.core.Catalog(s, QTmp("schema_merge"))
     val li = tbl(s, dir, "lineitem")
     val base = s"${cat.warehouseDir}/lineitem"
     li.filter(col("l_linenumber") <= 2)

@@ -36,3 +36,18 @@ final case class QueryDef(
     * Correctness always runs `fn`. */
   def benched: (SparkSession, String) => DataFrame = benchFn.getOrElse(fn)
 }
+
+/** The queries' scratch directory, `target/qtmp` under the working
+  * directory: the layouts, sinks and checkpoints queries write and read
+  * back. */
+object QTmp {
+  def apply(name: String): String =
+    s"${sys.props("user.dir")}/target/qtmp/$name"
+
+  /** `name_<tag>` for one (session, fixture dir) pair: two sessions over
+    * the same fixture (a test JVM's, a bench's) never share it, so
+    * neither overwrites the other's files mid-read. */
+  def perSession(name: String, s: SparkSession, dir: String): String =
+    apply(name + "_" +
+      graft.core.PathTag.tag(dir + "#" + System.identityHashCode(s)))
+}

@@ -18,9 +18,6 @@ import graft.{eventsTbl, tbl}
   */
 object ScaleQueries {
 
-  private def qtmp(name: String): String =
-    s"${sys.props("user.dir")}/target/qtmp/$name"
-
   /** Bucketed-table prep — bucketing is a one-time LAYOUT decision (like
     * the reference's materialized BigQuery tables), so the bench must
     * time the JOIN that benefits, not the table construction it
@@ -99,7 +96,7 @@ object ScaleQueries {
     // bucket count is part of the layout identity: a 64-bucket layout at
     // the same dir lives at its own path under its own table names
     val suffix = graft.core.PathTag.tag(dir + "#" + buckets)
-    val wh = qtmp(s"bucketed_$suffix")
+    val wh = QTmp(s"bucketed_$suffix")
     val (liT, ordT) = (s"graft_li_b_$suffix", s"graft_ord_b_$suffix")
     val stamp = FixtureMeta.sourceStamp(s, dir, Seq("lineitem", "orders"))
     val layoutOk = FixtureMeta.valid(s, s"$wh/.stamp", stamp) &&
@@ -262,7 +259,7 @@ object ScaleQueries {
     if (s.conf.getOption(memoKey).isDefined && s.catalog.tableExists(evT))
       return evT
     bucketLock.synchronized {
-      val wh = qtmp(s"bucketed_$suffix")
+      val wh = QTmp(s"bucketed_$suffix")
       val stamp = FixtureMeta.sourceStamp(s, dir, Seq("events"))
       val src = eventsTbl(s, dir)
         .select(col("user_id"), col("event_id"), col("value"),
@@ -689,12 +686,12 @@ object ScaleQueries {
 
   /** Distributed bloom build: per-partition 8 KB word arrays OR-merged
     * up a tree — each partition ships the fixed-size array, never its
-    * key set ([[graft.plans.BloomF]] holds the shared mix/probe math). */
+    * key set ([[graft.functions.BloomF]] holds the shared mix/probe math). */
   private def bloomWords(keys: DataFrame, logBits: Int): Array[Long] = {
     import keys.sparkSession.implicits._
     keys.as[Long].rdd.treeAggregate(
-      graft.plans.BloomF.emptyWords(logBits))(
-      seqOp = (w, k) => { graft.plans.BloomF.insert(w, k, logBits); w },
+      graft.functions.BloomF.emptyWords(logBits))(
+      seqOp = (w, k) => { graft.functions.BloomF.insert(w, k, logBits); w },
       combOp = (a, b) => {
         var i = 0
         while (i < a.length) { a(i) |= b(i); i += 1 }
@@ -703,7 +700,7 @@ object ScaleQueries {
   }
 
   /** Bloom-pruned join (semi-join reduction): the fact scan is filtered
-    * through a [[graft.plans.BloomMightContain]] probe of the dim-side
+    * through a [[graft.functions.BloomF.probe]] of the dim-side
     * key set BEFORE the join, so at scale the join exchange moves only
     * the ~matching fraction of the fact table (plus a sub-1e-3 false
     * positive tail the exact join then removes). This is the explicit,
@@ -717,10 +714,8 @@ object ScaleQueries {
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"), col("o_orderstatus"))
     val words = bloomWords(urgent.select("o_orderkey"), BloomLogBits)
-    val probe = org.apache.spark.sql.GraftBridge.column(
-      graft.plans.BloomMightContain(
-        org.apache.spark.sql.GraftBridge.expression(col("l_orderkey")),
-        words, BloomLogBits))
+    val probe = graft.functions.BloomF.probe(col("l_orderkey"), words,
+      BloomLogBits)
     tbl(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       .filter(probe)
@@ -742,11 +737,8 @@ object ScaleQueries {
 
   /** Per-(session, dir) z-order layout path (same collision rationale as
     * [[ensureBucketed]]). */
-  private[queries] def zorderBase(s: SparkSession, dir: String): String = {
-    val suffix = graft.core.PathTag.tag(
-      dir + "#" + System.identityHashCode(s))
-    s"${sys.props("user.dir")}/target/qtmp/zorder_$suffix"
-  }
+  private[queries] def zorderBase(s: SparkSession, dir: String): String =
+    QTmp.perSession("zorder", s, dir)
 
   /** The z-order clustering key for events: quantized (user_id, value)
     * interleaved — both dimensions get file-level locality. */

@@ -14,9 +14,6 @@ import graft.streaming.StreamIngest
   * batch unification Spark promises, checked. */
 object StreamQueries {
 
-  private def qtmp(name: String): String =
-    s"${sys.props("user.dir")}/target/qtmp/stream/$name"
-
   private def freshDir(p: String): String = {
     val dir = new java.io.File(p)
     def del(f: java.io.File): Unit = {
@@ -61,7 +58,7 @@ object StreamQueries {
     * parquet files, the stream drains them into an append table, and the
     * result must equal the batch read — counted per event_type. */
   private def streamIngest(s: SparkSession, dir: String): DataFrame = {
-    val base = freshDir(qtmp("ingest"))
+    val base = freshDir(QTmp("stream/ingest"))
     eventsTbl(s, dir).repartition(8)
       .write.mode("overwrite").parquet(s"$base/src")
     val ingested = StreamIngest.ingestAvailableNow(
@@ -81,7 +78,7 @@ object StreamQueries {
   /** Watermarked tumbling-window aggregation, drained synchronously:
     * events per (UTC day, type). Oracle: the equivalent batch GROUP BY. */
   private def streamWindowCounts(s: SparkSession, dir: String): DataFrame = {
-    val base = freshDir(qtmp("window"))
+    val base = freshDir(QTmp("stream/window"))
     eventsTbl(s, dir).repartition(4)
       .write.mode("overwrite").parquet(s"$base/src")
     val schema = s.read.parquet(s"$base/src").schema
@@ -104,7 +101,7 @@ object StreamQueries {
     * Oracle: the equivalent batch answer — count + argmax-by-(ts,value). */
   private def streamUserState(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = freshDir(qtmp("state"))
+    val base = freshDir(QTmp("stream/state"))
     eventsTbl(s, dir).select("user_id", "ts", "value").repartition(4)
       .write.mode("overwrite").parquet(s"$base/src")
     val schema = s.read.parquet(s"$base/src").schema
@@ -144,7 +141,7 @@ object StreamQueries {
     * key state is the exact-dedup cost; production bounds it with
     * `dropDuplicatesWithinWatermark` once event-time skew is bounded. */
   private def streamDedup(s: SparkSession, dir: String): DataFrame = {
-    val base = freshDir(qtmp("dedup"))
+    val base = freshDir(QTmp("stream/dedup"))
     val ev = eventsTbl(s, dir).select("event_id", "event_type", "value")
     ev.repartition(4).write.mode("overwrite").parquet(s"$base/src")
     ev.repartition(3).write.mode("append").parquet(s"$base/src") // replay
@@ -193,7 +190,7 @@ object StreamQueries {
     * `> gap`; at µs precision the fixture has no exact-gap pair, but the
     * SQL states each operator's true semantics). */
   private def streamSessions(s: SparkSession, dir: String): DataFrame = {
-    val base = freshDir(qtmp("session"))
+    val base = freshDir(QTmp("stream/session"))
     val ev = eventsTbl(s, dir).select("user_id", "ts", "value")
     val maxTs = ev.agg(max("ts")).head().getTimestamp(0) // bounded scalar
     val sentinelTs = new java.sql.Timestamp(
@@ -249,7 +246,7 @@ object StreamQueries {
     * mode), and AvailableNow drains every match of the bounded fixture.
     * Oracle: the equivalent batch range join. */
   private def streamStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    val base = freshDir(qtmp("ssjoin"))
+    val base = freshDir(QTmp("stream/ssjoin"))
     val ev = eventsTbl(s, dir)
     ev.filter(col("event_type") === "click")
       .select(col("event_id"), col("user_id"), col("ts"))
@@ -302,7 +299,7 @@ object StreamQueries {
     * state is one watermark-window of rows; the null-extension adds no
     * state, only delayed emission. */
   private def streamOuterJoin(s: SparkSession, dir: String): DataFrame = {
-    val base = freshDir(qtmp("ssouter"))
+    val base = freshDir(QTmp("stream/ssouter"))
     val ev = eventsTbl(s, dir)
     val maxTs = ev.agg(max("ts")).head().getTimestamp(0) // bounded scalar
     val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 7L * 86400 * 1000)
@@ -366,7 +363,7 @@ object StreamQueries {
     * target (Delta/Iceberg MERGE) replaces the version-directory dance,
     * not the plan. */
   private def foreachUpsert(s: SparkSession, dir: String): DataFrame = {
-    val base = freshDir(qtmp("upsert"))
+    val base = freshDir(QTmp("stream/upsert"))
     eventsTbl(s, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_id"), col("value"))
@@ -443,7 +440,7 @@ object StreamQueries {
     * sums are decimal-exact so complete-mode output equals the batch
     * answer bit-for-bit. */
   private def streamStaticJoin(s: SparkSession, dir: String): DataFrame = {
-    val base = freshDir(qtmp("staticjoin"))
+    val base = freshDir(QTmp("stream/staticjoin"))
     eventsTbl(s, dir).repartition(4)
       .write.mode("overwrite").parquet(s"$base/src")
     val schema = s.read.parquet(s"$base/src").schema
@@ -480,7 +477,7 @@ object StreamQueries {
     * stateless per-row codegen transform (no shuffle before the
     * keyed aggregation), with the cell id as the aggregation key. */
   private def streamH3Enrich(s: SparkSession, dir: String): DataFrame = {
-    val base = freshDir(qtmp("h3enrich"))
+    val base = freshDir(QTmp("stream/h3enrich"))
     eventsTbl(s, dir).select("user_id", "value").repartition(4)
       .write.mode("overwrite").parquet(s"$base/src")
     val schema = s.read.parquet(s"$base/src").schema
@@ -527,10 +524,10 @@ object StreamQueries {
     * (`StreamSpec`) so the test cannot drift from the query's own
     * path construction (the `shardBase` precedent). */
   private[graft] def shardStreamShards: String =
-    qtmp("shard_stream") + "/shards"
+    QTmp("stream/shard_stream") + "/shards"
 
   private def streamShardDelivery(s: SparkSession, dir: String): DataFrame = {
-    val base = freshDir(qtmp("shard_stream"))
+    val base = freshDir(QTmp("stream/shard_stream"))
     tbl(s, dir, "documents").repartition(8)
       .write.mode("overwrite").parquet(s"$base/src")
     val schema = s.read.parquet(s"$base/src").schema

@@ -91,7 +91,7 @@ object TrainPrepQueries {
     * (doc_id) over the tf stream rides the same term-keyed aggregate as
     * `count(pos = 0)` per term, summed on the driver (each doc with ≥ 1
     * term contributes exactly one pos-0 histogram row) — then scores
-    * each document IN-ROW through [[graft.plans.TfidfTopTerms]],
+    * each document IN-ROW through [[graft.functions.TfidfTopTerms]],
     * deleting the chain's eager per-(doc, term) tf checkpoint (write +
     * three reads), the scoring join and the per-doc row_number window
     * exchange + sort. `TfidfTopKSpec` pins the two arms row-for-row
@@ -120,7 +120,7 @@ object TrainPrepQueries {
 
   /** Primary arm: driver-built IDF table, one scoring scan, zero
     * corpus shuffle. Arithmetic is the chain's integer law restated
-    * exactly (see [[graft.plans.TfidfModel]]). */
+    * exactly (see [[graft.functions.TfidfModel]]). */
   private def tfidfTopTermsInRow(docs: DataFrame,
       collected: Array[org.apache.spark.sql.Row]): DataFrame = {
     var n = 0L // countDistinct(doc_id) over tf = Σ per-term pos-0 rows
@@ -135,10 +135,8 @@ object TrainPrepQueries {
       idfq(i) = (IdfScale * (n + 1)) / (collected(i).getLong(1) + 1)
       i += 1
     }
-    val m = new graft.plans.TfidfModel(termBytes, idfq)
-    import org.apache.spark.sql.GraftBridge
-    val topk = GraftBridge.column(graft.plans.TfidfTopTerms(
-      GraftBridge.expression(col("toks")), m, 3))
+    val m = new graft.functions.TfidfModel(termBytes, idfq)
+    val topk = TextF.tfidfTopK(col("toks"), m, 3)
     docs.select(col("doc_id"), posexplode(topk))
       .select(col("doc_id"), col("col.term").as("term"),
         col("col.tf").as("tf"), col("col.score").as("score"),
@@ -152,7 +150,7 @@ object TrainPrepQueries {
     // tf is computed IN-ROW by the codegen term-histogram expression —
     // per-document counts are document-local, so the token stream never
     // reaches a hash aggregate (measured 3.7 s → 1.9 s for the tf pass
-    // at sf1; see graft.plans.TermHistogram for why the built-in HOF
+    // at sf1; see graft.functions.TermHistogram for why the built-in HOF
     // route is not viable)
     val tf = graft.parallelScan(s,
         tbl(s, dir, "documents").select(col("doc_id"), col("text")))
@@ -231,7 +229,7 @@ object TrainPrepQueries {
     * (df, N, total_len) in ONE pass — N rides as `count(pos = 0)` per
     * term and total_len as `sum(tf)` per term, both summed on the
     * driver (exact Long arithmetic, order-free) — and scores each
-    * document IN-ROW through [[graft.plans.Bm25TopTerms]], deleting the
+    * document IN-ROW through [[graft.functions.Bm25TopTerms]], deleting the
     * scoring join, the doc-keyed dl join, the corpus crossJoin and the
     * per-doc row_number window. `Bm25Spec` pins the two arms
     * row-for-row equal; the DuckDB oracle gates the primary arm every
@@ -273,11 +271,9 @@ object TrainPrepQueries {
         idfq(i) = (IdfScale * (n + 1)) / (collected(i).getLong(1) + 1)
         i += 1
       }
-      val m = new graft.plans.Bm25Model(termBytes, idfq, n, totalLen,
+      val m = new graft.functions.Bm25Model(termBytes, idfq, n, totalLen,
         Bm25K1, Bm25B)
-      import org.apache.spark.sql.GraftBridge
-      val topk = GraftBridge.column(graft.plans.Bm25TopTerms(
-        GraftBridge.expression(col("lt")), m, 3))
+      val topk = TextF.bm25TopK(col("lt"), m, 3)
       docs
         .select(col("doc_id"), size(col("lt")).cast("long").as("dl"),
           posexplode(topk))
@@ -859,11 +855,8 @@ object TrainPrepQueries {
     * is independent of the value. */
   private[queries] val NShards = 8
 
-  private[queries] def shardBase(s: SparkSession, dir: String): String = {
-    val suffix = graft.core.PathTag.tag(
-      dir + "#" + System.identityHashCode(s))
-    s"${sys.props("user.dir")}/target/qtmp/trainprep/shard_$suffix"
-  }
+  private[queries] def shardBase(s: SparkSession, dir: String): String =
+    QTmp.perSession("trainprep/shard", s, dir)
 
   /** `x_shard_write` (r17 verdict item 1 of the Missing list): the last
     * mile after [[seqPack]] — a deterministic global shuffle plus a

@@ -382,11 +382,8 @@ object WarehouseQueries {
   /** Per-(session, dir) sink path: concurrent sessions must not clobber
     * each other's partition directories mid-read. Package-visible for
     * `WarehouseSpec`'s pruning assertion. */
-  private[queries] def psinkBase(s: SparkSession, dir: String): String = {
-    val suffix = graft.core.PathTag.tag(
-      dir + "#" + System.identityHashCode(s))
-    s"${sys.props("user.dir")}/target/qtmp/warehouse/psink_$suffix"
-  }
+  private[queries] def psinkBase(s: SparkSession, dir: String): String =
+    QTmp.perSession("warehouse/psink", s, dir)
 
   private def partitionedSink(s: SparkSession, dir: String): DataFrame = {
     val base = psinkBase(s, dir)
@@ -804,11 +801,8 @@ object WarehouseQueries {
       |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  private[queries] def compactBase(s: SparkSession, dir: String): String = {
-    val suffix = graft.core.PathTag.tag(
-      dir + "#" + System.identityHashCode(s))
-    s"${sys.props("user.dir")}/target/qtmp/warehouse/cmp_$suffix"
-  }
+  private[queries] def compactBase(s: SparkSession, dir: String): String =
+    QTmp.perSession("warehouse/cmp", s, dir)
 
   // --------------------------------- SCD2 ---------------------------------
 
@@ -1094,11 +1088,8 @@ object WarehouseQueries {
   // ----------------------- sort-clustered layout --------------------------
 
   /** Per-(session, dir) layout path — see [[psinkBase]] for why. */
-  private[queries] def slayBase(s: SparkSession, dir: String): String = {
-    val suffix = graft.core.PathTag.tag(
-      dir + "#" + System.identityHashCode(s))
-    s"${sys.props("user.dir")}/target/qtmp/warehouse/slay_$suffix"
-  }
+  private[queries] def slayBase(s: SparkSession, dir: String): String =
+    QTmp.perSession("warehouse/slay", s, dir)
 
   /** Value-clustered storage layout: `repartitionByRange` + in-partition
     * sort before the parquet write gives every file a tight, disjoint

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Package bridge: Spark 4 Columns wrap ColumnNodes and the classic
   * Expression↔Column converters are `private[sql]`; this re-exports the
-  * conversions graft's native expressions and custom logical plans need.
+  * conversions graft's kernel calls and custom logical plans need.
   * No Spark internals are modified — this only widens visibility. */
 object GraftBridge {
   def column(e: Expression): Column =

@@ -268,8 +268,9 @@ class GeoFSpec extends SparkSpec {
         .map { case (la, lo) => s"$lo $la" } match {
         case pts => s"POLYGON((${(pts :+ pts.head).mkString(", ")}))"
       }
-      val clat = GeoF.centroidLatJava(wkt)
-      val clng = GeoF.centroidLngJava(wkt)
+      val w = org.apache.spark.unsafe.types.UTF8String.fromString(wkt)
+      val clat = GeoF.centroidLatUtf8(w)
+      val clng = GeoF.centroidLngUtf8(w)
       var chain = (c & ~(15L << 52)) | (9L << 52)
       for (d <- 6 to 9) chain &= ~(7L << ((15 - d) * 3))
       assert(H3.latLngToCell(clat, clng, 9) == chain,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
 import graft.SparkSpec
-import graft.functions.TextF
+import graft.functions.{CharBigramHistogram, TextF}
 
 /** Semantic guarantees of the codegen char-bigram histogram: the
   * exploded histogram must equal the composed

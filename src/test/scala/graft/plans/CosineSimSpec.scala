@@ -38,20 +38,4 @@ class CosineSimSpec extends SparkSpec {
       .head()
     assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2))
   }
-
-  test("interpreted eval matches codegen result") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val e = CosineSim(
-      Literal.create(Seq(1.0, 2.0, 3.0), ArrayType(DoubleType)),
-      Literal.create(Seq(4.0, 5.0, 6.0), ArrayType(DoubleType)))
-    val interpreted = e.eval(null).asInstanceOf[Double]
-    val viaPlan = spark.range(1)
-      .select(VectorF.cosineNative(typedlit(Seq(1.0, 2.0, 3.0)),
-        typedlit(Seq(4.0, 5.0, 6.0))).as("c"))
-      .as[Double].head()
-    assert(interpreted === viaPlan)
-    val expected = 32.0 / (math.sqrt(14.0) * math.sqrt(77.0))
-    assert(interpreted === expected)
-  }
 }

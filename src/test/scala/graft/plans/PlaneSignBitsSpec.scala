@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.functions.VectorF
 
-/** Native [[PlaneSignBits]] ≡ the composed zip_with/aggregate/when form it
-  * replaces, on real fixture vectors AND adversarial edges (NULL vector,
-  * NULL element, wrong length, zero vector) — the bit-compat contract
-  * that keeps the x_ann_lsh / x_embed_neardup / x_knn_graph oracle
-  * hashes stable across the swap. */
+/** The [[graft.functions.PlaneSignBits]] kernel ≡ the composed
+  * zip_with/aggregate/when form it replaces, on real fixture vectors AND
+  * adversarial edges (NULL vector, NULL element, wrong length, zero
+  * vector) — the bit-compat contract that keeps the x_ann_lsh /
+  * x_embed_neardup / x_knn_graph oracle hashes stable across the swap. */
 class PlaneSignBitsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -61,22 +61,5 @@ class PlaneSignBitsSpec extends SparkSpec {
     assert(byTag("short") === 0L)
     assert(byTag("null_elem") === 0L)
     assert(byTag("zero") === 15L)
-  }
-
-  test("interpreted eval matches the codegen path") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val vec = Seq.tabulate(8)(i => math.sin(i + 1.0))
-    val e = PlaneSignBits(
-      Literal.create(vec, ArrayType(DoubleType)), 0 until 6, 8)
-    val interpreted = e.eval(null).asInstanceOf[Long]
-    val viaPlan = spark.range(1)
-      .select(VectorF.lshBucket(typedlit(vec), 6, 8).as("b"))
-      .as[Long].head()
-    assert(interpreted === viaPlan)
-    val composed = spark.range(1)
-      .select(VectorF.lshBucketComposed(typedlit(vec), 6, 8).as("b"))
-      .as[Long].head()
-    assert(interpreted === composed)
   }
 }

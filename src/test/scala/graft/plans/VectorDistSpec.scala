@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.functions.VectorF
 
-/** Native [[EuclideanDist]] / [[PlaneDots]] ≡ their composed
-  * zip_with/aggregate reference forms — the bit-compat contract that
-  * keeps the IVF/k-means and JL-projection oracle hashes stable. */
+/** The [[graft.functions.EuclideanDist]] / [[graft.functions.PlaneDots]]
+  * kernels ≡ their composed zip_with/aggregate reference forms — the
+  * bit-compat contract that keeps the IVF/k-means and JL-projection
+  * oracle hashes stable. */
 class VectorDistSpec extends SparkSpec {
   import spark.implicits._
 
@@ -69,27 +70,5 @@ class VectorDistSpec extends SparkSpec {
       .head()
     assert(!r.isNullAt(0) && r.getSeq[Double](0).length === 2)
     assert(r.isNullAt(1) && r.isNullAt(2))
-  }
-
-  test("interpreted eval matches the codegen path") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val va = Seq(1.0, 2.0, 2.0)
-    val vb = Seq(4.0, 6.0, 2.0)
-    val e = EuclideanDist(
-      Literal.create(va, ArrayType(DoubleType)),
-      Literal.create(vb, ArrayType(DoubleType)))
-    assert(e.eval(null).asInstanceOf[Double] === 5.0)
-    val viaPlan = spark.range(1)
-      .select(VectorF.euclideanNative(typedlit(va), typedlit(vb)).as("d"))
-      .as[Double].head()
-    assert(viaPlan === 5.0)
-    val pd = PlaneDots(Literal.create(va, ArrayType(DoubleType)), Seq(2, 5), 3)
-    val dots = pd.eval(null)
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toDoubleArray()
-    val expected = Seq(2, 5).map(p =>
-      (0 until 3).map(d => va(d) * VectorF.hyperplaneComponent(p, d)).sum)
-    assert(dots.toSeq === expected)
   }
 }

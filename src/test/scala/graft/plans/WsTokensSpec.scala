@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 
@@ -22,15 +23,21 @@ class WsTokensSpec extends SparkSpec {
     Gen.chooseNum(0, 24).flatMap(n => Gen.listOfN(n, piece).map(_.mkString))
 
   test("WsTokens ≡ composed trim+split on random strings (batched)") {
-    // evaluate both Column forms over one DataFrame per batch — the
-    // comparison runs through the real codegen path, not just the
-    // interpreted eval
+    // evaluate both Column forms over one parquet-backed DataFrame: a
+    // local `toDF` relation would be folded and evaluated interpreted,
+    // so the comparison would never reach the generated code
     val samples = Gen.listOfN(400, textGen)
       .apply(Gen.Parameters.default, org.scalacheck.rng.Seed(20260814L))
       .getOrElse(sys.error("gen failed"))
-    val df = samples.toDF("t")
+    val dir = java.nio.file.Files.createTempDirectory("ws_tokens").toString
+    samples.toDF("t").write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
       .select(TextF.tokens(col("t")).as("fast"),
         TextF.tokensComposed(col("t")).as("ref"), col("t"))
+    assert(df.queryExecution.executedPlan.collectFirst {
+      case w: WholeStageCodegenExec
+          if w.child.exists(_.isInstanceOf[ProjectExec]) => w
+    }.isDefined, "the tokenizer did not run in generated code")
     val rows = df.collect()
     rows.foreach { r =>
       assert(r.getSeq[String](0) === r.getSeq[String](1),

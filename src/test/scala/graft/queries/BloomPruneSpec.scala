@@ -1,12 +1,13 @@
 package graft.queries
 
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.plans.BloomF
+import graft.functions.BloomF
 
 class BloomPruneSpec extends SparkSpec {
 
@@ -15,11 +16,11 @@ class BloomPruneSpec extends SparkSpec {
     val words = BloomF.emptyWords(logBits)
     val inserted = (0L until 200L).map(_ * 7919L + 13L)
     inserted.foreach(BloomF.insert(words, _, logBits))
-    assert(inserted.forall(BloomF.mightContain(words, _, logBits)),
+    assert(inserted.forall(BloomF.mightContain(_, words, logBits)),
       "false negative — bloom-prune would DROP matching fact rows")
     val probes = (1L to 20000L).map(_ * 104729L + 5L)
       .filterNot(inserted.contains)
-    val fp = probes.count(BloomF.mightContain(words, _, logBits))
+    val fp = probes.count(BloomF.mightContain(_, words, logBits))
     // 200 keys in 4096 bits, K=4 → theoretical FPR ~0.1%; allow 10x slack
     assert(fp.toDouble / probes.size < 0.01, s"FPR too high: $fp/${probes.size}")
   }
@@ -39,9 +40,12 @@ class BloomPruneSpec extends SparkSpec {
       p +: into.flatMap(walk)
     }
     val nodes = walk(df.queryExecution.executedPlan)
+    // bloom_might_contain plans as Spark's StaticInvoke of the kernel
     val prunedFilters = nodes.collect {
-      case f: FilterExec
-          if f.condition.toString.contains("bloom_might_contain") => f
+      case f: FilterExec if f.condition.exists {
+            case s: StaticInvoke => s.functionName == "mightContain"
+            case _ => false
+          } => f
     }
     assert(prunedFilters.nonEmpty,
       s"no bloom_might_contain filter in the executed plan:\n${nodes.head}")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -47,5 +48,42 @@ class SqlApiSpec extends SparkSpec {
         |ORDER BY h.term""".stripMargin)
       .collect().map(row => (row.getString(0), row.getLong(1))).toSeq
     assert(r === Seq(("a b", 2L), ("b a", 1L)))
+  }
+
+  test("SQL functions fail a non-castable argument at analysis") {
+    val calls = Seq(
+      "wkt_centroid_lng(array(1))", "wkt_centroid_lat(array(1))",
+      "wkt_centroid_sph_lng(array(1))", "wkt_centroid_sph_lat(array(1))",
+      "h3_fromgeogpoint(array(1.0), 2.0, 9)", "h3_cell_lat(array(1))",
+      "h3_cell_lng(array(1))", "h3_cell_to_parent('8928308280fffff', array(1))",
+      "h3_cell_to_children(array(1), 10)", "h3_compact_cells(map(1, 2))",
+      "h3_cell_boundary(array(1))", "h3_cell_boundary_full(array(1))",
+      "h3_grid_distance(array(1), '8928308280fffff')",
+      "h3_grid_path('8928308280fffff', array(1))",
+      "term_histogram(map(1, 2))", "word_shingles(map(1, 2), 2)")
+    def fn(call: String) = call.takeWhile(_ != '(')
+    assert(calls.map(fn).toSet ===
+      graft.plans.GraftExtensions.SqlFunctions.map(_._1).toSet)
+    calls.foreach { call =>
+      val e = intercept[AnalysisException](spark.sql(s"SELECT $call"))
+      // the error quotes the call by its column name, which for
+      // h3_compact_cells has always been h3_compact_array
+      val named = fn(call).replace("h3_compact_cells", "h3_compact_array")
+      assert(e.getMessage.contains("DATATYPE_MISMATCH") &&
+        e.getMessage.contains(named), s"$call: ${e.getMessage}")
+    }
+  }
+
+  test("SQL literal args are checked, naming the function") {
+    Seq(
+      "h3_fromgeogpoint(1.0, 2.0, r)", "h3_fromgeogpoint(1.0, 2.0, 16)",
+      "h3_cell_to_children('8928308280fffff', r)",
+      "h3_cell_to_children('8928308280fffff', 16)",
+      "word_shingles(array('a', 'b'), 0)").foreach { call =>
+      val e = intercept[Exception](
+        spark.sql(s"SELECT $call FROM VALUES (9) AS t(r)"))
+      assert(e.getMessage.contains(call.takeWhile(_ != '(')),
+        s"$call: ${e.getMessage}")
+    }
   }
 }
