@@ -8,6 +8,12 @@ import java.nio.file.{Files, Paths}
   * plans as TakeOrderedAndProject, and windows are partitioned. */
 object Explain {
   def main(args: Array[String]): Unit = {
+    val unknown = args.toSet -- SparkEntry.queries.keySet
+    if (unknown.nonEmpty) {
+      System.err.println(s"[explain] unknown query name(s): " +
+        s"${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     // the bench's engine setup at 4 cores, ANALYZE included, so the
     // dumped plans are the plans Bench runs
@@ -18,16 +24,14 @@ object Explain {
     val names =
       if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        try {
-          val plan = fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(out.resolve(s"$name.txt"), plan)
-          println(s"[explain] wrote target/plans/$name.txt")
-        } catch {
-          case e: Throwable =>
-            println(s"[explain] $name failed: ${e.getMessage}")
-        }
+      try {
+        val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(out.resolve(s"$name.txt"), plan)
+        println(s"[explain] wrote target/plans/$name.txt")
+      } catch {
+        case e: Throwable =>
+          println(s"[explain] $name failed: ${e.getMessage}")
       }
     }
     spark.stop()

@@ -337,7 +337,7 @@ object GeoF {
     * first co-grouped by a shared ancestor, so every merge decision is
     * local to the array and the result is exact. */
   def h3CompactArray(cells: Column): Column =
-    KernelCall.column("h3_compact_array", this, "h3CompactArrayData",
+    KernelCall.column("h3_compact_cells", this, "h3CompactArrayData",
       StringArray, Seq(cells -> ArrayType(StringType)))
   def h3CompactArrayData(cells: ArrayData): ArrayData = {
     val in = new Array[String](cells.numElements())

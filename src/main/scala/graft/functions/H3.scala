@@ -38,9 +38,9 @@ import java.lang.Math._
   * sit in ocean).
   *
   * Scale: pure per-row arithmetic (trig + integer digit loop, no
-  * allocation on the hot path beyond one 3-long array), exposed to Spark
-  * as a kernel call ([[GeoF.h3Cell]]) — stays inside whole-stage
-  * codegen like the other hot-path functions.
+  * allocation on the hot path), exposed to Spark as a kernel call
+  * ([[GeoF.h3Cell]]) — stays inside whole-stage codegen like the other
+  * hot-path functions.
   */
 object H3 {
 
@@ -168,40 +168,9 @@ object H3 {
     ((bi + 1073741824L) << 32) | (bj + 1073741824L)
   }
 
-  private def hex2dToIjk(x: Double, y: Double): (Long, Long, Long) = {
-    val p = hex2dToAxialPacked(x, y)
-    normI((p >>> 32) - 1073741824L, (p & 0xFFFFFFFFL) - 1073741824L, 0L)
-  }
-
-  /** Aperture-7 up-aggregation, counter-clockwise variant (child grid →
-    * parent grid for Class III child resolutions). */
-  @inline private def upAp7(i0: Long, j0: Long, k0: Long): (Long, Long, Long) = {
-    val i = (i0 - k0).toDouble
-    val j = (j0 - k0).toDouble
-    normI(floor((3.0 * i - j) / 7.0 + 0.5).toLong,
-      floor((i + 2.0 * j) / 7.0 + 0.5).toLong, 0L)
-  }
-
-  /** Aperture-7 up-aggregation, clockwise variant (Class II). */
-  @inline private def upAp7r(i0: Long, j0: Long, k0: Long): (Long, Long, Long) = {
-    val i = (i0 - k0).toDouble
-    val j = (j0 - k0).toDouble
-    normI(floor((2.0 * i + j) / 7.0 + 0.5).toLong,
-      floor((3.0 * j - i) / 7.0 + 0.5).toLong, 0L)
-  }
-
-  /** Aperture-7 down-scalings (parent center in child grid). */
-  @inline private def downAp7(i: Long, j: Long, k: Long): (Long, Long, Long) =
-    normI(3 * i + 1 * j, 3 * j + 1 * k, 1 * i + 3 * k)
-
-  @inline private def downAp7r(i: Long, j: Long, k: Long): (Long, Long, Long) =
-    normI(3 * i + 1 * k, 1 * i + 3 * j, 1 * j + 3 * k)
-
-  @inline private def unitIjkToDigit(i: Long, j: Long, k: Long): Int = {
-    require(i >= 0 && i <= 1 && j >= 0 && j <= 1 && k >= 0 && k <= 1,
-      s"non-unit ijk ($i,$j,$k)")
-    (4 * i + 2 * j + k).toInt
-  }
+  /** Unpack [[hex2dToAxialPacked]]'s axial coordinates. */
+  @inline private def packedA(p: Long): Long = (p >>> 32) - 1073741824L
+  @inline private def packedB(p: Long): Long = (p & 0xFFFFFFFFL) - 1073741824L
 
   // ------------------------------------------------------------------
   // Digit rotations in index space. CCW cycle: I→IJ→J→JK→K→IK→I.
@@ -283,22 +252,29 @@ object H3 {
     best
   }
 
-  /** geo (radians) → (face, hex2d x, hex2d y) at `res`. */
-  private def geoToHex2d(latR: Double, lngR: Double,
-      res: Int): (Int, Double, Double) = {
-    val face = nearestFace(latR, lngR)
+  /** Gnomonic projection of geo (radians) through `face`'s chart at
+    * `res` (aperture-7 scaling, Class III rotation at odd res), then
+    * exact 4-corner lattice rounding; result packed as
+    * [[hex2dToAxialPacked]]. The one forward projection: the per-row
+    * [[latLngToCell]] and the class-init derivation both call it. */
+  @inline private def projectRound(latR: Double, lngR: Double, res: Int,
+      face: Int): Long = {
+    val cosLat = cos(latR)
     val dot = max(-1.0, min(1.0,
-      cos(latR) * cos(lngR) * FaceX(face) +
-        cos(latR) * sin(lngR) * FaceY(face) + sin(latR) * FaceZ(face)))
-    val r = acos(dot)
-    if (r < 1e-15) return (face, 0.0, 0.0)
-    val az = geoAzimuth(FaceLat(face), FaceLng(face), latR, lngR)
-    var theta = posAngle(FaceAz0(face) - posAngle(az))
-    if ((res & 1) == 1) theta = posAngle(theta - Ap7Rot) // Class III
-    var rr = tan(r) / Res0UGnomonic
-    var i = 0
-    while (i < res) { rr *= Sqrt7; i += 1 }
-    (face, rr * cos(theta), rr * sin(theta))
+      cosLat * cos(lngR) * FaceX(face) +
+        cosLat * sin(lngR) * FaceY(face) + sin(latR) * FaceZ(face)))
+    val rAng = acos(dot)
+    var x = 0.0; var y = 0.0
+    if (rAng >= 1e-15) {
+      val az = geoAzimuth(FaceLat(face), FaceLng(face), latR, lngR)
+      var theta = posAngle(FaceAz0(face) - posAngle(az))
+      if ((res & 1) == 1) theta = posAngle(theta - Ap7Rot) // Class III
+      var rr = tan(rAng) / Res0UGnomonic
+      var n = 0
+      while (n < res) { rr *= Sqrt7; n += 1 }
+      x = rr * cos(theta); y = rr * sin(theta)
+    }
+    hex2dToAxialPacked(x, y)
   }
 
   /** Inverse at res 0 (derivation only): (face, hex2d) → geo radians. */
@@ -385,8 +361,9 @@ object H3 {
     for (n <- apps.indices) {
       val a = apps(n)
       val (la, lo) = a.center
-      val (f2, x2, y2) = geoToHex2d(la, lo, 0)
-      val (ri, rj, rk) = hex2dToIjk(x2, y2)
+      val f2 = nearestFace(la, lo)
+      val p = projectRound(la, lo, 0, f2)
+      val (ri, rj, rk) = normI(packedA(p), packedB(p), 0L)
       val m = appIdx.getOrElse((f2, ri, rj, rk),
         sys.error(s"re-resolved coord off-table: $a -> ($f2,$ri,$rj,$rk)"))
       union(n, m)
@@ -528,63 +505,22 @@ object H3 {
   // ------------------------------------------------------------------
   // Core pipeline: raw chart-local digits, then table-driven finishing
   // ------------------------------------------------------------------
-  /** geo (radians) → (face, res-0 i/j/k, raw index). The raw index has
-    * mode/res/digits set with digits in `face`'s own grid orientation;
-    * base-cell bits are still all-1 and no rotation has been applied.
-    *
-    * Results are returned through [[RawOut]] to keep the scan hot path
-    * allocation-free: the digit loop below runs `res` iterations per
-    * row and is written against primitive locals only (the tuple-based
-    * helper algebra above is reserved for derivation-time use). */
-  private final class RawOut {
-    var face: Int = 0
-    var i: Long = 0L; var j: Long = 0L; var k: Long = 0L
-    var h: Long = 0L
-    // res-N chart-local lattice coords of the landed cell (pre-digit
-    // aggregation) — the consensus path unprojects these to score a
-    // candidate chart by its own lattice-center distance
-    var li: Long = 0L; var lj: Long = 0L; var lk: Long = 0L
-  }
-  private val rawOutTL =
-    ThreadLocal.withInitial[RawOut](() => new RawOut)
-
-  private def rawIndexInto(latR: Double, lngR: Double, res: Int,
-      out: RawOut): Unit =
-    rawIndexOnFace(latR, lngR, res, nearestFace(latR, lngR), out)
-
-  /** [[rawIndexInto]] with the chart face given — the consensus band
-    * in [[latLngToCell]] trials co-near charts explicitly. */
-  private def rawIndexOnFace(latR: Double, lngR: Double, res: Int,
-      faceArg: Int, out: RawOut): Unit = {
-    // geoToHex2d, inlined projection on the given face
-    val face = faceArg
-    val cosLat = cos(latR)
-    val dot = max(-1.0, min(1.0,
-      cosLat * cos(lngR) * FaceX(face) +
-        cosLat * sin(lngR) * FaceY(face) + sin(latR) * FaceZ(face)))
-    val rAng = acos(dot)
-    var x = 0.0; var y = 0.0
-    if (rAng >= 1e-15) {
-      val az = geoAzimuth(FaceLat(face), FaceLng(face), latR, lngR)
-      var theta = posAngle(FaceAz0(face) - posAngle(az))
-      if ((res & 1) == 1) theta = posAngle(theta - Ap7Rot) // Class III
-      var rr = tan(rAng) / Res0UGnomonic
-      var n = 0
-      while (n < res) { rr *= Sqrt7; n += 1 }
-      x = rr * cos(theta); y = rr * sin(theta)
-    }
-    // nearest hex center (4-corner exact rounding), normalized ijk
-    val packed = hex2dToAxialPacked(x, y)
-    var i = (packed >>> 32) - 1073741824L
-    var j = (packed & 0xFFFFFFFFL) - 1073741824L
-    var k = 0L
+  /** Aperture-7 digit aggregation of the chart-local res-`res` axial
+    * coordinate (a, b): the one loop behind [[assembleFromChart]]
+    * (per row and in traversal) and the derivation's [[rawIndex]].
+    * Returns the RAW index — mode, res and digits set, digits in the
+    * chart's own grid orientation, no rotation applied — with the
+    * base-cell field holding the normalized res-0 ijk as its face-table
+    * slot `i·9 + j·3 + k` ([[tabIdx]] without the face). Returns -1
+    * when a digit is not a unit vector or the res-0 coordinate falls
+    * outside the face's 27-slot table. */
+  private def aggregateDigits(a: Long, b: Long, res: Int): Long = {
+    var i = a; var j = b; var k = 0L
     var m = min(i, min(j, k)); i -= m; j -= m; k -= m
-    out.li = i; out.lj = j; out.lk = k
-    // index skeleton: mode 1, res, all digits 7
     var h = (1L << 59) | (res.toLong << 52) | ((1L << 45) - 1)
     var r = res
     while (r > 0) {
-      val li = i; val lj = j; val lk = k
+      val ci0 = i; val cj0 = j; val ck0 = k
       // up-aggregate on axial (i-k, j-k), then normalize
       val ai = (i - k).toDouble
       val aj = (j - k).toDouble
@@ -604,26 +540,35 @@ object H3 {
       else { ci = 3 * ui + uk; cj = ui + 3 * uj; ck = uj + 3 * uk }
       m = min(ci, min(cj, ck)); ci -= m; cj -= m; ck -= m
       // unit digit = child − parent-center
-      var di = li - ci; var dj = lj - cj; var dk = lk - ck
+      var di = ci0 - ci; var dj = cj0 - cj; var dk = ck0 - ck
       m = min(di, min(dj, dk)); di -= m; dj -= m; dk -= m
-      if (((di | dj | dk) & ~1L) != 0L)
-        throw new IllegalStateException(
-          s"non-unit digit ijk ($di,$dj,$dk) at res $r")
+      if (((di | dj | dk) & ~1L) != 0L) return -1L
       h = setDigit(h, r, (4 * di + 2 * dj + dk).toInt)
       i = ui; j = uj; k = uk
       r -= 1
     }
-    require(i >= 0 && i <= 2 && j >= 0 && j <= 2 && k >= 0 && k <= 2,
-      s"res-0 coords out of range: ($i,$j,$k) face $face")
-    out.face = face; out.i = i; out.j = j; out.k = k; out.h = h
+    if (i > 2 || j > 2 || k > 2) return -1L
+    (h & ~(0x7FL << 45)) | ((i * 9 + j * 3 + k) << 45)
   }
 
-  private def rawIndex(latR: Double, lngR: Double,
-      res: Int): (Int, Long, Long, Long, Long) = {
-    val o = rawOutTL.get()
-    rawIndexInto(latR, lngR, res, o)
-    (o.face, o.i, o.j, o.k, o.h)
+  /** geo (radians) → (nearest face, raw index at `res` in that face's
+    * chart), for the pentagon derivation below, which reads the res-0
+    * slot off the raw index's base-cell field. Throws where the
+    * aggregation fails: the derivation never samples such a point. */
+  private def rawIndex(latR: Double, lngR: Double, res: Int): (Int, Long) = {
+    val face = nearestFace(latR, lngR)
+    val p = projectRound(latR, lngR, res, face)
+    val raw = aggregateDigits(packedA(p), packedB(p), res)
+    if (raw < 0)
+      throw new IllegalStateException(
+        s"raw index of ($latR, $lngR) res $res on face $face: non-unit " +
+          "digit or res-0 coordinate off the face table")
+    (face, raw)
   }
+
+  /** Face-table slot of a raw index ([[aggregateDigits]]). */
+  @inline private def rawSlot(face: Int, raw: Long): Int =
+    face * 27 + ((raw >>> 45) & 0x7F).toInt
 
   /** Apply base-cell number + orientation to a raw index. Parameterized
     * so the pentagon consistency search can trial candidate rotations;
@@ -642,6 +587,22 @@ object H3 {
       while (n < rot) { h = rotate60(h, CcwDigit); n += 1 }
     }
     h
+  }
+
+  /** Assemble the canonical cell id of chart-local axial coordinate
+    * (a, b) at `res` on `face`: digit aggregation, then the face
+    * table's base cell and rotation. -1 when the aggregation fails or
+    * lands on a slot the face does not cover. */
+  private def assembleFromChart(face: Int, a: Long, b: Long,
+      res: Int): Long = {
+    val raw = aggregateDigits(a, b, res)
+    if (raw < 0) return -1L
+    val idx = rawSlot(face, raw)
+    val bc = TabBc(idx)
+    if (bc < 0) return -1L
+    val rot = TabRot(idx)
+    if (rot < 0) return -1L
+    finishWith(raw, bc, rot, PentCwOffset(bc * 32 + face))
   }
 
   // ------------------------------------------------------------------
@@ -676,12 +637,12 @@ object H3 {
     for (bc <- 0 until NumBaseCells if IsPent(bc)) {
       val vLat = PentLat(bc); val vLng = PentLng(bc)
 
-      // sample: (face, i, j, k, rawH); az-major order per radius
-      case class S(face: Int, i: Long, j: Long, k: Long, raw: Long)
+      // sample: (face, rawH); az-major order per radius
+      case class S(face: Int, raw: Long)
       def sampleAt(az: Double, rho: Double, res: Int): Option[S] = {
         val (la, lo) = geoAzDistance(vLat, vLng, az, rho)
-        val (f, i, j, k, raw) = rawIndex(la, lo, res)
-        if (TabBc(tabIdx(f, i, j, k)) == bc) Some(S(f, i, j, k, raw)) else None
+        val (f, raw) = rawIndex(la, lo, res)
+        if (TabBc(rawSlot(f, raw)) == bc) Some(S(f, raw)) else None
       }
 
       // ring samples, computed once per (res, radius) and reused by the
@@ -1028,19 +989,21 @@ object H3 {
     (f.toLong << 50) | ((a + 16777216L) << 25) | (b + 16777216L)
   }
 
+  @inline private def ownedFace(pk: Long): Int = (pk >>> 50).toInt
+  @inline private def ownedA(pk: Long): Long = ((pk >> 25) & 0x1FFFFFFL) - 16777216L
+  @inline private def ownedB(pk: Long): Long = (pk & 0x1FFFFFFL) - 16777216L
+
+  /** [[assembleFromChart]] of an [[overageNormalize]] result. */
+  @inline private def assembleOwned(pk: Long, res: Int): Long =
+    assembleFromChart(ownedFace(pk), ownedA(pk), ownedB(pk), res)
+
   // ------------------------------------------------------------------
   // Public API
   // ------------------------------------------------------------------
-  /** Cell pitch scale per res, radians (≈4 face-center pitches) —
-    * retained for the inverse's surrounded-center probe radius. */
-  private val BandByRes: Array[Double] =
-    Array.tabulate(MaxRes + 1)(r => 4.0 * atan(Res0UGnomonic) /
-      math.pow(Sqrt7, r))
-
   /** (lat°, lng°, res) → H3 index (64-bit) — the h3lib `_geoToH3`
-    * shape, made purely lattice-combinatorial (round 12): project
-    * through the NEAREST face's gnomonic chart, round to the res-N
-    * lattice, and assemble the index in the chart that OWNS the
+    * shape, made purely lattice-combinatorial: project through the
+    * NEAREST face's gnomonic chart ([[projectRound]]), round to the
+    * res-N lattice, and assemble the index in the chart that OWNS the
     * rounded coordinate. Rounding can land up to half a pitch outside
     * the nearest face's triangular region (the boundary sliver); such
     * coordinates are first carried across the shared edge by the
@@ -1049,59 +1012,17 @@ object H3 {
     * half a pitch, so the label transfer is exact. Identity is then
     * combinatorial: a cell's region is exactly the set of points
     * whose rounding normalizes to its coordinate in its owning chart,
-    * so regions are connected, flanking charts cannot disagree about
-    * a cell, and ghost ids (digit strings assembled through a chart
-    * evaluated deep past its own face — the round-11 consensus
-    * scheme's residual failure mode at coarse res, where it
-    * fragmented regions and emitted non-invertible ids) cannot be
-    * produced at all. Also strictly faster: one chart projection per
-    * point instead of up to 20 consensus trials near boundaries. */
-  /** Gnomonic projection + exact 4-corner lattice rounding through
-    * `face`'s chart (the geometric half of rawIndexOnFace); result
-    * packed as [[hex2dToAxialPacked]]. */
-  @inline private def projectRound(latR: Double, lngR: Double, res: Int,
-      face: Int): Long = {
-    val cosLat = cos(latR)
-    val dot = max(-1.0, min(1.0,
-      cosLat * cos(lngR) * FaceX(face) +
-        cosLat * sin(lngR) * FaceY(face) + sin(latR) * FaceZ(face)))
-    val rAng = acos(dot)
-    var x = 0.0; var y = 0.0
-    if (rAng >= 1e-15) {
-      val az = geoAzimuth(FaceLat(face), FaceLng(face), latR, lngR)
-      var theta = posAngle(FaceAz0(face) - posAngle(az))
-      if ((res & 1) == 1) theta = posAngle(theta - Ap7Rot) // Class III
-      var rr = tan(rAng) / Res0UGnomonic
-      var n = 0
-      while (n < res) { rr *= Sqrt7; n += 1 }
-      x = rr * cos(theta); y = rr * sin(theta)
-    }
-    hex2dToAxialPacked(x, y)
-  }
-
+    * so regions are connected and flanking charts cannot disagree
+    * about a cell. One chart projection per point, no allocation. */
   def latLngToCell(latDeg: Double, lngDeg: Double, res: Int): Long = {
     require(res >= 0 && res <= MaxRes, s"resolution $res out of [0,15]")
     val latR = toRadians(latDeg); val lngR = toRadians(lngDeg)
     val face = nearestFace(latR, lngR)
     val packed = projectRound(latR, lngR, res, face)
-    val a = (packed >>> 32) - 1073741824L
-    val b = (packed & 0xFFFFFFFFL) - 1073741824L
-    val pk = overageNormalize(face, a, b, res)
-    val h = assembleFromChart((pk >>> 50).toInt,
-      ((pk >> 25) & 0x1FFFFFFL) - 16777216L,
-      (pk & 0x1FFFFFFL) - 16777216L, 0L, res)
+    val h = assembleOwned(
+      overageNormalize(face, packedA(packed), packedB(packed), res), res)
     require(h >= 0, s"unresolvable coordinate ($latDeg, $lngDeg) res $res")
     h
-  }
-
-  @inline private def finishRaw(o: RawOut): Long = {
-    val idx = tabIdx(o.face, o.i, o.j, o.k)
-    val bc = TabBc(idx)
-    require(bc >= 0, s"unmapped base-cell coord (${o.face},${o.i},${o.j},${o.k})")
-    val rot = TabRot(idx)
-    require(rot >= 0,
-      s"unresolved pentagon appearance (${o.face},${o.i},${o.j},${o.k}) for cell $bc")
-    finishWith(o.h, bc, rot, PentCwOffset(bc * 32 + o.face))
   }
 
   /** (lat°, lng°, res) → canonical lowercase 15-hex-digit cell id. */
@@ -1121,10 +1042,10 @@ object H3 {
   // Inverse: cell → center (cellToLatLng)
   // ------------------------------------------------------------------
   /** Inverse unprojection at any res: (face, hex2d, res) → geo radians.
-    * Exact inverse of [[geoToHex2d]]: undo the aperture-7 scaling
-    * (÷√7 per res step) and the Class III grid rotation (+[[Ap7Rot]]
-    * at odd res), then invert the gnomonic projection along the
-    * azimuth from the face center. */
+    * Exact inverse of [[projectRound]]'s projection: undo the
+    * aperture-7 scaling (÷√7 per res step) and the Class III grid
+    * rotation (+[[Ap7Rot]] at odd res), then invert the gnomonic
+    * projection along the azimuth from the face center. */
   private def hex2dToGeo(face: Int, x: Double, y: Double,
       res: Int): (Double, Double) = {
     var rr = sqrt(x * x + y * y)
@@ -1160,7 +1081,7 @@ object H3 {
 
   /** Descend a res-0 ijk down `res` aperture-7 steps, applying the raw
     * (chart-local) digits of `h` — the exact inverse of the digit
-    * up-aggregation loop in [[rawIndexInto]]: at each step the parent
+    * up-aggregation loop in [[aggregateDigits]]: at each step the parent
     * is down-scaled into the child grid (Class III ccw at odd res,
     * Class II cw at even) and the unit digit vector added. */
   private def descendDigits(i0: Long, j0: Long, k0: Long, h: Long,
@@ -1282,13 +1203,10 @@ object H3 {
             val (ri, rj, rk) = descendDigits(i0, j0, k0, raw, res)
             // carry the descended coordinate onto its owning chart and
             // accept iff it re-assembles to h — combinatorially exact
-            // (assembly is injective per chart), replacing the round-11
-            // co-nearest/surrounded-probe heuristics
+            // (assembly is injective per chart)
             val pk = overageNormalize(f, ri - rk, rj - rk, res)
-            val nf = (pk >>> 50).toInt
-            val na = ((pk >> 25) & 0x1FFFFFFL) - 16777216L
-            val nb = (pk & 0x1FFFFFFL) - 16777216L
-            if (assembleFromChart(nf, na, nb, 0L, res) == h) {
+            val nf = ownedFace(pk); val na = ownedA(pk); val nb = ownedB(pk)
+            if (assembleFromChart(nf, na, nb, res) == h) {
               val (latR, lngR) = hex2dToGeo(nf,
                 na.toDouble - 0.5 * nb, nb * Sin60, res)
               val m = min(na, min(nb, 0L))
@@ -1316,219 +1234,30 @@ object H3 {
   def cellCenterLng(hex: String): Double = cellToLatLng(hex)._2
 
   // ------------------------------------------------------------------
-  // Grid traversal: ring-1 neighbors and k-disks (gridDisk)
+  // Grid traversal: ring-1 neighbors and k-disks (gridDisk). One exact
+  // path: integer unit steps in the cell's owning chart, carried across
+  // face edges by the derived face-neighbor isometries and assembled in
+  // the chart that owns each step — exact by the spec-pinned cross-chart
+  // consistency laws (`countHexIsoMismatches == 0`, the pentagon-orbit
+  // law). No geometric tolerance and no second path.
   // ------------------------------------------------------------------
-  /** Grid traversal internals. Since round 12 the primary path is
-    * [[ringCanonical]] — pure integer stepping in the owning chart
-    * with overage normalization across the derived face-neighbor
-    * isometries, exact by the spec-pinned cross-chart consistency law
-    * (`countHexIsoMismatches == 0`). The geometric multi-appearance
-    * path below ([[ringInteger]] + the symmetry closure in
-    * [[gridRing1]]) is retained as the fallback for the cases the
-    * canonical path declines: pentagon cells (whose 5-sector digit
-    * quotient the hexagonal isometry does not cover) and any anchor
-    * that fails its canonical re-assembly check. */
-  /** Assemble the canonical cell id owning chart-local lattice
-    * coordinate (i, j, k) at `res` on `face` — PURE INTEGER aperture-7
-    * aggregation through the canonical tables (the geometric half of
-    * [[rawIndexOnFace]] removed). Returns -1 when the res-0
-    * aggregation falls outside the face's 27-slot coverage (caller
-    * tries another appearance). */
-  private def assembleFromChart(face: Int, li: Long, lj: Long, lk: Long,
-      res: Int): Long = {
-    var i = li; var j = lj; var k = lk
-    var m = min(i, min(j, k)); i -= m; j -= m; k -= m
-    var h = (1L << 59) | (res.toLong << 52) | ((1L << 45) - 1)
-    var r = res
-    while (r > 0) {
-      val ci0 = i; val cj0 = j; val ck0 = k
-      val ai = (i - k).toDouble
-      val aj = (j - k).toDouble
-      var ui = 0L; var uj = 0L
-      if ((r & 1) == 1) { // Class III (ccw)
-        ui = floor((3.0 * ai - aj) / 7.0 + 0.5).toLong
-        uj = floor((ai + 2.0 * aj) / 7.0 + 0.5).toLong
-      } else { // Class II (cw)
-        ui = floor((2.0 * ai + aj) / 7.0 + 0.5).toLong
-        uj = floor((3.0 * aj - ai) / 7.0 + 0.5).toLong
-      }
-      var uk = 0L
-      m = min(ui, min(uj, uk)); ui -= m; uj -= m; uk -= m
-      var ci = 0L; var cj = 0L; var ck = 0L
-      if ((r & 1) == 1) { ci = 3 * ui + uj; cj = 3 * uj + uk; ck = ui + 3 * uk }
-      else { ci = 3 * ui + uk; cj = ui + 3 * uj; ck = uj + 3 * uk }
-      m = min(ci, min(cj, ck)); ci -= m; cj -= m; ck -= m
-      var di = ci0 - ci; var dj = cj0 - cj; var dk = ck0 - ck
-      m = min(di, min(dj, dk)); di -= m; dj -= m; dk -= m
-      if (((di | dj | dk) & ~1L) != 0L) return -1L
-      h = setDigit(h, r, (4 * di + 2 * dj + dk).toInt)
-      i = ui; j = uj; k = uk
-      r -= 1
-    }
-    if (i < 0 || i > 2 || j < 0 || j > 2 || k < 0 || k > 2) return -1L
-    val idx = tabIdx(face, i, j, k)
-    val bc = TabBc(idx)
-    if (bc < 0) return -1L
-    val rot = TabRot(idx)
-    if (rot < 0) return -1L
-    finishWith(h, bc, rot, PentCwOffset(bc * 32 + face))
-  }
-
-  /** The integer-verified neighbor pass of [[gridRing1]]: candidates
-    * assembled in lattice space and kept only when the stepped
-    * coordinate's unprojection coincides with the assembled cell's
-    * true center. Complete for all-interior neighborhoods; a face
-    * crossing the derived tables cannot stitch leaves a direction
-    * empty (the symmetry closure in [[gridRing1]] fills it). */
-  private def ringInteger(h: Long): Array[Long] = {
+  /** The cell's ring-1 neighbours, sorted: 6, or 5 at a pentagon. The
+    * canonical integer ring — anchor `h` at its coordinate in its
+    * OWNING chart ([[resolveChart]]), take the six unit lattice steps,
+    * carry each stepped coordinate onto its owning chart across the
+    * face-neighbor isometries ([[overageNormalize]]) and assemble it
+    * there. Forward identity ([[latLngToCell]]) is defined the same
+    * way, so each step is exact adjacency with no geometric tolerance:
+    * the cross-chart consistency laws pin it, and `H3Spec` checks the
+    * ring size and (at res 0–3) symmetry for every cell at res 0–4. A
+    * pentagon's six steps dedupe to its five neighbours. A ring of any
+    * other size throws `IllegalStateException` naming the cell instead
+    * of returning it partial. */
+  def gridRing1(h: Long): Array[Long] = {
     val res = getResolution(h)
-    // validates the index (throws on malformed input) and yields the
-    // exact center for the geometric verification below
-    val (fCanon, cI, cJ, cK, hLatD, hLngD) = resolveChart(h)
-    val hLatR = toRadians(hLatD); val hLngR = toRadians(hLngD)
-    val hx = cos(hLatR) * cos(hLngR)
-    val hy = cos(hLatR) * sin(hLngR)
-    val hz = sin(hLatR)
-    val bc = getBaseCell(h)
-    val pent = IsPent(bc)
-    val out = new Array[Long](12)
-    var n = 0
-    def add(c: Long): Unit = if (c >= 0 && c != h) {
-      var seen = false
-      var s = 0
-      while (s < n) { if (out(s) == c) seen = true; s += 1 }
-      if (!seen) { out(n) = c; n += 1 }
-    }
-    @inline def ang(aLatR: Double, aLngR: Double,
-        bLatR: Double, bLngR: Double): Double = {
-      val d = cos(aLatR) * cos(aLngR) * cos(bLatR) * cos(bLngR) +
-        cos(aLatR) * sin(aLngR) * cos(bLatR) * sin(bLngR) +
-        sin(aLatR) * sin(bLatR)
-      acos(max(-1.0, min(1.0, d)))
-    }
-    // For every appearance of the base cell: recover h's chart-local
-    // lattice coordinate (the integer identity assemble-then-descend
-    // sanity-checks the bookkeeping and selects the valid pentagon
-    // leading-K pre-image), assemble the six unit-step coordinates
-    // back to canonical ids through the same tables, then VERIFY each
-    // candidate geometrically: the stepped coordinate's unprojection
-    // must coincide with the assembled cell's true center. The integer
-    // identity alone is vacuous off-face (a digit string descended
-    // through the wrong anchor still round-trips), and a chart
-    // evaluated deep past its face assembles lattice-wrong GHOST ids
-    // whose true centers sit several pitches away - the 0.4-pitch
-    // gate (true neighbors measure 0 on-face and at most ~0.3 pitch
-    // for a one-cell face crossing) separates the two regimes
-    // decisively. The same gate applied to the appearance's own
-    // coordinate of h keeps mis-anchored appearances from stepping at
-    // all.
-    val apps = BcApps(bc)
-    var a = 0
-    while (a < apps.length) {
-      val (f, i0, j0, k0, rot) = apps(a)
-      if (rot >= 0) {
-        val u =
-          if (pent) unrotatePent(h, rot)
-          else {
-            var x = h; var m = 0
-            while (m < rot) { x = rotate60(x, CwDigit); m += 1 }
-            x
-          }
-        var c = 0
-        val nCands = if (pent) 2 else 1
-        while (c < nCands) {
-          var raw = 0L
-          var valid = false
-          if (c == 0) { raw = u; valid = !pent || leadingNonZeroDigit(u) != 1 }
-          else {
-            val t = if (PentCwOffset(bc * 32 + f)) CcwDigit else CwDigit
-            raw = rotate60(u, t)
-            valid = leadingNonZeroDigit(raw) == 1
-          }
-          if (valid) {
-            val (ri, rj, rk) = descendDigits(i0, j0, k0, raw, res)
-            if (assembleFromChart(f, ri, rj, rk, res) == h) {
-              val (ax, ay) = ijkToHex2d(ri, rj, rk)
-              val (aLatR, aLngR) = hex2dToGeo(f, ax, ay, res)
-              val anchorDist = ang(aLatR, aLngR, hLatR, hLngR)
-              var d = 1
-              while (d <= 6) {
-                val si = ri + ((d >> 2) & 1)
-                val sj = rj + ((d >> 1) & 1)
-                val sk = rk + (d & 1)
-                val (sx, sy) = ijkToHex2d(si, sj, sk)
-                val (sLatR, sLngR) = hex2dToGeo(f, sx, sy, res)
-                val localPitch = ang(sLatR, sLngR, aLatR, aLngR)
-                if (anchorDist <= 0.25 * localPitch) {
-                  // geometric acceptance gate shared by both routes,
-                  // against the INDEPENDENT reference (the stepped
-                  // coordinate's unprojection through h's own verified
-                  // chart — accurate to the one-cell chart drift,
-                  // ≤ ~0.3 pitch): a candidate's true center must
-                  // coincide with it (ghosts measure several pitches
-                  // off); a deep ghost can even be NON-INVERTIBLE —
-                  // that too is a reject. The overage candidate is NOT
-                  // checked against its own chart's unprojection: that
-                  // would be circular (any assembled id trivially sits
-                  // at its own coordinate's unprojection).
-                  @inline def verifyAdd(nb: Long): Unit =
-                    if (nb >= 0 && nb != h) {
-                      try {
-                        val (nLatD, nLngD) = cellToLatLng(nb)
-                        if (ang(sLatR, sLngR, toRadians(nLatD),
-                            toRadians(nLngD)) <= 0.4 * localPitch)
-                          add(nb)
-                      } catch {
-                        case _: IllegalArgumentException => ()
-                      }
-                    }
-                  verifyAdd(assembleFromChart(f, si, sj, sk, res))
-                  // overage route (round 12): when the stepped
-                  // coordinate leaves this face's region, re-anchor it
-                  // through the derived face-neighbor isometry and
-                  // assemble in the chart that OWNS the region — the
-                  // chart whose assembly matches the forward identity
-                  // there. Closes the contested-zone directions the
-                  // home-chart continuation assembles as ghosts.
-                  val pk = overageNormalize(f, si - sk, sj - sk, res)
-                  val nf = (pk >>> 50).toInt
-                  if (nf != f) {
-                    val na = ((pk >> 25) & 0x1FFFFFFL) - 16777216L
-                    val nbAx = (pk & 0x1FFFFFFL) - 16777216L
-                    verifyAdd(assembleFromChart(nf, na, nbAx, 0L, res))
-                  }
-                }
-                d += 1
-              }
-            }
-          }
-          c += 1
-        }
-      }
-      a += 1
-    }
-    java.util.Arrays.sort(out, 0, n) // res <= 15 indexes have bit 63 = 0
-    java.util.Arrays.copyOf(out, n)
-  }
-
-  /** Canonical integer ring (round 12): anchor `h` at its
-    * overage-normalized coordinate in its OWNING chart, take the six
-    * unit lattice steps, normalize each stepped coordinate across the
-    * face-neighbor isometries, and assemble it in ITS owning chart.
-    * With forward identity defined the same way ([[latLngToCell]]),
-    * each step is exact adjacency by construction — no geometric
-    * tolerance anywhere. Returns null when the canonical anchor does
-    * not re-assemble to `h` (caller falls back to the geometric
-    * multi-appearance path); a pentagon's six steps must dedupe to
-    * its five true neighbors or the caller likewise falls back. */
-  private def ringCanonical(h: Long): Array[Long] = {
-    val res = getResolution(h)
-    val (f, ci, cj, ck, _, _) = resolveChart(h) // validates h; throws on bad input
-    val pk0 = overageNormalize(f, ci - ck, cj - ck, res)
-    val f0 = (pk0 >>> 50).toInt
-    val a0 = ((pk0 >> 25) & 0x1FFFFFFL) - 16777216L
-    val b0 = (pk0 & 0x1FFFFFFL) - 16777216L
-    if (assembleFromChart(f0, a0, b0, 0L, res) != h) return null
+    val (f0, ci, cj, ck, _, _) = resolveChart(h) // validates h; throws on bad input
+    val a0 = ci - ck; val b0 = cj - ck
+    val expected = if (isPentagon(h)) 5 else 6
     val out = new Array[Long](6)
     var n = 0
     var d = 1
@@ -1536,10 +1265,7 @@ object H3 {
       // unit digit d in axial form: (di - dk, dj - dk)
       val sa = a0 + ((d >> 2) & 1) - (d & 1)
       val sb = b0 + ((d >> 1) & 1) - (d & 1)
-      val pk = overageNormalize(f0, sa, sb, res)
-      val c = assembleFromChart((pk >>> 50).toInt,
-        ((pk >> 25) & 0x1FFFFFFL) - 16777216L,
-        (pk & 0x1FFFFFFL) - 16777216L, 0L, res)
+      val c = assembleOwned(overageNormalize(f0, sa, sb, res), res)
       if (c >= 0 && c != h) {
         var seen = false
         var s = 0
@@ -1548,37 +1274,11 @@ object H3 {
       }
       d += 1
     }
+    if (n != expected)
+      throw new IllegalStateException(
+        f"gridRing1: 0x$h%x resolved $n of its $expected neighbours")
     java.util.Arrays.sort(out, 0, n)
     java.util.Arrays.copyOf(out, n)
-  }
-
-  def gridRing1(h: Long): Array[Long] = {
-    val expected = if (isPentagon(h)) 5 else 6
-    val fast = ringCanonical(h)
-    if (fast != null && fast.length == expected) return fast
-    val base = ringInteger(h)
-    if (base.length >= expected) return base
-    // Symmetry closure: a face crossing the derived tables cannot
-    // stitch from h's side can still be proven from the OTHER side —
-    // the missing neighbor is adjacent to two already-found ring
-    // members, so it appears in their integer rings, and its own
-    // integer ring containing h is a full verified adjacency witness.
-    var out = base
-    var i = 0
-    while (i < base.length && out.length < expected) {
-      val around = ringInteger(base(i))
-      var j = 0
-      while (j < around.length && out.length < expected) {
-        val cand = around(j)
-        if (cand != h && !out.contains(cand) &&
-            ringInteger(cand).contains(h))
-          out = out :+ cand
-        j += 1
-      }
-      i += 1
-    }
-    java.util.Arrays.sort(out)
-    out
   }
 
   /** Is `h` itself a pentagon cell (5 neighbors)? Distinct from
@@ -1636,14 +1336,14 @@ object H3 {
       while (a <= lim) {
         var b = -lim
         while (b <= lim) {
-          val hF = assembleFromChart(f, a, b, 0L, res)
+          val hF = assembleFromChart(f, a, b, res)
           if (hF >= 0 && !IsPent(getBaseCell(hF))) {
             var xa = a; var xb = b
             var n = 0
             while (n < c) { val t = xa - xb; xb = xa; xa = t; n += 1 }
             xa += EdgeTA(f)(e)(res)
             xb += EdgeTB(f)(e)(res)
-            val hG = assembleFromChart(g, xa, xb, 0L, res)
+            val hG = assembleFromChart(g, xa, xb, res)
             if (hG >= 0 && hF != hG) mis += 1
           }
           b += 1
@@ -1682,14 +1382,14 @@ object H3 {
       while (a <= lim) {
         var b = -lim
         while (b <= lim) {
-          val hF = assembleFromChart(f, a, b, 0L, res)
+          val hF = assembleFromChart(f, a, b, res)
           if (hF >= 0 && IsPent(getBaseCell(hF))) {
             var xa = a; var xb = b
             var n = 0
             while (n < c) { val t = xa - xb; xb = xa; xa = t; n += 1 }
             xa += EdgeTA(f)(e)(res)
             xb += EdgeTB(f)(e)(res)
-            val hG = assembleFromChart(g, xa, xb, 0L, res)
+            val hG = assembleFromChart(g, xa, xb, res)
             if (hG >= 0) {
               pairs += 1
               var k = 0
@@ -1876,31 +1576,26 @@ object H3 {
   // equilateral lattice triangle that circumcenter is its CENTROID,
   // i.e. the substrate lattice point c + (u_i + u_{i+1})/3.
   //
-  // SUBSTRATE EDGE-ISOMETRY MAPPING (round 14, closing the round-13
-  // enumerated fallback set): corners live EXACTLY on the 3×-scaled
-  // ("substrate") lattice — 3·center + u_i + u_{i+1} is integer — and
-  // the derived face-edge isometries act on the substrate as the same
-  // 60°·c rotation with a 3× translation. So every corner's owning
-  // chart and its exact lattice coordinate there are computed by
-  // [[overageNormalizeSub]]: hop the strictly-violated face edge
-  // (most-violated first, exact integer sidedness tests — this is
-  // h3lib's own per-vertex substrate `_adjustOverage`, re-derived),
-  // then canonicalize on-boundary points to the minimal face index of
-  // their edge orbit (a corner ON an icosahedron edge belongs to two
-  // charts that agree exactly there; a corner AT an icosahedron vertex
-  // to five). Every generating cell reaches the identical (face, a, b)
-  // integers, so shared corners are bit-canonical BY CONSTRUCTION —
-  // no ring-neighbor search, no float face-ownership ties (the round-13
-  // ADVICE), and no home-chart fallback set (the round-13 7/14/24
-  // residual is eliminated, spec-pinned at 0).
+  // Corners live EXACTLY on the 3×-scaled ("substrate") lattice —
+  // 3·center + u_i + u_{i+1} is integer — and the derived face-edge
+  // isometries act on the substrate as the same 60°·c rotation with a
+  // 3× translation. So every corner's owning chart and its exact
+  // lattice coordinate there are computed by [[overageNormalizeSub]]:
+  // hop the strictly-violated face edge (most-violated first, exact
+  // integer sidedness tests — h3lib's per-vertex substrate
+  // `_adjustOverage`, re-derived), then canonicalize on-boundary points
+  // to the minimal face index of their edge orbit (a corner ON an
+  // icosahedron edge belongs to two charts that agree exactly there; a
+  // corner AT an icosahedron vertex to five). Every generating cell
+  // reaches the identical (face, a, b) integers, so shared corners are
+  // bit-canonical by construction.
   //
-  // Remaining documented divergence vs h3lib: the PLAIN form inserts no
+  // Documented divergence vs h3lib: the PLAIN form inserts no
   // edge-crossing DISTORTION vertices (h3lib emits up to 10 vertices
   // for face-straddling hexagons; this surface always emits the 6 true
   // corners). The full-parity form with exact distortion vertices is
   // [[cellToBoundaryFull]]. Pentagon corners adopt their flanking
-  // hexagons' substrate-exact corners (always resolved since this
-  // round — the 2/0/9/0 skeleton residual is eliminated too).
+  // hexagons' corners.
   // ------------------------------------------------------------------
 
   /** CCW unit neighbor directions in axial (a,b) coords — see
@@ -1911,18 +1606,14 @@ object H3 {
 
   /** h3lib `cellToBoundary`: the cell's polygon vertices as
     * (latDeg, lngDeg), in ring order, without repeating the first
-    * vertex — 6 for hexagons, 5 for pentagon cells. */
-  def cellToBoundary(h: Long): Array[(Double, Double)] =
-    cellToBoundaryResolved(h)._1
-
-  /** [[cellToBoundary]] plus a (historical) fallback bitmask — ALWAYS 0
-    * since round 14: every corner resolves to its owning chart through
-    * the exact substrate isometries. The mask stays in the signature as
-    * the spec hook pinning that the fallback set is empty. */
-  private[functions] def cellToBoundaryResolved(
-      h: Long): (Array[(Double, Double)], Int) = {
+    * vertex — 6 for hexagons, 5 for pentagon cells. Each hexagon corner
+    * is the substrate lattice point 3·center + u_v + u_{v+1}, carried
+    * to its owning chart by [[overageNormalizeSub]] and unprojected
+    * there, so a corner shared by several cells is bit-identical from
+    * each of them. */
+  def cellToBoundary(h: Long): Array[(Double, Double)] = {
     requireValid(h)
-    if (isPentagon(h)) return (pentagonBoundary(h), 0)
+    if (isPentagon(h)) return pentagonBoundary(h)
     val res = getResolution(h)
     val (face, i, j, k, _, _) = resolveChart(h)
     val a3 = 3L * (i - k)
@@ -1939,7 +1630,7 @@ object H3 {
       out(v) = (toDegrees(latR), toDegrees(lngR))
       v += 1
     }
-    (out, 0)
+    out
   }
 
   /** Owning chart of a SUBSTRATE (3×-scaled) axial coordinate — the
@@ -2172,21 +1863,16 @@ object H3 {
     (outP.toArray, outM.toArray)
   }
 
-  /** Pentagon boundary. Corner skeleton: spherical centroid of each
-    * (center, nᵢ, nᵢ₊₁) triple over the azimuth-ordered exact ring-1
-    * neighbor centers — the same point as h3lib's to second order in
-    * the pitch. UPGRADE (round 13, second half): every pentagon corner
-    * is ALSO a corner of its two flanking ring-1 HEXAGONS, whose
-    * corners are per-face exact since this round — so each corner
-    * adopts the matched neighbor corner (nearest to the skeleton
-    * approximation; corner spacing is ~0.58 pitch vs a second-order
-    * approximation error, so the match is unambiguous) whenever that
-    * neighbor corner itself resolved to its owning chart. Both
-    * flanking hexagons compute a resolved shared corner in the SAME
-    * owning chart (ulp-identical — spec-pinned), so the choice of
-    * flank doesn't matter. The spherical-centroid skeleton survives
-    * only where BOTH flanks' matched corners are home-chart fallbacks
-    * (enumerated in H3Spec alongside the hexagon fallback set). */
+  /** Pentagon boundary. Every pentagon corner is also a corner of its
+    * two flanking ring-1 HEXAGONS, whose corners are chart-canonical
+    * ([[cellToBoundary]]), so each corner adopts the flank corner
+    * nearest the spherical centroid of its (center, nᵢ, nᵢ₊₁) triple
+    * over the azimuth-ordered ring-1 neighbor centers. That centroid is
+    * second-order close to the true corner and the flank's other
+    * corners are ≥ ~0.58 pitch away, so the match is unambiguous; both
+    * flanks compute the shared corner in the same owning chart
+    * (bit-identical, spec-pinned), so the choice of flank does not
+    * matter. */
   private def pentagonBoundary(h: Long): Array[(Double, Double)] = {
     val (cLat, cLng) = cellToLatLng(h)
     val cLatR = toRadians(cLat); val cLngR = toRadians(cLng)
@@ -2194,14 +1880,13 @@ object H3 {
       val (la, lo) = cellToLatLng(n)
       (geoAzimuth(cLatR, cLngR, toRadians(la), toRadians(lo)), la, lo, n)
     }.sortBy(_._1)
-    require(nbrs.length == 5, s"pentagon ring size ${nbrs.length}")
     val cv = Array(cos(cLatR) * cos(cLngR), cos(cLatR) * sin(cLngR),
       sin(cLatR))
-    // per-face-exact corner sets of the five flanking hexagons (a
+    // chart-canonical corner sets of the five flanking hexagons (a
     // pentagon's ring-1 is always 5 hexagons: pentagon base cells are
-    // never adjacent), with their fallback marks
+    // never adjacent)
     val flank = nbrs.map { case (_, _, _, n) =>
-      if (isPentagon(n)) null else cellToBoundaryResolved(n)
+      if (isPentagon(n)) null else cellToBoundary(n)
     }
     def unitOf(latDeg: Double, lngDeg: Double): Array[Double] = {
       val p = toRadians(latDeg); val q = toRadians(lngDeg)
@@ -2225,34 +1910,28 @@ object H3 {
       var best: (Double, Double) = null
       var bestD = Double.MaxValue
       Seq(v, (v + 1) % 5).foreach { fi =>
-        val fb = flank(fi)
-        if (fb != null) {
-          val (corners, marks) = fb
+        val corners = flank(fi)
+        if (corners != null) {
           val (fla, flo) = (nbrs(fi)._2, nbrs(fi)._3)
           val fcv = unitOf(fla, flo)
           var w = 0
           while (w < corners.length) {
-            if ((marks & (1 << w)) == 0) {
-              val u = unitOf(corners(w)._1, corners(w)._2)
-              val dx = u(0) - av(0); val dy = u(1) - av(1)
-              val dz = u(2) - av(2)
-              val d2 = dx * dx + dy * dy + dz * dz
-              val cx = u(0) - fcv(0); val cy = u(1) - fcv(1)
-              val cz = u(2) - fcv(2)
-              val r2 = cx * cx + cy * cy + cz * cz // flank circumradius²
-              if (d2 < 0.09 * r2 && d2 < bestD) { bestD = d2; best = corners(w) }
-            }
+            val u = unitOf(corners(w)._1, corners(w)._2)
+            val dx = u(0) - av(0); val dy = u(1) - av(1)
+            val dz = u(2) - av(2)
+            val d2 = dx * dx + dy * dy + dz * dz
+            val cx = u(0) - fcv(0); val cy = u(1) - fcv(1)
+            val cz = u(2) - fcv(2)
+            val r2 = cx * cx + cy * cy + cz * cz // flank circumradius²
+            if (d2 < 0.09 * r2 && d2 < bestD) { bestD = d2; best = corners(w) }
             w += 1
           }
         }
       }
-      // flanks always resolve by construction since round 14 (substrate
-      // edge isometries) — a silent fall-back to the spherical-centroid
-      // skeleton would be invisible to the fallback-mask hook, so make
-      // the invariant LOUD instead (ADVICE r14)
+      // never taken: the centroid sits second-order close to a flank
+      // corner; loud rather than a silent centroid corner
       require(best != null,
-        f"pentagonBoundary: no resolved flank corner for vertex $v " +
-          f"of 0x$h%x — flank corner resolution regressed")
+        f"pentagonBoundary: no flank corner matches vertex $v of 0x$h%x")
       best
     }
   }

@@ -384,8 +384,8 @@ class H3Spec extends AnyFunSuite {
       // traversal (face-neighbor isometries + the digit-consistency
       // sign repair) closed the round-11 stitching gap — ring size is
       // exactly 6 (5 at a pentagon) and adjacency is symmetric, with
-      // no bounded-incidence carve-outs. Measured 0 gaps / 0
-      // asymmetries over 10,000 random cells (H3GapProbe).
+      // no bounded-incidence carve-outs (the res 0-4 exhaustive case
+      // below pins the same law for every cell).
       assert(ring.length === expected,
         f"ring size ${ring.length} != $expected at " +
           f"($lat%.5f, $lng%.5f) res $res")
@@ -412,6 +412,39 @@ class H3Spec extends AnyFunSuite {
           f"midpoint of 0x$h%x and 0x$c%x lands in non-mutual cell 0x$mc%x")
       }
     }
+  }
+
+  test("gridRing1 over every cell at res 0-4 (336,130 cells): 6 distinct " +
+      "neighbours, 5 at a pentagon; symmetric adjacency at res 0-3") {
+    // The law that lets gridRing1 have one path: the canonical integer
+    // ring resolves every cell, so there is no geometric fallback to
+    // take. gridRing1 itself throws on a short ring; the counts below
+    // also catch duplicates, self-neighbours and resolution changes.
+    var cells = 0
+    val bad = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (res <- 0 to 4) {
+      val rings = scala.collection.mutable.HashMap.empty[Long, Array[Long]]
+      for (bc <- 0 until H3.NumBaseCells) {
+        val b = (1L << 59) | (bc.toLong << 45) | ((1L << 45) - 1)
+        val level = if (res == 0) Array(b) else H3.cellToChildren(b, res)
+        level.foreach { h =>
+          cells += 1
+          val ring =
+            try H3.gridRing1(h)
+            catch { case e: IllegalStateException =>
+              bad += e.getMessage; Array.emptyLongArray }
+          val expected = if (H3.isPentagon(h)) 5 else 6
+          if (ring.length != expected || ring.distinct.length != expected ||
+              ring.contains(h) || ring.exists(H3.getResolution(_) != res))
+            bad += f"0x$h%x ring ${ring.map(c => f"$c%x").mkString(",")}"
+          if (res <= 3) rings(h) = ring
+        }
+      }
+      for ((h, ring) <- rings; c <- ring if !rings.get(c).exists(_.contains(h)))
+        bad += f"asymmetric: 0x$c%x does not see 0x$h%x back"
+    }
+    assert(cells === 336130)
+    assert(bad.isEmpty, s"${bad.size} failures, first: ${bad.take(5)}")
   }
 
   test("cross-chart label consistency: hexagon assemblies agree through " +
@@ -808,20 +841,14 @@ class H3Spec extends AnyFunSuite {
 
   test("cellToBoundary per-face corners (round 13): shared corners are " +
       "chart-canonical, the home-chart fallback is enumerated and tiny") {
-    // Exhaustive at res 0–2 (122 / 842 / 5882 cells). Law 1: every
-    // corner shared by two hexagons — when NEITHER side fell back to
-    // the home chart — agrees to ulp level (both sides computed the
-    // same lattice point in the corner's OWNING chart; the pre-round-13
-    // home-chart unprojection diverged by up to the projective
-    // distortion, which the old adjacent-cells law tolerated at
-    // 0.05·pitch). Law 2: the fallback corner count is pinned at ZERO
-    // since round 14 — the substrate edge-isometry mapping
-    // (overageNormalizeSub) resolves EVERY corner to its owning chart
-    // exactly (the round-13 enumerated residual was 7/14/24 here).
-    val expectedFallback = Map(0 -> 0, 1 -> 0, 2 -> 0)
+    // Exhaustive at res 0–2 (122 / 842 / 5882 cells): every corner
+    // shared by two hexagons agrees to ulp level — both sides compute
+    // the same lattice point in the corner's OWNING chart
+    // (overageNormalizeSub), where a home-chart unprojection would
+    // diverge by up to the projective distortion. No corner falls back
+    // to its home chart: cellToBoundary has no such path.
     for (res <- 0 to 2) {
       var corners = 0
-      var fallbacks = 0
       var sharedPairs = 0
       var worstRel = 0.0
       val cells = (0 until 122).flatMap { bc =>
@@ -829,32 +856,24 @@ class H3Spec extends AnyFunSuite {
         if (res == 0) Seq(b) else H3.cellToChildren(b, res).toSeq
       }
       val bnd = scala.collection.mutable.Map
-        .empty[Long, (Array[(Double, Double)], Int)]
-      def get(h: Long) = bnd.getOrElseUpdate(h, H3.cellToBoundaryResolved(h))
+        .empty[Long, Array[(Double, Double)]]
+      def get(h: Long) = bnd.getOrElseUpdate(h, H3.cellToBoundary(h))
       for (h <- cells if !H3.isPentagonCell(h)) {
-        val (mine, fb) = get(h)
+        val mine = get(h)
         corners += 6
-        fallbacks += Integer.bitCount(fb)
         val ring = H3.gridRing1(h)
         val pitch = haversine(H3.cellToLatLng(h), H3.cellToLatLng(ring.head))
         for (n <- ring if !H3.isPentagonCell(n)) {
-          val (theirs, nfb) = get(n)
-          for (v <- 0 until 6 if (fb & (1 << v)) == 0) {
-            var wi = 0
-            while (wi < 6) {
-              if ((nfb & (1 << wi)) == 0 &&
-                  haversine(mine(v), theirs(wi)) < 0.05 * pitch) {
-                sharedPairs += 1
-                val rel = haversine(mine(v), theirs(wi)) / pitch
-                if (rel > worstRel) worstRel = rel
-              }
-              wi += 1
+          val theirs = get(n)
+          for (v <- 0 until 6; wi <- 0 until 6) {
+            if (haversine(mine(v), theirs(wi)) < 0.05 * pitch) {
+              sharedPairs += 1
+              val rel = haversine(mine(v), theirs(wi)) / pitch
+              if (rel > worstRel) worstRel = rel
             }
           }
         }
       }
-      assert(fallbacks === expectedFallback(res),
-        s"res $res fallback corners: $fallbacks of $corners")
       assert(sharedPairs > corners, // every interior corner matches twice
         s"res $res matched only $sharedPairs shared corner pairs")
       assert(worstRel < 1e-9,
@@ -926,11 +945,7 @@ class H3Spec extends AnyFunSuite {
       assert(cells.size > 500, s"res $res sample too small: ${cells.size}")
       val bnd = scala.collection.mutable.Map
         .empty[Long, Array[(Double, Double)]]
-      def get(h: Long) = bnd.getOrElseUpdate(h, {
-        val (c, fb) = H3.cellToBoundaryResolved(h)
-        assert(fb === 0, s"res $res fallback at ${h.toHexString}")
-        c
-      })
+      def get(h: Long) = bnd.getOrElseUpdate(h, H3.cellToBoundary(h))
       var shared = 0
       for (h <- cells) {
         val mine = get(h)
@@ -1069,15 +1084,11 @@ class H3Spec extends AnyFunSuite {
   test("pentagon corners adopt the flanking hexagons' per-face-exact " +
       "corners (round 13): bit-level agreement with BOTH flanks, " +
       "residual spherical-centroid corners enumerated") {
-    // Every pentagon corner is shared with two ring-1 hexagons. After
-    // the per-face upgrade, a corner the flanks RESOLVE is computed in
-    // the corner's owning chart by both — so the pentagon's adopted
-    // corner must appear (to ~ulp, chordal 1e-12) in BOTH flanks'
-    // resolved corner sets. Since round 14 the flanks ALWAYS resolve
-    // (substrate edge-isometry mapping, fallback set empty), so the
-    // spherical-centroid skeleton is pinned at ZERO everywhere (the
-    // round-13 residual was 2/0/9/0 of 60 corners at res 0-3).
-    val expectedApprox = Map(0 -> 0, 1 -> 0, 2 -> 0, 3 -> 0)
+    // Every pentagon corner is shared with two ring-1 hexagons, whose
+    // corners are computed in the corner's owning chart — so the
+    // pentagon's adopted corner must appear (to ~ulp, chordal 1e-12) in
+    // BOTH flanks' corner sets, and no corner is left on the
+    // spherical-centroid skeleton at res 0-3.
     def unit(la: Double, lo: Double) = {
       val p = math.toRadians(la); val q = math.toRadians(lo)
       Array(math.cos(p) * math.cos(q), math.cos(p) * math.sin(q),
@@ -1096,24 +1107,24 @@ class H3Spec extends AnyFunSuite {
       for (h <- pents) {
         val corners = H3.cellToBoundary(h)
         assert(corners.length === 5)
-        val flanks = H3.gridRing1(h).map(H3.cellToBoundaryResolved)
+        val flanks = H3.gridRing1(h).map(H3.cellToBoundary)
         for (c <- corners) {
           val cu = unit(c._1, c._2)
           var hits = 0
-          flanks.foreach { case (fc, marks) =>
-            fc.zipWithIndex.foreach { case (w, wi) =>
+          flanks.foreach { fc =>
+            fc.foreach { w =>
               val u = unit(w._1, w._2)
               val d2 = (u(0) - cu(0)) * (u(0) - cu(0)) +
                 (u(1) - cu(1)) * (u(1) - cu(1)) +
                 (u(2) - cu(2)) * (u(2) - cu(2))
-              if (d2 < 1e-24 && (marks & (1 << wi)) == 0) hits += 1
+              if (d2 < 1e-24) hits += 1
             }
           }
           if (hits >= 1) adopted += 1 else approx += 1
           if (hits >= 2) inBoth += 1
         }
       }
-      assert(approx === expectedApprox(res),
+      assert(approx === 0,
         s"res $res: $approx skeleton corners (adopted $adopted)")
       assert(inBoth === adopted,
         s"res $res: an adopted corner matched only ONE flank " +

@@ -190,7 +190,7 @@ class KernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       c => GeoF.h3GridDistance(c(0), c(1)), Seq(null, 0, 1)),
     Case("h3_grid_path", CellPair, Seq(Row(null, Cell), Row(Cell, Cell)),
       c => GeoF.h3GridPath(c(0), c(1)), Seq(null, Seq(Cell))),
-    toksCase("h3_compact_array", GeoF.h3CompactArray,
+    toksCase("h3_compact_cells", GeoF.h3CompactArray,
       Seq(null, Seq(), H3.cellToChildrenHex(Cell, 10).toSeq),
       Seq(null, Seq(), Seq(Cell))),
     strCase("h3_polyfill", GeoF.h3Polyfill(_, 5),

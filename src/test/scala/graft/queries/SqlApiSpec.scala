@@ -66,11 +66,9 @@ class SqlApiSpec extends SparkSpec {
       graft.plans.GraftExtensions.SqlFunctions.map(_._1).toSet)
     calls.foreach { call =>
       val e = intercept[AnalysisException](spark.sql(s"SELECT $call"))
-      // the error quotes the call by its column name, which for
-      // h3_compact_cells has always been h3_compact_array
-      val named = fn(call).replace("h3_compact_cells", "h3_compact_array")
+      // the error quotes the call by its column name
       assert(e.getMessage.contains("DATATYPE_MISMATCH") &&
-        e.getMessage.contains(named), s"$call: ${e.getMessage}")
+        e.getMessage.contains(fn(call)), s"$call: ${e.getMessage}")
     }
   }
 
