@@ -37,8 +37,9 @@ object Bench {
     // and the round-12 post-close band measurement showed N=3 minima
     // still riding the steal band on ~2 of 34 queries per window while
     // N=5 recovers the steady state (w_star_join 2.59 s at N=5 vs
-    // straddling 1.46–2.28x across N<=2 windows). Interleaving (below)
-    // makes the extra passes cheap insurance, not 2x wall-clock risk.
+    // straddling 1.46–2.28x across N<=2 windows). The sample schedule
+    // (below; hybrid by default) splits each query's samples across two
+    // passes, so one steal window cannot take all of them.
     val samples = sys.env.getOrElse("SPARK_GRAFT_BENCH_SAMPLES", "5").toInt
     if (samples < 1) {
       System.err.println(s"[bench] SPARK_GRAFT_BENCH_SAMPLES must be ≥ 1")
@@ -149,14 +150,13 @@ object Bench {
     }
     if (debug) System.err.println(s"[benchdbg] compiles before pass 1: $compiles")
 
-    // Min-of-N steady-state sampling, INTERLEAVED: pass 1 runs every
-    // query once, then pass 2, then pass 3 — so one query's N samples are
-    // spread across the whole run. The host shows stochastic CPU steal
-    // (identical plans measured 1.5 s and 69 s minutes apart) and a steal
-    // window of tens of seconds spans all N back-to-back samples of a
-    // single query but at most one interleaved sample of each — min-of-N
-    // then recovers the steady-state number for every query instead of
-    // losing one query entirely.
+    // Min-of-N steady-state sampling, spread over the run by the sample
+    // schedule below (hybrid by default). The host shows stochastic CPU
+    // steal (identical plans measured 1.5 s and 69 s minutes apart), and
+    // a steal window of tens of seconds spans all N back-to-back samples
+    // of a single query; spreading them lets min-of-N recover the
+    // steady-state number for every query instead of losing one query
+    // entirely.
     def gcMillis: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans

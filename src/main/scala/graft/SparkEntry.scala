@@ -38,8 +38,8 @@ object SparkEntry {
   def benchNames: Seq[String] =
     defs.filter(_._2.bench).keys.toSeq.sorted
 
-  /** The plan Bench times per headline query: the canonical `fn` unless
-    * a bench variant strips oracle-only canonicalization artifacts. */
+  /** The plan Bench times per headline query: [[QueryDef.benched]], the
+    * plan without its declared result order (or a `benchFn` alternate). */
   def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
     defs.filter(_._2.bench).map { case (k, d) => k -> d.benched }
 }

@@ -128,6 +128,15 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     (LocalFsConf ++ extraConf).foreach { case (k, v) => b.config(k, v) }
+    // Set after `extraConf`, so no caller turns it off: a scan of a
+    // bucketed table with one file per bucket reports its files' sort
+    // order, and a plan over the sorted-bucketed layouts
+    // (`ScaleQueries`) needs no Sort above the scan. It has to hold for
+    // the whole session, because every action plans its own physical
+    // plan: a conf set only while a frame is built never reaches the
+    // plan a later write runs. No other table the engine reads is
+    // bucketed.
+    b.config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fileFs = FileSystem.get(URI.create("file:///"),

@@ -16,10 +16,9 @@ import graft.core.TableStats
   * Decision rule: for `GROUP BY e₁…eₙ` over a Project/Filter chain on a
   * single stats-registered scan ([[TableStats]]), estimate
   * `groups = min(Π ndv(eᵢ), rows)`; when `groups / rows ≥ θ`
-  * (`spark.graft.autoSkipPartialAgg.threshold`, default 0.5) the
-  * map-side partial pass would hash the whole input for < 1/θ-fold
-  * shuffle reduction, so the aggregate is tagged for
-  * [[DirectAggStrategy]]'s single-phase plan. Below θ — or whenever no
+  * ([[Threshold]] = 0.5) the map-side partial pass would hash the whole
+  * input for < 1/θ-fold shuffle reduction, so the aggregate is tagged
+  * for [[DirectAggStrategy]]'s single-phase plan. Below θ — or whenever no
   * estimate is possible — the stock two-phase plan stands (map-side
   * combine is strictly right for low-cardinality keys).
   *
@@ -53,20 +52,17 @@ import graft.core.TableStats
   */
 object AutoSkipPartialAgg extends Rule[LogicalPlan] {
 
-  private def enabled: Boolean = conf.getConfString(
-    "spark.graft.autoSkipPartialAgg.enabled", "true").toBoolean
-  private def threshold: Double = conf.getConfString(
-    "spark.graft.autoSkipPartialAgg.threshold", "0.5").toDouble
+  /** θ: the estimated groups-per-input-row ratio at and above which the
+    * aggregate skips its partial pass. */
+  val Threshold: Double = 0.5
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformUp {
-      case a: Aggregate
-          if a.hint.isEmpty && a.groupingExpressions.nonEmpty &&
-            a.groupingExpressions.forall(_.deterministic) &&
-            compatible(a) && ratio(a).exists(_ >= threshold) =>
-        a.copy(hint = Some(SkipPartialAggHint))
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case a: Aggregate
+        if a.hint.isEmpty && a.groupingExpressions.nonEmpty &&
+          a.groupingExpressions.forall(_.deterministic) &&
+          compatible(a) && ratio(a).exists(_ >= Threshold) =>
+      a.copy(hint = Some(SkipPartialAggHint))
+  }
 
   /** Mirror of [[DirectAggStrategy]]'s physical guard at the logical
     * level, so the hint is only placed where the single-phase plan can

@@ -36,18 +36,13 @@ object CoreQueries {
     * (pickup != dropoff ≙ l_returnflag != l_linestatus) and
     * `!= 0` / `IS NOT NULL` pairs. Scale: scan-local, fully pushed into
     * the parquet reader (PushedFilters), no shuffle. */
-  private def normalizeKeepRaw(s: SparkSession, dir: String): DataFrame =
+  private def normalizeKeep(s: SparkSession, dir: String): DataFrame =
     tbl(s, dir, "lineitem")
       .filter(
         col("l_returnflag") =!= col("l_linestatus") &&
           col("l_quantity") =!= 0 && col("l_quantity").isNotNull &&
           col("l_discount") =!= 0 && col("l_discount").isNotNull &&
           col("l_extendedprice") =!= 0)
-
-  // The ORDER BY exists only so the oracle hash is deterministic; the
-  // operator itself is a scan-local filter. Bench times the raw variant.
-  private def normalizeKeep(s: SparkSession, dir: String): DataFrame =
-    normalizeKeepRaw(s, dir).orderBy(li.map(col): _*)
 
   private val normalizeKeepSql =
     """SELECT * FROM lineitem
@@ -152,7 +147,7 @@ object CoreQueries {
     * 4-column composite trip identity re-uniting the branches.
     * Scale: both dims are small → AQE broadcasts them (no shuffle of the
     * fact table for J1/J2); J3 shuffles once on the composite key. */
-  private def enrichJoinGraphRaw(s: SparkSession, dir: String): DataFrame = {
+  private def enrichJoinGraph(s: SparkSession, dir: String): DataFrame = {
     val trips = tbl(s, dir, "lineitem")
     val keys = Seq("l_orderkey", "l_linenumber", "l_suppkey", "l_partkey")
 
@@ -191,11 +186,6 @@ object CoreQueries {
       .select(keys.map(col) :+ col("dropoff_zone") :+ col("pickup_zone") :+
         DateTimeF.daypart(col("l_shipdate")).as("daypart"): _*)
   }
-
-  // Canonicalization sort for the oracle hash only (the join graph's
-  // output order is not part of the operator's semantics).
-  private def enrichJoinGraph(s: SparkSession, dir: String): DataFrame =
-    enrichJoinGraphRaw(s, dir).orderBy(li.map(col): _*)
 
   private val enrichJoinGraphSql =
     """WITH supp_g AS (
@@ -428,7 +418,7 @@ object CoreQueries {
     // the hint is reserved for edges whose build side is the strictly
     // smaller table (orders here — narrow key projection, passed the
     // sf10 window at 18.4 s); an unbounded fact-scale build never takes
-    // it (see enrichJoinGraphRaw).
+    // it (see enrichJoinGraph).
     val tripss = tbl(s, dir, "lineitem")
       .join(tbl(s, dir, "orders").hint("shuffle_hash"),
         col("l_orderkey") === col("o_orderkey"), "inner")
@@ -565,8 +555,7 @@ object CoreQueries {
     "p1_select_star" -> QueryDef(selectStar,
       Some("SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber")),
     "p2_normalize" -> QueryDef(normalizeKeep, Some(normalizeKeepSql),
-      benchFn = Some(normalizeKeepRaw),
-      bench = true),
+      bench = true, order = li.map(col)),
     "p3_normalize_inverted" -> QueryDef(normalizeReject,
       Some(normalizeRejectSql)),
     "p4_project_rename" -> QueryDef(projectRename, Some(
@@ -577,7 +566,7 @@ object CoreQueries {
     "w1_rank_dedup" -> QueryDef(rankDedup, Some(rankDedupSql)),
     "j_enrich_join_graph" -> QueryDef(enrichJoinGraph,
       Some(enrichJoinGraphSql), bench = true,
-      benchFn = Some(enrichJoinGraphRaw)),
+      order = li.map(col)),
     "q_topk_popularity" -> QueryDef(topkPopularity, Some(topkPopularitySql),
       bench = true),
     "a1_groupcount_2key" -> QueryDef(groupcount2, Some(

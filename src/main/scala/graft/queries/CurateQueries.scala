@@ -53,7 +53,7 @@ object CurateQueries {
     * aggregates only the MATCHED rows (contaminated docs × overlapping
     * shingles), and the final left join back to the corpus id list is
     * again broadcast-sized (hit rows ≪ corpus). */
-  private def decontaminateRaw(s: SparkSession, dir: String): DataFrame =
+  private def decontaminate(s: SparkSession, dir: String): DataFrame =
     decontaminateImpl(s, dir, BenchSetRowCap)
 
   /** Driver-side row cap on the collected benchmark shingle set for the
@@ -114,9 +114,6 @@ object CurateQueries {
           (coalesce(col("n_hits"), lit(0L)) === 0).as("keep"))
     }
   }
-
-  private def decontaminate(s: SparkSession, dir: String): DataFrame =
-    decontaminateRaw(s, dir).orderBy("doc_id")
 
   private val decontaminateSql = {
     val shl = s"list_distinct(${OracleSql.shingleList(DK)})"
@@ -534,7 +531,7 @@ object CurateQueries {
     * model is GBs — there the score pass becomes one shuffle join keyed
     * on the bigram, or the model is pruned to top-k continuations per
     * context (the standard KenLM trim) to stay broadcastable. */
-  private def bigramLmScoreRaw(s: SparkSession, dir: String): DataFrame =
+  private def bigramLmScore(s: SparkSession, dir: String): DataFrame =
     bigramLmScoreImpl(s, dir, BigramLmModelRowCap)
 
   /** Driver-side row cap on the collected bigram model for the in-row
@@ -679,9 +676,6 @@ object CurateQueries {
         ((-col("sq")).cast("double") /
           (col("n_bigrams").cast("double") * lit(1000000.0))).as("avg_nll"))
   }
-
-  private def bigramLmScore(s: SparkSession, dir: String): DataFrame =
-    bigramLmScoreRaw(s, dir).orderBy("doc_id")
 
   private val bigramLmScoreSql =
     s"""WITH tk AS (
@@ -1159,9 +1153,9 @@ object CurateQueries {
     "x_lang_id_planted" -> QueryDef(langIdPlanted, Some(langIdPlantedSql)),
     "x_lm_score" -> QueryDef(lmScore, Some(lmScoreSql)),
     "x_lm_bigram" -> QueryDef(bigramLmScore, Some(bigramLmScoreSql),
-      bench = true, benchFn = Some(bigramLmScoreRaw)),
+      bench = true, order = Seq(col("doc_id"))),
     "x_decontaminate" -> QueryDef(decontaminate, Some(decontaminateSql),
-      bench = true, benchFn = Some(decontaminateRaw)),
+      bench = true, order = Seq(col("doc_id"))),
     "x_repetition_filter" -> QueryDef(repetitionFilter,
       Some(repetitionFilterSql)),
     "x_vocab_build" -> QueryDef(vocabBuild, Some(vocabBuildSql)),

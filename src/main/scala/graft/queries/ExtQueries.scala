@@ -85,7 +85,7 @@ object ExtQueries {
     * zero shuffles, whole-stage codegen end-to-end. Ratios are single
     * int/int IEEE divisions with the same expression tree as the oracle →
     * bit-identical, no rounding fudge. */
-  private def textStatsRaw(s: SparkSession, dir: String): DataFrame =
+  private def textStats(s: SparkSession, dir: String): DataFrame =
     graft.parallelScan(s,
         tbl(s, dir, "documents").select(col("doc_id"), col("text")))
       // tokenize exactly once per row; all stats read the bound arrays
@@ -100,9 +100,6 @@ object ExtQueries {
         TextF.qualityScoreT(col("t"), col("text")).as("quality"),
         TextF.langIdT(col("text"), col("lt")).as("lang_guess"),
         TextF.rollingHash(col("lt")).as("roll_hash"))
-
-  private def textStats(s: SparkSession, dir: String): DataFrame =
-    textStatsRaw(s, dir).orderBy("doc_id")
 
   private val textStatsSql = {
     val stop = TextF.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
@@ -152,7 +149,7 @@ object ExtQueries {
   /** Exact dedup by content fingerprint (md5 of whitespace-normalized
     * lowercase text): groupBy fingerprint, keep min doc_id. Scale: one
     * shuffle on the fingerprint — the canonical exact-dedup plan. */
-  private def dedupExactRaw(s: SparkSession, dir: String): DataFrame =
+  private def dedupExact(s: SparkSession, dir: String): DataFrame =
     // skip-partial decided COST-BASED (graft.plans.AutoSkipPartialAgg):
     // the md5 fingerprint resolves to ~NDV(text) ≈ 96% of rows through
     // the rule's hash/normalization whitelist, so with stats registered
@@ -164,9 +161,6 @@ object ExtQueries {
       .groupBy("fingerprint")
       .agg(min("doc_id").as("keeper_doc_id"), count(lit(1)).as("n_copies"))
 
-  private def dedupExact(s: SparkSession, dir: String): DataFrame =
-    dedupExactRaw(s, dir).orderBy("fingerprint")
-
   private val dedupExactSql =
     """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
       |         AS fingerprint,
@@ -176,7 +170,7 @@ object ExtQueries {
   /** MinHash signatures: 8 universal-hash minima over distinct k=3 word
     * shingles. Scale: explode is scan-side (map-only); the single shuffle
     * is the groupBy(doc_id) min-aggregation with map-side partials. */
-  private def minhashSignaturesRaw(s: SparkSession, dir: String): DataFrame =
+  private def minhashSignatures(s: SparkSession, dir: String): DataFrame =
     shingleHashes(s, dir)
       .groupBy("doc_id")
       .agg(
@@ -185,12 +179,6 @@ object ExtQueries {
         HashF.MinhashSeeds.zipWithIndex.tail.map { case ((a, b), i) =>
           min(HashF.minhashHash(col("h"), a, b)).as(s"h$i")
         }: _*)
-
-  // Canonicalization sort for the oracle only; the shared dedup-index
-  // path below checkpoints the UNSORTED aggregate (a global sort before
-  // a hash-keyed reuse would be pure waste at scale).
-  private def minhashSignatures(s: SparkSession, dir: String): DataFrame =
-    minhashSignaturesRaw(s, dir).orderBy("doc_id")
 
   private val minhashSignaturesSql =
     s"""WITH hv AS ($sqlShingleHashes)
@@ -212,7 +200,7 @@ object ExtQueries {
     * signatures ARE the dedup index. */
   private[queries] def lshCandParts(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val sigs = minhashSignaturesRaw(s, dir).localCheckpoint()
+    val sigs = minhashSignatures(s, dir).localCheckpoint()
     (sigs, lshCandFromSigs(sigs))
   }
 
@@ -242,7 +230,7 @@ object ExtQueries {
         .select("doc_a", "doc_b"))
   }
 
-  private def minhashLshPairsRaw(s: SparkSession, dir: String): DataFrame = {
+  private def minhashLshPairs(s: SparkSession, dir: String): DataFrame = {
     val (sigs, cand) = lshCandParts(s, dir)
     val sa = sigs.toDF(sigs.columns.map(c => s"a_$c"): _*)
     val sb = sigs.toDF(sigs.columns.map(c => s"b_$c"): _*)
@@ -255,9 +243,6 @@ object ExtQueries {
       .select(col("doc_a"), col("doc_b"),
         (matches.cast("double") / 8.0).as("est_jaccard"))
   }
-
-  private def minhashLshPairs(s: SparkSession, dir: String): DataFrame =
-    minhashLshPairsRaw(s, dir).orderBy("doc_a", "doc_b")
 
   /** DuckDB CTE chain ending in `cand(doc_a, doc_b)` — the SQL half of
     * [[lshCandParts]], shared with the [[GraphQueries]] oracle. */
@@ -479,10 +464,10 @@ object ExtQueries {
     * hot-shingle df cap, shared checkpoint discipline); the denominator
     * stays the full |A| so the cap only thins candidates, never biases a
     * reported score. */
-  private def containmentPairsRaw(s: SparkSession, dir: String): DataFrame =
+  private def containmentPairs(s: SparkSession, dir: String): DataFrame =
     containmentAtCap(s, dir, MaxShingleDf)
 
-  /** [[containmentPairsRaw]] parameterized by the hot-shingle df cap —
+  /** [[containmentPairs]] parameterized by the hot-shingle df cap —
     * the knob the round-11 sf10 sweep turns (PLANS.md) and the recall
     * witness (`x_containment_recall`) quantifies. `Int.MaxValue` = no
     * cap (exact containment; the ground truth the recall is measured
@@ -581,9 +566,6 @@ object ExtQueries {
       .select(col("p.doc_a"), col("p.doc_b"), col("p.containment"))
       .filter(col("containment") >= ContainmentMin)
   }
-
-  private def containmentPairs(s: SparkSession, dir: String): DataFrame =
-    containmentPairsRaw(s, dir).orderBy("doc_a", "doc_b")
 
   private val containmentPairsSql =
     s"""WITH sh_all AS (
@@ -2255,13 +2237,10 @@ object ExtQueries {
     * NULL-payload rows are skipped by the operator (no media, no
     * frames) — the same rows the previous `WHERE text IS NOT NULL`
     * removed. No shuffle: binary never leaves its input split. */
-  private def multimodalFramesRaw(s: SparkSession, dir: String): DataFrame =
+  private def multimodalFrames(s: SparkSession, dir: String): DataFrame =
     graft.ops.MediaFrames.frameStats(
       tbl(s, dir, "documents"), idCol = "doc_id", payloadCol = "text",
       frameBytes = 64, sampleEvery = 4)
-
-  private def multimodalFrames(s: SparkSession, dir: String): DataFrame =
-    multimodalFramesRaw(s, dir).orderBy("doc_id")
 
   // Byte-based like the features oracle: frame boundaries are BYTE
   // offsets (substr of the blob's hex, 2 hex chars per byte), so
@@ -2278,19 +2257,19 @@ object ExtQueries {
 
   val all: Map[String, QueryDef] = Map(
     "x_text_stats" -> QueryDef(textStats, Some(textStatsSql), bench = true,
-      benchFn = Some(textStatsRaw)),
+      order = Seq(col("doc_id"))),
     "x_dedup_exact" -> QueryDef(dedupExact, Some(dedupExactSql),
-      bench = true, benchFn = Some(dedupExactRaw)),
+      bench = true, order = Seq(col("fingerprint"))),
     "x_minhash_signatures" -> QueryDef(minhashSignatures,
-      Some(minhashSignaturesSql)),
+      Some(minhashSignaturesSql), order = Seq(col("doc_id"))),
     "x_minhash_lsh_pairs" -> QueryDef(minhashLshPairs,
       Some(minhashLshPairsSql), bench = true,
-      benchFn = Some(minhashLshPairsRaw)),
+      order = Seq(col("doc_a"), col("doc_b"))),
     "x_simhash" -> QueryDef(simhash, Some(simhashSql)),
     "x_simhash_pairs" -> QueryDef(simhashPairs, Some(simhashPairsSql)),
     "x_containment_pairs" -> QueryDef(containmentPairs,
       Some(containmentPairsSql), bench = true,
-      benchFn = Some(containmentPairsRaw),
+      order = Seq(col("doc_a"), col("doc_b")),
       benchNote = Some("exact containment is Sum(df^2) candidate work " +
         "by construction; the hot-shingle df cap (100, mirrored in the " +
         "oracle) is the recall/time trade. Round-11 sf10 sweep: cap 15 " +
@@ -2354,6 +2333,6 @@ object ExtQueries {
     "x_multimodal_features" -> QueryDef(multimodalFeatures,
       Some(multimodalFeaturesSql)),
     "x_multimodal_frames" -> QueryDef(multimodalFrames,
-      Some(multimodalFramesSql), benchFn = Some(multimodalFramesRaw))
+      Some(multimodalFramesSql), order = Seq(col("doc_id")))
   )
 }

@@ -29,7 +29,7 @@ object GraphQueries {
     * reachable through LSH candidate pairs, cluster size, and the
     * keep/drop verdict (keeper = the component minimum). Docs with no
     * near-dup candidates are their own singleton component. */
-  private def dedupComponentsRaw(s: SparkSession, dir: String,
+  private def dedupComponents(s: SparkSession, dir: String,
       hotKeyThreshold: Long =
         HotKeys.DefaultHotKeyThreshold): DataFrame = {
     val (_, cand) = ExtQueries.lshCandParts(s, dir)
@@ -47,19 +47,6 @@ object GraphQueries {
       .select(col("doc_id"), col("component"), col("cluster_size"),
         (col("doc_id") === col("component")).as("is_keeper"))
   }
-
-  private def dedupComponents(s: SparkSession, dir: String): DataFrame =
-    dedupComponentsRaw(s, dir).orderBy("doc_id")
-
-  /** The broadcast-hot-key contraction arm under the SAME oracle
-    * (round 14, verdict item 3): with the threshold forced to 1, every
-    * multi-edge key in every round takes the two-phase path — the
-    * giant-cluster route is hash-verified end-to-end against the
-    * independent recursive-CTE closure, not just property-equal on
-    * synthetic graphs (`ComponentsSpec` pins the >50%-of-edges cluster
-    * and the per-task bound; this entry pins the arm's exactness). */
-  private def dedupComponentsHot(s: SparkSession, dir: String): DataFrame =
-    dedupComponentsRaw(s, dir, hotKeyThreshold = 1L).orderBy("doc_id")
 
   private val dedupComponentsSql =
     s"""WITH RECURSIVE ${ExtQueries.lshCandCtes},
@@ -104,7 +91,7 @@ object GraphQueries {
     * measured win at sf1 is ~2×). Same output, cheaper carrier. */
   private val MaxHops = 3
 
-  private def shortestPathRaw(s: SparkSession, dir: String): DataFrame = {
+  private def shortestPath(s: SparkSession, dir: String): DataFrame = {
     def tagged(tag: Int, c: org.apache.spark.sql.Column) =
       (c.cast("long") * 4 + tag).as("t")
     val TagC = 0; val TagO = 1; val TagS = 2
@@ -161,9 +148,6 @@ object GraphQueries {
         shiftright(col("node"), 2).cast("string")).as("node"),
       col("dist"))
   }
-
-  private def shortestPath(s: SparkSession, dir: String): DataFrame =
-    shortestPathRaw(s, dir).orderBy("node")
 
   private val shortestPathSql =
     s"""WITH RECURSIVE e AS (
@@ -470,12 +454,18 @@ object GraphQueries {
        |         AS n_triangles""".stripMargin
 
   val all: Map[String, QueryDef] = Map(
-    "x_dedup_components" -> QueryDef(dedupComponents, Some(dedupComponentsSql),
-      bench = true, benchFn = Some(dedupComponentsRaw(_, _))),
-    "x_dedup_components_hot" -> QueryDef(dedupComponentsHot,
-      Some(dedupComponentsSql)),
+    "x_dedup_components" -> QueryDef(dedupComponents(_, _),
+      Some(dedupComponentsSql), bench = true, order = Seq(col("doc_id"))),
+    // The broadcast-hot-key contraction arm under the SAME oracle: with
+    // the threshold forced to 1, every multi-edge key in every round
+    // takes the two-phase path, so the giant-cluster route is
+    // hash-verified end-to-end against the independent recursive-CTE
+    // closure (`ComponentsSpec` pins the >50%-of-edges cluster and the
+    // per-task bound; this entry pins the arm's exactness).
+    "x_dedup_components_hot" -> QueryDef(dedupComponents(_, _, 1L),
+      Some(dedupComponentsSql), order = Seq(col("doc_id"))),
     "x_shortest_path" -> QueryDef(shortestPath, Some(shortestPathSql),
-      bench = true, benchFn = Some(shortestPathRaw)),
+      bench = true, order = Seq(col("node"))),
     "x_pagerank" -> QueryDef(pageRank, Some(pageRankSql)),
     "x_knn_graph" -> QueryDef(knnGraph, Some(knnGraphSql)),
     "x_triangle_count" -> QueryDef(triangleCount, Some(triangleCountSql))

@@ -246,9 +246,8 @@ object IngestQueries {
   /** Bench variant of [[pipelineE2E]]: identical 4-stage staged run (all
     * catalog writes — the operator — stay inside the timed region), but
     * the SOURCE-day parquet fixture is laid out once and reused across
-    * passes instead of rewritten per pass — the one-time-setup-write
-    * carve-out the [[QueryDef.benchFn]] contract names (a warehouse's
-    * source landing zone is not re-ingested per query). */
+    * passes instead of rewritten per pass (a warehouse's source landing
+    * zone is not re-ingested per query). */
   private def pipelineE2EBench(s: SparkSession, dir: String): DataFrame = {
     // keyed by source dir: the bench warms plans at sf0.001 before timing
     // the target SF — the two must not share a fixture path

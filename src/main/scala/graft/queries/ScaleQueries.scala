@@ -134,7 +134,7 @@ object ScaleQueries {
     * hint pins SMJ so
     * the plan's shuffle-freeness is attributable to bucketing, not to a
     * broadcast. Output: per-status counts + exact decimal quantity sums. */
-  private def bucketedJoinRaw(s: SparkSession, dir: String): DataFrame = {
+  private def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
     val (liT, ordT) = ensureBucketed(s, dir, autoBuckets(s, dir))
     s.table(liT).hint("merge")
       .join(s.table(ordT),
@@ -144,12 +144,6 @@ object ScaleQueries {
         sum(col("l_quantity").cast(DecimalType(18, 2))).cast("double")
           .as("sum_qty"))
   }
-
-  // The ORDER BY on the 3-row result exists only for oracle-hash
-  // determinism; the bench times the raw aggregate (QueryDef contract,
-  // same as p2_normalize / x_shortest_path).
-  private def bucketedJoin(s: SparkSession, dir: String): DataFrame =
-    bucketedJoinRaw(s, dir).orderBy("o_orderstatus")
 
   /** Bucketed-layout star join (TPC-H Q5 shape, same semantics and SAME
     * oracle as `w_star_join`): all three dims collapse into one ≤|customer|
@@ -163,7 +157,7 @@ object ScaleQueries {
     * pays it once at load. Registered separately so the raw-fixture
     * oracle contract of `w_star_join` stays intact; `ScaleSpec` asserts
     * the fact-side exchange count is zero. */
-  private def starBucketedRaw(s: SparkSession, dir: String): DataFrame = {
+  private def starBucketed(s: SparkSession, dir: String): DataFrame = {
     val (liT, ordT) = ensureBucketed(s, dir, autoBuckets(s, dir))
     val dims = tbl(s, dir, "region")
       .join(tbl(s, dir, "nation"), col("r_regionkey") === col("n_regionkey"))
@@ -179,9 +173,6 @@ object ScaleQueries {
       .agg(count(lit(1)).as("n_lineitems"),
         sum(rev).cast("double").as("revenue"))
   }
-
-  private def starBucketed(s: SparkSession, dir: String): DataFrame =
-    starBucketedRaw(s, dir).orderBy("r_name", "n_name")
 
   private val starBucketedSql =
     """SELECT r_name, n_name, count(*) AS n_lineitems,
@@ -205,7 +196,7 @@ object ScaleQueries {
     * what the same query costs once the warehouse pays the one-time
     * layout, which is how the reference's BigQuery tables behave (every
     * stage pre-materialized). */
-  private def dailyBucketedRaw(s: SparkSession, dir: String): DataFrame = {
+  private def dailyBucketed(s: SparkSession, dir: String): DataFrame = {
     val (liT, ordT) = ensureBucketed(s, dir, autoBuckets(s, dir))
     val tripss = s.table(liT).hint("merge")
       .join(s.table(ordT), col("l_orderkey") === col("o_orderkey"))
@@ -228,9 +219,6 @@ object ScaleQueries {
         col("avg_drive_time"), col("total_drive_time"),
         col("avg_amount"), col("sum_amount"))
   }
-
-  private def dailyBucketed(s: SparkSession, dir: String): DataFrame =
-    dailyBucketedRaw(s, dir).orderBy(col("pickup_date").desc)
 
   /** Events layout for window queries: bucketed by `user_id` AND sorted
     * by (user_id, us, event_id), ONE file per bucket — `repartition` on
@@ -293,32 +281,16 @@ object ScaleQueries {
     * window-sort tax: a time-series warehouse stores event streams
     * clustered by entity and ordered by time once, instead of re-sorting
     * per query. The raw `w_moving_agg` stays registered as the honest
-    * unprepared-data cost. */
-  /** Build a frame with `bucketedTableScan.outputOrdering=true`, force
-    * its physical plan while the conf is set (the `executedPlan` lazy
-    * val reads SQLConf at first access, so later actions keep the
-    * sorted-scan shape), then RESTORE the previous value — other
-    * bucketed queries' plan shape must not depend on whether this query
-    * ran first in the bench session (advice r10). */
-  private def withSortedBucketScan(s: SparkSession)(
-      build: => DataFrame): DataFrame = {
-    val key = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try { val df = build; df.queryExecution.executedPlan; df }
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
-
-  // Sort propagation from bucketed scans is conf-gated (Spark lists
-  // each bucket's files at planning to prove the one-file-per-bucket
-  // invariant the ordering rests on — a deliberate planning-time
-  // cost). The listing is InMemoryFileIndex-cached, and this layout
-  // writes exactly one file per bucket (repartition on the bucket key
-  // before the write), so the proof always succeeds here.
-  private def movingBucketedBuild(s: SparkSession, dir: String): DataFrame = {
+    * unprepared-data cost.
+    *
+    * Sort propagation from bucketed scans is conf-gated
+    * (`GraftSession.local` sets it for every session): Spark lists each
+    * bucket's files at planning to prove the one-file-per-bucket
+    * invariant the ordering rests on — a deliberate planning-time cost.
+    * The listing is InMemoryFileIndex-cached, and this layout writes
+    * exactly one file per bucket (repartition on the bucket key before
+    * the write), so the proof always succeeds here. */
+  private def movingBucketed(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val evT = ensureEventsBucketed(s, dir)
     val byTime = Window.partitionBy("user_id").orderBy("us", "event_id")
@@ -333,14 +305,6 @@ object ScaleQueries {
           count(lit(1)).over(rows7)).as("mov7_avg"),
         sum(dec).over(hour).cast("double").as("hour_sum"))
   }
-
-  private def movingBucketedRaw(s: SparkSession, dir: String): DataFrame =
-    withSortedBucketScan(s) { movingBucketedBuild(s, dir) }
-
-  private def movingBucketed(s: SparkSession, dir: String): DataFrame =
-    withSortedBucketScan(s) {
-      movingBucketedBuild(s, dir).orderBy("user_id", "event_id")
-    }
 
   // ------------------------------------------------------------------
   // Sorted-bucketed twins of the events-rooted fact queries (round 11):
@@ -358,7 +322,7 @@ object ScaleQueries {
     * sorted by (user_id, us, event_id) — the whole gaps-and-islands
     * chain plans with ZERO Exchange and ZERO Sort (ScaleSpec pins it):
     * scan → window → window → hash-aggregate. */
-  private def sessionizeBucketedBuild(s: SparkSession,
+  private def sessionizeBucketed(s: SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val evT = ensureEventsBucketed(s, dir)
@@ -381,21 +345,13 @@ object ScaleQueries {
           .as("sum_value"))
   }
 
-  private def sessionizeBucketedRaw(s: SparkSession, dir: String): DataFrame =
-    withSortedBucketScan(s) { sessionizeBucketedBuild(s, dir) }
-
-  private def sessionizeBucketed(s: SparkSession, dir: String): DataFrame =
-    withSortedBucketScan(s) {
-      sessionizeBucketedBuild(s, dir).orderBy("user_id", "session_seq")
-    }
-
   /** `w_window_funcs` over the bucketed layout: the time-ordered
     * lag/lead windows ride the layout's (user_id, us, event_id) sort
     * directly; the value-ordered ntile/percent_rank/cume_dist windows
     * re-sort WITHIN partitions (ordering by value is inherent to the
     * query, but the shuffle is not) — zero Exchange, one in-partition
     * Sort. */
-  private def windowBucketedBuild(s: SparkSession, dir: String): DataFrame = {
+  private def windowBucketed(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val evT = ensureEventsBucketed(s, dir)
     val byTime = Window.partitionBy("user_id").orderBy("us", "event_id")
@@ -409,14 +365,6 @@ object ScaleQueries {
         round(cume_dist().over(byValue), 6).as("value_cdist"))
   }
 
-  private def windowBucketedRaw(s: SparkSession, dir: String): DataFrame =
-    withSortedBucketScan(s) { windowBucketedBuild(s, dir) }
-
-  private def windowBucketed(s: SparkSession, dir: String): DataFrame =
-    withSortedBucketScan(s) {
-      windowBucketedBuild(s, dir).orderBy("user_id", "event_id")
-    }
-
   /** `x_range_join` over the bucketed layout: both self-join sides scan
     * the same bucketed table, so HashPartitioning(user_id) is shared
     * and satisfies the (user_id, time-bucket) equi-join's clustering on
@@ -424,7 +372,7 @@ object ScaleQueries {
     * shuffles are the raw form's whole cost); only in-partition sorts
     * on the derived bucket key remain. The explode fan-out (each left
     * event to its two candidate window epochs) is partition-preserving. */
-  private def rangeBucketedBuild(s: SparkSession, dir: String): DataFrame = {
+  private def rangeBucketed(s: SparkSession, dir: String): DataFrame = {
     val w = TemporalQueries.RangeWindowUs
     val evT = ensureEventsBucketed(s, dir)
     val ev = s.table(evT)
@@ -440,14 +388,6 @@ object ScaleQueries {
       .select(col("user_id"), col("id_a"), col("id_b"),
         (col("us_b") - col("us_a")).as("gap_us"))
   }
-
-  private def rangeBucketedRaw(s: SparkSession, dir: String): DataFrame =
-    withSortedBucketScan(s) { rangeBucketedBuild(s, dir) }
-
-  private def rangeBucketed(s: SparkSession, dir: String): DataFrame =
-    withSortedBucketScan(s) {
-      rangeBucketedBuild(s, dir).orderBy("user_id", "id_a", "id_b")
-    }
 
   private val bucketedJoinSql =
     """SELECT o_orderstatus, count(*) AS n,
@@ -796,28 +736,28 @@ object ScaleQueries {
 
   val all: Map[String, QueryDef] = Map(
     "b_bucketed_join" -> QueryDef(bucketedJoin, Some(bucketedJoinSql),
-      bench = true, benchFn = Some(bucketedJoinRaw)),
+      bench = true, order = Seq(col("o_orderstatus"))),
     "b_star_bucketed" -> QueryDef(starBucketed, Some(starBucketedSql),
-      bench = true, benchFn = Some(starBucketedRaw)),
+      bench = true, order = Seq(col("r_name"), col("n_name"))),
     "a3_daily_bucketed" -> QueryDef(dailyBucketed,
       Some(CoreQueries.dailyMetricsSql), bench = true,
-      benchFn = Some(dailyBucketedRaw)),
+      order = Seq(col("pickup_date").desc)),
     "w_moving_bucketed" -> QueryDef(movingBucketed,
       Some(WarehouseQueries.movingAggSql), bench = true,
-      benchFn = Some(movingBucketedRaw)),
+      order = Seq(col("user_id"), col("event_id"))),
     "x_sessionize_bucketed" -> QueryDef(sessionizeBucketed,
       Some(TemporalQueries.sessionizeSql), bench = true,
-      benchFn = Some(sessionizeBucketedRaw),
+      order = Seq(col("user_id"), col("session_seq")),
       benchNote = Some("sorted-bucketed twin of x_sessionize: zero " +
         "exchange, zero sort over the prepared events layout")),
     "w_window_bucketed" -> QueryDef(windowBucketed,
       Some(WarehouseQueries.windowFuncsSql), bench = true,
-      benchFn = Some(windowBucketedRaw),
+      order = Seq(col("user_id"), col("event_id")),
       benchNote = Some("sorted-bucketed twin of w_window_funcs: zero " +
         "exchange; only the inherent by-value in-partition sort remains")),
     "x_range_bucketed" -> QueryDef(rangeBucketed,
       Some(TemporalQueries.rangeJoinSql), bench = true,
-      benchFn = Some(rangeBucketedRaw),
+      order = Seq(col("user_id"), col("id_a"), col("id_b")),
       benchNote = Some("sorted-bucketed twin of x_range_join: the " +
         "equi-bucket self-join co-locates on the shared layout, zero " +
         "exchange")),

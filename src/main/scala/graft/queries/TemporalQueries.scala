@@ -40,7 +40,7 @@ object TemporalQueries {
     * Cross-engine determinism: window order is (ts, event_id) — event_id
     * breaks any equal-timestamp tie; epoch-µs integer arithmetic; the
     * value sum is decimal-exact with one final double cast. */
-  private def sessionizeRaw(s: SparkSession, dir: String): DataFrame = {
+  private def sessionize(s: SparkSession, dir: String): DataFrame = {
     val ev = eventsTbl(s, dir)
       .select(col("user_id"), col("event_id"), col("value"),
         unix_micros(col("ts")).as("us"))
@@ -62,9 +62,6 @@ object TemporalQueries {
           .as("sum_value"))
   }
 
-  private def sessionize(s: SparkSession, dir: String): DataFrame =
-    sessionizeRaw(s, dir).orderBy("user_id", "session_seq")
-
   private[queries] val sessionizeSql = OracleSql.gapsAndIslands(
     SessionGapUs, breakOp = ">", tieBreak = Some("event_id"),
     withSeq = true)
@@ -81,7 +78,7 @@ object TemporalQueries {
     * distinct needed), then the exact µs predicate refines. Shuffle cost
     * tracks true pair density; a 1000-executor run shuffles each event
     * twice, never n². */
-  private def rangeJoinRaw(s: SparkSession, dir: String): DataFrame = {
+  private def rangeJoin(s: SparkSession, dir: String): DataFrame = {
     val ev = eventsTbl(s, dir)
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("us"))
@@ -97,9 +94,6 @@ object TemporalQueries {
       .select(col("user_id"), col("id_a"), col("id_b"),
         (col("us_b") - col("us_a")).as("gap_us"))
   }
-
-  private def rangeJoin(s: SparkSession, dir: String): DataFrame =
-    rangeJoinRaw(s, dir).orderBy("user_id", "id_a", "id_b")
 
   private[queries] val rangeJoinSql =
     s"""SELECT a.user_id, a.event_id AS id_a, b.event_id AS id_b,
@@ -132,7 +126,7 @@ object TemporalQueries {
     * shuffle per side + in-partition sort + O(1)-state merge — the plan a
     * feature-store point-in-time join needs at 100 TB. Oracle: DuckDB's
     * native ASOF LEFT JOIN, a fully independent implementation. */
-  private def asofJoinRaw(s: SparkSession, dir: String): DataFrame = {
+  private def asofJoin(s: SparkSession, dir: String): DataFrame = {
     val (clicks, purchases) = asofSides(s, dir)
     graft.ops.AsOf.join(clicks, purchases,
       leftKeys = Seq("user_id"), rightKeys = Seq("p_user_id"),
@@ -140,9 +134,6 @@ object TemporalQueries {
       .select(col("event_id"), col("user_id"), col("click_us"),
         col("purchase_us"), col("purchase_value"))
   }
-
-  private def asofJoin(s: SparkSession, dir: String): DataFrame =
-    asofJoinRaw(s, dir).orderBy("event_id")
 
   /** The same as-of semantics composed from BUILT-IN operators (SURVEY.md
     * §7.3 ladder step (a), the cross-check for the custom plan): union
@@ -444,11 +435,11 @@ object TemporalQueries {
     "w_sequence_match" -> QueryDef(sequenceMatch, Some(sequenceMatchSql)),
     "f1_time_type" -> QueryDef(timeTypeExtract, Some(timeTypeExtractSql)),
     "x_sessionize" -> QueryDef(sessionize, Some(sessionizeSql), bench = true,
-      benchFn = Some(sessionizeRaw)),
+      order = Seq(col("user_id"), col("session_seq"))),
     "x_range_join" -> QueryDef(rangeJoin, Some(rangeJoinSql), bench = true,
-      benchFn = Some(rangeJoinRaw)),
+      order = Seq(col("user_id"), col("id_a"), col("id_b"))),
     "x_asof_join" -> QueryDef(asofJoin, Some(asofSql), bench = true,
-      benchFn = Some(asofJoinRaw)),
+      order = Seq(col("event_id"))),
     "x_asof_forward" -> QueryDef(asofForward, Some(asofForwardSql)),
     "x_asof_union_window" -> QueryDef(asofUnionWindow, Some(asofSql))
   )

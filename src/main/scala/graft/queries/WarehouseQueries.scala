@@ -414,7 +414,7 @@ object WarehouseQueries {
     * All windows partition by user_id (one shuffle, no global windows);
     * orderings carry event_id tie-breaks so every function is
     * deterministic cross-engine. */
-  private def windowFuncsRaw(s: SparkSession, dir: String): DataFrame = {
+  private def windowFuncs(s: SparkSession, dir: String): DataFrame = {
     val byTime = Window.partitionBy("user_id").orderBy("us", "event_id")
     val byValue = Window.partitionBy("user_id").orderBy("value", "event_id")
     eventsTbl(s, dir)
@@ -427,10 +427,6 @@ object WarehouseQueries {
         round(percent_rank().over(byValue), 6).as("value_prank"),
         round(cume_dist().over(byValue), 6).as("value_cdist"))
   }
-
-  // final global sort is oracle canonicalization, not operator semantics
-  private def windowFuncs(s: SparkSession, dir: String): DataFrame =
-    windowFuncsRaw(s, dir).orderBy("user_id", "event_id")
 
   private[queries] val windowFuncsSql =
     """SELECT user_id, event_id,
@@ -814,7 +810,7 @@ object WarehouseQueries {
     * dimension key; the interval assignment is a lead() window on the
     * same clustering — the standard dimension-history build, incremental
     * by construction (new changes only touch their key's tail row). */
-  private def scd2Raw(s: SparkSession, dir: String): DataFrame = {
+  private def scd2(s: SparkSession, dir: String): DataFrame = {
     // (order, shipdate) is ~87%-distinct on lineitem — the map-side
     // partial pass merges almost nothing, so the version aggregate is
     // hinted skip-partial (one Complete-mode hash agg after the key
@@ -836,9 +832,6 @@ object WarehouseQueries {
       .withColumn("valid_to_us", lead("valid_from_us", 1).over(byFrom))
       .withColumn("is_current", col("valid_to_us").isNull)
   }
-
-  private def scd2(s: SparkSession, dir: String): DataFrame =
-    scd2Raw(s, dir).orderBy("key", "valid_from_us")
 
   private val scd2Sql =
     """WITH versions AS (
@@ -1170,7 +1163,7 @@ object WarehouseQueries {
     * aggregates. Sums are decimal-exact inside the frame; the moving
     * average is ONE double division of that exact sum, identical IEEE on
     * both engines. */
-  private def movingAggRaw(s: SparkSession, dir: String): DataFrame = {
+  private def movingAgg(s: SparkSession, dir: String): DataFrame = {
     val byTime = Window.partitionBy("user_id").orderBy("us", "event_id")
     val rows7 = byTime.rowsBetween(-6, Window.currentRow)
     val hour = Window.partitionBy("user_id").orderBy("us")
@@ -1185,9 +1178,6 @@ object WarehouseQueries {
           count(lit(1)).over(rows7)).as("mov7_avg"),
         sum(dec).over(hour).cast("double").as("hour_sum"))
   }
-
-  private def movingAgg(s: SparkSession, dir: String): DataFrame =
-    movingAggRaw(s, dir).orderBy("user_id", "event_id")
 
   private[queries] val movingAggSql =
     """WITH x AS (
@@ -1548,7 +1538,7 @@ object WarehouseQueries {
     "s_sorted_layout" -> QueryDef(sortedLayout, Some(sortedLayoutSql)),
     "w_grouping_sets" -> QueryDef(groupingSetsAgg, Some(groupingSetsAggSql)),
     "w_moving_agg" -> QueryDef(movingAgg, Some(movingAggSql),
-      bench = true, benchFn = Some(movingAggRaw)),
+      bench = true, order = Seq(col("user_id"), col("event_id"))),
     "w_stats_agg" -> QueryDef(statsAgg, Some(statsAggSql)),
     "w_gapfill_locf" -> QueryDef(gapfillLocf, Some(gapfillLocfSql)),
     "w_histogram" -> QueryDef(histogram, Some(histogramSql)),
@@ -1556,11 +1546,11 @@ object WarehouseQueries {
     "w_pivot" -> QueryDef(pivotCounts, Some(pivotCountsSql)),
     "w_setops" -> QueryDef(setOps, Some(setOpsSql)),
     "w_snapshot_diff" -> QueryDef(snapshotDiff, Some(snapshotDiffSql)),
-    // benched since round 14 (bench-breadth item); benchFn strips the
-    // oracle-only total ORDER BY (the dimension-history build itself
-    // ends at the lead() window)
+    // benched since round 14 (bench-breadth item); the bench times the
+    // build without the oracle-only total ORDER BY (the
+    // dimension-history build itself ends at the lead() window)
     "w_scd2" -> QueryDef(scd2, Some(scd2Sql), bench = true,
-      benchFn = Some(scd2Raw)),
+      order = Seq(col("key"), col("valid_from_us"))),
     "w_kmv_aggregator" -> QueryDef(kmvAggregator, Some(kmvDistinctSql)),
     "s_compact" -> QueryDef(compact, Some(compactSql)),
     "w_cube" -> QueryDef(cubeCounts, Some(cubeCountsSql)),
@@ -1569,7 +1559,7 @@ object WarehouseQueries {
     "w_dq_checks" -> QueryDef(dqChecks, Some(dqChecksSql)),
     "w_incremental_agg" -> QueryDef(incrementalAgg, Some(incrementalAggSql)),
     "w_window_funcs" -> QueryDef(windowFuncs, Some(windowFuncsSql),
-      bench = true, benchFn = Some(windowFuncsRaw)),
+      bench = true, order = Seq(col("user_id"), col("event_id"))),
     "w_semi_anti" -> QueryDef(semiAnti, Some(semiAntiSql)),
     "w_rollup" -> QueryDef(rollupCounts, Some(rollupCountsSql)),
     "w_quantiles" -> QueryDef(quantiles, Some(quantilesSql)),

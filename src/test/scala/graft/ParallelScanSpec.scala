@@ -16,7 +16,7 @@ class ParallelScanSpec extends SparkSpec {
     df.queryExecution.optimizedPlan.toString.contains("Repartition")
 
   test("fires on a big single-row-group file; no-ops below the size gate") {
-    val dir = Files.createTempDirectory("pscan").toString
+    val dir = tempDir("pscan")
     // ~50 MB of INCOMPRESSIBLE text (per-row hashes — a constant string
     // would dictionary-encode to nothing and duck the size gate) in ONE
     // partition → one file, one row group (inside the 128 MB block)
@@ -41,7 +41,7 @@ class ParallelScanSpec extends SparkSpec {
   }
 
   test("no-ops on a many-row-group layout (true splits suffice)") {
-    val dir = Files.createTempDirectory("pscan_rg").toString
+    val dir = tempDir("pscan_rg")
     // force small row groups: the same 40 MB becomes dozens of true
     // split units, so Spark parallelizes the scan by itself
     spark.range(120000)
@@ -65,7 +65,7 @@ class ParallelScanSpec extends SparkSpec {
 
   test("mixed-writer dir: one multi-row-group file must not mask " +
       "single-row-group siblings") {
-    val dir = Files.createTempDirectory("pscan_mix").toString
+    val dir = tempDir("pscan_mix")
     // two ~20 MB single-row-group files (incompressible per-row hashes)
     spark.range(120000)
       .select(col("id"), expr(
@@ -117,7 +117,7 @@ class ParallelScanSpec extends SparkSpec {
   }
 
   test("repartitioned frame returns identical rows") {
-    val dir = Files.createTempDirectory("pscan_eq").toString
+    val dir = tempDir("pscan_eq")
     spark.range(120000)
       .select(col("id"), concat(lit("t"), col("id")).as("text"))
       .coalesce(1)

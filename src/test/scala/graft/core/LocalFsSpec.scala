@@ -20,10 +20,6 @@ import graft.pipeline.{Runner, TaxiPipeline}
   * checksums, missing-path error and rename-onto-a-file refusal. */
 class LocalFsSpec extends SparkSpec {
 
-  private def tempDir(prefix: String): String =
-    Files.createTempDirectory(
-      Paths.get(sys.props("user.dir"), "target"), prefix).toString
-
   private def fileFs: FileSystem = FileSystem.get(URI.create("file:///"),
     spark.sessionState.newHadoopConf())
 

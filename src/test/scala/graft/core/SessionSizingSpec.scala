@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SessionSizingSpec extends AnyFunSuite {
 
   test("small input floors at the core count") {
-    val d = Files.createTempDirectory("sizing").toFile
+    val d = new java.io.File(graft.SparkSpec.tempDir("sizing"))
     Files.write(d.toPath.resolve("t.parquet"), new Array[Byte](1024))
     assert(GraftSession.initialShufflePartitions(d.toString, 32) === 32)
     assert(GraftSession.initialShufflePartitions(d.toString, 8) === 8)
@@ -21,7 +21,7 @@ class SessionSizingSpec extends AnyFunSuite {
   }
 
   test("large input scales by bytes and caps") {
-    val d = Files.createTempDirectory("sizing2").toFile
+    val d = new java.io.File(graft.SparkSpec.tempDir("sizing2"))
     // sparse file: logical length drives the rule, no real 1 GB write
     val f = new java.io.RandomAccessFile(
       new java.io.File(d, "big.parquet"), "rw")

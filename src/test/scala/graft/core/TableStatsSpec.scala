@@ -12,7 +12,7 @@ import graft.SparkSpec
 class TableStatsSpec extends SparkSpec {
 
   test("a corrupt table is reported and skipped; the others are analyzed") {
-    val dir = Files.createTempDirectory("graft_tablestats")
+    val dir = Paths.get(tempDir("graft_tablestats"))
     Seq("region", "customer").foreach { t =>
       Files.copy(Paths.get(sf, s"$t.parquet"), dir.resolve(s"$t.parquet"))
     }

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,11 +21,6 @@ class EnrichEquivSpec extends SparkSpec {
 
   private val ds = "2024-01-05"
   private val day = TaxiPipeline.dsNoDash(ds)
-
-  private def tempDir(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props("user.dir"), "target"),
-      prefix).toString
 
   /** Crafted ids sit above the fixture's and keep their residue mod 25. */
   private val B = 1000000000L

@@ -1,16 +1,9 @@
 package graft.pipeline
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.core.Catalog
 
 class RunnerSpec extends SparkSpec {
-
-  private def tempDir(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props("user.dir"), "target"),
-      prefix).toString
 
   private def freshCatalog(): Catalog = new Catalog(spark, tempDir("wh_test"))
 

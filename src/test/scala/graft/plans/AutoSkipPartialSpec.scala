@@ -146,15 +146,17 @@ class AutoSkipPartialSpec extends SparkSpec {
     assert(!hinted(noRange), "rangeless operand must not be hinted")
   }
 
-  test("threshold conf flips the decision") {
+  test("the threshold is 0.5: pmod caps either side of it") {
     ensureStats()
-    val df = () => tbl(spark, sf, "lineitem")
-      .select("l_orderkey", "l_linenumber")
-      .groupBy("l_orderkey", "l_linenumber")
+    // ratio = min(NDV(doc_id), m) / rows with doc_id near-unique, so the
+    // modulus sets the ratio: just over half the rows is hinted, just
+    // under half is not
+    val docs = tbl(spark, sf, "documents")
+    val rows = docs.count()
+    def byMod(m: Long) = docs
+      .groupBy(pmod(col("doc_id"), lit(m)).as("bucket"))
       .agg(count(lit(1)).as("n"))
-    spark.conf.set("spark.graft.autoSkipPartialAgg.threshold", "1.1")
-    try assert(!hinted(df()))
-    finally spark.conf.unset("spark.graft.autoSkipPartialAgg.threshold")
-    assert(hinted(df()))
+    assert(hinted(byMod(rows / 2 + 2)), "ratio above θ must be hinted")
+    assert(!hinted(byMod(rows / 2 - 2)), "ratio below θ must stay two-phase")
   }
 }

@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
@@ -197,7 +195,7 @@ class KernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Seq(null, "POINT(1 2)", Square),
       Seq(null, Seq(), GeoF.h3PolyfillScala(Square, 5).toSeq)))
 
-  private lazy val dir = Files.createTempDirectory("kernel_spec").toString
+  private lazy val dir = tempDir("kernel_spec")
 
   private def run(c: Case, generated: Boolean): (SparkPlan, Seq[Any]) = {
     val confs = Map(

@@ -29,7 +29,7 @@ class WsTokensSpec extends SparkSpec {
     val samples = Gen.listOfN(400, textGen)
       .apply(Gen.Parameters.default, org.scalacheck.rng.Seed(20260814L))
       .getOrElse(sys.error("gen failed"))
-    val dir = java.nio.file.Files.createTempDirectory("ws_tokens").toString
+    val dir = tempDir("ws_tokens")
     samples.toDF("t").write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
       .select(TextF.tokens(col("t")).as("fast"),

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, SparkEntry}
 
 /** Hand-computed BPE training fixture: pins the pair-count weighting by
@@ -12,7 +10,7 @@ class BpeSpec extends SparkSpec {
   import spark.implicits._
 
   test("learned merges match the hand-derived sequence") {
-    val dir = Files.createTempDirectory("bpe_fixture").toString
+    val dir = tempDir("bpe_fixture")
     Seq(
       (1L, "en", "ab ab ab ab ab"), // ab ×5
       (2L, "en", "abc abc abc"),    // abc ×3

@@ -14,8 +14,7 @@ class CorpusDedupSpec extends SparkSpec {
   import spark.implicits._
 
   test("dup fingerprints keep exactly the min-doc_id row with ITS lang") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_corpus_dedup").toString
+    val dir = tempDir("graft_corpus_dedup")
     Seq(
       // cleans (lower + whitespace collapse) to the same fingerprint:
       (10L, "Hello   World five tokens ok yes", "en"),

@@ -13,8 +13,7 @@ class DecontaminateSpec extends SparkSpec {
   import spark.implicits._
 
   private def corpus(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_decont").toString
+    val dir = tempDir("graft_decont")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("t"))

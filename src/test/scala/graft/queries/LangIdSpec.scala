@@ -15,8 +15,7 @@ class LangIdSpec extends SparkSpec {
   import spark.implicits._
 
   private def corpus(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_langid").toString
+    val dir = tempDir("graft_langid")
     rows.toDF("doc_id", "lang", "text")
       .withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))

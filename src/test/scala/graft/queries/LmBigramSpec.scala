@@ -14,8 +14,7 @@ class LmBigramSpec extends SparkSpec {
   import spark.implicits._
 
   private def corpus(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lmbigram").toString
+    val dir = tempDir("graft_lmbigram")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("t"))
@@ -90,8 +89,7 @@ class LmScoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def corpus(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lmscore").toString
+    val dir = tempDir("graft_lmscore")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("t"))

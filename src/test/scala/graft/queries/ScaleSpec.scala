@@ -1,12 +1,17 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
-class ScaleSpec extends SparkSpec {
+class ScaleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("bucketed join runs with zero exchanges below the join") {
     // AQE re-plans lazily; turn it off in a sibling session so the static
@@ -24,72 +29,86 @@ class ScaleSpec extends SparkSpec {
       s"bucketed join must not shuffle its inputs:\n${smjs.head}")
   }
 
+  /** The physical plan a noop write of `df` executes — the plan Bench
+    * times. A write plans afresh from the logical plan, so it can differ
+    * from `df.queryExecution.executedPlan`; a listener records it. */
+  private def writtenPlan(df: DataFrame): SparkPlan = {
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (find(qe.executedPlan)(_.isInstanceOf[V2TableWriteExec]).nonEmpty)
+          plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    df.sparkSession.listenerManager.register(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      val plan = plans.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      assert(plan != null, "no write plan reached the listener")
+      plan
+    } finally df.sparkSession.listenerManager.unregister(listener)
+  }
+
+  private def exchanges(plan: SparkPlan): Int =
+    collect(plan) { case e: ShuffleExchangeExec => e }.size
+
+  private def sorts(plan: SparkPlan): Int =
+    collect(plan) { case so: SortExec => so }.size
+
   test("sorted-bucketed moving agg: zero exchange, zero sort in the plan") {
     // The whole point of w_moving_bucketed: the scan exposes the bucket
     // hash partitioning AND the (user_id, us, event_id) file sort, so
     // all three window frames run directly over the scan — the raw
     // twin's exchange + sort tax is paid once at load.
-    val s = spark.newSession()
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    val df = graft.SparkEntry.defs("w_moving_bucketed").benched(s, sf)
-    val plan = df.queryExecution.executedPlan
-    val wins = plan.collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec => w }
-    assert(wins.nonEmpty, s"expected window operators: $plan")
-    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
-      s"sorted-bucketed window must not shuffle: $plan")
-    assert(plan.collect {
-      case so: org.apache.spark.sql.execution.SortExec => so }.isEmpty,
-      s"sorted-bucketed window must not sort: $plan")
+    val plan = writtenPlan(
+      graft.SparkEntry.defs("w_moving_bucketed").benched(spark, sf))
+    assert(collect(plan) { case w: WindowExec => w }.nonEmpty,
+      s"expected window operators: $plan")
+    assert(exchanges(plan) === 0, s"sorted-bucketed window must not shuffle: $plan")
+    assert(sorts(plan) === 0, s"sorted-bucketed window must not sort: $plan")
     // and it computes exactly what the raw twin computes
-    val raw = graft.SparkEntry.queries("w_moving_agg")(s, sf)
+    val raw = graft.SparkEntry.queries("w_moving_agg")(spark, sf)
       .collect().toSeq
-    val bucketed = graft.SparkEntry.queries("w_moving_bucketed")(s, sf)
+    val bucketed = graft.SparkEntry.queries("w_moving_bucketed")(spark, sf)
       .collect().toSeq
     assert(bucketed === raw)
   }
 
   test("sorted-bucketed sessionize: zero exchange, zero sort; rows match raw") {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    val df = graft.SparkEntry.defs("x_sessionize_bucketed").benched(s, sf)
-    val plan = df.queryExecution.executedPlan
-    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
-      s"bucketed sessionize must not shuffle: $plan")
-    assert(plan.collect {
-      case so: org.apache.spark.sql.execution.SortExec => so }.isEmpty,
-      s"bucketed sessionize must not sort: $plan")
-    val raw = graft.SparkEntry.queries("x_sessionize")(s, sf).collect().toSeq
-    val bucketed =
-      graft.SparkEntry.queries("x_sessionize_bucketed")(s, sf).collect().toSeq
+    val plan = writtenPlan(
+      graft.SparkEntry.defs("x_sessionize_bucketed").benched(spark, sf))
+    assert(exchanges(plan) === 0, s"bucketed sessionize must not shuffle: $plan")
+    assert(sorts(plan) === 0, s"bucketed sessionize must not sort: $plan")
+    val raw = graft.SparkEntry.queries("x_sessionize")(spark, sf)
+      .collect().toSeq
+    val bucketed = graft.SparkEntry.queries("x_sessionize_bucketed")(spark, sf)
+      .collect().toSeq
     assert(bucketed === raw)
   }
 
   test("sorted-bucketed window funcs: zero exchange; rows match raw") {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    val df = graft.SparkEntry.defs("w_window_bucketed").benched(s, sf)
-    val plan = df.queryExecution.executedPlan
-    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+    val plan = writtenPlan(
+      graft.SparkEntry.defs("w_window_bucketed").benched(spark, sf))
+    assert(exchanges(plan) === 0,
       s"bucketed window funcs must not shuffle: $plan")
-    // by-value ordering is inherent to ntile/percent_rank/cume_dist —
-    // in-partition sorts are expected, global sorts (exchange) are not
-    val raw = graft.SparkEntry.queries("w_window_funcs")(s, sf).collect().toSeq
-    val bucketed =
-      graft.SparkEntry.queries("w_window_bucketed")(s, sf).collect().toSeq
+    // by-value ordering is inherent to ntile/percent_rank/cume_dist: one
+    // in-partition sort; the time-ordered windows ride the scan's order
+    assert(sorts(plan) === 1, s"only the by-value sort may remain: $plan")
+    val raw = graft.SparkEntry.queries("w_window_funcs")(spark, sf)
+      .collect().toSeq
+    val bucketed = graft.SparkEntry.queries("w_window_bucketed")(spark, sf)
+      .collect().toSeq
     assert(bucketed === raw)
   }
 
   test("sorted-bucketed range join: zero exchange below the join; rows match raw") {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    val df = graft.SparkEntry.defs("x_range_bucketed").benched(s, sf)
-    val plan = df.queryExecution.executedPlan
-    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
-      s"bucketed range join must not shuffle: $plan")
-    val raw = graft.SparkEntry.queries("x_range_join")(s, sf).collect().toSeq
-    val bucketed =
-      graft.SparkEntry.queries("x_range_bucketed")(s, sf).collect().toSeq
+    val plan = writtenPlan(
+      graft.SparkEntry.defs("x_range_bucketed").benched(spark, sf))
+    assert(exchanges(plan) === 0, s"bucketed range join must not shuffle: $plan")
+    val raw = graft.SparkEntry.queries("x_range_join")(spark, sf)
+      .collect().toSeq
+    val bucketed = graft.SparkEntry.queries("x_range_bucketed")(spark, sf)
+      .collect().toSeq
     assert(bucketed === raw)
   }
 

@@ -17,8 +17,7 @@ class SchemaPinSpec extends SparkSpec {
   /** A catalog in a new directory, so no case sees pins or tables an
     * earlier run left behind. */
   private def freshCat(): Catalog =
-    new Catalog(spark, Files.createTempDirectory(
-      Paths.get(sys.props("user.dir"), "target"), "schema_pin").toString)
+    new Catalog(spark, tempDir("schema_pin"))
 
   test("pinned read surfaces the superset with nulls for pre-evolution files") {
     val cat = freshCat()

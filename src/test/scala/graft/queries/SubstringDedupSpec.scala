@@ -16,8 +16,7 @@ class SubstringDedupSpec extends SparkSpec {
   private val W = 20
 
   private def corpus(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_substr_dedup").toString
+    val dir = tempDir("graft_substr_dedup")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))

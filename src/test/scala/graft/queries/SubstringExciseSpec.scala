@@ -17,8 +17,7 @@ class SubstringExciseSpec extends SparkSpec {
   private val W = 20
 
   private def corpus(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_substr_excise").toString
+    val dir = tempDir("graft_substr_excise")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))

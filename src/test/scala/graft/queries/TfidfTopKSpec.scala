@@ -14,8 +14,7 @@ class TfidfTopKSpec extends SparkSpec {
   import spark.implicits._
 
   private def corpus(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tfidf").toString
+    val dir = tempDir("graft_tfidf")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("t"))
@@ -83,8 +82,7 @@ class Bm25Spec extends SparkSpec {
   import spark.implicits._
 
   private def corpus(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bm25").toString
+    val dir = tempDir("graft_bm25")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("t"))

@@ -79,9 +79,7 @@ class StreamSpec extends SparkSpec {
 
   test("restart from checkpoint resumes exactly-once (no reprocess, no loss)") {
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props("user.dir"), "target"), "st_restart")
-      .toString
+    val base = tempDir("st_restart")
     val ev = graft.eventsTbl(spark, sf).select("event_id", "event_type")
     val day1 = ev.filter(col("event_id") % 2 === 0)
     val day2 = ev.filter(col("event_id") % 2 === 1)
@@ -102,9 +100,7 @@ class StreamSpec extends SparkSpec {
 
   test("streaming file ingest equals the batch read (AvailableNow drains)") {
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props("user.dir"), "target"), "st_test")
-      .toString
+    val base = tempDir("st_test")
     val src = graft.eventsTbl(spark, sf).limit(200)
     src.repartition(3).write.mode("overwrite").parquet(s"$base/src")
     val ingested = StreamIngest.ingestAvailableNow(
@@ -124,9 +120,7 @@ class StreamSpec extends SparkSpec {
     // same files into one-file microbatches (state carried across batch
     // boundaries by the complete-mode agg) must yield the identical
     // per-cell answer, and both must equal the plain batch computation.
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props("user.dir"), "target"), "st_h3")
-      .toString
+    val base = tempDir("st_h3")
     graft.eventsTbl(spark, sf).select("user_id", "value").repartition(4)
       .write.mode("overwrite").parquet(s"$base/src")
     val k = col("user_id") % 150
