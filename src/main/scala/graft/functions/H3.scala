@@ -15,27 +15,25 @@ import java.lang.Math._
   * What is taken from the published source verbatim: the 20 face-center
   * coordinates and face i-axis azimuths (`faceijk.c` constants — pure
   * geometry of H3's fixed icosahedron orientation) and the algorithm
-  * structure. What is DERIVED here rather than copied: the base-cell
-  * tables (`baseCellData` / `faceIjkBaseCells` in the C library) are
-  * reconstructed at class-init from the face geometry itself —
-  * enumerate every res-0 cell appearance on every face, cluster
-  * appearances of the same cell, number cells by DESCENDING LATITUDE of
-  * their centers (H3's published base-cell numbering), and recover each
-  * appearance's 60°-rotation offset from the measured bearing mismatch
-  * between face grids. The derivation self-checks: exactly 122 cells,
-  * exactly 12 pentagons, pentagons at the published base-cell numbers
-  * {4,14,24,38,49,58,63,72,83,97,107,117}, rotation residuals ≲ 1e-9.
-  * End-to-end fidelity is asserted in `H3Spec` against published test
-  * vectors (e.g. geo→cell of the H3 README's own examples).
-  *
-  * Pentagon caveat: the five faces around each pentagon meet at 72°, not
-  * 60°, so a pentagon appearance's digit rotation is not geometric
-  * quantization; it is recovered by a consistency search (every
-  * straddling point pair across a face boundary must index identically,
-  * and no pentagon index may carry a leading K digit). This pins a
-  * self-consistent tiling; `H3Spec` documents which pentagon vectors are
-  * externally validated. No taxi/test fixture touches a pentagon (all 12
-  * sit in ocean).
+  * structure. What is DERIVED rather than copied: the base-cell table
+  * (`baseCellData` / `faceIjkBaseCells` in the C library) and the
+  * face-neighbour table (`faceNeighbors`), reconstructed from the face
+  * geometry alone. Both are literals in [[H3Tables]], which this object
+  * reads into its runtime arrays at class init; the derivation lives in
+  * the test tree (`H3Derivation`), and `H3TablesSpec` re-runs it and
+  * checks the literals row for row. It clusters every res-0 cell
+  * appearance on every face, numbers cells by DESCENDING LATITUDE of
+  * their centers (H3's published base-cell numbering), recovers each
+  * hexagon appearance's 60°-rotation offset from the bearing mismatch
+  * between face grids, and pins each pentagon appearance's rotation by
+  * a consistency search (the five faces around a pentagon meet at 72°,
+  * not 60°: every straddling point pair across a face boundary must
+  * index identically, and no pentagon index may carry a leading K
+  * digit). End-to-end fidelity is asserted in `H3Spec` against
+  * published test vectors (e.g. geo→cell of the H3 README's own
+  * examples); `H3Spec` documents which pentagon vectors are externally
+  * validated. No taxi/test fixture touches a pentagon (all 12 sit in
+  * ocean).
   *
   * Scale: pure per-row arithmetic (trig + integer digit loop, no
   * allocation on the hot path), exposed to Spark as a kernel call
@@ -50,7 +48,7 @@ object H3 {
   // (which points at an icosahedron vertex). The other two axes sit at
   // exactly -2π/3 and -4π/3 from the first — asserted below.
   // ------------------------------------------------------------------
-  private val FaceLat: Array[Double] = Array(
+  private[functions] val FaceLat: Array[Double] = Array(
     0.803582649718989942, 1.307747883455638156, 1.054751253523952054,
     0.600191595538186799, 0.491715428198773866, 0.172745327415618701,
     0.605929321571350690, 0.427370518328979641, -0.079066118549212831,
@@ -59,7 +57,7 @@ object H3 {
     -0.600191595538186799, -0.491715428198773866, -0.803582649718989942,
     -1.307747883455638156, -1.054751253523952054)
 
-  private val FaceLng: Array[Double] = Array(
+  private[functions] val FaceLng: Array[Double] = Array(
     1.248397419617396099, 2.536945009877921159, -1.347517358900396623,
     -0.450603909469755746, 0.401988202911306943, 1.678146885280433686,
     2.953923329812411617, -1.888876200336285401, -0.733429513380867741,
@@ -68,7 +66,7 @@ object H3 {
     2.690988744120037492, -2.739604450678486295, -1.893195233972397139,
     -0.604647643711872080, 1.794075294689396615)
 
-  private val FaceAz0: Array[Double] = Array(
+  private[functions] val FaceAz0: Array[Double] = Array(
     5.619958268523939882, 5.760339081714187279, 0.780213654393430055,
     0.430469363979999913, 6.130269123335111400, 2.692877706530642877,
     2.982963003477243874, 3.532912002790141181, 3.494305004259568154,
@@ -79,37 +77,32 @@ object H3 {
 
   /** res-0 unit length (adjacent cell-center spacing) in gnomonic-plane
     * units = tan(center→vertex angle)/2 = (3-√5)/2. */
-  private val Res0UGnomonic = 0.38196601125010500003
+  private[functions] val Res0UGnomonic = 0.38196601125010500003
   /** Class III rotation: asin(√(3/28)). */
   private val Ap7Rot = asin(sqrt(3.0 / 28.0))
   private val Sqrt7 = sqrt(7.0)
-  private val Sin60 = sqrt(3.0) / 2.0
-  private val TwoPi = 2.0 * PI
+  private[functions] val Sin60 = sqrt(3.0) / 2.0
+  private[functions] val TwoPi = 2.0 * PI
 
   val MaxRes = 15
   val NumBaseCells = 122
 
-  /** Published pentagon base-cell numbers — used as a derivation
-    * self-check (the numbering rule must reproduce them exactly). */
-  private val PentagonCells: Set[Int] =
-    Set(4, 14, 24, 38, 49, 58, 63, 72, 83, 97, 107, 117)
-
   // ------------------------------------------------------------------
   // Spherical helpers
   // ------------------------------------------------------------------
-  @inline private def posAngle(a: Double): Double = {
+  @inline private[functions] def posAngle(a: Double): Double = {
     val t = a % TwoPi
     if (t < 0.0) t + TwoPi else t
   }
 
   /** Bearing (azimuth) from (lat1,lng1) to (lat2,lng2), radians. */
-  private def geoAzimuth(lat1: Double, lng1: Double,
+  private[functions] def geoAzimuth(lat1: Double, lng1: Double,
       lat2: Double, lng2: Double): Double =
     atan2(cos(lat2) * sin(lng2 - lng1),
       cos(lat1) * sin(lat2) - sin(lat1) * cos(lat2) * cos(lng2 - lng1))
 
   /** Point at `az` bearing and angular distance `d` from (lat,lng). */
-  private def geoAzDistance(lat: Double, lng: Double, az: Double,
+  private[functions] def geoAzDistance(lat: Double, lng: Double, az: Double,
       d: Double): (Double, Double) = {
     val sinLat2 = sin(lat) * cos(d) + cos(lat) * sin(d) * cos(az)
     val lat2 = asin(max(-1.0, min(1.0, sinLat2)))
@@ -123,12 +116,12 @@ object H3 {
   // normalized = all components ≥ 0 with at least one 0. Digits:
   // CENTER=0 K=1 J=2 JK=3 I=4 IK=5 IJ=6 (digit = 4i+2j+k on unit ijk).
   // ------------------------------------------------------------------
-  @inline private def normI(i: Long, j: Long, k: Long): (Long, Long, Long) = {
+  @inline private[functions] def normI(i: Long, j: Long, k: Long): (Long, Long, Long) = {
     val m = min(i, min(j, k))
     (i - m, j - m, k - m)
   }
 
-  @inline private def ijkToHex2d(i: Long, j: Long, k: Long): (Double, Double) = {
+  @inline private[functions] def ijkToHex2d(i: Long, j: Long, k: Long): (Double, Double) = {
     val ii = (i - k).toDouble
     val jj = (j - k).toDouble
     (ii - 0.5 * jj, jj * Sin60)
@@ -169,8 +162,8 @@ object H3 {
   }
 
   /** Unpack [[hex2dToAxialPacked]]'s axial coordinates. */
-  @inline private def packedA(p: Long): Long = (p >>> 32) - 1073741824L
-  @inline private def packedB(p: Long): Long = (p & 0xFFFFFFFFL) - 1073741824L
+  @inline private[functions] def packedA(p: Long): Long = (p >>> 32) - 1073741824L
+  @inline private[functions] def packedB(p: Long): Long = (p & 0xFFFFFFFFL) - 1073741824L
 
   // ------------------------------------------------------------------
   // Digit rotations in index space. CCW cycle: I→IJ→J→JK→K→IK→I.
@@ -187,7 +180,7 @@ object H3 {
     (h & ~(7L << sh)) | (d.toLong << sh)
   }
 
-  private def leadingNonZeroDigit(h: Long): Int = {
+  private[functions] def leadingNonZeroDigit(h: Long): Int = {
     val res = getResolution(h)
     var r = 1
     while (r <= res) {
@@ -211,7 +204,7 @@ object H3 {
 
   /** Pentagon ccw rotation: rotates digits ccw while skipping the
     * deleted K subsequence (leading K is rotated through). */
-  private def rotatePent60ccw(h0: Long): Long = {
+  private[functions] def rotatePent60ccw(h0: Long): Long = {
     var h = h0
     var foundFirst = false
     val res = getResolution(h)
@@ -230,14 +223,26 @@ object H3 {
   // ------------------------------------------------------------------
   // Forward projection: geo → (face, hex2d at res)
   // ------------------------------------------------------------------
-  private val FaceX: Array[Double] =
-    Array.tabulate(20)(f => cos(FaceLat(f)) * cos(FaceLng(f)))
-  private val FaceY: Array[Double] =
-    Array.tabulate(20)(f => cos(FaceLat(f)) * sin(FaceLng(f)))
-  private val FaceZ: Array[Double] =
-    Array.tabulate(20)(f => sin(FaceLat(f)))
+  // Class init below uses plain loops and `new Array` only: Scala's
+  // `Array.tabulate`/`ofDim`, ranges and lambdas would load a few hundred
+  // library classes on the first H3 call of a JVM.
+  private[functions] val FaceX = new Array[Double](20)
+  private[functions] val FaceY = new Array[Double](20)
+  private[functions] val FaceZ = new Array[Double](20)
 
-  @inline private def nearestFace(latR: Double, lngR: Double): Int = {
+  private def loadFaceVectors(): Unit = {
+    var f = 0
+    while (f < 20) {
+      FaceX(f) = cos(FaceLat(f)) * cos(FaceLng(f))
+      FaceY(f) = cos(FaceLat(f)) * sin(FaceLng(f))
+      FaceZ(f) = sin(FaceLat(f))
+      f += 1
+    }
+  }
+
+  loadFaceVectors()
+
+  @inline private[functions] def nearestFace(latR: Double, lngR: Double): Int = {
     val x = cos(latR) * cos(lngR)
     val y = cos(latR) * sin(lngR)
     val z = sin(latR)
@@ -256,8 +261,8 @@ object H3 {
     * `res` (aperture-7 scaling, Class III rotation at odd res), then
     * exact 4-corner lattice rounding; result packed as
     * [[hex2dToAxialPacked]]. The one forward projection: the per-row
-    * [[latLngToCell]] and the class-init derivation both call it. */
-  @inline private def projectRound(latR: Double, lngR: Double, res: Int,
+    * [[latLngToCell]] and the table derivation both call it. */
+  @inline private[functions] def projectRound(latR: Double, lngR: Double, res: Int,
       face: Int): Long = {
     val cosLat = cos(latR)
     val dot = max(-1.0, min(1.0,
@@ -277,244 +282,53 @@ object H3 {
     hex2dToAxialPacked(x, y)
   }
 
-  /** Inverse at res 0 (derivation only): (face, hex2d) → geo radians. */
-  private def hex2dToGeoRes0(face: Int, x: Double, y: Double): (Double, Double) = {
-    val r = sqrt(x * x + y * y)
-    if (r < 1e-15) return (FaceLat(face), FaceLng(face))
-    val theta = atan2(y, x)
-    val rr = atan(r * Res0UGnomonic)
-    val az = posAngle(FaceAz0(face) - theta)
-    geoAzDistance(FaceLat(face), FaceLng(face), az, rr)
-  }
-
   // ------------------------------------------------------------------
-  // Base-cell table derivation (replaces the C library's hand-authored
-  // baseCellData / faceIjkBaseCells)
+  // Base-cell table (the C library's baseCellData / faceIjkBaseCells),
+  // filled from its literal in H3Tables
   // ------------------------------------------------------------------
   /** Table entry: base cell number and ccw 60° rotation count for a
     * (face, normalized res-0 ijk) appearance; -1 = unreachable coord. */
-  private val TabBc = Array.fill(20 * 27)(-1)
-  private val TabRot = Array.fill(20 * 27)(0)
-  private val IsPent = new Array[Boolean](NumBaseCells)
+  private[functions] val TabBc = new Array[Int](20 * 27)
+  private[functions] val TabRot = new Array[Int](20 * 27)
+  private[functions] val IsPent = new Array[Boolean](NumBaseCells)
   /** cwOffsetPent: for pentagon bc, faces where the leading-K escape
     * rotates CW instead of CCW. Keyed bc*32+face. */
-  private val PentCwOffset = new Array[Boolean](NumBaseCells * 32)
-  /** Pentagon cell centers (icosahedron vertices), for the rotation
-    * consistency search. */
-  private val PentLat = new Array[Double](NumBaseCells)
-  private val PentLng = new Array[Double](NumBaseCells)
+  private[functions] val PentCwOffset = new Array[Boolean](NumBaseCells * 32)
 
-  @inline private def tabIdx(f: Int, i: Long, j: Long, k: Long): Int =
+  @inline private[functions] def tabIdx(f: Int, i: Long, j: Long, k: Long): Int =
     ((f * 3 + i.toInt) * 3 + j.toInt) * 3 + k.toInt
 
-  /** Derivation — see object scaladoc. Runs once at class init (<10 ms);
-    * every `require` is a self-check of the recalled geometry constants
-    * and the published numbering rule. */
-  private def deriveTables(): Unit = {
-    // 19 normalized res-0 coords per face (min component 0, max ≤ 2)
-    val coords = for {
-      i <- 0 to 2; j <- 0 to 2; k <- 0 to 2
-      if min(i, min(j, k)) == 0
-    } yield (i.toLong, j.toLong, k.toLong)
-    require(coords.size == 19)
-
-    case class App(f: Int, i: Long, j: Long, k: Long) {
-      lazy val center: (Double, Double) = {
-        val (x, y) = ijkToHex2d(i, j, k)
-        hex2dToGeoRes0(f, x, y)
-      }
-      lazy val center3: (Double, Double, Double) = {
-        val (la, lo) = center
-        (cos(la) * cos(lo), cos(la) * sin(lo), sin(la))
-      }
-    }
-    val apps: IndexedSeq[App] = for {
-      f <- 0 until 20; (i, j, k) <- coords
-    } yield App(f, i, j, k)
-    val appIdx: Map[(Int, Long, Long, Long), Int] =
-      apps.zipWithIndex.map { case (a, n) => ((a.f, a.i, a.j, a.k), n) }.toMap
-
-    // union-find over appearances
-    val parent = Array.tabulate(apps.size)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    def union(a: Int, b: Int): Unit = { parent(find(a)) = find(b) }
-
-    // link 1: identical centers (true shared-boundary appearances)
-    for (a <- apps.indices; b <- (a + 1) until apps.size) {
-      val (ax, ay, az) = apps(a).center3
-      val (bx, by, bz) = apps(b).center3
-      val d2 = (ax - bx) * (ax - bx) + (ay - by) * (ay - by) +
-        (az - bz) * (az - bz)
-      if (d2 < 1e-18) union(a, b)
-    }
-    // link 2: re-resolution (spillover appearances → canonical cell).
-    // An appearance is EXACT (its center is the true cell center) iff it
-    // re-resolves to an appearance with the same center; spillover
-    // appearances land a gnomonic-distortion displacement away.
-    val exactApp = new Array[Boolean](apps.size)
-    for (n <- apps.indices) {
-      val a = apps(n)
-      val (la, lo) = a.center
-      val f2 = nearestFace(la, lo)
-      val p = projectRound(la, lo, 0, f2)
-      val (ri, rj, rk) = normI(packedA(p), packedB(p), 0L)
-      val m = appIdx.getOrElse((f2, ri, rj, rk),
-        sys.error(s"re-resolved coord off-table: $a -> ($f2,$ri,$rj,$rk)"))
-      union(n, m)
-      val (ax, ay, az) = a.center3
-      val (bx, by, bz) = apps(m).center3
-      val d2 = (ax - bx) * (ax - bx) + (ay - by) * (ay - by) +
-        (az - bz) * (az - bz)
-      exactApp(n) = d2 < 1e-18
-    }
-
-    val clusters: Map[Int, IndexedSeq[Int]] =
-      apps.indices.groupBy(find).map { case (r, m) => (r, m.toIndexedSeq) }
-    require(clusters.size == NumBaseCells,
-      s"derived ${clusters.size} base cells, want $NumBaseCells")
-
-    // representative = an exact-center appearance
-    val reps: Map[Int, App] = clusters.map { case (root, members) =>
-      val self = members.filter(exactApp)
-      require(self.nonEmpty, s"cluster $root has no exact-center member")
-      (root, apps(self.minBy(n => (apps(n).f, apps(n).i, apps(n).j, apps(n).k))))
-    }
-
-    // pentagon ⟺ center is an icosahedron vertex ⟺ ≥3 equidistant faces
-    def isVertex(a: App): Boolean = {
-      val (x, y, z) = a.center3
-      val dots: IndexedSeq[Double] =
-        (0 until 20).map(f => x * FaceX(f) + y * FaceY(f) + z * FaceZ(f))
-      val mx = dots.max
-      dots.count(d => d > mx - 1e-12) >= 3
-    }
-
-    // number by descending latitude of the representative center
-    val ordered = clusters.keys.toIndexedSeq.sortBy(r => -reps(r).center._1)
-    val lats = ordered.map(r => reps(r).center._1)
-    lats.sliding(2).foreach { case Seq(a, b) =>
-      require(a - b > 1e-9, s"ambiguous latitude ordering: $a vs $b")
-    }
-    val cellNum: Map[Int, Int] = ordered.zipWithIndex.toMap
-
-    val pentNums = ordered.zipWithIndex.collect {
-      case (r, n) if isVertex(reps(r)) => n
-    }.toSet
-    require(pentNums == PentagonCells,
-      s"pentagon numbering mismatch: derived $pentNums")
-    for (n <- pentNums) IsPent(n) = true
-    for ((root, num) <- cellNum if pentNums.contains(num)) {
-      val (la, lo) = reps(root).center
-      PentLat(num) = la
-      PentLng(num) = lo
-    }
-
-    // home appearance per cell: hexagons = lowest-face exact appearance;
-    // pentagons = lowest face where the vertex is that face's i-vertex
-    // (coord (2,0,0) — the direction FaceAz0 points at).
-    val homeOf: Map[Int, App] = clusters.map { case (root, members) =>
-      val rep3 = reps(root).center3
-      def exact(n: Int): Boolean = {
-        val (x, y, z) = apps(n).center3
-        val d2 = (x - rep3._1) * (x - rep3._1) + (y - rep3._2) * (y - rep3._2) +
-          (z - rep3._3) * (z - rep3._3)
-        d2 < 1e-18
-      }
-      val ex = members.filter(exact).map(apps(_))
-      val home =
-        if (pentNums.contains(cellNum(root))) {
-          val iv = ex.filter(a => a.i == 2 && a.j == 0 && a.k == 0)
-          require(iv.nonEmpty, s"pentagon ${cellNum(root)} has no i-vertex face")
-          iv.minBy(_.f)
-        } else ex.minBy(_.f)
-      (root, home)
-    }
-
-    // bearing of the face grid's +i axis at a given geo point, measured
-    // through face `f`'s chart (finite difference in the gnomonic plane)
-    def iAxisBearing(f: Int, latR: Double, lngR: Double): Double = {
-      val az = geoAzimuth(FaceLat(f), FaceLng(f), latR, lngR)
-      val dot = max(-1.0, min(1.0,
-        cos(latR) * cos(lngR) * FaceX(f) + cos(latR) * sin(lngR) * FaceY(f) +
-          sin(latR) * FaceZ(f)))
-      val theta = posAngle(FaceAz0(f) - posAngle(az))
-      val r = tan(acos(dot)) / Res0UGnomonic
-      val (x, y) = (r * cos(theta), r * sin(theta))
-      val eps = 1e-7
-      val (la2, lo2) = hex2dToGeoRes0(f, x + eps, y)
-      geoAzimuth(latR, lngR, la2, lo2)
-    }
-
-    // fill the runtime table
-    for ((root, members) <- clusters) {
-      val num = cellNum(root)
-      val home = homeOf(root)
-      val (hLat, hLng) = reps(root).center
-      val betaHome = iAxisBearing(home.f, hLat, hLng)
-      for (n <- members) {
-        val a = apps(n)
-        val idx = tabIdx(a.f, a.i, a.j, a.k)
-        TabBc(idx) = num
-        if (a.f == home.f && a.i == home.i && a.j == home.j && a.k == home.k) {
-          TabRot(idx) = 0
-        } else if (!pentNums.contains(num)) {
-          // rotation via bearing mismatch at THIS appearance's center
-          // (spillovers measure at their own distorted center through
-          // their own chart — the frames' relative twist is what counts)
-          val (aLat, aLng) = a.center
-          val bH = iAxisBearing(home.f, aLat, aLng)
-          val bF = iAxisBearing(a.f, aLat, aLng)
-          val diff = posAngle(bF - bH)
-          val nRot = round(diff / (PI / 3.0)).toInt % 6
-          val resid = abs(diff - nRot * (PI / 3.0))
-          // charts twist slightly off the exact 60° multiple (gnomonic
-          // distortion at off-boundary measurement points) but stay far
-          // from the 30° rounding ambiguity; boundary-consistency tests
-          // in H3Spec validate every entry end-to-end
-          require(resid < 0.45 || abs(resid - TwoPi) < 0.45,
-            f"ambiguous grid rotation at $a: $resid%.2e")
-          // NEGATED (round 12): bearings are azimuths (clockwise), the
-          // digit rotation cycle is counter-clockwise — the raw
-          // bearing quantization yields the INVERSE rotation. The
-          // digit-level cross-chart consistency law (for edge isometry
-          // rotation c: rot_F − rot_G ≡ +c (mod 6), proven via the
-          // aperture-7/isometry commutation and pinned exhaustively by
-          // H3Spec's cross-chart consistency laws) picks the sign: with
-          // the raw nRot every c∈{1,5} edge pair violates it by 2c, with the
-          // negation all pairs satisfy it. c=3 edges (280 of 420 slot
-          // pairs) are sign-blind, which is how the raw sign survived
-          // ten rounds of single-chart tests.
-          TabRot(idx) = (6 - nRot) % 6
-        } else {
-          // pentagons: the 5 faces fan at 72°, not 60° — resolved by the
-          // consistency search below, -1 until then
-          TabRot(idx) = -1
-        }
-      }
+  /** One pass over the (face, i, j, k, bc, rot, pent, cw) rows. */
+  private def loadBaseCells(): Unit = {
+    java.util.Arrays.fill(TabBc, -1)
+    val t = H3Tables.BaseCells
+    var n = 0
+    while (n < t.length) {
+      val f = t(n); val bc = t(n + 4)
+      val idx = tabIdx(f, t(n + 1), t(n + 2), t(n + 3))
+      TabBc(idx) = bc
+      TabRot(idx) = t(n + 5)
+      IsPent(bc) = t(n + 6) == 1
+      if (t(n + 7) == 1) PentCwOffset(bc * 32 + f) = true
+      n += H3Tables.BaseCellCols
     }
   }
 
-  deriveTables()
+  loadBaseCells()
 
   // ------------------------------------------------------------------
   // Core pipeline: raw chart-local digits, then table-driven finishing
   // ------------------------------------------------------------------
   /** Aperture-7 digit aggregation of the chart-local res-`res` axial
     * coordinate (a, b): the one loop behind [[assembleFromChart]]
-    * (per row and in traversal) and the derivation's [[rawIndex]].
+    * (per row and in traversal) and the table derivation's raw index.
     * Returns the RAW index — mode, res and digits set, digits in the
     * chart's own grid orientation, no rotation applied — with the
     * base-cell field holding the normalized res-0 ijk as its face-table
     * slot `i·9 + j·3 + k` ([[tabIdx]] without the face). Returns -1
     * when a digit is not a unit vector or the res-0 coordinate falls
     * outside the face's 27-slot table. */
-  private def aggregateDigits(a: Long, b: Long, res: Int): Long = {
+  private[functions] def aggregateDigits(a: Long, b: Long, res: Int): Long = {
     var i = a; var j = b; var k = 0L
     var m = min(i, min(j, k)); i -= m; j -= m; k -= m
     var h = (1L << 59) | (res.toLong << 52) | ((1L << 45) - 1)
@@ -551,32 +365,17 @@ object H3 {
     (h & ~(0x7FL << 45)) | ((i * 9 + j * 3 + k) << 45)
   }
 
-  /** geo (radians) → (nearest face, raw index at `res` in that face's
-    * chart), for the pentagon derivation below, which reads the res-0
-    * slot off the raw index's base-cell field. Throws where the
-    * aggregation fails: the derivation never samples such a point. */
-  private def rawIndex(latR: Double, lngR: Double, res: Int): (Int, Long) = {
-    val face = nearestFace(latR, lngR)
-    val p = projectRound(latR, lngR, res, face)
-    val raw = aggregateDigits(packedA(p), packedB(p), res)
-    if (raw < 0)
-      throw new IllegalStateException(
-        s"raw index of ($latR, $lngR) res $res on face $face: non-unit " +
-          "digit or res-0 coordinate off the face table")
-    (face, raw)
-  }
-
   /** Face-table slot of a raw index ([[aggregateDigits]]). */
-  @inline private def rawSlot(face: Int, raw: Long): Int =
+  @inline private[functions] def rawSlot(face: Int, raw: Long): Int =
     face * 27 + ((raw >>> 45) & 0x7F).toInt
 
   /** Apply base-cell number + orientation to a raw index. Parameterized
-    * so the pentagon consistency search can trial candidate rotations;
-    * runtime calls always pass the resolved table values. */
-  @inline private def finishWith(hRaw: Long, bc: Int, rot: Int,
-      cwEscape: Boolean): Long = {
+    * so the pentagon consistency search of the table derivation can
+    * trial candidate rotations; runtime calls pass the table values. */
+  @inline private[functions] def finishWith(hRaw: Long, bc: Int,
+      pent: Boolean, rot: Int, cwEscape: Boolean): Long = {
     var h = (hRaw & ~(0x7FL << 45)) | (bc.toLong << 45)
-    if (IsPent(bc)) {
+    if (pent) {
       if (leadingNonZeroDigit(h) == 1) {
         h = if (cwEscape) rotate60(h, CwDigit) else rotate60(h, CcwDigit)
       }
@@ -593,7 +392,7 @@ object H3 {
     * (a, b) at `res` on `face`: digit aggregation, then the face
     * table's base cell and rotation. -1 when the aggregation fails or
     * lands on a slot the face does not cover. */
-  private def assembleFromChart(face: Int, a: Long, b: Long,
+  private[functions] def assembleFromChart(face: Int, a: Long, b: Long,
       res: Int): Long = {
     val raw = aggregateDigits(a, b, res)
     if (raw < 0) return -1L
@@ -602,216 +401,13 @@ object H3 {
     if (bc < 0) return -1L
     val rot = TabRot(idx)
     if (rot < 0) return -1L
-    finishWith(raw, bc, rot, PentCwOffset(bc * 32 + face))
+    finishWith(raw, bc, IsPent(bc), rot, PentCwOffset(bc * 32 + face))
   }
 
   // ------------------------------------------------------------------
-  // Pentagon rotation resolution (the consistency search promised in
-  // the object scaladoc). The 5 faces around an icosahedron vertex fan
-  // at 72°, so a pentagon appearance's grid rotation cannot be read off
-  // a 60°-quantized bearing mismatch the way hexagon appearances can.
-  // Instead it is pinned empirically: a point pair straddling the
-  // boundary between two faces' nearest-face regions (1e-9 rad apart,
-  // interior to the same res-4 subcell with probability 1) MUST index
-  // identically through both charts. Walking the fan from the home face
-  // (rotation 0 by definition of canonical orientation) and brute-
-  // forcing each next face's (rot ∈ 0..5, cwEscape ∈ {t,f}) against the
-  // shared straddle pairs pins a unique assignment; a final global pass
-  // re-validates every pair and checks no finished index carries a
-  // leading K digit (the deleted subsequence).
-  // ------------------------------------------------------------------
-  private def resolvePentagons(): Unit = {
-    // Class III only: at even (Class II) resolutions the face boundary
-    // rays from a pentagon vertex are hex-lattice mirror lines (30° +
-    // 60°k from the chart axes) and run exactly along subcell edges, so
-    // a straddling pair legitimately sits in two different subcells and
-    // can never agree. The Class III grids are rotated ±19.1° off the
-    // face axes, leaving boundary pairs generically interior to one
-    // subcell — which is what the consistency constraint needs. Two
-    // resolutions: deeper digits discriminate rotations that shallow
-    // near-vertex (leading-zero-heavy) pairs cannot.
-    val SampleResList = Array(5, 7)
-    val NAz = 2048
-    val Radii = Array(0.03, 0.045, 0.06, 0.08, 0.095, 0.115) // rad
-
-    for (bc <- 0 until NumBaseCells if IsPent(bc)) {
-      val vLat = PentLat(bc); val vLng = PentLng(bc)
-
-      // sample: (face, rawH); az-major order per radius
-      case class S(face: Int, raw: Long)
-      def sampleAt(az: Double, rho: Double, res: Int): Option[S] = {
-        val (la, lo) = geoAzDistance(vLat, vLng, az, rho)
-        val (f, raw) = rawIndex(la, lo, res)
-        if (TabBc(rawSlot(f, raw)) == bc) Some(S(f, raw)) else None
-      }
-
-      // ring samples, computed once per (res, radius) and reused by the
-      // pair builder below and the global validation pass at the end
-      val rings: IndexedSeq[(Int, Double, Array[S])] = for {
-        res <- SampleResList.toIndexedSeq; rho <- Radii.toIndexedSeq
-      } yield (res, rho, Array.tabulate(NAz) { n =>
-        sampleAt(n * TwoPi / NAz, rho, res).orNull
-      })
-
-      // straddle pairs across face-region boundaries: bisect between
-      // consecutive ring samples that landed on different faces
-      val pairs = scala.collection.mutable.ArrayBuffer.empty[(S, S)]
-      for ((res, rho, ring) <- rings; n <- 0 until NAz) {
-        val a = ring(n); val b = ring((n + 1) % NAz)
-        if (a != null && b != null && a.face != b.face) {
-          var lo = n * TwoPi / NAz; var hi = (n + 1) * TwoPi / NAz
-          var sLo = a; var sHi = b
-          var it = 0
-          while (hi - lo > 1e-9 && it < 64) {
-            val mid = (lo + hi) / 2
-            sampleAt(mid, rho, res) match {
-              case Some(m) if m.face == sLo.face => lo = mid; sLo = m
-              case Some(m) => hi = mid; sHi = m
-              case None => it = 64 // fell out of the cell; drop pair
-            }
-            it += 1
-          }
-          if (hi - lo <= 1e-9 && sLo.face != sHi.face) pairs += ((sLo, sHi))
-        }
-      }
-
-      // member appearances seen in samples, grouped by face; fan order
-      // around the vertex by face-center azimuth
-      val faces = pairs.flatMap(p => Seq(p._1.face, p._2.face)).distinct
-      val homeFace = {
-        // home = the appearance deriveTables marked rot 0 (i-vertex face)
-        val fs = for {
-          f <- 0 until 20; i <- 0 to 2; j <- 0 to 2; k <- 0 to 2
-          if TabBc(tabIdx(f, i, j, k)) == bc && TabRot(tabIdx(f, i, j, k)) == 0
-        } yield f
-        require(fs.nonEmpty, s"pentagon $bc: no home appearance")
-        fs.head
-      }
-      require(faces.contains(homeFace),
-        s"pentagon $bc: home face $homeFace not reached by sampling")
-
-      // candidate state per face: (rot, cwEscape)
-      val assign = scala.collection.mutable.Map.empty[Int, (Int, Boolean)]
-      // home rot is 0 by construction; its cw flag joins the first edge
-      // search below
-      def finishedOf(s: S, st: (Int, Boolean)): Long =
-        finishWith(s.raw, bc, st._1, st._2)
-
-      def consistent(p: (S, S), stA: (Int, Boolean), stB: (Int, Boolean)): Boolean =
-        finishedOf(p._1, stA) == finishedOf(p._2, stB)
-
-      // Joint CSP over the whole fan. A single boundary curve's digit
-      // patterns can be rotation-degenerate (the sampled sliver maps
-      // into a narrow digit sector where escape+rot compositions
-      // coincide), so greedy edge-at-a-time propagation can stall on an
-      // ambiguous edge. Enumerating assignments over all faces at once
-      // uses BOTH edges of every face simultaneously, which pins the
-      // fan uniquely. Home rot is 0 by definition; each other face has
-      // rot ∈ 0..5 and every face an independent cwEscape flag.
-      // cw flags are only constrained by leading-K samples; a genuinely
-      // unconstrained flag survives with both values — survivors must
-      // then agree on all rots, and the ccw default (false) is taken.
-      val otherFaces = faces.filterNot(_ == homeFace).toIndexedSeq
-      val edges: Map[(Int, Int), IndexedSeq[(S, S)]] = pairs.toIndexedSeq
-        .groupBy(p => (min(p._1.face, p._2.face), max(p._1.face, p._2.face)))
-      // rot ∈ 0..4: the pentagon digit rotation has order 5 (five
-      // applications step through the five non-deleted sectors and
-      // return — rot 5 ≡ rot 0), so 5 would only manufacture a
-      // spurious ambiguous duplicate of 0
-      val combos: IndexedSeq[(Int, Boolean)] = for {
-        rot <- 0 to 4; cw <- IndexedSeq(false, true)
-      } yield (rot, cw)
-      val homeCombos: IndexedSeq[(Int, Boolean)] =
-        IndexedSeq((0, false), (0, true))
-      def combosOf(f: Int): IndexedSeq[(Int, Boolean)] =
-        if (f == homeFace) homeCombos else combos
-      // per-edge compatibility tables
-      val compat: Map[(Int, Int), Array[Array[Boolean]]] = edges.map {
-        case ((fA, fB), ps) =>
-          val ca = combosOf(fA); val cb = combosOf(fB)
-          val t = Array.ofDim[Boolean](ca.size, cb.size)
-          for (ia <- ca.indices; ib <- cb.indices) {
-            t(ia)(ib) = ps.forall { p =>
-              val (a, b) = if (p._1.face == fA) (p._1, p._2) else (p._2, p._1)
-              consistent((a, b), ca(ia), cb(ib))
-            }
-          }
-          ((fA, fB), t)
-      }
-      // enumerate joint assignments (≤ 2 × 12^4 = 41k)
-      val faceIdx: Map[Int, Int] =
-        (homeFace +: otherFaces).zipWithIndex.toMap
-      val survivors = scala.collection.mutable.ArrayBuffer.empty[Array[Int]]
-      val cur = new Array[Int]((otherFaces.size + 1))
-      def rec(d: Int): Unit = {
-        if (d > otherFaces.size) { survivors += cur.clone(); return }
-        val f = if (d == 0) homeFace else otherFaces(d - 1)
-        val cs = combosOf(f)
-        var ci = 0
-        while (ci < cs.size) {
-          cur(d) = ci
-          // check edges to already-assigned faces
-          val ok = edges.keys.forall { case (fA, fB) =>
-            val dA = faceIdx(fA); val dB = faceIdx(fB)
-            if (dA > d || dB > d) true
-            else {
-              val t = compat((fA, fB))
-              t(cur(dA))(cur(dB))
-            }
-          }
-          if (ok) rec(d + 1)
-          ci += 1
-        }
-      }
-      rec(0)
-      require(survivors.nonEmpty, s"pentagon $bc: fan CSP has no solution")
-      // rots must be pinned uniquely; cw flags may be unconstrained
-      for (d <- 0 to otherFaces.size) {
-        val f = if (d == 0) homeFace else otherFaces(d - 1)
-        val rots = survivors.map(a => combosOf(f)(a(d))._1).distinct
-        require(rots.size == 1,
-          s"pentagon $bc: rotation ambiguous on face $f: $rots")
-      }
-      // deterministic pick: the first survivor (enumeration order puts
-      // cw=false first at every level)
-      val picked = survivors.head
-      for (d <- 0 to otherFaces.size) {
-        val f = if (d == 0) homeFace else otherFaces(d - 1)
-        assign(f) = combosOf(f)(picked(d))
-      }
-
-      // global validation: every straddle pair agrees; no finished index
-      // leads with K
-      for (p <- pairs) {
-        require(consistent(p, assign(p._1.face), assign(p._2.face)),
-          s"pentagon $bc: global pair validation failed on " +
-            s"${p._1.face}-${p._2.face}")
-      }
-      for ((_, _, ring) <- rings; s <- ring if s != null) {
-        val fin = finishedOf(s, assign(s.face))
-        require(leadingNonZeroDigit(fin) != 1,
-          s"pentagon $bc: finished index leads with K on face ${s.face}")
-      }
-
-      // write through to the runtime tables: every table slot of this bc
-      // on an assigned face gets that face's rotation
-      for {
-        f <- faces; i <- 0 to 2; j <- 0 to 2; k <- 0 to 2
-        idx = tabIdx(f, i, j, k) if TabBc(idx) == bc
-      } {
-        val (rot, cw) = assign(f)
-        TabRot(idx) = rot
-        if (cw) PentCwOffset(bc * 32 + f) = true
-      }
-    }
-  }
-
-  resolvePentagons()
-
-  // ------------------------------------------------------------------
-  // Face-neighbor lattice maps — the derived equivalent of H3's
-  // faceNeighbors / _adjustOverage tables (h3lib faceijk.c). For each
-  // face edge, the adjacent face and the EXACT lattice isometry
+  // Face-neighbor lattice maps — H3's faceNeighbors / _adjustOverage
+  // tables (h3lib faceijk.c), filled from their literal in H3Tables.
+  // For each face edge, the adjacent face and the EXACT lattice isometry
   // (60°·c ccw rotation + integer axial translation, per res) that
   // carries chart-local coordinates past the edge onto the neighbor's
   // chart. Why an exact integer map exists: the two gnomonic charts
@@ -829,7 +425,7 @@ object H3 {
   /** Chart-local axial coords of a res-0 lattice point at `res`:
     * the zero-digit alternating aperture-7 descent of [[descendDigits]]
     * in axial form (downAp7 at odd steps, downAp7r at even). */
-  private def descend0Axial(a0: Long, b0: Long, res: Int): (Long, Long) = {
+  private[functions] def descend0Axial(a0: Long, b0: Long, res: Int): (Long, Long) = {
     var a = a0; var b = b0
     var r = 1
     while (r <= res) {
@@ -843,108 +439,72 @@ object H3 {
   /** Res-0 face vertices (pentagon centers) in axial coords: the
     * normalized ijk (2,0,0), (0,2,0), (0,0,2). Edge e joins vertex e
     * and vertex (e+1)%3. */
-  private val FaceVertAxial: Array[(Long, Long)] =
+  private[functions] val FaceVertAxial: Array[(Long, Long)] =
     Array((2L, 0L), (0L, 2L), (-2L, -2L))
 
   /** Face-region triangle vertices per res (axial, Long) — the face's
     * own chart covers exactly this triangle; coordinates outside it
     * belong to a neighboring face's chart. */
-  private val TriW: Array[Array[(Long, Long)]] =
-    Array.tabulate(MaxRes + 1) { r =>
-      FaceVertAxial.map { case (a, b) => descend0Axial(a, b, r) }
+  private[functions] val TriW: Array[Array[(Long, Long)]] = {
+    val w = new Array[Array[(Long, Long)]](MaxRes + 1)
+    var r = 0
+    while (r <= MaxRes) {
+      w(r) = new Array[(Long, Long)](3)
+      var v = 0
+      while (v < 3) {
+        w(r)(v) = descend0Axial(FaceVertAxial(v)._1, FaceVertAxial(v)._2, r)
+        v += 1
+      }
+      r += 1
     }
+    w
+  }
 
   /** EdgeFace(f)(e): the face adjacent to `f` across edge `e`. */
-  private val EdgeFace = Array.ofDim[Int](20, 3)
+  private[functions] val EdgeFace = new Array[Array[Int]](20)
   /** Per (face, edge, res): ccw-60° rotation count and axial
     * translation of the F→neighbor chart map p_G = R^c(p_F) + T. */
-  private val EdgeRot = Array.ofDim[Int](20, 3, MaxRes + 1)
-  private val EdgeTA = Array.ofDim[Long](20, 3, MaxRes + 1)
-  private val EdgeTB = Array.ofDim[Long](20, 3, MaxRes + 1)
+  private[functions] val EdgeRot = new Array[Array[Array[Int]]](20)
+  private[functions] val EdgeTA = new Array[Array[Array[Long]]](20)
+  private[functions] val EdgeTB = new Array[Array[Array[Long]]](20)
 
-  private def deriveFaceNeighbors(): Unit = {
-    // physical positions of each face's three vertices
-    val pos = Array.ofDim[Double](20, 3, 3)
-    for (f <- 0 until 20; v <- 0 until 3) {
-      val (a, b) = FaceVertAxial(v)
-      val (la, lo) = hex2dToGeoRes0(f, a.toDouble - 0.5 * b, b * Sin60)
-      pos(f)(v)(0) = cos(la) * cos(lo)
-      pos(f)(v)(1) = cos(la) * sin(lo)
-      pos(f)(v)(2) = sin(la)
-    }
-    @inline def same(p: Array[Double], q: Array[Double]): Boolean = {
-      val dx = p(0) - q(0); val dy = p(1) - q(1); val dz = p(2) - q(2)
-      dx * dx + dy * dy + dz * dz < 1e-18
-    }
-    @inline def rotC(a0: Long, b0: Long, c: Int): (Long, Long) = {
-      var a = a0; var b = b0
-      var k = 0
-      while (k < c) { val t = a - b; b = a; a = t; k += 1 } // ccw60 axial
-      (a, b)
-    }
-    for (f <- 0 until 20; e <- 0 until 3) {
-      val pA = pos(f)(e); val pB = pos(f)((e + 1) % 3)
-      val gs = for {
-        g <- 0 until 20 if g != f
-        va <- 0 until 3 if same(pos(g)(va), pA)
-        vb <- 0 until 3 if same(pos(g)(vb), pB)
-      } yield (g, va, vb)
-      require(gs.size == 1, s"face $f edge $e: adjacency not unique: $gs")
-      val (g, va, vb) = gs.head
-      EdgeFace(f)(e) = g
-      for (r <- 0 to MaxRes) {
-        val aF = descend0Axial(FaceVertAxial(e)._1, FaceVertAxial(e)._2, r)
-        val bF = descend0Axial(FaceVertAxial((e + 1) % 3)._1,
-          FaceVertAxial((e + 1) % 3)._2, r)
-        val aG = descend0Axial(FaceVertAxial(va)._1, FaceVertAxial(va)._2, r)
-        val bG = descend0Axial(FaceVertAxial(vb)._1, FaceVertAxial(vb)._2, r)
-        val dF = (bF._1 - aF._1, bF._2 - aF._2)
-        val dG = (bG._1 - aG._1, bG._2 - aG._2)
-        var c = -1
-        for (k <- 0 to 5) {
-          val (ra, rb) = rotC(dF._1, dF._2, k)
-          if (ra == dG._1 && rb == dG._2) {
-            require(c < 0, s"face $f edge $e res $r: rotation ambiguous")
-            c = k
-          }
-        }
-        require(c >= 0, s"face $f edge $e res $r: no 60° rotation maps the edge")
-        val (xa, xb) = rotC(aF._1, aF._2, c)
-        EdgeRot(f)(e)(r) = c
-        EdgeTA(f)(e)(r) = aG._1 - xa
-        EdgeTB(f)(e)(r) = aG._2 - xb
-        // second endpoint must map exactly under the same isometry
-        val (ya, yb) = rotC(bF._1, bF._2, c)
-        require(ya + EdgeTA(f)(e)(r) == bG._1 && yb + EdgeTB(f)(e)(r) == bG._2,
-          s"face $f edge $e res $r: endpoint B does not map")
+  /** Allocates the edge arrays, then one pass over the (face, edge,
+    * neighbour, rot, T₀a, T₀b) rows: the rotation is res-invariant, the
+    * res-r translation is T₀ descended r aperture-7 steps. */
+  private def loadEdges(): Unit = {
+    var face = 0
+    while (face < 20) {
+      EdgeFace(face) = new Array[Int](3)
+      EdgeRot(face) = new Array[Array[Int]](3)
+      EdgeTA(face) = new Array[Array[Long]](3)
+      EdgeTB(face) = new Array[Array[Long]](3)
+      var edge = 0
+      while (edge < 3) {
+        EdgeRot(face)(edge) = new Array[Int](MaxRes + 1)
+        EdgeTA(face)(edge) = new Array[Long](MaxRes + 1)
+        EdgeTB(face)(edge) = new Array[Long](MaxRes + 1)
+        edge += 1
       }
-      // geometric cross-check at a few res: the shared-edge midpoint
-      // lattice point must unproject to the SAME physical point through
-      // both charts after mapping (catches orientation/parity errors)
-      for (r <- Seq(0, 1, 2, 5)) {
-        val m0a = (FaceVertAxial(e)._1 + FaceVertAxial((e + 1) % 3)._1) / 2
-        val m0b = (FaceVertAxial(e)._2 + FaceVertAxial((e + 1) % 3)._2) / 2
-        val (mfa, mfb) = descend0Axial(m0a, m0b, r)
-        val (ra, rb) = rotC(mfa, mfb, EdgeRot(f)(e)(r))
-        val ga = ra + EdgeTA(f)(e)(r)
-        val gb = rb + EdgeTB(f)(e)(r)
-        val (laF, loF) = hex2dToGeo(f, mfa.toDouble - 0.5 * mfb,
-          mfb * Sin60, r)
-        val (laG, loG) = hex2dToGeo(g, ga.toDouble - 0.5 * gb,
-          gb * Sin60, r)
-        val d = cos(laF) * cos(loF) * cos(laG) * cos(loG) +
-          cos(laF) * sin(loF) * cos(laG) * sin(loG) + sin(laF) * sin(laG)
-        // tolerance: the published face constants carry ~1e-9 residual
-        // (deriveTables' own clustering band), which the two gnomonic
-        // round trips amplify to ~1e-8; 1e-7 rad is still orders below
-        // the finest pitch checked here (res 5 ≈ 2e-3 rad)
-        require(acos(max(-1.0, min(1.0, d))) < 1e-7,
-          s"face $f edge $e res $r: mapped edge midpoint diverges")
+      face += 1
+    }
+    val t = H3Tables.Edges
+    var n = 0
+    while (n < t.length) {
+      val f = t(n); val e = t(n + 1)
+      EdgeFace(f)(e) = t(n + 2)
+      var r = 0
+      while (r <= MaxRes) {
+        val (a, b) = descend0Axial(t(n + 4), t(n + 5), r)
+        EdgeRot(f)(e)(r) = t(n + 3)
+        EdgeTA(f)(e)(r) = a
+        EdgeTB(f)(e)(r) = b
+        r += 1
       }
+      n += H3Tables.EdgeCols
     }
   }
 
-  deriveFaceNeighbors()
+  loadEdges()
 
   /** Translate a chart-local res-`res` axial coordinate lying outside
     * `face`'s triangular region onto the chart that owns it (H3's
@@ -1015,15 +575,22 @@ object H3 {
     * so regions are connected and flanking charts cannot disagree
     * about a cell. One chart projection per point, no allocation. */
   def latLngToCell(latDeg: Double, lngDeg: Double, res: Int): Long = {
-    require(res >= 0 && res <= MaxRes, s"resolution $res out of [0,15]")
+    if (res < 0 || res > MaxRes) badCell(latDeg, lngDeg, res)
     val latR = toRadians(latDeg); val lngR = toRadians(lngDeg)
     val face = nearestFace(latR, lngR)
     val packed = projectRound(latR, lngR, res, face)
     val h = assembleOwned(
       overageNormalize(face, packedA(packed), packedB(packed), res), res)
-    require(h >= 0, s"unresolvable coordinate ($latDeg, $lngDeg) res $res")
+    if (h < 0) badCell(latDeg, lngDeg, res)
     h
   }
+
+  /** [[latLngToCell]]'s failure, out of line: a plain throw, not
+    * `require`, so the first call of a JVM need not load `Predef`. */
+  private def badCell(latDeg: Double, lngDeg: Double, res: Int): Nothing =
+    throw new IllegalArgumentException(
+      if (res < 0 || res > MaxRes) s"resolution $res out of [0,15]"
+      else s"unresolvable coordinate ($latDeg, $lngDeg) res $res")
 
   /** (lat°, lng°, res) → canonical lowercase 15-hex-digit cell id. */
   def latLngToCellString(latDeg: Double, lngDeg: Double, res: Int): String =
@@ -1031,11 +598,13 @@ object H3 {
 
   def isPentagonCell(h: Long): Boolean = IsPent(getBaseCell(h))
 
-  /** Pentagon cell centers (icosahedron vertices), degrees — exposed
-    * for tests and for callers that need to locate/avoid pentagons. */
-  def pentagonCenters: IndexedSeq[(Int, Double, Double)] =
+  /** Pentagon cell centers (icosahedron vertices) as (base cell, lat°,
+    * lng°): the centers of the 12 res-0 pentagon cells, exposed for
+    * tests and for callers that need to locate/avoid pentagons. */
+  lazy val pentagonCenters: IndexedSeq[(Int, Double, Double)] =
     (0 until NumBaseCells).filter(IsPent).map { bc =>
-      (bc, toDegrees(PentLat(bc)), toDegrees(PentLng(bc)))
+      val (lat, lng) = cellToLatLng((1L << 59) | (bc.toLong << 45) | ((1L << 45) - 1))
+      (bc, lat, lng)
     }
 
   // ------------------------------------------------------------------
@@ -1046,7 +615,7 @@ object H3 {
     * aperture-7 scaling (÷√7 per res step) and the Class III grid
     * rotation (+[[Ap7Rot]] at odd res), then invert the gnomonic
     * projection along the azimuth from the face center. */
-  private def hex2dToGeo(face: Int, x: Double, y: Double,
+  private[functions] def hex2dToGeo(face: Int, x: Double, y: Double,
       res: Int): (Double, Double) = {
     var rr = sqrt(x * x + y * y)
     if (rr < 1e-15) return (FaceLat(face), FaceLng(face))
@@ -1061,9 +630,9 @@ object H3 {
 
   /** Appearances of each base cell across face charts:
     * (face, i, j, k, ccwRot60) per table slot — the inverse tries each
-    * chart and keeps the one the forward path proves right. Built after
-    * [[resolvePentagons]] so pentagon rotations are resolved. */
-  private val BcApps: Array[Array[(Int, Long, Long, Long, Int)]] = {
+    * chart and keeps the one the forward path proves right. Lazy: only
+    * the inverse and the traversal read it, not [[latLngToCell]]. */
+  private lazy val BcApps: Array[Array[(Int, Long, Long, Long, Int)]] = {
     val by = Array.fill(NumBaseCells)(
       List.empty[(Int, Long, Long, Long, Int)])
     for (f <- 19 to 0 by -1; i <- 2 to 0 by -1; j <- 2 to 0 by -1;
@@ -1238,8 +807,8 @@ object H3 {
   // path: integer unit steps in the cell's owning chart, carried across
   // face edges by the derived face-neighbor isometries and assembled in
   // the chart that owns each step — exact by the spec-pinned cross-chart
-  // consistency laws (`countHexIsoMismatches == 0`, the pentagon-orbit
-  // law). No geometric tolerance and no second path.
+  // consistency laws (H3Spec's hexagon and pentagon-orbit laws). No
+  // geometric tolerance and no second path.
   // ------------------------------------------------------------------
   /** The cell's ring-1 neighbours, sorted: 6, or 5 at a pentagon. The
     * canonical integer ring — anchor `h` at its coordinate in its
@@ -1317,103 +886,6 @@ object H3 {
   def gridDiskHex(hex: String, k: Int): Array[String] =
     gridDisk(java.lang.Long.parseUnsignedLong(hex, 16), k)
       .map(c => f"$c%x")
-
-  /** Count of HEXAGON cross-chart assembly disagreements at `res` —
-    * the spec-pinned round-12 consistency invariant (must be 0; see
-    * `H3Spec`): a hexagon assembled in one chart must assemble to the
-    * same cell through the edge isometry (a pentagon on the other side
-    * counts as a disagreement). Pentagon-base-cell ids on the home side
-    * are excluded: their digit strings live in the 5-sector quotient
-    * where the plain hexagonal isometry does not apply across the
-    * deleted axis ([[pentIsoOrbitStats]] checks them). */
-  private[functions] def countHexIsoMismatches(res: Int): Int = {
-    var mis = 0
-    val lim = TriW(res).map(w => max(abs(w._1), abs(w._2))).max + 4
-    for (f <- 0 until 20; e <- 0 until 3) {
-      val g = EdgeFace(f)(e)
-      val c = EdgeRot(f)(e)(res)
-      var a = -lim
-      while (a <= lim) {
-        var b = -lim
-        while (b <= lim) {
-          val hF = assembleFromChart(f, a, b, res)
-          if (hF >= 0 && !IsPent(getBaseCell(hF))) {
-            var xa = a; var xb = b
-            var n = 0
-            while (n < c) { val t = xa - xb; xb = xa; xa = t; n += 1 }
-            xa += EdgeTA(f)(e)(res)
-            xb += EdgeTB(f)(e)(res)
-            val hG = assembleFromChart(g, xa, xb, res)
-            if (hG >= 0 && hF != hG) mis += 1
-          }
-          b += 1
-        }
-        a += 1
-      }
-    }
-    mis
-  }
-
-  /** Pentagon-quotient consistency stats (round 12, the deleted-axis
-    * analogue of [[countHexIsoMismatches]]): for every face edge and
-    * every coordinate X where BOTH charts assemble and the home chart's
-    * cell is a pentagon, the two canonical labels must lie in one
-    * order-5 pentagon-rotation orbit (so in particular share the base
-    * cell — a cross-chart base-cell disagreement counts as out of
-    * orbit), and the orbit step must be the
-    * same for every such coordinate of that (face, edge, baseCell) —
-    * the hexagonal edge isometry is off by exactly the vertex's
-    * curvature defect inside the pentagon's 5-sector quotient, a
-    * CONSTANT per unfolding, never a coordinate-dependent scramble.
-    * Returns (pairsChecked, outOfOrbitCount, stepsPerEdgePentagon).
-    * The spec pins: zero out-of-orbit, singleton step sets, steps in
-    * {0, 1, 4} (identity or ±1 sector). */
-  private[functions] def pentIsoOrbitStats(res: Int)
-      : (Int, Int, Map[(Int, Int, Int), Set[Int]]) = {
-    var pairs = 0
-    var outOfOrbit = 0
-    val steps = scala.collection.mutable.Map
-      .empty[(Int, Int, Int), Set[Int]]
-    val lim = TriW(res).map(w => max(abs(w._1), abs(w._2))).max + 4
-    for (f <- 0 until 20; e <- 0 until 3) {
-      val g = EdgeFace(f)(e)
-      val c = EdgeRot(f)(e)(res)
-      var a = -lim
-      while (a <= lim) {
-        var b = -lim
-        while (b <= lim) {
-          val hF = assembleFromChart(f, a, b, res)
-          if (hF >= 0 && IsPent(getBaseCell(hF))) {
-            var xa = a; var xb = b
-            var n = 0
-            while (n < c) { val t = xa - xb; xb = xa; xa = t; n += 1 }
-            xa += EdgeTA(f)(e)(res)
-            xb += EdgeTB(f)(e)(res)
-            val hG = assembleFromChart(g, xa, xb, res)
-            if (hG >= 0) {
-              pairs += 1
-              var k = 0
-              var cur = hF
-              var found = -1
-              while (k < 5) {
-                if (cur == hG && found < 0) found = k
-                cur = rotatePent60ccw(cur)
-                k += 1
-              }
-              if (found < 0) outOfOrbit += 1
-              else {
-                val key = (f, e, getBaseCell(hF))
-                steps(key) = steps.getOrElse(key, Set.empty) + found
-              }
-            }
-          }
-          b += 1
-        }
-        a += 1
-      }
-    }
-    (pairs, outOfOrbit, steps.toMap)
-  }
 
   // ------------------------------------------------------------------
   // Hierarchy: parent / children / compact / uncompact (h3lib
@@ -2140,19 +1612,4 @@ object H3 {
     uncompactCells(
       cells.map(java.lang.Long.parseUnsignedLong(_, 16)), res)
       .map(c => f"$c%x")
-
-  /** Derived base-cell orientation table dump, for authoring external
-    * oracles: rows (face, i, j, k, baseCell, ccwRot60, isPentagon,
-    * cwOffset). Coordinates are normalized res-0 ijk on `face`. */
-  def baseCellTable: IndexedSeq[(Int, Int, Int, Int, Int, Int, Boolean, Boolean)] =
-    for {
-      f <- 0 until 20; i <- 0 to 2; j <- 0 to 2; k <- 0 to 2
-      idx = tabIdx(f, i, j, k) if TabBc(idx) >= 0
-    } yield {
-      val bc = TabBc(idx)
-      (f, i, j, k, bc, TabRot(idx), IsPent(bc), PentCwOffset(bc * 32 + f))
-    }
-
-
-
 }

@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 
-import graft.plans.{AsOfBackward, AsOfDirection, AsOfJoin, AsOfJoinStrategy}
+import graft.plans.{AsOfBackward, AsOfDirection, AsOfJoin}
 
 /** Public as-of join API over the custom Catalyst operator
   * (graft.plans.AsOfJoin / AsOfJoinExec).
@@ -16,20 +16,12 @@ import graft.plans.{AsOfBackward, AsOfDirection, AsOfJoin, AsOfJoinStrategy}
   * Output schema = left columns ++ right columns (right side nullable);
   * callers disambiguate overlapping names by renaming beforehand, exactly
   * as with a plain `join` on expressions. Time columns must be
-  * timestamp or long (µs comparison either way).
+  * timestamp or long (µs comparison either way). The operator plans
+  * through [[graft.plans.AsOfJoinStrategy]], which
+  * [[graft.plans.GraftExtensions]] injects into every session
+  * `graft.core.GraftSession` builds.
   */
 object AsOf {
-
-  /** Idempotently make the planner aware of [[AsOfJoin]] on this session.
-    * `experimental.extraStrategies` is the public per-session hook, so the
-    * operator works on ANY session — no `spark.sql.extensions` config
-    * needed (GraftExtensions also registers it for sessions built through
-    * GraftSession). */
-  def install(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-  }
 
   /** LEFT OUTER as-of join. `direction = AsOfBackward` (default): each
     * left row gains the right row with equal keys and the GREATEST
@@ -42,7 +34,6 @@ object AsOf {
            leftTime: String, rightTime: String,
            direction: AsOfDirection = AsOfBackward): DataFrame = {
     val spark = left.sparkSession
-    install(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,

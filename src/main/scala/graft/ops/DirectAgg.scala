@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions.{col, count, lit}
 
-import graft.plans.{DirectAggStrategy, SkipPartialAggHint}
+import graft.plans.SkipPartialAggHint
 
 /** Public API over the single-phase skip-partial aggregation path
   * ([[graft.plans.DirectAggStrategy]]): `GROUP BY keys → aggs` with NO
@@ -26,25 +26,16 @@ import graft.plans.{DirectAggStrategy, SkipPartialAggHint}
   * like collect_list) silently fall back to the stock two-phase plan.
   *
   * Use when the grouping keys are near-unique (see the strategy scaladoc
-  * for when the stock partial plan wins instead).
+  * for when the stock partial plan wins instead). The strategy is
+  * injected by [[graft.plans.GraftExtensions]] into every session
+  * `graft.core.GraftSession` builds.
   */
 object DirectAgg {
-
-  /** Idempotently make the planner aware of the hint on this session
-    * (same per-session hook as [[AsOf.install]]). */
-  def install(spark: SparkSession): Unit = synchronized {
-    val already = spark.sessionState.planner.strategies
-      .contains(DirectAggStrategy)
-    if (!already)
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ DirectAggStrategy
-  }
 
   /** `df.groupBy(keys).agg(aggs…)`, planned as one shuffle + one
     * Complete-mode hash aggregate. */
   def aggByKeys(df: DataFrame, keys: Seq[String], aggs: Column*): DataFrame = {
     val spark = df.sparkSession
-    install(spark)
     require(keys.nonEmpty, "aggByKeys needs at least one key column")
     val stock = df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
     stock.queryExecution.analyzed match {
@@ -69,7 +60,6 @@ object DirectAgg {
     * once). */
   def distinctByKeys(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    install(spark)
     val child = df.queryExecution.analyzed
     require(child.output.nonEmpty, "distinctByKeys needs at least one column")
     GraftBridge.ofRows(spark,

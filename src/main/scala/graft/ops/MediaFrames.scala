@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 
-import graft.plans.{FrameStats, FrameStatsStrategy}
+import graft.plans.FrameStats
 
 /** Public API over the columnar [[graft.plans.FrameStats]] operator — the
   * JVM-native `mapInArrow` shape for multimodal columns: per-blob frame
@@ -15,23 +15,12 @@ import graft.plans.{FrameStats, FrameStatsStrategy}
   * }}}
   *
   * Output: (doc_id, n_frames, n_sampled, first_frame_md5); rows with a
-  * NULL payload are skipped (they carry no frames).
+  * NULL payload are skipped (they carry no frames). The operator plans
+  * through [[graft.plans.FrameStatsStrategy]], which
+  * [[graft.plans.GraftExtensions]] injects into every session
+  * `graft.core.GraftSession` builds.
   */
 object MediaFrames {
-
-  /** Idempotently make the planner aware of [[FrameStats]] on this
-    * session (same per-session hook as [[AsOf.install]]). */
-  def install(spark: SparkSession): Unit = synchronized {
-    // planner.strategies covers both experimental.extraStrategies and
-    // extension-injected strategies (GraftExtensions already registers
-    // FrameStatsStrategy on sessions built through GraftSession) — the
-    // old extraStrategies-only probe re-registered on those sessions
-    val already = spark.sessionState.planner.strategies
-      .contains(FrameStatsStrategy)
-    if (!already)
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ FrameStatsStrategy
-  }
 
   /** Frame statistics over an opaque payload column (`string` payloads
     * are read as their raw UTF-8 bytes; `binary` as-is). The child plan
@@ -40,7 +29,6 @@ object MediaFrames {
   def frameStats(blobs: DataFrame, idCol: String, payloadCol: String,
       frameBytes: Int = 64, sampleEvery: Int = 4): DataFrame = {
     val spark = blobs.sparkSession
-    install(spark)
     val child = blobs.select(idCol, payloadCol).queryExecution.analyzed
     val idType = child.output.head.dataType
     val payType = child.output(1).dataType

@@ -51,9 +51,8 @@ final case class AsOfJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoin]] → [[AsOfJoinExec]]. Injected per-session via
-  * `spark.experimental.extraStrategies` (graft.ops.AsOf does this
-  * idempotently) or globally via [[GraftExtensions]]. */
+/** Plans [[AsOfJoin]] → [[AsOfJoinExec]]. Injected by [[GraftExtensions]]
+  * into every session `graft.core.GraftSession` builds. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoin(l, r, lk, rk, lt, rt, dir) =>

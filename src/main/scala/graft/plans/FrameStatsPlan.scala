@@ -51,9 +51,9 @@ final case class FrameStats(
     copy(child = c)
 }
 
-/** Plans [[FrameStats]] → [[FrameStatsExec]]. Injected per-session via
-  * `spark.experimental.extraStrategies` (graft.ops.MediaFrames does this
-  * idempotently) or globally via [[GraftExtensions]]. */
+/** Plans [[FrameStats]] → [[FrameStatsExec]]. Injected by
+  * [[GraftExtensions]] into every session `graft.core.GraftSession`
+  * builds. */
 object FrameStatsStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case FrameStats(fb, se, out, child) =>

@@ -1,7 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, LeafExpression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.{DataType, ObjectType}
 
@@ -31,8 +33,8 @@ import org.apache.spark.sql.types.{DataType, ObjectType}
   *
   * `consts` are trailing kernel arguments fixed at plan time: an `Int` or
   * `Long` becomes a SQL literal, anything else (plane families, word sets,
-  * Bloom words, trained models) an `ObjectType` literal that generated
-  * code reads from its references array.
+  * Bloom words, trained models) a [[KernelConst]] that generated code
+  * reads from its references array.
   */
 case class KernelCall(
     name: String,
@@ -41,7 +43,7 @@ case class KernelCall(
     kernel: Class[_],
     method: String,
     outType: DataType,
-    consts: Seq[Literal],
+    consts: Seq[Expression],
     propagateNull: Boolean,
     returnNullable: Boolean)
     extends RuntimeReplaceable with ImplicitCastInputTypes {
@@ -73,8 +75,37 @@ object KernelCall {
       kernel.getClass, method, out, consts.map(constant), propagateNull,
       returnNullable))
 
-  private def constant(v: Any): Literal = v match {
+  private def constant(v: Any): Expression = v match {
     case _: Int | _: Long => Literal(v)
-    case o: AnyRef => Literal(o, ObjectType(o.getClass))
+    case o: AnyRef => KernelConst(o)
   }
+}
+
+/** A kernel's plan-time object argument, handed to the kernel as is. It
+  * prints by content, not identity: the class name, and for an array its
+  * length and a content hash (`UTF8String[4]{1f2e3d4c}`), so the same plan
+  * explains the same way in every JVM. Equality stays by reference, as
+  * for an object literal. Not foldable: constant folding would re-wrap
+  * the value as a `Literal`, which prints its identity hash. */
+case class KernelConst(value: AnyRef) extends LeafExpression {
+  override def dataType: DataType = ObjectType(value.getClass)
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("kernelConst", value,
+      CodeGenerator.javaType(dataType))
+    ExprCode.forNonNullValue(JavaCode.global(ref, dataType))
+  }
+
+  override def toString: String = value match {
+    case a: Array[_] =>
+      val elem = a.getClass.getComponentType.getSimpleName
+      val hash = java.util.Arrays.deepHashCode(Array[AnyRef](a))
+      f"$elem[${a.length}]{$hash%08x}"
+    case o => o.getClass.getSimpleName
+  }
+
+  override def sql: String = toString
 }

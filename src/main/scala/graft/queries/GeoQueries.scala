@@ -363,7 +363,7 @@ object GeoQueries {
     * planar WKT centroid re-indexed at res 9, which must equal the
     * cell's res-9 digit-0 center-chain descendant — i.e. the boundary
     * centroid must land within ~1% of the cell size from the true
-    * center (measured closure depth is 11, H3FixtureDump). A wrong
+    * center (measured closure depth over the fixture is 11). A wrong
     * corner, a broken ring, or a shifted unprojection moves the
     * centroid or the comma count and fails the hash. Full corner
     * geometry needs the inverse projection and stays

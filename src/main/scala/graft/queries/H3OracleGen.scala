@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.functions.H3Tables
+
 /** Generator for the independent DuckDB-SQL H3 forward (`latLngToCell`)
   * at ANY odd resolution, over an arbitrary keyed point relation —
   * round 12's generalization of the handwritten res-9 forward that has
@@ -50,82 +52,19 @@ object H3OracleGen {
     (18, -1.3077478834556382, -0.6046476437118721, 3.6644388790551923),
     (19, -1.054751253523952, 1.7940752946893965, 2.361378999196363)"""
 
-  /** Base-cell orientation table content (`faceIjkBaseCells`): dumped
-    * once from graft's self-checked derivation (see [[H3OracleSql]]
-    * provenance notes) and fixed as text. */
-  private val bctabRows: String =
-    """    (0,0,0,0,16,0,0,0), (0,0,0,1,18,0,0,0), (0,0,0,2,24,0,1,0), (0,0,1,0,33,0,0,0), (0,0,1,1,30,0,0,0), (0,0,1,2,32,3,0,0),
-    (0,0,2,0,49,1,1,1), (0,0,2,1,48,3,0,0), (0,0,2,2,50,3,0,0), (0,1,0,0,8,0,0,0), (0,1,0,1,5,0,0,0), (0,1,0,2,10,5,0,0),
-    (0,1,1,0,22,0,0,0), (0,1,2,0,41,1,0,0), (0,2,0,0,4,0,1,0), (0,2,0,1,0,5,0,0), (0,2,0,2,2,5,0,0), (0,2,1,0,15,1,0,0),
-    (0,2,2,0,31,1,0,0), (1,0,0,0,2,0,0,0), (1,0,0,1,6,0,0,0), (1,0,0,2,14,0,1,0), (1,0,1,0,10,0,0,0), (1,0,1,1,11,0,0,0),
-    (1,0,1,2,17,3,0,0), (1,0,2,0,24,1,1,1), (1,0,2,1,23,3,0,0), (1,0,2,2,25,3,0,0), (1,1,0,0,0,0,0,0), (1,1,0,1,1,0,0,0),
-    (1,1,0,2,9,5,0,0), (1,1,1,0,5,1,0,0), (1,1,2,0,18,1,0,0), (1,2,0,0,4,1,1,0), (1,2,0,1,3,5,0,0), (1,2,0,2,7,5,0,0),
-    (1,2,1,0,8,1,0,0), (1,2,2,0,16,1,0,0), (2,0,0,0,7,0,0,0), (2,0,0,1,21,0,0,0), (2,0,0,2,38,0,1,0), (2,0,1,0,9,0,0,0),
-    (2,0,1,1,19,0,0,0), (2,0,1,2,34,3,0,0), (2,0,2,0,14,1,1,1), (2,0,2,1,20,3,0,0), (2,0,2,2,36,3,0,0), (2,1,0,0,3,0,0,0),
-    (2,1,0,1,13,0,0,0), (2,1,0,2,29,5,0,0), (2,1,1,0,1,1,0,0), (2,1,2,0,6,1,0,0), (2,2,0,0,4,2,1,0), (2,2,0,1,12,5,0,0),
-    (2,2,0,2,26,5,0,0), (2,2,1,0,0,1,0,0), (2,2,2,0,2,1,0,0), (3,0,0,0,26,0,0,0), (3,0,0,1,42,0,0,0), (3,0,0,2,58,0,1,0),
-    (3,0,1,0,29,0,0,0), (3,0,1,1,43,0,0,0), (3,0,1,2,62,3,0,0), (3,0,2,0,38,1,1,1), (3,0,2,1,47,3,0,0), (3,0,2,2,64,3,0,0),
-    (3,1,0,0,12,0,0,0), (3,1,0,1,28,0,0,0), (3,1,0,2,44,5,0,0), (3,1,1,0,13,1,0,0), (3,1,2,0,21,1,0,0), (3,2,0,0,4,3,1,0),
-    (3,2,0,1,15,5,0,0), (3,2,0,2,31,5,0,0), (3,2,1,0,3,1,0,0), (3,2,2,0,7,1,0,0), (4,0,0,0,31,0,0,0), (4,0,0,1,41,0,0,0),
-    (4,0,0,2,49,0,1,0), (4,0,1,0,44,0,0,0), (4,0,1,1,53,0,0,0), (4,0,1,2,61,3,0,0), (4,0,2,0,58,1,1,1), (4,0,2,1,65,3,0,0),
-    (4,0,2,2,75,3,0,0), (4,1,0,0,15,0,0,0), (4,1,0,1,22,5,0,0), (4,1,0,2,33,5,0,0), (4,1,1,0,28,1,0,0), (4,1,2,0,42,1,0,0),
-    (4,2,0,0,4,4,1,0), (4,2,0,1,8,5,0,0), (4,2,0,2,16,5,0,0), (4,2,1,0,12,1,0,0), (4,2,2,0,26,1,0,0), (5,0,0,0,50,0,0,0),
-    (5,0,0,1,48,0,0,0), (5,0,0,2,49,3,1,0), (5,0,1,0,32,0,0,0), (5,0,1,1,30,3,0,0), (5,0,1,2,33,3,0,0), (5,0,2,0,24,3,1,1),
-    (5,0,2,1,18,3,0,0), (5,0,2,2,16,3,0,0), (5,1,0,0,70,0,0,0), (5,1,0,1,67,0,0,0), (5,1,0,2,66,3,0,0), (5,1,1,0,52,0,0,0),
-    (5,1,2,0,37,3,0,0), (5,2,0,0,83,0,1,0), (5,2,0,1,87,3,0,0), (5,2,0,2,85,3,0,0), (5,2,1,0,74,3,0,0), (5,2,2,0,57,3,0,0),
-    (6,0,0,0,25,0,0,0), (6,0,0,1,23,0,0,0), (6,0,0,2,24,3,1,0), (6,0,1,0,17,0,0,0), (6,0,1,1,11,3,0,0), (6,0,1,2,10,3,0,0),
-    (6,0,2,0,14,3,1,1), (6,0,2,1,6,3,0,0), (6,0,2,2,2,3,0,0), (6,1,0,0,45,0,0,0), (6,1,0,1,39,0,0,0), (6,1,0,2,37,3,0,0),
-    (6,1,1,0,35,0,0,0), (6,1,2,0,27,3,0,0), (6,2,0,0,63,0,1,0), (6,2,0,1,59,3,0,0), (6,2,0,2,57,3,0,0), (6,2,1,0,56,3,0,0),
-    (6,2,2,0,46,3,0,0), (7,0,0,0,36,0,0,0), (7,0,0,1,20,0,0,0), (7,0,0,2,14,3,1,0), (7,0,1,0,34,0,0,0), (7,0,1,1,19,3,0,0),
-    (7,0,1,2,9,3,0,0), (7,0,2,0,38,3,1,1), (7,0,2,1,21,3,0,0), (7,0,2,2,7,3,0,0), (7,1,0,0,55,0,0,0), (7,1,0,1,40,0,0,0),
-    (7,1,0,2,27,3,0,0), (7,1,1,0,54,0,0,0), (7,1,2,0,51,3,0,0), (7,2,0,0,72,0,1,0), (7,2,0,1,60,3,0,0), (7,2,0,2,46,3,0,0),
-    (7,2,1,0,73,3,0,0), (7,2,2,0,71,3,0,0), (8,0,0,0,64,0,0,0), (8,0,0,1,47,0,0,0), (8,0,0,2,38,3,1,0), (8,0,1,0,62,0,0,0),
-    (8,0,1,1,43,3,0,0), (8,0,1,2,29,3,0,0), (8,0,2,0,58,3,1,1), (8,0,2,1,42,3,0,0), (8,0,2,2,26,3,0,0), (8,1,0,0,84,0,0,0),
-    (8,1,0,1,69,0,0,0), (8,1,0,2,51,3,0,0), (8,1,1,0,82,0,0,0), (8,1,2,0,76,3,0,0), (8,2,0,0,97,0,1,0), (8,2,0,1,89,3,0,0),
-    (8,2,0,2,71,3,0,0), (8,2,1,0,98,3,0,0), (8,2,2,0,96,3,0,0), (9,0,0,0,75,0,0,0), (9,0,0,1,65,0,0,0), (9,0,0,2,58,3,1,0),
-    (9,0,1,0,61,0,0,0), (9,0,1,1,53,3,0,0), (9,0,1,2,44,3,0,0), (9,0,2,0,49,3,1,1), (9,0,2,1,41,3,0,0), (9,0,2,2,31,3,0,0),
-    (9,1,0,0,94,0,0,0), (9,1,0,1,86,0,0,0), (9,1,0,2,76,3,0,0), (9,1,1,0,81,0,0,0), (9,1,2,0,66,3,0,0), (9,2,0,0,107,0,1,0),
-    (9,2,0,1,104,3,0,0), (9,2,0,2,96,3,0,0), (9,2,1,0,101,3,0,0), (9,2,2,0,85,3,0,0), (10,0,0,0,57,0,0,0), (10,0,0,1,59,0,0,0),
-    (10,0,0,2,63,3,1,0), (10,0,1,0,74,0,0,0), (10,0,1,1,78,0,0,0), (10,0,1,2,79,3,0,0), (10,0,2,0,83,3,1,1), (10,0,2,1,92,3,0,0),
-    (10,0,2,2,95,3,0,0), (10,1,0,0,37,0,0,0), (10,1,0,1,39,3,0,0), (10,1,0,2,45,3,0,0), (10,1,1,0,52,3,0,0), (10,1,2,0,70,3,0,0),
-    (10,2,0,0,24,0,1,0), (10,2,0,1,23,3,0,0), (10,2,0,2,25,3,0,0), (10,2,1,0,32,3,0,0), (10,2,2,0,50,3,0,0), (11,0,0,0,46,0,0,0),
-    (11,0,0,1,60,0,0,0), (11,0,0,2,72,3,1,0), (11,0,1,0,56,0,0,0), (11,0,1,1,68,0,0,0), (11,0,1,2,80,3,0,0), (11,0,2,0,63,3,1,1),
-    (11,0,2,1,77,3,0,0), (11,0,2,2,90,3,0,0), (11,1,0,0,27,0,0,0), (11,1,0,1,40,3,0,0), (11,1,0,2,55,3,0,0), (11,1,1,0,35,3,0,0),
-    (11,1,2,0,45,3,0,0), (11,2,0,0,14,0,1,0), (11,2,0,1,20,3,0,0), (11,2,0,2,36,3,0,0), (11,2,1,0,17,3,0,0), (11,2,2,0,25,3,0,0),
-    (12,0,0,0,71,0,0,0), (12,0,0,1,89,0,0,0), (12,0,0,2,97,3,1,0), (12,0,1,0,73,0,0,0), (12,0,1,1,91,0,0,0), (12,0,1,2,103,3,0,0),
-    (12,0,2,0,72,3,1,1), (12,0,2,1,88,3,0,0), (12,0,2,2,105,3,0,0), (12,1,0,0,51,0,0,0), (12,1,0,1,69,3,0,0), (12,1,0,2,84,3,0,0),
-    (12,1,1,0,54,3,0,0), (12,1,2,0,55,3,0,0), (12,2,0,0,38,0,1,0), (12,2,0,1,47,3,0,0), (12,2,0,2,64,3,0,0), (12,2,1,0,34,3,0,0),
-    (12,2,2,0,36,3,0,0), (13,0,0,0,96,0,0,0), (13,0,0,1,104,0,0,0), (13,0,0,2,107,3,1,0), (13,0,1,0,98,0,0,0), (13,0,1,1,110,0,0,0),
-    (13,0,1,2,115,3,0,0), (13,0,2,0,97,3,1,1), (13,0,2,1,111,3,0,0), (13,0,2,2,119,3,0,0), (13,1,0,0,76,0,0,0), (13,1,0,1,86,3,0,0),
-    (13,1,0,2,94,3,0,0), (13,1,1,0,82,3,0,0), (13,1,2,0,84,3,0,0), (13,2,0,0,58,0,1,0), (13,2,0,1,65,3,0,0), (13,2,0,2,75,3,0,0),
-    (13,2,1,0,62,3,0,0), (13,2,2,0,64,3,0,0), (14,0,0,0,85,0,0,0), (14,0,0,1,87,0,0,0), (14,0,0,2,83,3,1,0), (14,0,1,0,101,0,0,0),
-    (14,0,1,1,102,0,0,0), (14,0,1,2,100,3,0,0), (14,0,2,0,107,3,1,1), (14,0,2,1,112,3,0,0), (14,0,2,2,114,3,0,0), (14,1,0,0,66,0,0,0),
-    (14,1,0,1,67,3,0,0), (14,1,0,2,70,3,0,0), (14,1,1,0,81,3,0,0), (14,1,2,0,94,3,0,0), (14,2,0,0,49,0,1,0), (14,2,0,1,48,3,0,0),
-    (14,2,0,2,50,3,0,0), (14,2,1,0,61,3,0,0), (14,2,2,0,75,3,0,0), (15,0,0,0,95,0,0,0), (15,0,0,1,92,0,0,0), (15,0,0,2,83,0,1,0),
-    (15,0,1,0,79,0,0,0), (15,0,1,1,78,3,0,0), (15,0,1,2,74,3,0,0), (15,0,2,0,63,1,1,1), (15,0,2,1,59,3,0,0), (15,0,2,2,57,3,0,0),
-    (15,1,0,0,109,0,0,0), (15,1,0,1,108,0,0,0), (15,1,0,2,100,5,0,0), (15,1,1,0,93,0,0,0), (15,1,2,0,77,1,0,0), (15,2,0,0,117,0,1,0),
-    (15,2,0,1,118,5,0,0), (15,2,0,2,114,5,0,0), (15,2,1,0,106,1,0,0), (15,2,2,0,90,1,0,0), (16,0,0,0,90,0,0,0), (16,0,0,1,77,0,0,0),
-    (16,0,0,2,63,0,1,0), (16,0,1,0,80,0,0,0), (16,0,1,1,68,3,0,0), (16,0,1,2,56,3,0,0), (16,0,2,0,72,1,1,1), (16,0,2,1,60,3,0,0),
-    (16,0,2,2,46,3,0,0), (16,1,0,0,106,0,0,0), (16,1,0,1,93,5,0,0), (16,1,0,2,79,5,0,0), (16,1,1,0,99,0,0,0), (16,1,2,0,88,1,0,0),
-    (16,2,0,0,117,4,1,0), (16,2,0,1,109,5,0,0), (16,2,0,2,95,5,0,0), (16,2,1,0,113,1,0,0), (16,2,2,0,105,1,0,0), (17,0,0,0,105,0,0,0),
-    (17,0,0,1,88,0,0,0), (17,0,0,2,72,0,1,0), (17,0,1,0,103,0,0,0), (17,0,1,1,91,3,0,0), (17,0,1,2,73,3,0,0), (17,0,2,0,97,1,1,1),
-    (17,0,2,1,89,3,0,0), (17,0,2,2,71,3,0,0), (17,1,0,0,113,0,0,0), (17,1,0,1,99,5,0,0), (17,1,0,2,80,5,0,0), (17,1,1,0,116,0,0,0),
-    (17,1,2,0,111,1,0,0), (17,2,0,0,117,3,1,0), (17,2,0,1,106,5,0,0), (17,2,0,2,90,5,0,0), (17,2,1,0,121,1,0,0), (17,2,2,0,119,1,0,0),
-    (18,0,0,0,119,0,0,0), (18,0,0,1,111,0,0,0), (18,0,0,2,97,0,1,0), (18,0,1,0,115,0,0,0), (18,0,1,1,110,3,0,0), (18,0,1,2,98,3,0,0),
-    (18,0,2,0,107,1,1,1), (18,0,2,1,104,3,0,0), (18,0,2,2,96,3,0,0), (18,1,0,0,121,0,0,0), (18,1,0,1,116,5,0,0), (18,1,0,2,103,5,0,0),
-    (18,1,1,0,120,0,0,0), (18,1,2,0,112,1,0,0), (18,2,0,0,117,2,1,0), (18,2,0,1,113,5,0,0), (18,2,0,2,105,5,0,0), (18,2,1,0,118,1,0,0),
-    (18,2,2,0,114,1,0,0), (19,0,0,0,114,0,0,0), (19,0,0,1,112,0,0,0), (19,0,0,2,107,0,1,0), (19,0,1,0,100,0,0,0), (19,0,1,1,102,3,0,0),
-    (19,0,1,2,101,3,0,0), (19,0,2,0,83,1,1,1), (19,0,2,1,87,3,0,0), (19,0,2,2,85,3,0,0), (19,1,0,0,118,0,0,0), (19,1,0,1,120,5,0,0),
-    (19,1,0,2,115,5,0,0), (19,1,1,0,108,1,0,0), (19,1,2,0,92,1,0,0), (19,2,0,0,117,1,1,0), (19,2,0,1,121,5,0,0), (19,2,0,2,119,5,0,0),
-    (19,2,1,0,109,1,0,0), (19,2,2,0,95,1,0,0)"""
-
   /** The two shared VALUES CTEs. Emit exactly once per query, at the
     * head of the WITH list, before any [[forward]] block. */
-  val constCtes: String =
+  val constCtes: String = {
+    // the base-cell table (`faceIjkBaseCells` content): the literal the
+    // engine reads, six (face, i, j, k, bc, rot, pent, cw) rows a line
+    val bctab = H3Tables.BaseCells.grouped(H3Tables.BaseCellCols)
+      .map(_.mkString("(", ",", ")")).grouped(6)
+      .map("    " + _.mkString(", ")).mkString(",\n")
     s"""faces(f, flat, flng, faz) AS (VALUES
        |$facesRows),
        |bctab(bf, bi, bj, bk, bc, brot, bpent, bcw) AS (VALUES
-       |$bctabRows)""".stripMargin
+       |$bctab)""".stripMargin
+  }
 
   /** One 60-degree rotation of an aperture-7 digit by `steps` (both SQL
     * snippets): digit -> CCW direction ordinal -> +steps mod 6 ->

@@ -16,10 +16,11 @@ package graft.queries
   * start from, analogous to sharing π): the 20 face centers/azimuths
   * (H3 `faceijk.c`), the res-0 gnomonic unit (3−√5)/2, and the
   * base-cell orientation table (`faceIjkBaseCells`/`baseCellData`
-  * content), embedded in [[H3OracleGen]] as a static 380-row VALUES
-  * literal — dumped ONCE from graft's self-checked derivation (122
-  * cells / 12 pentagons at the published numbers, end-to-end validated
-  * against published H3 vectors in `H3Spec`) and fixed as text. Since
+  * content), rendered by [[H3OracleGen]] as a 380-row VALUES list from
+  * [[graft.functions.H3Tables]] — the one literal the engine also reads,
+  * written from the test-tree derivation (122 cells / 12 pentagons at
+  * the published numbers) and checked against it by `H3TablesSpec`,
+  * end-to-end validated against published H3 vectors in `H3Spec`. Since
   * round 12 the forward's SQL text is produced by [[H3OracleGen]] at
   * any odd resolution (verified to reproduce the round-10 handwritten
   * res-9 text value-for-value before the swap); the probe-grid oracles
@@ -484,7 +485,7 @@ anch AS (SELECT zone_id, h AS anchor FROM $out WHERE gx = 0 AND gy = 0)"""
   // (7·eMax = 10.8·eMin) plus the center cell itself (1.55·eMin) plus
   // the in-ball guarantee. Final localization ≤ 1.05·eMax(15) =
   // 6.2e-6°; the measured minimum center-to-zone-boundary margin over
-  // all fixture candidate cells is 4.3e-5° (H3FixtureDump, spec-pinned
+  // all fixture candidate cells is 4.3e-5° (measured over the fixture, spec-pinned
   // in H3Spec), a 7× margin — the classification at res 15 is
   // therefore exact for these fixtures, and that reliance is the
   // documented condition of this oracle.
@@ -606,7 +607,7 @@ FROM allin ORDER BY zone_id, cell"""
     * (6 for a true pentagon cell — none among the fixtures, but stated
     * conditionally anyway), and the centroid must land in the res-9
     * digit-0 center-chain descendant of the cell — measured closure
-    * depth is 11 for every fixture zone (H3FixtureDump), so res 9
+    * depth is 11 for every fixture zone (measured over the fixture), so res 9
     * carries ~50× margin while still requiring the boundary centroid
     * to sit within ~1% of the cell size from the true center. Full
     * corner geometry is genuinely SQL-inexpressible here (it needs the

@@ -9,10 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * Externally validated: all hexagon vectors below (resolutions 0, 5, 7,
   * 9, 10 across four icosahedron faces). Pentagon cells have NO offline
   * published vectors available here; their orientation is pinned by the
-  * class-init consistency search (straddling face-boundary pairs must
-  * index identically, no finished index may lead with the deleted K
-  * digit — both `require`d at init, so the class failing to load IS the
-  * failing test) and by the internal-consistency tests at the bottom.
+  * table derivation's consistency search (straddling face-boundary pairs
+  * must index identically, no finished index may lead with the deleted
+  * K digit — both `require`d by [[H3Derivation]], whose result
+  * `H3TablesSpec` checks the [[H3Tables]] literal against) and by the
+  * internal-consistency tests at the bottom.
   */
 class H3Spec extends AnyFunSuite {
 
@@ -123,7 +124,7 @@ class H3Spec extends AnyFunSuite {
 
   // ------------------------------------------------------------------
   // Pentagon internal consistency (no offline external vectors; the
-  // orientation search itself is `require`d at class init)
+  // orientation search itself is `require`d by H3Derivation)
   // ------------------------------------------------------------------
   test("pentagon centers index to their own base cell at res 0") {
     for ((bc, lat, lng) <- H3.pentagonCenters) {
@@ -168,9 +169,10 @@ class H3Spec extends AnyFunSuite {
     // indexing the center must reproduce exactly those published values.
     // What is NOT externally validated (no offline off-center pentagon
     // vectors exist in this build): the CCW sub-digit rotation within
-    // each pentagon — that orientation is pinned by the class-init
+    // each pentagon — that orientation is pinned by the derivation's
     // consistency search (face-straddle equality + no leading K digit,
-    // both `require`d at load) and the neighborhood test above.
+    // both `require`d, checked by H3TablesSpec) and the neighborhood
+    // test above.
     for ((bc, lat, lng) <- H3.pentagonCenters; res <- 0 to 15) {
       val want = (1L << 59) | (res.toLong << 52) | (bc.toLong << 45) |
         ((1L << ((H3.MaxRes - res) * 3)) - 1)
@@ -196,7 +198,7 @@ class H3Spec extends AnyFunSuite {
     // Remaining gap, stated precisely: the CCW sub-digit ORIENTATION of
     // off-center cells inside a pentagon base cell at res ≥ 1 has no
     // offline published vectors in this build — it is pinned by the
-    // class-init consistency search (`require`d face-straddle equality,
+    // derivation's consistency search (`require`d face-straddle equality,
     // no-leading-K) and these structural invariants, not by an external
     // oracle. No NYC fixture geometry touches a pentagon.
     for ((bc, lat, lng) <- H3.pentagonCenters) {
@@ -457,10 +459,10 @@ class H3Spec extends AnyFunSuite {
     // maps onto the same base cell". (Pentagon digit strings live in a
     // 5-sector quotient — the plain hexagonal isometry does not apply
     // across the deleted axis; their table-checked law is the
-    // pentagon-quotient orbit test below, plus the class-init straddle
+    // pentagon-quotient orbit test below, plus the derivation's straddle
     // CSP and the pentagon ring/disk tests.)
     for (res <- 0 to 3) {
-      val hexMis = H3.countHexIsoMismatches(res)
+      val hexMis = H3Spec.countHexIsoMismatches(res)
       assert(hexMis === 0,
         s"res $res: $hexMis hexagon cross-chart assembly mismatches")
     }
@@ -484,7 +486,7 @@ class H3Spec extends AnyFunSuite {
     // derived tables' pentagon slots disagree in a way no single
     // defect explains.
     for (res <- 0 to 3) {
-      val (pairs, outOfOrbit, steps) = H3.pentIsoOrbitStats(res)
+      val (pairs, outOfOrbit, steps) = H3Spec.pentIsoOrbitStats(res)
       assert(outOfOrbit === 0,
         s"res $res: $outOfOrbit cross-chart pentagon pairs outside the " +
           "order-5 orbit")
@@ -1182,5 +1184,103 @@ class H3Spec extends AnyFunSuite {
       val bcs = (0 to 15).map(r => H3.getBaseCell(H3.latLngToCell(lat, lng, r)))
       assert(bcs.distinct.size === 1, s"base cell drift at ($lat,$lng): $bcs")
     }
+  }
+}
+
+object H3Spec {
+  import H3._
+
+  /** Count of HEXAGON cross-chart assembly disagreements at `res` (the
+    * cross-chart law; must be 0): a hexagon assembled in one chart must
+    * assemble to the same cell through the edge isometry (a pentagon on
+    * the other side counts as a disagreement). Pentagon-base-cell ids on
+    * the home side are excluded: their digit strings live in the
+    * 5-sector quotient where the plain hexagonal isometry does not apply
+    * across the deleted axis ([[pentIsoOrbitStats]] checks them). */
+  def countHexIsoMismatches(res: Int): Int = {
+    var mis = 0
+    val lim = TriW(res).map(w => math.max(math.abs(w._1), math.abs(w._2))).max + 4
+    for (f <- 0 until 20; e <- 0 until 3) {
+      val g = EdgeFace(f)(e)
+      val c = EdgeRot(f)(e)(res)
+      var a = -lim
+      while (a <= lim) {
+        var b = -lim
+        while (b <= lim) {
+          val hF = assembleFromChart(f, a, b, res)
+          if (hF >= 0 && !IsPent(getBaseCell(hF))) {
+            var xa = a; var xb = b
+            var n = 0
+            while (n < c) { val t = xa - xb; xb = xa; xa = t; n += 1 }
+            xa += EdgeTA(f)(e)(res)
+            xb += EdgeTB(f)(e)(res)
+            val hG = assembleFromChart(g, xa, xb, res)
+            if (hG >= 0 && hF != hG) mis += 1
+          }
+          b += 1
+        }
+        a += 1
+      }
+    }
+    mis
+  }
+
+  /** Pentagon-quotient consistency stats (the deleted-axis analogue of
+    * [[countHexIsoMismatches]]): for every face edge and every coordinate
+    * X where BOTH charts assemble and the home chart's cell is a
+    * pentagon, the two canonical labels must lie in one order-5
+    * pentagon-rotation orbit (so in particular share the base cell — a
+    * cross-chart base-cell disagreement counts as out of orbit), and the
+    * orbit step must be the same for every such coordinate of that
+    * (face, edge, baseCell) — the hexagonal edge isometry is off by
+    * exactly the vertex's curvature defect inside the pentagon's 5-sector
+    * quotient, a CONSTANT per unfolding, never a coordinate-dependent
+    * scramble. Returns (pairsChecked, outOfOrbitCount,
+    * stepsPerEdgePentagon). */
+  def pentIsoOrbitStats(res: Int)
+      : (Int, Int, Map[(Int, Int, Int), Set[Int]]) = {
+    var pairs = 0
+    var outOfOrbit = 0
+    val steps = scala.collection.mutable.Map
+      .empty[(Int, Int, Int), Set[Int]]
+    val lim = TriW(res).map(w => math.max(math.abs(w._1), math.abs(w._2))).max + 4
+    for (f <- 0 until 20; e <- 0 until 3) {
+      val g = EdgeFace(f)(e)
+      val c = EdgeRot(f)(e)(res)
+      var a = -lim
+      while (a <= lim) {
+        var b = -lim
+        while (b <= lim) {
+          val hF = assembleFromChart(f, a, b, res)
+          if (hF >= 0 && IsPent(getBaseCell(hF))) {
+            var xa = a; var xb = b
+            var n = 0
+            while (n < c) { val t = xa - xb; xb = xa; xa = t; n += 1 }
+            xa += EdgeTA(f)(e)(res)
+            xb += EdgeTB(f)(e)(res)
+            val hG = assembleFromChart(g, xa, xb, res)
+            if (hG >= 0) {
+              pairs += 1
+              var k = 0
+              var cur = hF
+              var found = -1
+              while (k < 5) {
+                if (cur == hG && found < 0) found = k
+                cur = rotatePent60ccw(cur)
+                k += 1
+              }
+              if (found < 0) outOfOrbit += 1
+              else {
+                val key = (f, e, getBaseCell(hF))
+                steps(key) = steps.getOrElse(key, Set.empty) + found
+              }
+            }
+          }
+          b += 1
+        }
+        a += 1
+      }
+    }
+    (pairs, outOfOrbit, steps.toMap)
   }
 }

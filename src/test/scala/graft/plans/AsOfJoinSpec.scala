@@ -95,7 +95,6 @@ class AsOfJoinSpec extends SparkSpec {
   test("plans as one exchange per side, no nested loop, merge preserves sort") {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    graft.ops.AsOf.install(s)
     val df = graft.SparkEntry.queries("x_asof_join")(s, sf)
     val plan = df.queryExecution.executedPlan
     val asof = plan.collect { case e: AsOfJoinExec => e }

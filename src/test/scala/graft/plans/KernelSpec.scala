@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{array, col}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.SparkSpec
 import graft.functions._
@@ -234,5 +235,22 @@ class KernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         s"no generated code around the kernel:\n$gPlan")
       assert(generated === c.expected, "generated")
     }
+  }
+
+  test("object constants explain by content: equal arrays, equal plans") {
+    val toks = spark.range(1).select(array(col("id").cast("string")).as("t"))
+    def explained(words: Array[String]): String = {
+      val set = words.map(UTF8String.fromString)
+      val qe = toks.select(KernelCall.column("token_set_count", TokenSetCount,
+        "compute", IntegerType, Seq(col("t") -> ArrayType(StringType)),
+        Seq(set))).queryExecution
+      // expression ids differ between two builds; the plans must not
+      (qe.analyzed.toString + qe.executedPlan.toString).replaceAll("#\\d+", "#")
+    }
+    val a = explained(Array("the", "a", "of"))
+    val b = explained(Array("the", "a", "of"))
+    assert(a === b)
+    assert(a.contains("UTF8String[3]{"), a)
+    assert(a !== explained(Array("the", "a", "an")))
   }
 }
