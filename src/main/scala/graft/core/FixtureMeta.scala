@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Validity stamps for one-time bench fixture layouts (bucketed tables,
@@ -21,22 +21,24 @@ object FixtureMeta {
 
   /** Digest of the source files under `dir/<table>.parquet` for each
     * table: sums of lengths and max mtimes folded per file into one
-    * hex token. Listing-only — O(#files) namenode ops, zero data read. */
+    * hex token. Listing-only — O(#files) namenode ops, zero data read.
+    * Plain statuses, not `listFiles`: its `LocatedFileStatus` copies each
+    * file's owner and permission, which the local filesystem reads by
+    * forking `ls -ld`. */
   def sourceStamp(s: SparkSession, dir: String, tables: Seq[String]): String = {
     val conf = s.sessionState.newHadoopConf()
     var h = 1125899906842597L // FNV-ish fold; stability only matters per-JVM-config
+    def fold(fs: FileSystem, f: FileStatus): Unit =
+      if (f.isDirectory) fs.listStatus(f.getPath).foreach(fold(fs, _))
+      else {
+        h = h * 31 + f.getPath.getName.hashCode
+        h = h * 31 + f.getLen
+        h = h * 31 + f.getModificationTime
+      }
     tables.foreach { t =>
       val p = new Path(s"$dir/$t.parquet")
       val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) {
-        val it = fs.listFiles(p, true)
-        while (it.hasNext) {
-          val f = it.next()
-          h = h * 31 + f.getPath.getName.hashCode
-          h = h * 31 + f.getLen
-          h = h * 31 + f.getModificationTime
-        }
-      }
+      if (fs.exists(p)) fold(fs, fs.getFileStatus(p))
     }
     java.lang.Long.toHexString(h)
   }

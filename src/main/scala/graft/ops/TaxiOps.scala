@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructType}
@@ -207,7 +208,23 @@ object TaxiOps {
     * dimension over the cap fails the query with an error naming
     * `dimension` and the cap, rather than being truncated. */
   def zoneMap(s: TripSchema, zones: DataFrame, cap: Long,
+      dimension: String): Column =
+    zoneMapRow(s, zones, cap, dimension).scalar()
+
+  /** [[zoneMap]] evaluated now, by one job, and returned as a literal of
+    * the same map type, so the queries that look zones up in it run no
+    * subquery. A dimension over the cap fails this evaluation with
+    * [[zoneMap]]'s error. */
+  def zoneMapLiteral(s: TripSchema, zones: DataFrame, cap: Long,
       dimension: String): Column = {
+    val row = zoneMapRow(s, zones, cap, dimension)
+    GraftBridge.column(
+      Literal.create(row.collect().head.get(0), row.schema.head.dataType))
+  }
+
+  /** [[zoneMap]] as a one-row, one-column select. */
+  private def zoneMapRow(s: TripSchema, zones: DataFrame, cap: Long,
+      dimension: String): DataFrame = {
     val len = octet_length(s.zoneRankText)
     val perKey = zones.filter(col(s.zoneKey).isNotNull)
       .coalesce(1)
@@ -228,7 +245,6 @@ object TaxiOps {
           s"of $cap rows; enrich looks zones up in one map and does not " +
           "truncate it")))
         .otherwise(map_from_entries(col("zones"))))
-      .scalar()
   }
 
   /** P5's zone ids, as `pickup_zone_id` and `dropoff_zone_id`. */

@@ -1,12 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.Catalog
 import graft.functions.DateTimeF
+import graft.ops.{TaxiOps, TripSchema}
 
 /** The staged chain's zone-map enrich and one-partition rollup against the
   * formulation they replaced: the `nation` rank window, the two left-join
@@ -42,10 +43,11 @@ class EnrichEquivSpec extends SparkSpec {
     dir
   }
 
-  /** The fixture's `ds` rows plus crafted ones, as the day's part files. */
-  private def adversarialDay(src: String): Unit = {
+  /** The fixture's rows of `day` plus crafted ones, as the day's part
+    * files. */
+  private def adversarialDay(src: String, day: String = ds): Unit = {
     import spark.implicits._
-    def at(hms: String) = s"$ds $hms"
+    def at(hms: String) = s"$day $hms"
     val crafted = Seq[(Option[Long], String, Option[Long], String, Double)](
       // n = 2, pickup zone 3 (two tied names): Night and Noon copies
       (Some(B + 3), at("02:00:00"), Some(B + 5), "click", 1.0),
@@ -67,11 +69,25 @@ class EnrichEquivSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("ts", col("ts").cast("timestamp"))
       .withColumn("props", lit("{}"))
-    val Array(y, m, d) = ds.split("-")
     graft.eventsTbl(spark, sf)
-      .filter(to_date(col("ts")) === lit(ds).cast("date"))
+      .filter(to_date(col("ts")) === lit(day).cast("date"))
       .unionByName(crafted).coalesce(1)
-      .write.parquet(s"$src/$y/$m/$d")
+      .write.parquet(dayDir(src, day))
+  }
+
+  private def dayDir(src: String, day: String): String = {
+    val Array(y, m, d) = day.split("-")
+    s"$src/$y/$m/$d"
+  }
+
+  /** The digests of `trips_*` and `most_populars_*` the reference-shaped
+    * twin gives for the normalized trips and the zone dimension. */
+  private def wantDigests(normalized: DataFrame,
+      nation: DataFrame): ((Long, String), (Long, String)) = {
+    val before = branchAndRejoin(normalized, nation)
+    (digest(before), digest(threeExchangeRollup(
+      before.groupBy("pickup_zone", "dropoff_zone")
+        .agg(count(lit(1)).as("route_count")))))
   }
 
   test("staged enrich and final_result equal the branch-and-rejoin " +
@@ -83,12 +99,8 @@ class EnrichEquivSpec extends SparkSpec {
     val Seq(ingest, normalize, enrich, finalResult) =
       TaxiPipeline.stages(spark, sfDir, src, ds)
     assert(ingest.run(cat) && normalize.run(cat))
-    val nation = graft.tbl(spark, sfDir, "nation")
-    val before = branchAndRejoin(cat.load("normalized_trips"), nation)
-    val wantTrips = digest(before)
-    val wantPopulars = digest(threeExchangeRollup(
-      before.groupBy("pickup_zone", "dropoff_zone")
-        .agg(count(lit(1)).as("route_count"))))
+    val (wantTrips, wantPopulars) = wantDigests(
+      cat.load("normalized_trips"), graft.tbl(spark, sfDir, "nation"))
     assert(enrich.run(cat) && finalResult.run(cat))
     val trips = cat.load(s"trips_$day")
     assert(digest(trips) === wantTrips)
@@ -113,19 +125,26 @@ class EnrichEquivSpec extends SparkSpec {
   test("a zone dimension over the cap fails enrich with the cap named, " +
       "and no trip row is written") {
     val sfDir = adversarialSf()
-    val rows = graft.tbl(spark, sfDir, "nation")
-      .filter(col("n_nationkey").isNotNull).count()
     val src = tempDir("cap_src")
     adversarialDay(src)
+    assertCapped(spark, sfDir, src)
+  }
+
+  /** Enrich of `ds` with the cap one below `nation`'s keyed rows fails
+    * naming the cap and leaves no `trips_*`; at the cap it succeeds. */
+  private def assertCapped(s: SparkSession, sfDir: String,
+      src: String): Unit = {
+    val rows = graft.tbl(spark, sfDir, "nation")
+      .filter(col("n_nationkey").isNotNull).count()
     def staged(): Catalog = {
-      val cat = new Catalog(spark, tempDir("cap_wh"))
+      val cat = new Catalog(s, tempDir("cap_wh"))
       val Seq(ingest, normalize, _, _) =
-        TaxiPipeline.stages(spark, sfDir, src, ds)
+        TaxiPipeline.stages(s, sfDir, src, ds)
       assert(ingest.run(cat) && normalize.run(cat))
       cat
     }
     def enrich(cat: Catalog, cap: Long): Seq[String] =
-      Runner.run(cat, Seq(TaxiPipeline.enrich(spark, sfDir, ds, cap)),
+      Runner.run(cat, Seq(TaxiPipeline.enrich(s, sfDir, ds, cap)),
         RetryPolicy(retries = 0))
     val over = staged()
     val e = intercept[StageFailedException](enrich(over, rows - 1))
@@ -141,6 +160,59 @@ class EnrichEquivSpec extends SparkSpec {
     val at = staged()
     assert(enrich(at, rows) === Seq("enrich"))
     assert(at.tables() === Seq(s"trips_$day"))
+  }
+
+  test("consecutive staged days in one session reuse the zone map and " +
+      "the rollup plan: both equal the reference, a rewritten nation is " +
+      "seen, and a failed zone map is not kept") {
+    val s = spark.newSession()
+    val sfDir = adversarialSf()
+    val src = tempDir("days_src")
+    val days = Seq("2024-01-05", "2024-01-06", "2024-01-07")
+    days.foreach(adversarialDay(src, _))
+    val cat = new Catalog(s, tempDir("days_wh"))
+    def tables(d: String) = {
+      val noDash = TaxiPipeline.dsNoDash(d)
+      (cat.load(s"trips_$noDash"), cat.load(s"most_populars_$noDash"))
+    }
+    def stagedDay(d: String): Unit = {
+      val want = wantDigests(TaxiOps.normalize(
+        spark.read.parquet(dayDir(src, d)), TripSchema.Events),
+        graft.tbl(spark, sfDir, "nation"))
+      assert(Runner.run(cat, TaxiPipeline.stages(s, sfDir, src, d))
+        .size === 4)
+      val (trips, populars) = tables(d)
+      assert((digest(trips), digest(populars)) === want, d)
+    }
+    stagedDay(days(0))
+    stagedDay(days(1))
+
+    // the second day's rollup, re-bound from the first day's analyzed
+    // plan, plans as a fresh build does
+    val trips = tables(days(1))._1
+    def physical(df: DataFrame): String =
+      df.queryExecution.executedPlan.toString
+        .replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+    assert(physical(TaxiPipeline.rollup(trips)) === physical(
+      TaxiOps.rollupPairCounts(TaxiOps.routeCounts(trips))))
+
+    // `nation` rewritten in place: the next day looks up the new labels
+    val nationPath = s"$sfDir/nation.parquet"
+    val nation = graft.tbl(spark, sfDir, "nation")
+    val renamed = nation.withColumn("n_name", concat(col("n_name"),
+      lit("_v2")))
+    spark.createDataFrame(java.util.Arrays.asList(renamed.collect(): _*),
+      renamed.schema).coalesce(1).write.mode("overwrite").parquet(nationPath)
+    stagedDay(days(2))
+    val labels = tables(days(2))._1.select("pickup_zone").distinct()
+      .collect().map(_.getString(0))
+    assert(labels.nonEmpty && labels.forall(_.endsWith("_v2")),
+      labels.mkString(", "))
+
+    // over the cap, enrich fails with the cap named on every attempt
+    // (the failure is not kept), and at the cap the same session's
+    // enrich succeeds
+    for (_ <- 1 to 2) assertCapped(s, sfDir, src)
   }
 }
 
