@@ -37,8 +37,7 @@ object ScaleGen {
     * session lifecycle). */
   def run(spark: SparkSession, src: String, out: String,
       copies: Int): Unit = {
-    def table(name: String): DataFrame =
-      spark.read.parquet(s"$src/$name.parquet")
+    def table(name: String): DataFrame = tbl(spark, src, name)
 
     /** Key stride for a replicated id space: one past the PARENT
       * table's max. FKs must use the parent PK's stride, not their own

@@ -71,11 +71,15 @@ object GraftSession {
     *    distinct classes.
     *
     * At 2048 a repeated corpus pass compiles 0 classes (`CodegenCacheSpec`
-    * pins it). A repeated Bench pass compiles 0 too, except where a
-    * query's generated code varies from run to run: j_enrich_join_graph
-    * and x_containment_pairs generate a few classes not seen before on
-    * some runs (6 compiles in pass 2, 0 in pass 3). 4096 does the same
-    * (0, then 4), so those are new classes, not evictions.
+    * pins it). The factory also sets `spark.sql.codegen.useIdInClassName`
+    * to false. Spark numbers a plan's whole-stage-codegen stages in the
+    * order AQE creates its query stages, which follows the order earlier
+    * stages finish, and by default it puts that number in the generated
+    * class's name. So the same plan could generate new class text on
+    * some runs: x_containment_pairs numbered its two broadcast sides'
+    * stages 5 and 6 or 7 and 5, and compiled 4 new classes in about one
+    * repeated pass in ten under CPU load (and j_enrich_join_graph 6 in
+    * Bench's pass 2). Without the number the text is the same.
     * The cache size changes no plan: jobs, stages, tasks and shuffle
     * bytes stay identical.
     *
@@ -127,6 +131,7 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
     (LocalFsConf ++ extraConf).foreach { case (k, v) => b.config(k, v) }
     // Set after `extraConf`, so no caller turns it off: a scan of a
     // bucketed table with one file per bucket reports its files' sort

@@ -109,7 +109,7 @@ object TableStats {
       val p = s"$dir/$t.parquet"
       if (new java.io.File(p).exists() ||
           p.startsWith("hdfs:") || p.startsWith("s3"))
-        try analyzeTable(spark.read.parquet(p))
+        try analyzeTable(ParquetSchema.read(spark, p))
         catch { case NonFatal(e) =>
           System.err.println(
             s"[graft] TableStats: $t not analyzed: ${e.toString.linesIterator.next()}")

@@ -29,12 +29,13 @@ object Bfs {
 
   /** Multi-source hop distances.
     *
-    * Each level's frontier is a localCheckpoint, so its EXACT row count is
-    * known for one cheap job over materialized blocks (the same job the
-    * old empty-frontier probe paid). That count drives a per-level join
-    * strategy choice the static planner cannot make (a `LogicalRDD`
-    * carries no usable size estimate, so Catalyst plans every level as a
-    * full shuffle join of the edge table):
+    * Each level's frontier is a lazy localCheckpoint, and its EXACT row
+    * count is the one job that materializes it ([[graft.rowCount]]: a
+    * count of the checkpoint's RDD, with no aggregate exchange). That
+    * count drives a per-level join strategy choice the static planner
+    * cannot make (a `LogicalRDD` carries no usable size estimate, so
+    * Catalyst plans every level as a full shuffle join of the edge
+    * table):
     *
     *   - frontier ≤ `broadcastRowCap` rows → broadcast-hash the frontier
     *     against the edge scan: the (huge) edge table is never shuffled,
@@ -92,11 +93,11 @@ object Bfs {
       observer: Option[HotKeys.Stats => Unit] = None,
       undirected: Boolean = false,
       edgesAtHop: Option[Int => DataFrame] = None): Result = {
-    // lazy checkpoints (round 10): the level-count action is the
-    // materializer, so each level costs one driver job, not two
+    // lazy checkpoints (round 10): each level's one-job count is its
+    // materializer, so no checkpoint runs a job of its own
     var dist = seeds.select(col("node"), lit(0).as("dist"))
       .localCheckpoint(false)
-    var distRows = dist.count()
+    var distRows = graft.rowCount(dist)
     var frontier = dist.select("node")
     var frontierRows = distRows
     var rounds = 0
@@ -163,7 +164,7 @@ object Bfs {
         .withColumn("dist", lit(hop))
         .localCheckpoint(false) // level; cut lineage (count materializes)
       rounds += 1
-      val nextRows = next.count()
+      val nextRows = graft.rowCount(next)
       if (nextRows > 0) {
         // each LEVEL is checkpointed, so their union has flat lineage —
         // checkpointing the union too would be a second eager

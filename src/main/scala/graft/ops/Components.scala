@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   *
   * At the fixpoint the edge set is a forest of depth-1 stars: every node
   * points directly at its component's minimum id. Convergence is detected
-  * with an order-independent checksum (count + bit_xor of xxhash64) — one
-  * cheap action per round — and each round's result is
-  * `localCheckpoint`ed so the iterative plan never grows (on a cluster
+  * with an order-independent checksum (count + xor of xxhash64) — one
+  * job per round, which also materializes the round's lazy
+  * `localCheckpoint`, so the iterative plan never grows (on a cluster
   * this would be a checkpoint to reliable storage).
   *
   * == One round body, with the hot-key split ==
@@ -115,12 +115,13 @@ object Components {
   }
 
   /** Order-independent edge-set fingerprint: (row count, xor of per-row
-    * 64-bit hashes). Collision-safe enough for a fixpoint test and costs
-    * a single partial-aggregated action. */
-  private def checksum(e: DataFrame): (Long, Long) = {
-    val r = e.agg(count(lit(1)).as("n"),
-      coalesce(bit_xor(xxhash64(col("hi"), col("lo"))), lit(0L)).as("x"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+    * 64-bit hashes). Collision-safe enough for a fixpoint test. The plan
+    * projects `xxhash64(hi, lo)`, and one RDD `aggregate` folds the count
+    * and the xor in a single job (a `Dataset` aggregate would add an
+    * exchange, which adaptive execution runs as a second job). The zero
+    * (0, 0) is what `coalesce(bit_xor(...), 0)` gives an empty set. */
+  private[ops] def checksum(e: DataFrame): (Long, Long) =
+    e.select(xxhash64(col("hi"), col("lo"))).queryExecution.toRdd
+      .aggregate((0L, 0L))((acc, row) => (acc._1 + 1, acc._2 ^ row.getLong(0)),
+        (a, b) => (a._1 + b._1, a._2 ^ b._2))
 }

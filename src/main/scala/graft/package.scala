@@ -11,11 +11,23 @@
   *    the plan survives a 100 TB / 1000-executor scale-up)
   */
 package object graft {
+  import scala.util.control.NonFatal
+
   import org.apache.spark.sql.{DataFrame, SparkSession}
 
-  /** Load one of the driver-provided parquet tables from an sf dir. */
+  /** Load one of the driver-provided parquet tables from an sf dir. The
+    * schema is read from the table's footer on the driver
+    * ([[core.ParquetSchema.read]]), so loading a table starts no Spark
+    * job. */
   def tbl(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    core.ParquetSchema.read(spark, s"$sfDir/$name.parquet")
+
+  /** `df`'s row count in one Spark job: the count of its executed RDD.
+    * `Dataset.count()` plans a partial aggregate, an exchange and a final
+    * aggregate, which adaptive execution runs as two jobs. On a lazy
+    * `localCheckpoint(false)` frame this job is the one that
+    * materializes the checkpoint. */
+  def rowCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
 
   /** Ensure a scan-rooted frame enters heavy per-row compute at cluster
     * parallelism. Parquet scan splits are ROW-GROUP-bound: a
@@ -74,7 +86,7 @@ package object graft {
               new org.apache.hadoop.fs.Path(f), hconf))
           try in.getFooter.getBlocks.size finally in.close()
         }.min)
-      } catch { case _: Throwable => None } // non-parquet: trust splits
+      } catch { case NonFatal(_) => None } // non-parquet: trust splits
     minRgs match {
       case None => df
       case Some(rgs) =>

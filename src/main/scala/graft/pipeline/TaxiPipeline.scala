@@ -1,17 +1,11 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
-  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.core.{Catalog, FixtureMeta}
+import graft.core.{Catalog, FixtureMeta, ParquetSchema}
 import graft.ops.{TaxiOps, TripSchema}
 
 /** One pipeline stage: returns false to short-circuit the rest (C2). */
@@ -207,43 +201,12 @@ object TaxiPipeline {
     * "empty day" (no blobs under the prefix, `taxi_trips_etl.py:33`). A
     * day directory that exists but holds no part-* files (e.g. only
     * _SUCCESS after an empty write) is ALSO an empty day: Spark cannot
-    * infer a schema for it. (globStatus may return null rather than an
-    * empty array on some Hadoop filesystems when nothing matches — both
-    * are empty.) The read declares the schema [[footerSchema]] reads
-    * from the first part file by path, so no inference job runs. */
+    * infer a schema for it. The read declares the schema of the footer
+    * Spark's inference would read ([[ParquetSchema]]), so no inference
+    * job runs. */
   private[graft] def readDay(spark: SparkSession,
-      dayPath: String): Option[DataFrame] = {
-    val glob = new Path(dayPath, "part-*")
-    val parts = Option(glob.getFileSystem(spark.sessionState.newHadoopConf())
-      .globStatus(glob)).getOrElse(Array.empty[FileStatus])
-    parts.minByOption(_.getPath.toString).map { first =>
-      spark.read.schema(footerSchema(spark, first))
-        .option("pathGlobFilter", "part-*").parquet(dayPath)
-    }
-  }
-
-  /** The schema Spark's own inference gives a directory whose first file
-    * by path is `file`, read on the driver from that file's footer.
-    * Without `mergeSchema` or summary files, inference reads exactly that
-    * one footer (in a one-task job) and converts it as done here: the
-    * Spark schema stored under the row-metadata key when the writer left
-    * one, otherwise the parquet schema under the session's parquet conf
-    * (`nanosAsLong`, `binaryAsString`, INT96, NTZ inference). */
-  private[graft] def footerSchema(spark: SparkSession,
-      file: FileStatus): StructType = {
-    val conf = spark.sessionState.conf
-    val footer = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()),
-      ParquetMetadataConverter.SKIP_ROW_GROUPS)
-    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
-      new ParquetToSparkSchemaConverter(
-        assumeBinaryIsString = conf.isParquetBinaryAsString,
-        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
-        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
-        nanosAsLong = conf.legacyParquetNanosAsLong,
-        respectUnknownTypeAnnotation =
-          conf.parquetReaderRespectUnknownTypeAnnotation))
-  }
+      dayPath: String): Option[DataFrame] =
+    ParquetSchema.readMatching(spark, dayPath, Some("part-*"))
 
   /** `nation`'s two columns, read with a declared schema (an INT32 or
     * INT64 key, a string name), which spares the schema inference job. */

@@ -196,11 +196,13 @@ object ExtQueries {
     * once: the band fan-out + both sides of the candidate join reuse
     * them, and without a cut Spark would re-derive the full
     * shingle→hash→min pipeline per branch (6× recompute and a
-    * janino-compiled mega-plan). At scale this is a real table write —
-    * signatures ARE the dedup index. */
+    * janino-compiled mega-plan). The checkpoint is lazy: the first job
+    * that scans it writes its blocks, so the cut adds no job of its
+    * own. At scale this is a real table write — signatures ARE the
+    * dedup index. */
   private[queries] def lshCandParts(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val sigs = minhashSignatures(s, dir).localCheckpoint()
+    val sigs = minhashSignatures(s, dir).localCheckpoint(false)
     (sigs, lshCandFromSigs(sigs))
   }
 
@@ -493,7 +495,7 @@ object ExtQueries {
       // score by at most 1/|A| per affected pair. The oracle keeps raw
       // strings — the hash-verified equality IS the collision witness.
       .select(col("doc_id"), xxhash64(col("shingle_s")).as("shingle"))
-      .localCheckpoint() // scanned by hot, na, and both self-join sides
+      .localCheckpoint(false) // scanned by hot, na, and both self-join sides
     // df cap inverted: the HOT set (df > cap) is the tiny side by
     // construction, so dropping hot shingles is a broadcast ANTI-join —
     // the shingle stream is never shuffled for the cap, only aggregated
@@ -502,7 +504,7 @@ object ExtQueries {
       .agg(count(lit(1)).as("dfc"))
       .filter(col("dfc") > cap)
       .select("shingle")
-      .localCheckpoint() // tiny by construction; built once, not per side
+      .localCheckpoint(false) // tiny by construction; built once, not per side
     // |A| = distinct-shingle count per doc, PRE-cap; doc-grained, joined
     // onto the bounded pairs output (collision-grained) — a plain hash
     // join both at bench scale (AQE broadcasts the small side) and at
@@ -937,8 +939,8 @@ object ExtQueries {
       .repartition(par)
       .select(col("vec_id") +: embDouble.as("v") +:
         (0 until PbBands).map(b => pbBandCode(embDouble, b).as(s"pb$b")): _*)
-      .localCheckpoint() // codes computed once; reused by both join sides
-    val nVecs = emb.count() // metadata-cheap on the materialized blocks
+      .localCheckpoint(false) // codes computed once; reused by both join sides
+    val nVecs = graft.rowCount(emb) // the job that materializes emb
     val build: DataFrame => DataFrame =
       if (nVecs <= PbBroadcastRowCap) broadcast else identity
     // one generator scan per side (not 16 unioned re-projections).
@@ -1492,8 +1494,8 @@ object ExtQueries {
       targetClusterSize: Long): DataFrame = {
     val emb = tbl(s, dir, "embeddings")
       .select(col("vec_id"), embDouble.as("v"))
-      .localCheckpoint() // scanned 2×/Lloyd iteration + twice in the join
-    val nVecs = emb.count() // metadata-cheap on the checkpoint
+      .localCheckpoint(false) // scanned 2×/Lloyd iteration + twice in the join
+    val nVecs = graft.rowCount(emb) // the job that materializes emb
     val k = semDedupK(nVecs, targetClusterSize)
     // K-proportional init (r15 verdict item 1): the K corpus vectors
     // with ids in [K, 2K) — the same held-out-ids convention as the
@@ -1506,7 +1508,7 @@ object ExtQueries {
       .select(col("vec_id").as("cid"), col("v").as("cv"))
     for (_ <- 0 until KmIters)
       cent = meanCentroids(assignGated(emb, cent, k))
-        .localCheckpoint() // K rows; cut lineage so iter N+1 replans small
+        .localCheckpoint(false) // K rows; cut lineage so iter N+1 replans small
     // explicit width restore on the frame every heavy consumer reads:
     // the final agg's ~n-row output is AQE-coalesced to a couple of
     // 64 MB partitions, which would serialize the downstream pair
@@ -1521,8 +1523,8 @@ object ExtQueries {
       broadcastCap: Long,
       targetClusterSize: Long = SemDedupTargetClusterSize): DataFrame = {
     val assigned = semDedupAssignments(s, dir, targetClusterSize)
-      .localCheckpoint() // both sides of the within-cluster self-join
-    val nVecs = assigned.count() // metadata-cheap on the checkpoint
+      .localCheckpoint(false) // both sides of the within-cluster self-join
+    val nVecs = graft.rowCount(assigned) // the job that materializes it
     val mates = assigned.select(col("vec_id").as("kept_id"),
       col("v").as("bv"), col("cluster"))
     // The self-join key has only K distinct values. Under the row cap,

@@ -116,6 +116,17 @@ class ParallelScanSpec extends SparkSpec {
       "file-less frame must be trusted, not repartitioned")
   }
 
+  test("a non-parquet frame comes back unchanged") {
+    // its footer read fails, which the gate takes as "trust the splits";
+    // at target 64 and no size floor a parquet scan this size would fire
+    val dir = tempDir("pscan_json")
+    spark.range(1000).select(col("id"), concat(lit("t"), col("id")).as("text"))
+      .coalesce(1).write.json(s"$dir/t.json")
+    val scan = spark.read.schema("id BIGINT, text STRING").json(s"$dir/t.json")
+    assert(scan.inputFiles.nonEmpty)
+    assert(parallelScan(spark, scan, 64, minBytes = 0L) eq scan)
+  }
+
   test("repartitioned frame returns identical rows") {
     val dir = tempDir("pscan_eq")
     spark.range(120000)

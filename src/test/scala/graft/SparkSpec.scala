@@ -54,4 +54,44 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** [[SparkSpec.tempDir]]: a directory deleted when the JVM exits. */
   def tempDir(prefix: String): String = SparkSpec.tempDir(prefix)
+
+  /** The job group ("" for none) of each Spark job started while `body`
+    * runs on this thread, or on a thread that inherits its local
+    * properties. Jobs are told apart from other suites' by a local
+    * property; a marker job delivered after them makes the list final
+    * without a sleep (the listener bus is FIFO). */
+  def jobGroupsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val tag = s"spec-${java.util.UUID.randomUUID()}"
+    val marker = s"graft-marker-$tag"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("graft.spec.tag").contains(tag)) {
+          val g = prop("spark.jobGroup.id").getOrElse("")
+          if (g == marker) markerSeen.countDown() else groups.add(g)
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.tag", tag)
+    try {
+      body
+      sc.setJobGroup(marker, "job-count marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(10, java.util.concurrent.TimeUnit.SECONDS),
+        "marker job event never delivered")
+      groups.toArray(Array.empty[String]).toSeq
+    } finally {
+      sc.setLocalProperty("graft.spec.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** How many Spark jobs `body` starts ([[jobGroupsOf]]). */
+  def jobsOf(body: => Unit): Int = jobGroupsOf(body).size
 }

@@ -34,6 +34,29 @@ class ComponentsPropSpec extends SparkSpec {
       SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
     assert(res.passed, res.status.toString)
   }
+
+  test("the one-job checksum equals the count and xor aggregate on " +
+      "random edge sets, the empty set included") {
+    import org.apache.spark.sql.functions._
+    def aggregated(e: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val r = e.agg(count(lit(1)),
+        coalesce(bit_xor(xxhash64(col("hi"), col("lo"))), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val edgeSets = Gen.choose(0, 60).flatMap(n => Gen.listOfN(n,
+      Gen.zip(Gen.choose(-5L, 40L), Gen.choose(-5L, 40L))))
+    val prop = Prop.forAllNoShrink(edgeSets) { edges =>
+      val e = edges.toDF("hi", "lo").repartition(3)
+      val (got, want) = (Components.checksum(e), aggregated(e))
+      Prop(got == want) :| s"got $got want $want"
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(res.passed, res.status.toString)
+    val empty = Seq.empty[(Long, Long)].toDF("hi", "lo")
+    assert(Components.checksum(empty) === ((0L, 0L)))
+    assert(aggregated(empty) === ((0L, 0L)))
+  }
 }
 
 object ComponentsPropSpec {

@@ -137,47 +137,12 @@ class ComponentsSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs `body` starts on this thread, told apart from other
-    * suites' by a local property; a marker job delivered after them
-    * makes the count final without a sleep (the listener bus is FIFO). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"components-spec-${java.util.UUID.randomUUID()}"
-    val marker = s"graft-marker-$tag"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        def prop(k: String) =
-          Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-        if (prop("graft.spec.tag").contains(tag)) {
-          if (prop("spark.jobGroup.id").contains(marker)) markerSeen.countDown()
-          else jobs.incrementAndGet()
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.spec.tag", tag)
-    try {
-      body
-      sc.setJobGroup(marker, "job-count marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(10, java.util.concurrent.TimeUnit.SECONDS),
-        "marker job event never delivered")
-      jobs.get
-    } finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("job budget: at the default threshold an empty hot set runs the " +
       "windowed round body and no detection job") {
     // a 64-node chain plus a 4-clique and a separate pair;
-    // the count is the windowed body's: the initial dedup + checksum,
-    // one checksum per round (its AQE stages included) and the final
-    // collect. A detection aggregate or collect would add jobs.
+    // the count is the windowed body's: the initial dedup's stages and
+    // checksum, per round its AQE stages and one checksum job, and the
+    // final collect. A detection aggregate or collect would add jobs.
     val edges = (1L until 64L).map(i => (i + 1, i)) ++
       Seq((100L, 101L), (100L, 102L), (100L, 103L), (101L, 102L),
         (101L, 103L), (102L, 103L), (200L, 201L))
@@ -187,6 +152,6 @@ class ComponentsSpec extends SparkSpec {
       got = Components.connected(spark, df).as[(Long, Long)].collect().toMap
     }
     assert(got === ComponentsPropSpec.unionFind(edges))
-    assert(jobs === 39)
+    assert(jobs === 31)
   }
 }

@@ -38,6 +38,22 @@ class GraphIterSpec extends SparkSpec {
     assert(r.dist.isEmpty)
   }
 
+  test("job budget: a BFS level is its broadcast stage and one count job") {
+    // a 30-node undirected chain, seeds at both ends, 3 levels: the
+    // seeds' count; per level its broadcast and shuffle stages and one
+    // count job, which materializes the level's lazy checkpoint (a
+    // `Dataset.count()` would add a second); the final collect
+    val chain = und((0 until 29).map(i => s"n$i" -> s"n${i + 1}"))
+    var got = Map.empty[String, Int]
+    val jobs = jobsOf {
+      got = Bfs.distances(Seq("n0", "n29").toDF("node"), chain, maxHops = 3)
+        .dist.as[(String, Int)].collect().toMap
+    }
+    assert(got === (0 to 3).flatMap(d =>
+      Seq(s"n$d" -> d, s"n${29 - d}" -> d)).toMap)
+    assert(jobs === 13)
+  }
+
   test("BFS shuffle arm (cap 0) labels identically to the broadcast arm") {
     // diamond + tail: multiple discovery paths, dup candidates per level
     val g = und(Seq("a" -> "b", "a" -> "c", "b" -> "d", "c" -> "d",

@@ -74,45 +74,13 @@ class RunnerSpec extends SparkSpec {
 
   /** Spark jobs started under the Runner's stage job groups
     * (`graft-stage-<stage>-<nanos>`) while `body` runs on this thread,
-    * counted per stage. Jobs are told apart from other suites' by a local
-    * property the stage threads inherit; a marker job delivered after
-    * them makes the count final without a sleep (the listener bus is
-    * FIFO). */
-  private def stageJobs(body: => Unit): Map[String, Int] = {
-    val sc = spark.sparkContext
-    val tag = s"runner-spec-${java.util.UUID.randomUUID()}"
-    val marker = s"graft-marker-$tag"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        def prop(k: String) =
-          Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-        if (prop("graft.spec.tag").contains(tag))
-          prop("spark.jobGroup.id").foreach { g =>
-            if (g == marker) markerSeen.countDown()
-            else if (g.startsWith("graft-stage-")) groups.add(g)
-          }
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.spec.tag", tag)
-    try {
-      body
-      sc.setJobGroup(marker, "job-count marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(10, java.util.concurrent.TimeUnit.SECONDS),
-        "marker job event never delivered")
-      groups.toArray(Array.empty[String]).toSeq
-        .map { g => val st = g.stripPrefix("graft-stage-")
-          st.take(st.lastIndexOf('-')) }
-        .groupBy(identity).map { case (st, js) => st -> js.size }
-    } finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      sc.removeSparkListener(listener)
-    }
-  }
+    * counted per stage ([[jobGroupsOf]]; the stage threads inherit its
+    * local properties). */
+  private def stageJobs(body: => Unit): Map[String, Int] =
+    jobGroupsOf(body).filter(_.startsWith("graft-stage-"))
+      .map { g => val st = g.stripPrefix("graft-stage-")
+        st.take(st.lastIndexOf('-')) }
+      .groupBy(identity).map { case (st, js) => st -> js.size }
 
   test("job budget: a staged day runs 6 Spark jobs at the sf0.1 and the " +
       "sf0.001 day size once its session has built the zone map, and " +
