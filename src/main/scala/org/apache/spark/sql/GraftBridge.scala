@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -54,6 +55,12 @@ object GraftBridge {
 
   private case class RelationSlot(output: Seq[AttributeReference])
     extends LeafNode
+
+  /** The Hadoop conf that every session of `spark`'s context copies in
+    * `sessionState.newHadoopConf()` (`SharedState.hadoopConf` is
+    * `private[sql]`). */
+  def sharedHadoopConf(spark: SparkSession): Configuration =
+    spark.asInstanceOf[classic.SparkSession].sharedState.hadoopConf
 
   /** Grouping-key floating-point canonicalization (-0.0 ≡ 0.0, NaN) —
     * the same `private[sql]` normalization the stock Aggregation strategy
