@@ -1083,6 +1083,8 @@ object ExtQueries {
 
   /** Nearest-centroid assignment (one Lloyd "assign" step): argmin over
     * the broadcast centroid set by rounded L2, centroid-id tie-break.
+    * With `keys` (PQ's subspace), each (vec_id, keys) row picks among
+    * the centroids that share its keys; the output carries them along.
     *
     * Shape matters at scale (r16, profiled at sf10/K=51): the original
     * window-rank form shuffled the SORTED (vec × cent) explosion — n·K
@@ -1114,16 +1116,25 @@ object ExtQueries {
     * packed min is BIT-IDENTICAL to the oracle's
     * `ORDER BY round(l2), cid` rank-1 row (re-proven by the 171-query
     * hash gate and the sf10 scaled-K hash check). */
-  private def assignClusters(emb: DataFrame, cent: DataFrame): DataFrame = {
+  private def assignClusters(emb: DataFrame, cent: DataFrame,
+      keys: Seq[String] = Nil): DataFrame =
+    emb.join(nearestCentroid(emb, cent, keys), "vec_id" +: keys)
+      .select(("vec_id" +: keys :+ "v" :+ "cluster").map(col): _*)
+
+  /** The skinny argmin of [[assignClusters]] without the payload rejoin:
+    * (vec_id, keys, cluster), for a caller that needs only the id. */
+  private def nearestCentroid(emb: DataFrame, cent: DataFrame,
+      keys: Seq[String]): DataFrame = {
     val distQ = round(round(l2(col("v"), col("cv")), 6) * lit(1000000.0), 0)
       .cast("long")
     val packed = distQ * lit(1L << AssignCidBits) + col("cid")
-    val ids = emb.crossJoin(broadcast(cent))
-      .groupBy("vec_id").agg(min(packed).as("p"))
-      .select(col("vec_id"),
-        col("p").bitwiseAND(lit((1L << AssignCidBits) - 1)).as("cluster"))
-    emb.join(ids, "vec_id")
-      .select(col("vec_id"), col("v"), col("cluster"))
+    val pairs =
+      if (keys.isEmpty) emb.crossJoin(broadcast(cent))
+      else emb.join(broadcast(cent), keys)
+    pairs
+      .groupBy("vec_id", keys: _*).agg(min(packed).as("p"))
+      .select(("vec_id" +: keys).map(col) :+
+        col("p").bitwiseAND(lit((1L << AssignCidBits) - 1)).as("cluster"): _*)
   }
 
   /** Two-level (coarse→fine) nearest-centroid assignment — r16 verdict
@@ -1227,10 +1238,10 @@ object ExtQueries {
   /** IVF probe + search given a (bounded, broadcastable) centroid set:
     * assign the corpus to posting lists, probe each query's nprobe nearest
     * lists, brute-force only those. Shared by the fixed-centroid and
-    * k-means-trained variants. */
+    * k-means-trained variants; [[ivfSearchSql]] is its oracle. */
   private def ivfSearch(emb: DataFrame, cent: DataFrame): DataFrame = {
     val assigned = assignClusters(emb, cent)
-      .localCheckpoint() // reused: corpus side + (via probes join) per query
+      .localCheckpoint(false) // cut lineage; the search's action writes it
     val byDist = Window.partitionBy("vec_id")
       .orderBy(round(l2(col("v"), col("cv")), 6), col("cid"))
     // queries probe their nprobe nearest centroid lists
@@ -1275,19 +1286,33 @@ object ExtQueries {
     ivfSearch(emb, ivfInitCentroids(emb))
   }
 
-  private val ivfAnnSql =
+  /** [[assignClusters]] as the oracle CTE `out` (vec_id, keys, v,
+    * cluster): each row of `src` ranks the centroids of `cent` that
+    * share its keys by rounded L2, cid tie-break, and keeps rank 1 — the
+    * row the packed argmin selects. */
+  private def sqlAssign(keys: Seq[String])(src: String, cent: String,
+      out: String): String = {
+    val part = ("vec_id" +: keys).map(k => s"e.$k").mkString(", ")
+    val pairs =
+      if (keys.isEmpty) s"$src e CROSS JOIN $cent c"
+      else s"$src e JOIN $cent c ON " +
+        keys.map(k => s"e.$k = c.$k").mkString(" AND ")
+    s"""$out AS MATERIALIZED (
+       |  SELECT vec_id, ${keys.map(_ + ", ").mkString}v, cid AS cluster FROM (
+       |    SELECT $part, e.v, c.cid,
+       |           row_number() OVER (PARTITION BY $part
+       |             ORDER BY round(list_distance(e.v, c.cv), 6), c.cid) AS rk
+       |    FROM $pairs
+       |  ) WHERE rk = 1
+       |)""".stripMargin
+  }
+
+  /** The oracle of [[ivfSearch]], over the CTE chain `centChain` that
+    * defines the centroid CTE `cent`. */
+  private def ivfSearchSql(centChain: String) =
     s"""WITH emb AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), cent AS (
-       |  $sqlIvfInit
-       |), assigned AS (
-       |  SELECT vec_id, v, cid AS cluster FROM (
-       |    SELECT e.vec_id, e.v, c.cid,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY round(list_distance(e.v, c.cv), 6), c.cid) AS rk
-       |    FROM emb e CROSS JOIN cent c
-       |  ) WHERE rk = 1
-       |), probes AS (
+       |), $centChain, ${sqlAssign(Nil)("emb", "cent", "assigned")}, probes AS (
        |  SELECT vec_id AS query_id, v AS qv, cid AS cluster FROM (
        |    SELECT e.vec_id, e.v, c.cid,
        |           row_number() OVER (PARTITION BY e.vec_id
@@ -1309,104 +1334,92 @@ object ExtQueries {
        |  )
        |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
 
-  /** IVF with TRAINED centroids: `KmIters` Lloyd's iterations of k-means
-    * expressed entirely as DataFrame aggregations — assign = broadcast
-    * rank over K centroids (map-side), update = element-wise mean via
-    * posexplode + groupBy(cluster, pos). At 100 TB the assign step is a
-    * scan-side broadcast op and the update shuffles K×dim tiny partial
-    * sums (map-side combine), so training cost is ~iters full scans —
-    * the standard IVF build path.
-    *
-    * Determinism (cross-engine): distances are rounded 6dp with cid
-    * tie-breaks; centroid means avoid float accumulation order AND
-    * decimal→double cast ambiguity by summing QUANTIZED components —
-    * round(x·10⁶) as BIGINT is exact and order-independent, and the mean
-    * is reconstructed in ONE IEEE double division (sums < 2⁵³ stay
-    * exact), so both engines build bit-identical centroids.
-    *
-    * Measured on the sf0.001 fixture (AnnRecallSpec): recall@3 = 0.57
-    * trained vs 0.30 for the untrained init at the same nprobe — Lloyd's
-    * iterations nearly double recall once the quantizer has to
-    * generalize to held-out queries. 2 iterations is the plateau on this
-    * fixture (3 dips to 0.50 — centroid oscillation, not convergence). */
+  private val ivfAnnSql = ivfSearchSql(s"cent AS (\n  $sqlIvfInit\n)")
+
+  /** Lloyd rounds per quantizer. Measured on the sf0.001 fixture
+    * (AnnRecallSpec): recall@3 = 0.57 trained vs 0.30 for the untrained
+    * IVF init at the same nprobe — Lloyd's iterations nearly double
+    * recall once the quantizer has to generalize to held-out queries.
+    * 2 iterations is the plateau on this fixture (3 dips to 0.50 —
+    * centroid oscillation, not convergence). */
   private val KmIters = 2
 
-  private def meanCentroids(assigned: DataFrame): DataFrame =
+  /** Lloyd's k-means, the one trainer behind every quantizer here (IVF,
+    * both SemDeDup operators, PQ's codebooks): [[KmIters]] rounds of
+    * `assign` (each point's nearest centroid, as `cluster`), the
+    * quantized exact mean per cluster, and a lazy checkpoint of the
+    * K-row centroid frame (lineage cut so round N+1 plans small; the
+    * broadcast that reads it materializes it). `points` carry `vec_id`,
+    * `keys` and `v`; `init` and the result carry `keys`, `cid` and `cv`
+    * — one centroid set per value of `keys` (PQ's subspace), one set
+    * when `keys` is empty. A centroid that attracts no point drops out
+    * (the update is a plain GROUP BY over assignments, on both engines).
+    * At 100 TB each round is one scan-side broadcast assign plus a
+    * shuffle of K×dim tiny partial sums (map-side combine), so training
+    * costs ~[[KmIters]] full scans. [[sqlLloyd]] is its oracle. */
+  private def lloyd(points: DataFrame, init: DataFrame, keys: Seq[String],
+      assign: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    (0 until KmIters).foldLeft(init) { (cent, _) =>
+      meanCentroids(assign(points, cent), keys).localCheckpoint(false)
+    }
+
+  /** The Lloyd update: each (keys, cluster)'s element-wise mean of `v`.
+    * Determinism (cross-engine): the mean sums QUANTIZED components —
+    * round(x·10⁶) as BIGINT is exact and order-independent, which avoids
+    * both float accumulation order and decimal→double cast ambiguity —
+    * and is reconstructed in ONE IEEE double division (sums < 2⁵³ stay
+    * exact), so both engines build bit-identical centroids. */
+  private def meanCentroids(assigned: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val group = keys :+ "cluster"
     assigned
-      .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
+      .select(group.map(col) :+ posexplode(col("v")).as(Seq("pos", "x")): _*)
       .withColumn("xq", round(col("x") * lit(1000000.0)).cast("long"))
-      .groupBy("cluster", "pos")
+      .groupBy(group.head, group.tail :+ "pos": _*)
       .agg((sum("xq").cast("double") /
         (count(lit(1)) * lit(1000000.0))).as("m"))
-      .groupBy("cluster")
+      .groupBy(group.head, group.tail: _*)
       .agg(transform(
         array_sort(collect_list(struct(col("pos"), col("m")))),
         s => s.getField("m")).as("cv"))
-      .select(col("cluster").as("cid"), col("cv"))
+      .select(keys.map(col) ++ Seq(col("cluster").as("cid"), col("cv")): _*)
+  }
 
+  /** [[lloyd]] as oracle CTEs: `cent0` is `init`; round i assigns the
+    * training CTE `train` against `cent<i>` with `assign(train, cent,
+    * out)` into `a<i>` and takes the quantized exact mean
+    * ([[meanCentroids]]) of its `dim`-long `v` into `cent<i+1>`; the last
+    * centroid CTE is named `out`. Every centroid CTE is MATERIALIZED: the
+    * gated assign reads each three times, the IVF search the last twice. */
+  private def sqlLloyd(train: String, init: String, keys: Seq[String],
+      dim: Int, assign: (String, String, String) => String,
+      out: String): String = {
+    val ks = keys.map(_ + ", ").mkString
+    def cent(i: Int) = if (i == KmIters) out else s"cent$i"
+    (s"cent0 AS MATERIALIZED (\n  $init\n)" +: (0 until KmIters).map(i =>
+      s"""${assign(train, cent(i), s"a$i")}, ${cent(i + 1)} AS MATERIALIZED (
+         |  SELECT ${ks}cluster AS cid, list(m ORDER BY pos) AS cv FROM (
+         |    SELECT ${ks}cluster, i AS pos,
+         |           CAST(SUM(CAST(round(v[i] * 1000000.0, 0) AS BIGINT))
+         |                AS DOUBLE) / (count(*) * 1000000.0) AS m
+         |    FROM a$i, generate_series(1, $dim) AS g(i)
+         |    GROUP BY ${ks}cluster, i
+         |  ) GROUP BY ${ks}cluster
+         |)""".stripMargin)).mkString(", ")
+  }
+
+  /** IVF with TRAINED centroids: [[lloyd]] from the held-out init, then
+    * the same search as `x_ann_ivf`. */
   private def kmeansIvfAnn(s: SparkSession, dir: String): DataFrame = {
     val emb = tbl(s, dir, "embeddings")
       .select(col("vec_id"), embDouble.as("v"))
-      .localCheckpoint() // scanned 2×/iteration + twice in the search
-    var cent = ivfInitCentroids(emb)
-    for (_ <- 0 until KmIters)
-      cent = meanCentroids(assignClusters(emb, cent))
-        .localCheckpoint() // K rows; cut lineage so iter N+1 replans small
-    ivfSearch(emb, cent)
+      .localCheckpoint(false) // scanned 2×/iteration + twice in the search
+    ivfSearch(emb,
+      lloyd(emb, ivfInitCentroids(emb), Nil, assignClusters(_, _)))
   }
 
-  private val kmeansIvfAnnSql = {
-    def assign(centCte: String) =
-      s"""SELECT vec_id, v, cid AS cluster FROM (
-         |    SELECT e.vec_id, e.v, c.cid,
-         |           row_number() OVER (PARTITION BY e.vec_id
-         |             ORDER BY round(list_distance(e.v, c.cv), 6), c.cid) AS rk
-         |    FROM emb e CROSS JOIN $centCte c
-         |  ) WHERE rk = 1""".stripMargin
-    def update(assignedCte: String) =
-      s"""SELECT cluster AS cid, list(m ORDER BY pos) AS cv FROM (
-         |    SELECT cluster, i AS pos,
-         |           CAST(SUM(CAST(round(v[i] * 1000000.0, 0) AS BIGINT))
-         |                AS DOUBLE) / (count(*) * 1000000.0) AS m
-         |    FROM $assignedCte, generate_series(1, $Dim) AS g(i)
-         |    GROUP BY cluster, i
-         |  ) GROUP BY cluster""".stripMargin
-    s"""WITH emb AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), cent0 AS (
-       |  $sqlIvfInit
-       |), a0 AS (
-       |  ${assign("cent0")}
-       |), cent1 AS (
-       |  ${update("a0")}
-       |), a1 AS (
-       |  ${assign("cent1")}
-       |), cent2 AS (
-       |  ${update("a1")}
-       |), assigned AS (
-       |  ${assign("cent2")}
-       |), probes AS (
-       |  SELECT vec_id AS query_id, v AS qv, cid AS cluster FROM (
-       |    SELECT e.vec_id, e.v, c.cid,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY round(list_distance(e.v, c.cv), 6), c.cid) AS rk
-       |    FROM emb e CROSS JOIN cent2 c WHERE e.vec_id < $NQueries
-       |  ) WHERE rk <= $IvfNProbe
-       |)
-       |SELECT query_id, neighbor_id, sim, rn FROM (
-       |  SELECT query_id, neighbor_id, sim,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY sim DESC, neighbor_id) AS rn
-       |  FROM (
-       |    SELECT p.query_id, a.vec_id AS neighbor_id,
-       |           any_value(round(list_cosine_similarity(p.qv, a.v), 6))
-       |             AS sim
-       |    FROM probes p JOIN assigned a ON p.cluster = a.cluster
-       |    WHERE p.query_id != a.vec_id
-       |    GROUP BY p.query_id, a.vec_id
-       |  )
-       |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
-  }
+  private val kmeansIvfAnnSql = ivfSearchSql(
+    sqlLloyd("emb", sqlIvfInit, Nil, Dim, sqlAssign(Nil), "cent"))
 
   // ----------------------------- SemDeDup ---------------------------------
 
@@ -1482,33 +1495,48 @@ object ExtQueries {
   private[graft] def semDedupK(nVecs: Long, target: Long): Long =
     math.max(IvfK.toLong, math.ceil(nVecs.toDouble / target).toLong)
 
-  /** `broadcastCap` is injected so the spec can force the salted
-    * over-cap arm on a fixture-sized corpus and pin its equality with
-    * the broadcast plan (no driver fixture exceeds the production
-    * cap). */
-  /** The scaled-K trained clustering on its own: (vec_id, v, cluster)
-    * after [[KmIters]] Lloyd iterations with K = [[semDedupK]](n,
-    * target). Package-visible so `SemDedupSpec` can pin the cluster-
-    * count law and the cluster-size distribution directly. */
-  private[graft] def semDedupAssignments(s: SparkSession, dir: String,
-      targetClusterSize: Long): DataFrame = {
+  /** The scaled-K quantizer both SemDeDup operators train. Returns the
+    * corpus (vec_id, v), lazily checkpointed; the centroids after
+    * [[lloyd]] with the K-gated assign ([[assignGated]]); the training
+    * bound; and K = [[semDedupK]](training count, target).
+    * `trainSplit` maps the corpus count to the training-id filter:
+    * `None` trains on every vector (`x_semdedup`, bound = the count);
+    * `Some(split)` trains on `vec_id < split(n)` — the persisted index
+    * of `x_semdedup_incremental`, whose batch vectors must not move
+    * yesterday's centroids. In production the centroids are what
+    * persists between days; `SemDedupSpec` pins the round-trip
+    * (quantizer through parquet and back ⇒ bit-identical probe) and,
+    * through [[semDedupAssign]], the cluster-count law and the
+    * cluster-size distribution. */
+  private[graft] def semDedupIndex(s: SparkSession, dir: String,
+      trainSplit: Option[Long => Long],
+      targetClusterSize: Long = SemDedupTargetClusterSize)
+      : (DataFrame, DataFrame, Long, Long) = {
     val emb = tbl(s, dir, "embeddings")
       .select(col("vec_id"), embDouble.as("v"))
-      .localCheckpoint(false) // scanned 2×/Lloyd iteration + twice in the join
+      .localCheckpoint(false) // scanned 2×/Lloyd round + by the final assign
     val nVecs = graft.rowCount(emb) // the job that materializes emb
-    val k = semDedupK(nVecs, targetClusterSize)
-    // K-proportional init (r15 verdict item 1): the K corpus vectors
+    val split = trainSplit.map(_(nVecs))
+    val train = split.fold(emb)(b => emb.filter(col("vec_id") < b))
+    val bound = split.getOrElse(nVecs)
+    val k = semDedupK(bound, targetClusterSize)
+    // K-proportional init (r15 verdict item 1): the K training vectors
     // with ids in [K, 2K) — the same held-out-ids convention as the
     // fixed ANN init, at the scaled count. Fixture/ScaleGen ids are
     // dense at the low end, so the window always yields K seeds; a
     // production corpus with sparse ids would hash-sample its K seeds
     // instead (any deterministic rule both engines share works).
-    var cent = emb
+    val init = train
       .filter(col("vec_id") >= k && col("vec_id") < 2 * k)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
-    for (_ <- 0 until KmIters)
-      cent = meanCentroids(assignGated(emb, cent, k))
-        .localCheckpoint(false) // K rows; cut lineage so iter N+1 replans small
+    (emb, lloyd(train, init, Nil, assignGated(_, _, k)), bound, k)
+  }
+
+  /** Every vector's cluster under a SemDeDup quantizer: (vec_id, v,
+    * cluster), lazily checkpointed — both sides of the operator's
+    * cluster join read it. */
+  private[graft] def semDedupAssign(s: SparkSession, emb: DataFrame,
+      cent: DataFrame, k: Long): DataFrame =
     // explicit width restore on the frame every heavy consumer reads:
     // the final agg's ~n-row output is AQE-coalesced to a couple of
     // 64 MB partitions, which would serialize the downstream pair
@@ -1517,13 +1545,17 @@ object ExtQueries {
     // x_cosine_topk lesson applied to the aggregation output.
     assignGated(emb, cent, k)
       .repartition(s.sparkContext.defaultParallelism)
-  }
+      .localCheckpoint(false)
 
+  /** `broadcastCap` is injected so the spec can force the salted
+    * over-cap arm on a fixture-sized corpus and pin its equality with
+    * the broadcast plan (no driver fixture exceeds the production
+    * cap). */
   private[graft] def semDedupImpl(s: SparkSession, dir: String,
       broadcastCap: Long,
       targetClusterSize: Long = SemDedupTargetClusterSize): DataFrame = {
-    val assigned = semDedupAssignments(s, dir, targetClusterSize)
-      .localCheckpoint(false) // both sides of the within-cluster self-join
+    val (emb, cent, _, k) = semDedupIndex(s, dir, None, targetClusterSize)
+    val assigned = semDedupAssign(s, emb, cent, k)
     val nVecs = graft.rowCount(assigned) // the job that materializes it
     val mates = assigned.select(col("vec_id").as("kept_id"),
       col("v").as("bv"), col("cluster"))
@@ -1566,102 +1598,85 @@ object ExtQueries {
       .orderBy("vec_id")
   }
 
-  /** The K-GATED assign rule as oracle CTEs, CTE-for-CTE with
-    * [[assignGated]]: a FLAT arm (argmin over all K centroids) over the
-    * corpus when K sits at the IvfK floor, and the TWO-LEVEL arm (⌈√K⌉
-    * lowest-cid supers → child→super map → vector→two-nearest-supers
-    * (nprobe=2) → nearest child across those supers' children;
-    * rounded-L2, id tie-breaks at every level) when K is off the floor.
-    * The two source filters are complementary on the scalar K, so
-    * exactly one arm carries rows — the union IS the gate, at every SF.
-    * Shared by semDedupSql and semDedupIncrementalSql (ONE spelling of
-    * the exactness-critical rule; callers supply their own `kp`/`sp`
-    * CTEs). The `AS MATERIALIZED` hints are load-bearing: DuckDB
-    * otherwise inlines each multiply-referenced CTE and the chained
-    * assigns re-expand exponentially (r17 lesson, >74 GB spill at
-    * sf10). */
-  private def sqlGatedAssign(embCte: String, centCte: String, p: String,
+  /** The K-GATED assign rule as the oracle CTE `out` and its helpers
+    * (`<out>_…`), CTE-for-CTE with [[assignGated]]: a FLAT arm
+    * ([[sqlAssign]] over all K centroids) over `src` when K sits at the
+    * IvfK floor, and the TWO-LEVEL arm (⌈√K⌉ lowest-cid supers →
+    * child→super map → vector→two-nearest-supers (nprobe=2) → nearest
+    * child across those supers' children; rounded-L2, id tie-breaks at
+    * every level) when K is off the floor. The two source filters are
+    * complementary on the scalar K, so exactly one arm carries rows —
+    * the union IS the gate, at every SF. Reads the `kp`/`sp` CTEs of
+    * [[sqlSemDedupIndex]]. The `AS MATERIALIZED` hints are
+    * load-bearing: DuckDB otherwise inlines each multiply-referenced CTE
+    * and the chained assigns re-expand exponentially (r17 lesson,
+    * >74 GB spill at sf10). */
+  private def sqlGatedAssign(src: String, cent: String,
       out: String): String =
-    s"""${p}_fe AS (
-       |  SELECT e.* FROM $embCte e WHERE (SELECT k FROM kp) <= $IvfK
-       |), ${p}_fl AS MATERIALIZED (
-       |  SELECT vec_id, v, cid AS cluster FROM (
-       |    SELECT e.vec_id, e.v, c.cid,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY round(list_distance(e.v, c.cv), 6),
-       |                      c.cid) AS rk
-       |    FROM ${p}_fe e CROSS JOIN $centCte c
-       |  ) WHERE rk = 1
-       |), ${p}_te AS (
-       |  SELECT e.* FROM $embCte e WHERE (SELECT k FROM kp) > $IvfK
-       |), ${p}_sup AS MATERIALIZED (
+    s"""${out}_fe AS (
+       |  SELECT e.* FROM $src e WHERE (SELECT k FROM kp) <= $IvfK
+       |), ${sqlAssign(Nil)(s"${out}_fe", cent, s"${out}_fl")},
+       |${out}_te AS (
+       |  SELECT e.* FROM $src e WHERE (SELECT k FROM kp) > $IvfK
+       |), ${out}_sup AS MATERIALIZED (
        |  SELECT cid AS scid, cv AS scv FROM (
        |    SELECT cid, cv, row_number() OVER (ORDER BY cid) AS r
-       |    FROM $centCte
+       |    FROM $cent
        |  ) WHERE r <= (SELECT ns FROM sp)
-       |), ${p}_cm AS MATERIALIZED (
+       |), ${out}_cm AS MATERIALIZED (
        |  SELECT cid, cv, scid FROM (
        |    SELECT c.cid, c.cv, s.scid,
        |           row_number() OVER (PARTITION BY c.cid
        |             ORDER BY round(list_distance(c.cv, s.scv), 6),
        |                      s.scid) AS rk
-       |    FROM $centCte c CROSS JOIN ${p}_sup s
+       |    FROM $cent c CROSS JOIN ${out}_sup s
        |  ) WHERE rk = 1
-       |), ${p}_vs AS MATERIALIZED (
+       |), ${out}_vs AS MATERIALIZED (
        |  SELECT vec_id, scid FROM (
        |    SELECT e.vec_id, s.scid,
        |           row_number() OVER (PARTITION BY e.vec_id
        |             ORDER BY round(list_distance(e.v, s.scv), 6),
        |                      s.scid) AS rk
-       |    FROM ${p}_te e CROSS JOIN ${p}_sup s
+       |    FROM ${out}_te e CROSS JOIN ${out}_sup s
        |  ) WHERE rk <= 2
-       |), ${p}_tl AS (
+       |), ${out}_tl AS (
        |  SELECT vec_id, v, cid AS cluster FROM (
        |    SELECT e.vec_id, e.v, m.cid,
        |           row_number() OVER (PARTITION BY e.vec_id
        |             ORDER BY round(list_distance(e.v, m.cv), 6),
        |                      m.cid) AS rk
-       |    FROM ${p}_te e JOIN ${p}_vs x ON e.vec_id = x.vec_id
-       |    JOIN ${p}_cm m ON m.scid = x.scid
+       |    FROM ${out}_te e JOIN ${out}_vs x ON e.vec_id = x.vec_id
+       |    JOIN ${out}_cm m ON m.scid = x.scid
        |  ) WHERE rk = 1
        |), $out AS MATERIALIZED (
-       |  SELECT * FROM ${p}_fl UNION ALL SELECT * FROM ${p}_tl
+       |  SELECT * FROM ${out}_fl UNION ALL SELECT * FROM ${out}_tl
        |)""".stripMargin
 
-  private val semDedupSql = {
-    def assign2(centCte: String, p: String, out: String) =
-      sqlGatedAssign("emb", centCte, p, out)
-    def update(assignedCte: String) =
-      s"""SELECT cluster AS cid, list(m ORDER BY pos) AS cv FROM (
-         |    SELECT cluster, i AS pos,
-         |           CAST(SUM(CAST(round(v[i] * 1000000.0, 0) AS BIGINT))
-         |                AS DOUBLE) / (count(*) * 1000000.0) AS m
-         |    FROM $assignedCte, generate_series(1, $Dim) AS g(i)
-         |    GROUP BY cluster, i
-         |  ) GROUP BY cluster""".stripMargin
-    // kp restates semDedupK: K = max(16, ceil(n / target)), computed
-    // from the same corpus count the Spark arm uses; sp restates
-    // nSup = ceil(sqrt(K)) through the same IEEE double path — the
-    // scaled-K two-level trained-quantizer chain is identical on both
-    // engines at every SF
-    s"""WITH emb AS MATERIALIZED (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), kp AS (
+  /** [[semDedupIndex]] as oracle CTEs over the training CTE `train`:
+    * `kp` restates [[semDedupK]] — K = max(16, ⌈n/target⌉) through the
+    * same IEEE double ceil, from the same training count — `sp` the
+    * ⌈√K⌉ super count of [[assignGated]], and the gated Lloyd chain
+    * ends in the centroid CTE `cent`. */
+  private def sqlSemDedupIndex(train: String): String = {
+    val init = s"SELECT vec_id AS cid, v AS cv FROM $train, kp\n" +
+      "  WHERE vec_id >= kp.k AND vec_id < 2 * kp.k"
+    s"""kp AS (
        |  SELECT greatest($IvfK, CAST(ceil(CAST(count(*) AS DOUBLE)
        |                               / $SemDedupTargetClusterSize.0)
        |                          AS BIGINT)) AS k
-       |  FROM emb
+       |  FROM $train
        |), sp AS (
        |  SELECT CAST(ceil(sqrt(CAST(k AS DOUBLE))) AS BIGINT) AS ns
        |  FROM kp
-       |), cent0 AS (
-       |  SELECT vec_id AS cid, v AS cv FROM emb, kp
-       |  WHERE vec_id >= kp.k AND vec_id < 2 * kp.k
-       |), ${assign2("cent0", "t0", "a0")}, cent1 AS MATERIALIZED (
-       |  ${update("a0")}
-       |), ${assign2("cent1", "t1", "a1")}, cent2 AS MATERIALIZED (
-       |  ${update("a1")}
-       |), ${assign2("cent2", "t2", "assigned")}
+       |), ${sqlLloyd(train, init, Nil, Dim, sqlGatedAssign, "cent")}"""
+      .stripMargin
+  }
+
+  private val semDedupSql =
+    s"""WITH emb AS MATERIALIZED (
+       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+       |), ${sqlSemDedupIndex("emb")},
+       |${sqlGatedAssign("emb", "cent", "assigned")}
        |SELECT vec_id, kept_id, sim, cluster FROM (
        |  SELECT a.vec_id, b.vec_id AS kept_id,
        |         round(list_cosine_similarity(a.v, b.v), 6) AS sim,
@@ -1672,7 +1687,6 @@ object ExtQueries {
        |    ON a.cluster = b.cluster AND b.vec_id < a.vec_id
        |  WHERE round(list_cosine_similarity(a.v, b.v), 6) >= $SemDedupTau
        |) WHERE rk = 1 ORDER BY vec_id""".stripMargin
-  }
 
   // ----------------------- incremental SemDeDup ---------------------------
 
@@ -1682,31 +1696,6 @@ object ExtQueries {
     * convention as `x_dedup_incremental`'s doc_id split, restated by
     * the oracle as `count(*) * 4 // 5`. */
   private[graft] def semDedupIncrSplit(nVecs: Long): Long = nVecs * 4 / 5
-
-  /** The nightly index build (r16 verdict item 8): train the scaled-K
-    * two-level quantizer on the EXISTING corpus only (batch vectors
-    * must not influence yesterday's centroids), returning the frozen
-    * quantizer and the assignment law's parameters. In production this
-    * product — centroids plus the corpus's cluster assignments — is
-    * what persists between days; `SemDedupSpec` pins the round-trip
-    * (quantizer through parquet and back ⇒ bit-identical probe). */
-  private[graft] def semDedupIncrIndex(s: SparkSession, dir: String,
-      targetClusterSize: Long = SemDedupTargetClusterSize)
-      : (DataFrame, DataFrame, Long, Long) = {
-    val emb = tbl(s, dir, "embeddings")
-      .select(col("vec_id"), embDouble.as("v"))
-      .localCheckpoint() // scanned 2×/Lloyd iteration + in the probe
-    val split = semDedupIncrSplit(emb.count())
-    val idx = emb.filter(col("vec_id") < split)
-    val k = semDedupK(split, targetClusterSize)
-    var cent = idx
-      .filter(col("vec_id") >= k && col("vec_id") < 2 * k)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    for (_ <- 0 until KmIters)
-      cent = meanCentroids(assignGated(idx, cent, k))
-        .localCheckpoint()
-    (emb, cent, split, k)
-  }
 
   /** The daily probe against a frozen quantizer: assign every vector
     * (index members reproduce the persisted cluster index; batch
@@ -1732,11 +1721,9 @@ object ExtQueries {
   private[graft] def semDedupIncrProbe(s: SparkSession, emb: DataFrame,
       cent: DataFrame, split: Long, k: Long,
       broadcastCap: Long = PbBroadcastRowCap): DataFrame = {
-    val assigned = assignGated(emb, cent, k)
-      .repartition(s.sparkContext.defaultParallelism)
-      .localCheckpoint() // probed by both sides of the cluster join
+    val assigned = semDedupAssign(s, emb, cent, k)
     val batch = assigned.filter(col("vec_id") >= split)
-    val nBatch = batch.count() // cheap scan over the checkpointed blocks
+    val nBatch = graft.rowCount(batch) // the job that materializes assigned
     val mates = assigned
       .select(col("vec_id").as("kept_id"), col("v").as("bv"),
         col("cluster"))
@@ -1762,48 +1749,20 @@ object ExtQueries {
   }
 
   private def semDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val (emb, cent, split, k) = semDedupIncrIndex(s, dir)
+    val (emb, cent, split, k) =
+      semDedupIndex(s, dir, Some(semDedupIncrSplit))
     semDedupIncrProbe(s, emb, cent, split, k)
   }
 
-  private val semDedupIncrementalSql = {
-    // the same K-GATED assign/update CTE machinery as semDedupSql
-    // (sqlGatedAssign — one spelling of the rule), parameterized on the
-    // TRAINING frame (idx — the persisted corpus) vs the ASSIGNED frame
-    // (emb — corpus + batch, frozen centroids); kp here restates the
-    // INDEX-count law
-    def assign2(embCte: String, centCte: String, p: String, out: String) =
-      sqlGatedAssign(embCte, centCte, p, out)
-    def update(assignedCte: String) =
-      s"""SELECT cluster AS cid, list(m ORDER BY pos) AS cv FROM (
-         |    SELECT cluster, i AS pos,
-         |           CAST(SUM(CAST(round(v[i] * 1000000.0, 0) AS BIGINT))
-         |                AS DOUBLE) / (count(*) * 1000000.0) AS m
-         |    FROM $assignedCte, generate_series(1, $Dim) AS g(i)
-         |    GROUP BY cluster, i
-         |  ) GROUP BY cluster""".stripMargin
+  private val semDedupIncrementalSql =
     s"""WITH emb AS MATERIALIZED (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
        |), bp AS (
        |  SELECT count(*) * 4 // 5 AS split FROM emb
        |), idx AS MATERIALIZED (
        |  SELECT vec_id, v FROM emb, bp WHERE vec_id < bp.split
-       |), kp AS (
-       |  SELECT greatest($IvfK, CAST(ceil(CAST(count(*) AS DOUBLE)
-       |                               / $SemDedupTargetClusterSize.0)
-       |                          AS BIGINT)) AS k
-       |  FROM idx
-       |), sp AS (
-       |  SELECT CAST(ceil(sqrt(CAST(k AS DOUBLE))) AS BIGINT) AS ns
-       |  FROM kp
-       |), cent0 AS (
-       |  SELECT vec_id AS cid, v AS cv FROM idx, kp
-       |  WHERE vec_id >= kp.k AND vec_id < 2 * kp.k
-       |), ${assign2("idx", "cent0", "t0", "a0")}, cent1 AS MATERIALIZED (
-       |  ${update("a0")}
-       |), ${assign2("idx", "cent1", "t1", "a1")}, cent2 AS MATERIALIZED (
-       |  ${update("a1")}
-       |), ${assign2("emb", "cent2", "t2", "assigned")}, batch AS (
+       |), ${sqlSemDedupIndex("idx")},
+       |${sqlGatedAssign("emb", "cent", "assigned")}, batch AS (
        |  SELECT a.* FROM assigned a, bp WHERE a.vec_id >= bp.split
        |), hits AS (
        |  SELECT b.vec_id, min(m.vec_id) AS dup_of
@@ -1816,7 +1775,6 @@ object ExtQueries {
        |       h.dup_of IS NULL AS keep, b.cluster
        |FROM batch b LEFT JOIN hits h USING (vec_id)
        |ORDER BY vec_id""".stripMargin
-  }
 
   // ------------------------- random projection (JL) -----------------------
 
@@ -1862,6 +1820,7 @@ object ExtQueries {
   private val PqM = 4            // subspaces
   private val PqSub = Dim / PqM  // dims per subspace
   private val PqK = 16           // codebook entries per subspace
+  private val PqKeys = Seq("subspace") // one codebook per subspace
 
   /** PQ-ANN — the third standard ANN scale path beside hyperplane LSH
     * (`x_ann_lsh`) and IVF (`x_ann_ivf*`): vectors compress to M=4
@@ -1871,86 +1830,51 @@ object ExtQueries {
     *
     * Codebooks are the held-out init vectors' subvectors (ids [16,32) —
     * same honest untrained stand-in as `x_ann_ivf`; Lloyd's per subspace
-    * is the `x_ann_ivf_kmeans` upgrade path). Encode = rank over a
-    * 64-row broadcast (M·K codebook entries); search = join the 4-row
-    * per-vector code table against the query's 64-entry LUT and sum —
-    * one shuffle on the code keys, never a scan of raw vectors.
+    * is the `x_ann_pq_kmeans` upgrade path). Encode = the packed-argmin
+    * assign per (vec_id, subspace) over a 64-row broadcast (M·K codebook
+    * entries); search = join the 4-row per-vector code table against
+    * the query's 64-entry LUT and sum — one shuffle on the code keys,
+    * never a scan of raw vectors.
     *
     * Determinism: per-subspace distances round 6dp with centroid-id
     * tie-breaks; the 4 partial distances are QUANTIZED to µ-units
     * (round(d·10⁶) as BIGINT) before the group-sum, so accumulation is
     * exact integer math in any order on both engines. */
-  /** (vec_id, m, sv): every vector decomposed into its PqM subvectors. */
+  /** (vec_id, subspace, v): every vector decomposed into its PqM
+    * subvectors. */
   private def pqSubvectors(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), posexplode(
       array((0 until PqM).map(m =>
-        slice(col("v"), m * PqSub + 1, PqSub)): _*)).as(Seq("m", "sv")))
+        slice(col("v"), m * PqSub + 1, PqSub)): _*)).as(PqKeys :+ "v"))
 
   /** Untrained codebook init: the held-out vectors' subvectors
-    * ((m, cid, cv) — M·K entries, each PqSub dims). */
+    * ((subspace, cid, cv) — M·K entries, each PqSub dims). */
   private def pqCodebookInit(emb: DataFrame): DataFrame =
     emb.filter(col("vec_id") >= IvfK && col("vec_id") < 2 * IvfK)
       .select((0 until PqM).map(m =>
-        struct(lit(m).as("m"), col("vec_id").as("cid"),
+        struct(lit(m).as("subspace"), col("vec_id").as("cid"),
           slice(col("v"), m * PqSub + 1, PqSub).as("cv")).as(s"s$m")): _*)
       .select(explode(array((0 until PqM).map(m => col(s"s$m")): _*)).as("e"))
-      .select(col("e.m").as("m"), col("e.cid").as("cid"), col("e.cv").as("cv"))
-
-  /** Per-subspace Lloyd's: assign every subvector to its nearest codeword
-    * (broadcast rank, rounded-L2 + cid tie-break), recompute codewords as
-    * quantized-sum means per (m, cid, pos) — the same exact-integer mean
-    * machinery as [[meanCentroids]], with the subspace id riding along in
-    * every key. A codeword that attracts no subvectors drops out of the
-    * codebook (standard empty-cluster shrink; both engines drop it
-    * identically since the update is a plain GROUP BY over assignments). */
-  private def pqTrainCodebook(sub: DataFrame, init: DataFrame): DataFrame = {
-    val byDist = Window.partitionBy("vec_id", "m")
-      .orderBy(round(l2(col("sv"), col("cv")), 6), col("cid"))
-    var cb = init
-    for (_ <- 0 until KmIters)
-      cb = sub.join(broadcast(cb), "m")
-        .withColumn("rk", row_number().over(byDist))
-        .filter(col("rk") === 1)
-        .select(col("m"), col("cid"), posexplode(col("sv"))
-          .as(Seq("pos", "x")))
-        .withColumn("xq", round(col("x") * lit(1000000.0)).cast("long"))
-        .groupBy("m", "cid", "pos")
-        .agg((sum("xq").cast("double") /
-          (count(lit(1)) * lit(1000000.0))).as("mn"))
-        .groupBy("m", "cid")
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("mn")))),
-          st => st.getField("mn")).as("cv"))
-        .localCheckpoint() // ≤ M·K rows; cut lineage per iteration
-    cb
-  }
+      .select("e.*")
 
   /** PQ encode + ADC search against a given (bounded, broadcastable)
-    * codebook — shared by the untrained and k-means-trained variants.
-    * `sub` is the corpus subvector decomposition (so the trained variant
-    * reuses its checkpointed copy instead of re-deriving it). */
-  private def pqSearch(emb: DataFrame, sub: DataFrame,
-                       codebook: DataFrame): DataFrame = {
-    val byDist = Window.partitionBy("vec_id", "m")
-      .orderBy(round(l2(col("sv"), col("cv")), 6), col("cid"))
-    // corpus → (vec_id, m, code)
-    val codes = sub
-      .join(broadcast(codebook), "m")
-      .withColumn("rk", row_number().over(byDist))
-      .filter(col("rk") === 1)
-      .select(col("vec_id").as("neighbor_id"), col("m"),
-        col("cid").as("code"))
-    // queries → per-(m, cid) quantized partial distances (the ADC LUT)
+    * codebook — shared by the untrained and k-means-trained variants. */
+  private def pqSearch(emb: DataFrame, codebook: DataFrame): DataFrame = {
+    // corpus → (vec_id, subspace, code)
+    val codes = nearestCentroid(pqSubvectors(emb), codebook, PqKeys)
+      .select(col("vec_id").as("neighbor_id"), col("subspace"),
+        col("cluster").as("code"))
+    // queries → per-(subspace, cid) quantized partial distances (the
+    // ADC LUT)
     val lut = pqSubvectors(emb.filter(col("vec_id") < NQueries))
-      .withColumnRenamed("sv", "qv")
-      .join(broadcast(codebook), "m")
-      .select(col("vec_id").as("query_id"), col("m"),
+      .join(broadcast(codebook), PqKeys)
+      .select(col("vec_id").as("query_id"), col("subspace"),
         col("cid").as("code"),
-        round(l2(col("qv"), col("cv")) * lit(1000000.0))
+        round(l2(col("v"), col("cv")) * lit(1000000.0))
           .cast("long").as("dq"))
     val rn = row_number().over(Window.partitionBy("query_id")
       .orderBy(col("approx_dist"), col("neighbor_id")))
-    codes.join(lut, Seq("m", "code"))
+    codes.join(lut, PqKeys :+ "code")
       .filter(col("query_id") =!= col("neighbor_id"))
       .groupBy("query_id", "neighbor_id")
       .agg((sum("dq").cast("double") / lit(1000000.0)).as("approx_dist"))
@@ -1962,24 +1886,24 @@ object ExtQueries {
   private def pqAnn(s: SparkSession, dir: String): DataFrame = {
     val emb = tbl(s, dir, "embeddings").select(col("vec_id"), embDouble.as("v"))
     // codebook is 64 rows; reused by encode + LUT sides
-    pqSearch(emb, pqSubvectors(emb), pqCodebookInit(emb).localCheckpoint())
+    pqSearch(emb, pqCodebookInit(emb).localCheckpoint(false))
   }
 
-  /** PQ with TRAINED codebooks — [[KmIters]] rounds of per-subspace
-    * Lloyd's over the corpus subvectors (the k-means step `x_ann_pq`'s
-    * scaladoc names as the upgrade path, mirroring what
-    * `x_ann_ivf_kmeans` does for the IVF coarse quantizer). Training
-    * cost at scale: per iteration, one broadcast-assign pass over the
-    * subvector decomposition plus a (m, cid, pos)-keyed partial-sum
-    * shuffle of ≤ M·K·PqSub tiny rows — the corpus itself never
-    * shuffles. Same exact-integer determinism as the IVF trainer. */
+  /** PQ with TRAINED codebooks — [[lloyd]] per subspace over the corpus
+    * subvectors (the k-means step `x_ann_pq`'s scaladoc names as the
+    * upgrade path, mirroring what `x_ann_ivf_kmeans` does for the IVF
+    * coarse quantizer). Training cost at scale: per iteration, one
+    * broadcast-assign pass over the subvector decomposition, the
+    * id-keyed rejoin of its payload, and a (subspace, cid, pos)-keyed
+    * partial-sum shuffle of ≤ M·K·PqSub tiny rows. The subvectors are
+    * re-derived from the scan each round, not checkpointed: over a
+    * checkpoint, Spark's runtime filter adds a bloom-filter pass (two
+    * jobs) to the second round's payload rejoin. */
   private def pqKmeansAnn(s: SparkSession, dir: String): DataFrame = {
     val emb = tbl(s, dir, "embeddings")
       .select(col("vec_id"), embDouble.as("v"))
-    val sub = pqSubvectors(emb)
-      .localCheckpoint() // scanned once per iteration + by the encode side
-    val trained = pqTrainCodebook(sub, pqCodebookInit(emb))
-    pqSearch(emb, sub, trained)
+    pqSearch(emb, lloyd(pqSubvectors(emb), pqCodebookInit(emb), PqKeys,
+      assignClusters(_, _, PqKeys)))
   }
 
   private def pqSqlSlice(expr: String, m: Int) =
@@ -1987,37 +1911,17 @@ object ExtQueries {
 
   /** The untrained codebook CTE body (held-out subvectors). */
   private val pqCbInitSql = (0 until PqM).map(m =>
-    s"SELECT $m AS m, vec_id AS cid, ${pqSqlSlice("v", m)} AS cv FROM init")
+    s"SELECT $m AS subspace, vec_id AS cid, ${pqSqlSlice("v", m)} AS cv FROM init")
     .mkString("\n  UNION ALL ")
 
-  /** One Lloyd assign step over `subs` against codebook CTE `cb`. */
-  private def pqAssignSql(cb: String) =
-    s"""SELECT m, cid, sv FROM (
-       |    SELECT s.vec_id, s.m, c.cid, s.sv,
-       |           row_number() OVER (PARTITION BY s.vec_id, s.m
-       |             ORDER BY round(list_distance(s.sv, c.cv), 6), c.cid)
-       |             AS rk
-       |    FROM subs s JOIN $cb c ON s.m = c.m
-       |  ) WHERE rk = 1""".stripMargin
-
-  /** One Lloyd update step: quantized-sum means per (m, cid, pos). */
-  private def pqUpdateSql(assigned: String) =
-    s"""SELECT m, cid, list(mn ORDER BY pos) AS cv FROM (
-       |    SELECT m, cid, i AS pos,
-       |           CAST(SUM(CAST(round(sv[i] * 1000000.0, 0) AS BIGINT))
-       |                AS DOUBLE) / (count(*) * 1000000.0) AS mn
-       |    FROM $assigned, generate_series(1, $PqSub) AS g(i)
-       |    GROUP BY m, cid, i
-       |  ) GROUP BY m, cid""".stripMargin
-
   /** Full PQ encode+ADC-search oracle, parameterized by the CTE chain
-    * that produces the final `codebook(m, cid, cv)`. */
+    * that produces the final `codebook(subspace, cid, cv)`. */
   private def pqSearchSql(codebookChain: String) = {
     val subUnion = (0 until PqM).map(m =>
-      s"SELECT vec_id, $m AS m, ${pqSqlSlice("v", m)} AS sv FROM emb")
+      s"SELECT vec_id, $m AS subspace, ${pqSqlSlice("v", m)} AS v FROM emb")
       .mkString("\n  UNION ALL ")
     val qUnion = (0 until PqM).map(m =>
-      s"SELECT vec_id, $m AS m, ${pqSqlSlice("v", m)} AS qv FROM emb WHERE vec_id < $NQueries")
+      s"SELECT vec_id, $m AS subspace, ${pqSqlSlice("v", m)} AS qv FROM emb WHERE vec_id < $NQueries")
       .mkString("\n  UNION ALL ")
     s"""WITH emb AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -2026,32 +1930,26 @@ object ExtQueries {
        |  WHERE vec_id >= $IvfK AND vec_id < ${2 * IvfK}
        |), subs AS (
        |  $subUnion
-       |), $codebookChain, codes AS (
-       |  SELECT vec_id AS neighbor_id, m, cid AS code FROM (
-       |    SELECT s.vec_id, s.m, c.cid,
-       |           row_number() OVER (PARTITION BY s.vec_id, s.m
-       |             ORDER BY round(list_distance(s.sv, c.cv), 6), c.cid)
-       |             AS rk
-       |    FROM subs s JOIN codebook c ON s.m = c.m
-       |  ) WHERE rk = 1
-       |), qsubs AS (
+       |), $codebookChain,
+       |${sqlAssign(PqKeys)("subs", "codebook", "encoded")}, qsubs AS (
        |  $qUnion
        |), lut AS (
-       |  SELECT q.vec_id AS query_id, q.m, c.cid AS code,
+       |  SELECT q.vec_id AS query_id, q.subspace, c.cid AS code,
        |         CAST(round(list_distance(q.qv, c.cv) * 1000000.0, 0)
        |              AS BIGINT) AS dq
-       |  FROM qsubs q JOIN codebook c ON q.m = c.m
+       |  FROM qsubs q JOIN codebook c ON q.subspace = c.subspace
        |)
        |SELECT query_id, neighbor_id, approx_dist, rn FROM (
        |  SELECT query_id, neighbor_id, approx_dist,
        |         row_number() OVER (PARTITION BY query_id
        |                            ORDER BY approx_dist, neighbor_id) AS rn
        |  FROM (
-       |    SELECT l.query_id, c.neighbor_id,
+       |    SELECT l.query_id, c.vec_id AS neighbor_id,
        |           CAST(SUM(l.dq) AS DOUBLE) / 1000000.0 AS approx_dist
-       |    FROM codes c JOIN lut l ON c.m = l.m AND c.code = l.code
-       |    WHERE l.query_id != c.neighbor_id
-       |    GROUP BY l.query_id, c.neighbor_id
+       |    FROM encoded c JOIN lut l
+       |      ON c.subspace = l.subspace AND c.cluster = l.code
+       |    WHERE l.query_id != c.vec_id
+       |    GROUP BY l.query_id, c.vec_id
        |  )
        |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
   }
@@ -2059,17 +1957,8 @@ object ExtQueries {
   private val pqAnnSql =
     pqSearchSql(s"codebook AS (\n  $pqCbInitSql\n)")
 
-  private val pqKmeansAnnSql = {
-    val chain = new StringBuilder(s"cb0 AS (\n  $pqCbInitSql\n)")
-    for (i <- 0 until KmIters)
-      chain ++= s""", a$i AS (
-                   |  ${pqAssignSql(s"cb$i")}
-                   |), cb${i + 1} AS (
-                   |  ${pqUpdateSql(s"a$i")}
-                   |)""".stripMargin
-    pqSearchSql(
-      chain.toString + s", codebook AS (SELECT * FROM cb$KmIters)")
-  }
+  private val pqKmeansAnnSql = pqSearchSql(sqlLloyd("subs", pqCbInitSql,
+    PqKeys, PqSub, sqlAssign(PqKeys), "codebook"))
 
   // ---------------------------- ANN recall eval ---------------------------
 

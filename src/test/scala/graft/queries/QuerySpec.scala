@@ -26,7 +26,7 @@ class QuerySpec extends SparkSpec {
       "b_salted_join", "s1_s2_datepath_glob", "s4_csv_roundtrip",
       "s5_catalog_lifecycle", "st_stream_ingest", "st_stream_window",
       "x_minhash_lsh_pairs", "x_ngram_jaccard_pairs", "x_embed_neardup",
-      "x_ann_ivf", "x_ann_ivf_kmeans", "st_stream_state",
+      "st_stream_state",
       "s4b_csv_explicit_schema", "dbt_models")
     graft.SparkEntry.queries.foreach { case (name, fn) =>
       if (!sideEffecting(name)) {

@@ -78,7 +78,9 @@ class SemDedupSpec extends SparkSpec {
     // floor and the law untested)
     val target = 32L
     def stats(dir: String): (Long, Long, Double) = {
-      val sizes = ExtQueries.semDedupAssignments(spark, dir, target)
+      val (emb, cent, _, k) = ExtQueries.semDedupIndex(spark, dir, None,
+        target)
+      val sizes = ExtQueries.semDedupAssign(spark, emb, cent, k)
         .groupBy("cluster").count()
         .select(col("count").cast("long")).collect().map(_.getLong(0))
       val n = sizes.sum
@@ -117,7 +119,8 @@ class SemDedupSpec extends SparkSpec {
   test("x_semdedup_incremental (r17): the frozen quantizer round-trips " +
       "through parquet and the probe is bit-identical — the persisted-" +
       "index contract of the daily-production shape") {
-    val (emb, cent, split, k) = ExtQueries.semDedupIncrIndex(spark, sf)
+    val (emb, cent, split, k) = ExtQueries.semDedupIndex(spark, sf,
+      Some(ExtQueries.semDedupIncrSplit))
     val inPlan = ExtQueries
       .semDedupIncrProbe(spark, emb, cent, split, k).collect().toSeq
     val path =
@@ -297,7 +300,8 @@ class SemDedupSpec extends SparkSpec {
 
   test("r18 ADVICE: the incremental probe's salted arm (past the batch " +
       "broadcast cap) equals the broadcast arm row-for-row") {
-    val (emb, cent, split, k) = ExtQueries.semDedupIncrIndex(spark, sf)
+    val (emb, cent, split, k) = ExtQueries.semDedupIndex(spark, sf,
+      Some(ExtQueries.semDedupIncrSplit))
     val bc = ExtQueries.semDedupIncrProbe(spark, emb, cent, split, k)
       .collect().toSeq
     val salted = ExtQueries
