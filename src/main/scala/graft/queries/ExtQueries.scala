@@ -185,11 +185,6 @@ object ExtQueries {
        |SELECT doc_id, ${(0 until 8).map(sqlMinhash).mkString(",\n       ")}
        |FROM hv GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  /** MinHash-LSH near-dup candidates: 4 bands × 2 rows; docs sharing any
-    * band bucket become a candidate pair; est. Jaccard = matching
-    * signature fraction. Scale: the self-join key is (band, h_i, h_j) —
-    * a bucket join whose cost tracks collisions, not n²; the final
-    * signature re-join is by doc_id. */
   /** Checkpointed signatures + LSH candidate pairs (doc_a < doc_b) —
     * shared by the near-dup pair scorer below and the connected-components
     * cluster resolver ([[GraphQueries]]). Signatures are materialized
@@ -232,6 +227,11 @@ object ExtQueries {
         .select("doc_a", "doc_b"))
   }
 
+  /** MinHash-LSH near-dup candidates: 4 bands × 2 rows; docs sharing any
+    * band bucket become a candidate pair; est. Jaccard = matching
+    * signature fraction. Scale: the self-join key is (band, h_i, h_j) —
+    * a bucket join whose cost tracks collisions, not n²; the final
+    * signature re-join is by doc_id. */
   private def minhashLshPairs(s: SparkSession, dir: String): DataFrame = {
     val (sigs, cand) = lshCandParts(s, dir)
     val sa = sigs.toDF(sigs.columns.map(c => s"a_$c"): _*)
@@ -372,109 +372,16 @@ object ExtQueries {
     * Spark and DuckDB always agree on the cap in force. */
   private val MaxShingleDf = 100
 
-  /** True n-gram Jaccard near-dup pairs (≥ 0.1 over distinct k=3 word
-    * shingles): candidates from an inverted-index join on the shingle —
-    * only docs sharing ≥1 shingle are ever paired (25 pairs at sf0.01).
-    * Jaccard = |∩| / (|A|+|B|−|∩|), exact int math + one division.
-    * Candidate generation drops stopword-grade hot shingles (df >
-    * [[MaxShingleDf]]); denominators still use full distinct-shingle
-    * counts. */
-  private def ngramJaccardPairs(s: SparkSession, dir: String): DataFrame = {
-    // Materialized once (both sides of the inverted-index self-join);
-    // the join's cost is Σ_shingle n_docs² — data-dependent, so don't
-    // also pay recompute per side.
-    // checkpoint BEFORE deriving the df filter: the cold aggregation and
-    // the join's left side would otherwise each re-run the full
-    // tokenize→shingle→explode subtree (the exact per-side recompute this
-    // comment block exists to prevent).
-    // the explode is the projection's ONLY derived column (see the
-    // TextF.shinglesFromTokens scaladoc: a Generate sharing a projection
-    // with sibling derived columns re-evaluates the tokenize→shingle
-    // tree per emitted element — ~40× at sf0.1); |A| is recovered as a
-    // count window over the exploded rows
-    val shAll = tbl(s, dir, "documents")
-      .select(col("doc_id"), TextF.lowerTokens(col("text")).as("toks"))
-      .select(col("doc_id"), explode(array_distinct(
-        TextF.shinglesFromTokens(col("toks"), K))).as("shingle_s"))
-      // 64-bit shingle fingerprint — same rationale and collision
-      // analysis as containmentAtCap: the string shingle is the
-      // dominant byte volume on the checkpoint and both join shuffles
-      .select(col("doc_id"), xxhash64(col("shingle_s")).as("shingle"))
-      .withColumn("n", count(lit(1)).over(
-        Window.partitionBy("doc_id")))
-      .localCheckpoint()
-    // df-per-shingle is aggregated on the same `shingle` key the
-    // candidate join shuffles on — one extra map-side-combined pass over
-    // the checkpointed rows, and the join back is co-partitioned.
-    val cold = shAll.groupBy("shingle")
-      .agg(count(lit(1)).as("dfc"))
-      .filter(col("dfc") <= MaxShingleDf)
-      .select("shingle")
-    val sh = shAll.join(cold, "shingle").localCheckpoint()
-    val a = sh.select(col("doc_id").as("doc_a"), col("n").as("na"),
-      col("shingle"))
-    val b = sh.select(col("doc_id").as("doc_b"), col("n").as("nb"),
-      col("shingle"))
-    a.join(b, Seq("shingle")).filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("inter"), first("na").as("na"),
-        first("nb").as("nb"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")).cast("double"))
-          .as("jaccard"))
-      .filter(col("jaccard") >= 0.1)
-      .orderBy("doc_a", "doc_b")
-  }
-
-  private val ngramJaccardPairsSql =
-    s"""WITH sh_all AS (
-       |  SELECT doc_id, len(shl) AS n, unnest(shl) AS shingle FROM (
-       |    SELECT doc_id, $sqlShingles AS shl
-       |    FROM (SELECT doc_id, $sqlLowerToks AS t FROM documents)
-       |    WHERE len(t) >= $K)
-       |), cold AS (
-       |  SELECT shingle FROM sh_all GROUP BY shingle
-       |  HAVING count(*) <= $MaxShingleDf
-       |), sh AS (
-       |  SELECT sh_all.* FROM sh_all JOIN cold USING (shingle)
-       |), pairs AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter,
-       |         any_value(a.n) AS na, any_value(b.n) AS nb
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY a.doc_id, b.doc_id
-       |)
-       |SELECT doc_a, doc_b,
-       |       CAST(inter AS DOUBLE) / CAST(na + nb - inter AS DOUBLE)
-       |         AS jaccard
-       |FROM pairs
-       |WHERE CAST(inter AS DOUBLE) / CAST(na + nb - inter AS DOUBLE) >= 0.1
-       |ORDER BY doc_a, doc_b""".stripMargin
-
-  /** Minimum containment score to report. */
-  private val ContainmentMin = 0.4
-
-  /** ASYMMETRIC near-dup pairs by shingle containment — |A∩B| / |A| over
-    * distinct k=3 word shingles. Jaccard misses subset duplication (a
-    * paragraph quoted inside a much longer doc scores low symmetric
-    * similarity but containment ≈ 1 from the quote's side); this is the
-    * directional complement `x_ngram_jaccard_pairs` cannot express, and
-    * the signal used to drop quote-of-a-kept-doc records. Emits ORDERED
-    * pairs: (a, b) and (b, a) score independently.
-    *
-    * Same inverted-index candidate generation as Jaccard (shared
-    * hot-shingle df cap, shared checkpoint discipline); the denominator
-    * stays the full |A| so the cap only thins candidates, never biases a
-    * reported score. */
-  private def containmentPairs(s: SparkSession, dir: String): DataFrame =
-    containmentAtCap(s, dir, MaxShingleDf)
-
-  /** [[containmentPairs]] parameterized by the hot-shingle df cap —
-    * the knob the round-11 sf10 sweep turns (PLANS.md) and the recall
-    * witness (`x_containment_recall`) quantifies. `Int.MaxValue` = no
-    * cap (exact containment; the ground truth the recall is measured
-    * against). */
-  private[graft] def containmentAtCap(s: SparkSession, dir: String,
+  /** Shared-shingle counts of every unordered doc pair (doc_a < doc_b)
+    * that shares at least one distinct k=3 word shingle of df ≤ `cap`:
+    * columns `doc_b, doc_a, inter, na, nb` (join order; scorers select
+    * by name), with inter = |A∩B| over the cold shingles and na/nb the
+    * full PRE-cap distinct-shingle counts. This is the one
+    * inverted-index candidate stage under every shingle scorer (Jaccard,
+    * containment and its recall witness). A scorer only projects these
+    * counts, so the cap thins candidates and never biases a reported
+    * score. `Int.MaxValue` = no cap. */
+  private def sharedShingles(s: SparkSession, dir: String,
       cap: Int): DataFrame = {
     // the explode is the projection's ONLY derived column (see the
     // TextF.shinglesFromTokens scaladoc: a Generate sharing a projection
@@ -527,14 +434,10 @@ object ExtQueries {
     // 0 ≤ doc_id < 2^31 the (doc_a, doc_b) pair packs into one long —
     // a third less width on the query's dominant shuffle. Unpacked
     // fallback when stats are absent or out of range.
-    // Unordered-pair halving (r19, guide §2.3 "shuffle fewer bytes"):
-    // |A∩B| is SYMMETRIC, so the aggregate only needs each pair once —
-    // a < b halves the candidate stream through the dominant exchange
-    // and hash (sf0.1: 12.9 → 6.9 MB shuffled, solo 1.70 → 1.50 s).
-    // Both ordered orientations are re-emitted AFTER the aggregate from
-    // the one inter row, each against its own denominator (na for
-    // (a,b), nb for (b,a)) — same IEEE divide per orientation, so the
-    // emitted score set is bit-identical to scoring ordered pairs.
+    // Unordered pairs (r19, guide §2.3 "shuffle fewer bytes"): |A∩B| is
+    // SYMMETRIC, so the aggregate counts each pair once — a < b halves
+    // the candidate stream through the dominant exchange and hash
+    // (sf0.1: 12.9 → 6.9 MB shuffled, solo 1.70 → 1.50 s).
     val pairs0 = a.join(b, Seq("shingle"))
       .filter(col("doc_a") < col("doc_b"))
     val packable = graft.core.TableStats.columnRange(
@@ -558,6 +461,82 @@ object ExtQueries {
     interU
       .join(na, "doc_a")
       .join(nb, "doc_b")
+  }
+
+  /** DuckDB twin of [[sharedShingles]]: the `sh_all → cold → sh → pairs`
+    * CTEs (no `cold`/`sh` when `cap` is None), each name suffixed with
+    * `sfx`, ending in `pairs<sfx>(doc_a, doc_b, inter, na, nb)`. Raw
+    * string shingles, no fingerprint. */
+  private def sharedShinglesSql(cap: Option[Int], sfx: String): String = {
+    val capped = cap.fold("") { c =>
+      s"""cold$sfx AS (
+         |  SELECT shingle FROM sh_all$sfx GROUP BY shingle
+         |  HAVING count(*) <= $c
+         |), sh$sfx AS (
+         |  SELECT sh_all$sfx.* FROM sh_all$sfx JOIN cold$sfx USING (shingle)
+         |), """.stripMargin
+    }
+    val sh = if (cap.isDefined) s"sh$sfx" else s"sh_all$sfx"
+    s"""sh_all$sfx AS (
+       |  SELECT doc_id, len(shl) AS n, unnest(shl) AS shingle FROM (
+       |    SELECT doc_id, $sqlShingles AS shl
+       |    FROM (SELECT doc_id, $sqlLowerToks AS t FROM documents)
+       |    WHERE len(t) >= $K)
+       |), ${capped}pairs$sfx AS (
+       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter,
+       |         any_value(a.n) AS na, any_value(b.n) AS nb
+       |  FROM $sh a JOIN $sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+       |  GROUP BY a.doc_id, b.doc_id
+       |)""".stripMargin
+  }
+
+  /** True n-gram Jaccard near-dup pairs (≥ 0.1 over distinct k=3 word
+    * shingles): |∩| / (|A|+|B|−|∩|) over [[sharedShingles]] at
+    * [[MaxShingleDf]] — only docs sharing ≥1 cold shingle are ever
+    * paired (25 pairs at sf0.01); exact int math + one division. */
+  private def ngramJaccardPairs(s: SparkSession, dir: String): DataFrame =
+    sharedShingles(s, dir, MaxShingleDf)
+      .select(col("doc_a"), col("doc_b"),
+        (col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")).cast("double"))
+          .as("jaccard"))
+      .filter(col("jaccard") >= 0.1)
+      .orderBy("doc_a", "doc_b")
+
+  private val ngramJaccardPairsSql =
+    s"""WITH ${sharedShinglesSql(Some(MaxShingleDf), "")}
+       |SELECT doc_a, doc_b,
+       |       CAST(inter AS DOUBLE) / CAST(na + nb - inter AS DOUBLE)
+       |         AS jaccard
+       |FROM pairs
+       |WHERE CAST(inter AS DOUBLE) / CAST(na + nb - inter AS DOUBLE) >= 0.1
+       |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** Minimum containment score to report. */
+  private val ContainmentMin = 0.4
+
+  /** ASYMMETRIC near-dup pairs by shingle containment — |A∩B| / |A| over
+    * distinct k=3 word shingles. Jaccard misses subset duplication (a
+    * paragraph quoted inside a much longer doc scores low symmetric
+    * similarity but containment ≈ 1 from the quote's side); this is the
+    * directional complement `x_ngram_jaccard_pairs` cannot express, and
+    * the signal used to drop quote-of-a-kept-doc records. Emits ORDERED
+    * pairs: (a, b) and (b, a) score independently. */
+  private def containmentPairs(s: SparkSession, dir: String): DataFrame =
+    containmentAtCap(s, dir, MaxShingleDf)
+
+  /** [[containmentPairs]] parameterized by the hot-shingle df cap —
+    * the knob the round-11 sf10 sweep turns (PLANS.md) and the recall
+    * witness (`x_containment_recall`) quantifies. `Int.MaxValue` = no
+    * cap (exact containment; the ground truth the recall is measured
+    * against). Both ordered orientations are emitted from the one
+    * unordered [[sharedShingles]] row, each against its own denominator
+    * (na for (a,b), nb for (b,a)) — the same IEEE divide per
+    * orientation, so the score set is bit-identical to scoring ordered
+    * pairs. */
+  private[graft] def containmentAtCap(s: SparkSession, dir: String,
+      cap: Int): DataFrame =
+    sharedShingles(s, dir, cap)
       .select(explode(array(
         struct(col("doc_a"), col("doc_b"),
           (col("inter").cast("double") / col("na").cast("double"))
@@ -567,30 +546,22 @@ object ExtQueries {
             .as("containment")))).as("p"))
       .select(col("p.doc_a"), col("p.doc_b"), col("p.containment"))
       .filter(col("containment") >= ContainmentMin)
-  }
+
+  /** DuckDB twin of [[containmentAtCap]]'s projection over
+    * `pairs<sfx>`. */
+  private def containmentSql(sfx: String): String =
+    s"""SELECT * FROM (
+       |  SELECT doc_a, doc_b,
+       |         CAST(inter AS DOUBLE) / CAST(na AS DOUBLE) AS containment
+       |  FROM pairs$sfx
+       |  UNION ALL
+       |  SELECT doc_b, doc_a, CAST(inter AS DOUBLE) / CAST(nb AS DOUBLE)
+       |  FROM pairs$sfx
+       |) WHERE containment >= $ContainmentMin""".stripMargin
 
   private val containmentPairsSql =
-    s"""WITH sh_all AS (
-       |  SELECT doc_id, len(shl) AS n, unnest(shl) AS shingle FROM (
-       |    SELECT doc_id, $sqlShingles AS shl
-       |    FROM (SELECT doc_id, $sqlLowerToks AS t FROM documents)
-       |    WHERE len(t) >= $K)
-       |), cold AS (
-       |  SELECT shingle FROM sh_all GROUP BY shingle
-       |  HAVING count(*) <= $MaxShingleDf
-       |), sh AS (
-       |  SELECT sh_all.* FROM sh_all JOIN cold USING (shingle)
-       |), pairs AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter,
-       |         any_value(a.n) AS na
-       |  FROM sh a JOIN sh b
-       |    ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
-       |  GROUP BY a.doc_id, b.doc_id
-       |)
-       |SELECT doc_a, doc_b,
-       |       CAST(inter AS DOUBLE) / CAST(na AS DOUBLE) AS containment
-       |FROM pairs
-       |WHERE CAST(inter AS DOUBLE) / CAST(na AS DOUBLE) >= $ContainmentMin
+    s"""WITH ${sharedShinglesSql(Some(MaxShingleDf), "")}
+       |${containmentSql("")}
        |ORDER BY doc_a, doc_b""".stripMargin
 
   /** Probe cap for the recall witness: BITES at verify scale (max
@@ -621,32 +592,12 @@ object ExtQueries {
   }
 
   private val containmentRecallSql =
-    s"""WITH sh_all AS (
-       |  SELECT doc_id, len(shl) AS n, unnest(shl) AS shingle FROM (
-       |    SELECT doc_id, $sqlShingles AS shl
-       |    FROM (SELECT doc_id, $sqlLowerToks AS t FROM documents)
-       |    WHERE len(t) >= $K)
-       |), base AS (
-       |  SELECT doc_a, doc_b FROM (
-       |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter,
-       |           any_value(a.n) AS na
-       |    FROM sh_all a JOIN sh_all b
-       |      ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
-       |    GROUP BY a.doc_id, b.doc_id)
-       |  WHERE CAST(inter AS DOUBLE) / CAST(na AS DOUBLE) >= $ContainmentMin
-       |), cold AS (
-       |  SELECT shingle FROM sh_all GROUP BY shingle
-       |  HAVING count(*) <= $RecallProbeCap
-       |), shc AS (
-       |  SELECT sh_all.* FROM sh_all JOIN cold USING (shingle)
+    s"""WITH ${sharedShinglesSql(None, "_base")},
+       |${sharedShinglesSql(Some(RecallProbeCap), "_capped")},
+       |base AS (
+       |  SELECT doc_a, doc_b FROM (${containmentSql("_base")})
        |), capped AS (
-       |  SELECT doc_a, doc_b FROM (
-       |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter,
-       |           any_value(a.n) AS na
-       |    FROM shc a JOIN shc b
-       |      ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
-       |    GROUP BY a.doc_id, b.doc_id)
-       |  WHERE CAST(inter AS DOUBLE) / CAST(na AS DOUBLE) >= $ContainmentMin
+       |  SELECT doc_a, doc_b FROM (${containmentSql("_capped")})
        |)
        |SELECT (SELECT count(*) FROM base) AS n_base,
        |       (SELECT count(*) FROM capped) AS n_capped,
@@ -665,6 +616,9 @@ object ExtQueries {
   private val NQueries = 10 // query set: vec_id < 10
 
   private def embDouble: Column = col("embedding").cast("array<double>")
+
+  /** DuckDB twin of [[embDouble]]. */
+  private val sqlEmb = "CAST(embedding AS DOUBLE[])"
 
   /** Rounded cosine: both engines compute the identical sequential double
     * fold; round(…, 6) + vec_id tie-break makes top-k selection robust to
@@ -750,11 +704,7 @@ object ExtQueries {
   }
 
   private val annLshSql = {
-    def planeLit(p: Int) =
-      VectorF.plane(p, Dim).map(d => s"$d").mkString("[", ",", "]")
-    val bucket = (0 until NPlanes).map { p =>
-      s"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), ${planeLit(p)}) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
+    val bucket = OracleSql.signCode(sqlEmb, 0 until NPlanes, Dim)
     s"""WITH b AS (
        |  SELECT vec_id, embedding, $bucket AS bucket FROM embeddings
        |)
@@ -773,146 +723,51 @@ object ExtQueries {
        |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
   }
 
-  /** Embedding-cosine near-dup pairs via BANDED hyperplane LSH: 16
-    * data-independent planes grouped into 8 bands of 2; vectors are
-    * candidates iff ANY band code matches (OR-amplification: a cos-0.5
-    * pair passes some band w.p. ≈0.99 where a single 8-plane bucket
-    * would find it w.p. ≈0.04), then exact cosine ≥ 0.45 confirms.
-    * Scale: candidates come from 8 bucket joins on (band, code) — cost
-    * tracks band-collision volume; the threshold is a demo value sized to
-    * the fixture's cosine range (max ≈ 0.51). Plane indices 100+ keep the
-    * family disjoint from the ANN query's. */
-  private val NdBands = 8
-  private val NdThreshold = 0.45
-
-  private def ndBandCode(v: Column, band: Int): Column =
-    VectorF.planeSignBits(
-      v, Seq(100 + band * 2, 100 + band * 2 + 1), Dim)
-
-  /** Salt factor for the band-candidate join: a 2-plane band code has
-    * only 4 values, so the (band, code) join has 32 distinct keys — at
-    * sf1+ that is a handful of fat tasks doing quadratic-in-bucket work
-    * on 2 cores (stack-dump-measured, round 14). Salting splits each
-    * bucket's product across 32 reducers: the a-side keys on
-    * hash(vec_a) mod F, the b-side replicates F× — identical pair set,
-    * 32 → 1024 join keys. (The candidate VOLUME at this demo threshold
-    * is inherently ~n²/4 per band — a 0.45 cosine threshold admits far
-    * too many random pairs for any LSH family to prune subquadratically;
-    * production near-dup thresholds (≥0.9) support 8-16-plane bands
-    * where volume collapses. The demo threshold exists because the
-    * fixture's max pairwise cosine is ≈0.51.) */
-  private val NdSalt = 32
-
-  private def embedNeardupPairs(s: SparkSession, dir: String): DataFrame = {
-    // Same execution skeleton as the production variant below (round 15:
-    // the three measured wins ported back) — round-robin repartition
-    // before the code computation so the confirm chain runs at cluster
-    // width, size-adaptive broadcast of every build side, and
-    // CONFIRM-THEN-DEDUP (a pair colliding in k ≤ 8 bands is cosine-
-    // checked k times; the redundant 64-fma folds are far cheaper than
-    // a pre-confirm distinct's full shuffle of the raw candidate
-    // stream). Past the broadcast cap the band join falls back to the
-    // SALTED shuffle: a 2-plane band code has only 4 values, so the
-    // un-salted (band, code) join would funnel 32 fat tasks.
-    val par = s.sparkContext.defaultParallelism
-    val emb = tbl(s, dir, "embeddings")
-      .repartition(par)
-      .select(col("vec_id") +: embDouble.as("v") +:
-        (0 until NdBands).map(b => ndBandCode(embDouble, b).as(s"b$b")): _*)
-      .localCheckpoint() // reused by 8 band fan-outs × 2 join sides
-    val nVecs = emb.count() // metadata-cheap on the materialized blocks
-    val build: DataFrame => DataFrame =
-      if (nVecs <= PbBroadcastRowCap) broadcast else identity
-    val bands = emb.select(col("vec_id"),
-      posexplode(array((0 until NdBands).map(b => col(s"b$b")): _*))
-        .as(Seq("band", "code")))
-    // ADVICE r15: the bands side is NdBands×nVecs rows, not nVecs — gate
-    // its broadcast on the EXPLODED row count so a corpus just under the
-    // vector cap can't push an 8×-oversized build (the code rows are
-    // ~20× narrower than vector rows, so the same row cap bounds bytes
-    // conservatively); past it, the salted shuffle below is the arm
-    // that exists at scale anyway
-    val cand =
-      if (NdBands.toLong * nVecs <= PbBroadcastRowCap)
-        bands.select(col("vec_id").as("vec_a"), col("band"), col("code"))
-          .join(broadcast(bands.select(col("vec_id").as("vec_b"),
-            col("band"), col("code"))), Seq("band", "code"))
-          .filter(col("vec_a") < col("vec_b"))
-          .select("vec_a", "vec_b")
-      else
-        bands.select(col("vec_id").as("vec_a"), col("band"),
-          col("code"), pmod(xxhash64(col("vec_id")), lit(NdSalt)).as("salt"))
-          .join(bands.select(col("vec_id").as("vec_b"), col("band"),
-            col("code"),
-            explode(sequence(lit(0L), lit(NdSalt - 1L))).as("salt")),
-            Seq("band", "code", "salt"))
-          .filter(col("vec_a") < col("vec_b"))
-          .select("vec_a", "vec_b")
-    val va = emb.select(col("vec_id").as("vec_a"), col("v").as("va"))
-    val vb = emb.select(col("vec_id").as("vec_b"), col("v").as("vb"))
-    cand.join(build(va), "vec_a").join(build(vb), "vec_b")
-      .select(col("vec_a"), col("vec_b"),
-        simCol(col("va"), col("vb")).as("sim"))
-      .filter(col("sim") >= NdThreshold)
-      .distinct() // sim is a pure function of the pair — equals dedup-first
-      .orderBy("vec_a", "vec_b")
+  /** One embedding-cosine near-dup regime of [[embedNeardup]]: `bands`
+    * bands of `planesPerBand` hyperplane sign bits (band b's planes are
+    * `planeBase + b·planesPerBand + i`), the exact-cosine `threshold`
+    * and the over-cap band join's `salt`. */
+  private[graft] final case class NdRegime(bands: Int, planesPerBand: Int,
+      planeBase: Int, threshold: Double, salt: Int) {
+    def planes(band: Int): Seq[Int] =
+      (0 until planesPerBand).map(i => planeBase + band * planesPerBand + i)
   }
 
-  private val embedNeardupPairsSql = {
-    def planeLit(p: Int) =
-      VectorF.plane(p, Dim).map(d => s"$d").mkString("[", ",", "]")
-    def code(tbl: String, band: Int) = (0 until 2).map { i =>
-      s"(CASE WHEN list_dot_product(CAST($tbl.embedding AS DOUBLE[]), ${planeLit(100 + band * 2 + i)}) >= 0 THEN ${1L << i} ELSE 0 END)"
-    }.mkString(" + ")
-    val anyBand = (0 until NdBands)
-      .map(b => s"(${code("a", b)}) = (${code("b", b)})")
-      .mkString("\n     OR ")
-    s"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-       |                                    CAST(b.embedding AS DOUBLE[])), 6)
-       |         AS sim
-       |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-       |WHERE ($anyBand)
-       |  AND round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-       |                                   CAST(b.embedding AS DOUBLE[])), 6)
-       |      >= $NdThreshold
-       |ORDER BY vec_a, vec_b""".stripMargin
-  }
+  /** DEMO regime (`x_embed_neardup`): 16 planes in 8 bands of 2, cos ≥
+    * 0.45. OR-amplification: a cos-0.5 pair passes some band w.p. ≈0.99
+    * where a single 8-plane bucket would find it w.p. ≈0.04. The
+    * threshold is sized to the un-planted fixture's cosine range (max
+    * ≈ 0.51); it admits far too many random pairs for any LSH family to
+    * prune subquadratically, so candidate volume is inherently ~n²/4 per
+    * band. Salt 32: a 2-plane band code has only 4 values, so the
+    * (band, code) join has 32 distinct keys — at sf1+ a handful of fat
+    * tasks doing quadratic-in-bucket work (stack-dump-measured, round
+    * 14); salted, 1024. Plane indices 100.. keep the family disjoint
+    * from the ANN query's (0..). */
+  private[graft] val NdDemo = NdRegime(8, 2, 100, 0.45, 32)
 
-  /** PRODUCTION-regime embedding near-dup (`x_embed_neardup_prod`,
-    * round 15, verdict item 1): threshold cos ≥ 0.9 — the regime a real
-    * dedup pipeline runs (the 0.45 demo variant above exists because the
-    * un-planted fixture's max pairwise cosine is ≈0.51) — with WIDE
-    * 16-plane bands.
+  /** PRODUCTION regime (`x_embed_neardup_prod`, round 15): cos ≥ 0.9 —
+    * the regime a real dedup pipeline runs — with WIDE 16-plane bands.
     *
     * Band-width arithmetic, measured on the fixture (avg |cos| ≈ 0.10,
     * p99 ≈ 0.29): a random-ish pair agrees with one plane w.p.
-    * 1 − θ/π ≈ 0.53, so an 8-plane band (the r14 verdict's first
-    * instinct) admits 0.53⁸ ≈ 0.6% of ALL pairs per band — ~1e9
-    * candidates at sf10's 200k vectors, still quadratic in practice.
-    * SIXTEEN planes square that per-band rate to ≈4e-5 (×16 bands
-    * ≈ 7e-4 of pairs → ~1e7 candidates at sf10 — collision-volume
-    * work, not n²), while a true near-dup at cos 0.95 (the ScaleGen-
-    * planted twins) still collides in some band w.p. ≈96%
+    * 1 − θ/π ≈ 0.53, so an 8-plane band admits 0.53⁸ ≈ 0.6% of ALL
+    * pairs per band — ~1e9 candidates at sf10's 200k vectors, still
+    * quadratic in practice. SIXTEEN planes square that per-band rate to
+    * ≈4e-5 (×16 bands ≈ 7e-4 of pairs → ~1e7 candidates at sf10 —
+    * collision-volume work, not n²), while a true near-dup at cos 0.95
+    * (the ScaleGen-planted twins) still collides in some band w.p. ≈96%
     * (0.899¹⁶ ≈ 0.18 per band). Recall is a property of the OPERATOR
     * DEFINITION mirrored exactly by the oracle (both sides compute
     * band-candidates ∩ sim ≥ 0.9), so correctness is exact at any
     * recall; the planted-twin recall itself is spec-pinned in
     * `CorpusDedupSpec`.
     *
-    * No salt, unlike the demo variant: 2¹⁶ codes per band keep bucket
-    * occupancy at units even at sf10 (the demo's 4-value codes forced
-    * 32 fat tasks), so the candidate join is an ordinary bucketed
-    * self-join. Plane family 200.. keeps it disjoint from the demo's
-    * (100..) and the ANN query's (0..). */
-  private val PbBands = 16
-  private val PbPlanesPerBand = 16
-  private val PbThreshold = 0.90
-
-  private def pbBandCode(v: Column, band: Int): Column =
-    VectorF.planeSignBits(v,
-      (0 until PbPlanesPerBand).map(i => 200 + band * PbPlanesPerBand + i),
-      Dim)
+    * Salt 1: 2¹⁶ codes per band keep bucket occupancy at units even at
+    * sf10, so the over-cap band join is an ordinary bucketed join. Plane
+    * family 200.. keeps it disjoint from the demo's (100..) and the ANN
+    * query's (0..). */
+  private[graft] val NdProd = NdRegime(16, 16, 200, 0.90, 1)
 
   /** Vector-side broadcast cap for the exact-confirm joins: ≤ 2M
     * vectors (~1 GB of 64-dim doubles) hash-build in memory, so the
@@ -927,70 +782,89 @@ object ExtQueries {
     * strategy choice as [[graft.ops.Bfs]]'s broadcastRowCap. */
   private val PbBroadcastRowCap = 2L * 1000 * 1000
 
-  private def embedNeardupProd(s: SparkSession, dir: String): DataFrame = {
-    // Round-robin repartition BEFORE the 256-plane code computation and
-    // the checkpoint: the corpus parquet is ~1 block = 1 task no matter
-    // how many cores (the x_cosine_topk lesson), and with every build
-    // side broadcast the whole downstream confirm chain is map-side —
-    // its parallelism IS this partitioning. One O(corpus) shuffle buys
+  /** Embedding-cosine near-dup pairs `(vec_a < vec_b, sim)` via BANDED
+    * hyperplane LSH under regime `r`: vectors are candidates iff ANY
+    * band code matches, then exact cosine ≥ `r.threshold` confirms.
+    * Candidates come from one bucketed join on (band, code), so cost
+    * tracks band-collision volume.
+    *
+    * At most `broadcastCap` vectors, every build side broadcasts. The
+    * bands build is `r.bands`×nVecs rows, but of (id, band, code) —
+    * ~26× narrower than the 64-double vector rows the cap is sized
+    * for — so even at the cap (16 bands × 2M rows ≈ 0.8 GB) it stays
+    * inside the same ~1 GB byte budget as each vector-payload confirm
+    * build, and the demo's 8-band build is half that: the one
+    * vector-count gate bounds bytes for every build side in the plan,
+    * which is why no separate bands×nVecs row gate exists. Past the
+    * cap the band join is a salted shuffle (a-side keyed on
+    * hash(vec_a) mod `r.salt`, b-side replicated `r.salt`× — the
+    * identical pair set) and the confirm joins shuffle on the id keys.
+    * `broadcastCap` is injected so specs can force the over-cap arm on
+    * a fixture (no verification fixture reaches the production cap). */
+  private[graft] def embedNeardup(s: SparkSession, dir: String,
+      r: NdRegime, broadcastCap: Long): DataFrame = {
+    // Round-robin repartition BEFORE the plane-code computation and the
+    // checkpoint: the corpus parquet is ~1 block = 1 task no matter how
+    // many cores (the x_cosine_topk lesson), and with every build side
+    // broadcast the whole downstream confirm chain is map-side — its
+    // parallelism IS this partitioning. One O(corpus) shuffle buys
     // cluster-width compute for codes, band join, probes and cosines.
     val par = s.sparkContext.defaultParallelism
     val emb = tbl(s, dir, "embeddings")
       .repartition(par)
       .select(col("vec_id") +: embDouble.as("v") +:
-        (0 until PbBands).map(b => pbBandCode(embDouble, b).as(s"pb$b")): _*)
+        (0 until r.bands).map(b =>
+          VectorF.planeSignBits(embDouble, r.planes(b), Dim).as(s"pb$b")): _*)
       .localCheckpoint(false) // codes computed once; reused by both join sides
     val nVecs = graft.rowCount(emb) // the job that materializes emb
-    val build: DataFrame => DataFrame =
-      if (nVecs <= PbBroadcastRowCap) broadcast else identity
-    // one generator scan per side (not 16 unioned re-projections).
-    // Broadcast-size note (ADVICE r15 consideration): the bands build is
-    // PbBands×nVecs rows, but of (id, band, code) — ~26× narrower than
-    // the 64-double vector rows the cap is sized for — so even at the
-    // cap (16×2M rows ≈ 0.8 GB) it stays inside the same ~1 GB byte
-    // budget as each vector-payload confirm build; the row cap bounds
-    // bytes for every build side in this plan.
+    val underCap = nVecs <= broadcastCap
+    val build: DataFrame => DataFrame = if (underCap) broadcast else identity
+    // one generator scan per side (not one unioned re-projection per band)
     val bands = emb.select(col("vec_id"),
-      posexplode(array((0 until PbBands).map(b => col(s"pb$b")): _*))
+      posexplode(array((0 until r.bands).map(b => col(s"pb$b")): _*))
         .as(Seq("band", "code")))
+    val bandsA = bands.select(col("vec_id").as("vec_a"), col("band"),
+      col("code"))
+    val bandsB = bands.select(col("vec_id").as("vec_b"), col("band"),
+      col("code"))
     // CONFIRM-THEN-DEDUP: a pair colliding in k bands is cosine-checked
     // k times and deduplicated only after the ≥-threshold filter. The
-    // k ≤ 16 redundant 64-fma cosines are an order of magnitude cheaper
-    // than the alternative — a full shuffle round (the distinct) of the
+    // k redundant 64-fma cosines are an order of magnitude cheaper than
+    // the alternative — a full shuffle round (the distinct) of the
     // ~2.3×-larger raw candidate stream before the confirm — and with
     // every build side under the cap the whole band-join → probe →
     // cosine → filter chain is ONE map-side codegen stage; the only
     // shuffle left is the distinct over the ~survivor-sized output.
     // (sim is a deterministic function of the pair, so distinct on
     // (pair, sim) equals the dedup-first result exactly.)
-    val cand = bands.select(col("vec_id").as("vec_a"), col("band"),
-        col("code"))
-      .join(build(bands.select(col("vec_id").as("vec_b"), col("band"),
-        col("code"))), Seq("band", "code"))
-      .filter(col("vec_a") < col("vec_b"))
+    val joined =
+      if (underCap) bandsA.join(broadcast(bandsB), Seq("band", "code"))
+      else
+        bandsA
+          .withColumn("salt", pmod(xxhash64(col("vec_a")), lit(r.salt)))
+          .join(bandsB.withColumn("salt",
+            explode(sequence(lit(0L), lit(r.salt - 1L)))),
+            Seq("band", "code", "salt"))
+    val cand = joined.filter(col("vec_a") < col("vec_b"))
       .select("vec_a", "vec_b")
     val va = emb.select(col("vec_id").as("vec_a"), col("v").as("va"))
     val vb = emb.select(col("vec_id").as("vec_b"), col("v").as("vb"))
     cand.join(build(va), "vec_a").join(build(vb), "vec_b")
       .select(col("vec_a"), col("vec_b"),
         simCol(col("va"), col("vb")).as("sim"))
-      .filter(col("sim") >= PbThreshold)
+      .filter(col("sim") >= r.threshold)
       .distinct()
       .orderBy("vec_a", "vec_b")
   }
 
-  /** DuckDB mirror: the SAME bucketed band self-join (16 per-band code
-    * CTEs unioned, hash-joined on (band, code)) — NOT an n² predicate
-    * join, so the comparator does collision-volume work too and the
-    * paired ratio compares plans, not plan classes. */
-  private val embedNeardupProdSql = {
-    def planeLit(p: Int) =
-      VectorF.plane(p, Dim).map(d => s"$d").mkString("[", ",", "]")
-    def code(band: Int) = (0 until PbPlanesPerBand).map { i =>
-      s"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), ${planeLit(200 + band * PbPlanesPerBand + i)}) >= 0 THEN ${1L << i} ELSE 0 END)"
-    }.mkString(" + ")
-    val bandSelects = (0 until PbBands).map(b =>
-      s"  SELECT vec_id, $b AS band, (${code(b)}) AS code FROM embeddings")
+  /** DuckDB twin of [[embedNeardup]]: the SAME bucketed band self-join
+    * (one per-band code branch each, unioned, hash-joined on (band,
+    * code)) — NOT an n² predicate join, so the comparator does
+    * collision-volume work too and the paired ratio compares plans, not
+    * plan classes. */
+  private def embedNeardupSql(r: NdRegime): String = {
+    val bandSelects = (0 until r.bands).map(b =>
+      s"  SELECT vec_id, $b AS band, (${OracleSql.signCode(sqlEmb, r.planes(b), Dim)}) AS code FROM embeddings")
       .mkString("\n  UNION ALL\n")
     s"""WITH bands AS (
        |$bandSelects
@@ -1008,7 +882,7 @@ object ExtQueries {
        |JOIN embeddings eb ON eb.vec_id = cand.vec_b
        |WHERE round(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
        |                                   CAST(eb.embedding AS DOUBLE[])),
-       |            6) >= $PbThreshold
+       |            6) >= ${r.threshold}
        |ORDER BY vec_a, vec_b""".stripMargin
   }
 
@@ -1805,10 +1679,8 @@ object ExtQueries {
       .orderBy("vec_id")
 
   private val randProjectionSql = {
-    def planeLit(p: Int) =
-      VectorF.plane(p, Dim).map(d => s"$d").mkString("[", ",", "]")
     val projs = (0 until ProjDim).map(p =>
-      s"round(list_dot_product(CAST(embedding AS DOUBLE[]), ${planeLit(p)}), 6) AS proj_$p")
+      s"round(list_dot_product($sqlEmb, ${OracleSql.planeLit(p, Dim)}), 6) AS proj_$p")
       .mkString(",\n       ")
     s"""SELECT vec_id,
        |       $projs
@@ -1822,24 +1694,6 @@ object ExtQueries {
   private val PqK = 16           // codebook entries per subspace
   private val PqKeys = Seq("subspace") // one codebook per subspace
 
-  /** PQ-ANN — the third standard ANN scale path beside hyperplane LSH
-    * (`x_ann_lsh`) and IVF (`x_ann_ivf*`): vectors compress to M=4
-    * one-byte codes (a 64-dim float vector becomes 4 bytes — the memory
-    * story that makes billion-vector search feasible), queries scan codes
-    * via an asymmetric-distance lookup table instead of raw vectors.
-    *
-    * Codebooks are the held-out init vectors' subvectors (ids [16,32) —
-    * same honest untrained stand-in as `x_ann_ivf`; Lloyd's per subspace
-    * is the `x_ann_pq_kmeans` upgrade path). Encode = the packed-argmin
-    * assign per (vec_id, subspace) over a 64-row broadcast (M·K codebook
-    * entries); search = join the 4-row per-vector code table against
-    * the query's 64-entry LUT and sum — one shuffle on the code keys,
-    * never a scan of raw vectors.
-    *
-    * Determinism: per-subspace distances round 6dp with centroid-id
-    * tie-breaks; the 4 partial distances are QUANTIZED to µ-units
-    * (round(d·10⁶) as BIGINT) before the group-sum, so accumulation is
-    * exact integer math in any order on both engines. */
   /** (vec_id, subspace, v): every vector decomposed into its PqM
     * subvectors. */
   private def pqSubvectors(emb: DataFrame): DataFrame =
@@ -1883,6 +1737,24 @@ object ExtQueries {
       .orderBy("query_id", "rn")
   }
 
+  /** PQ-ANN — the third standard ANN scale path beside hyperplane LSH
+    * (`x_ann_lsh`) and IVF (`x_ann_ivf*`): vectors compress to M=4
+    * one-byte codes (a 64-dim float vector becomes 4 bytes — the memory
+    * story that makes billion-vector search feasible), queries scan codes
+    * via an asymmetric-distance lookup table instead of raw vectors.
+    *
+    * Codebooks are the held-out init vectors' subvectors (ids [16,32) —
+    * same honest untrained stand-in as `x_ann_ivf`; Lloyd's per subspace
+    * is the `x_ann_pq_kmeans` upgrade path). Encode = the packed-argmin
+    * assign per (vec_id, subspace) over a 64-row broadcast (M·K codebook
+    * entries); search = join the 4-row per-vector code table against
+    * the query's 64-entry LUT and sum — one shuffle on the code keys,
+    * never a scan of raw vectors.
+    *
+    * Determinism: per-subspace distances round 6dp with centroid-id
+    * tie-breaks; the 4 partial distances are QUANTIZED to µ-units
+    * (round(d·10⁶) as BIGINT) before the group-sum, so accumulation is
+    * exact integer math in any order on both engines. */
   private def pqAnn(s: SparkSession, dir: String): DataFrame = {
     val emb = tbl(s, dir, "embeddings").select(col("vec_id"), embDouble.as("v"))
     // codebook is 64 rows; reused by encode + LUT sides
@@ -2181,16 +2053,16 @@ object ExtQueries {
     // production regime (x_embed_neardup_prod, benched) became the
     // verified scale surface. Oracle kept: still correctness-gated
     // every round; BenchLab times it ad hoc.
-    "x_embed_neardup" -> QueryDef(embedNeardupPairs,
-      Some(embedNeardupPairsSql)),
+    "x_embed_neardup" -> QueryDef(embedNeardup(_, _, NdDemo,
+      PbBroadcastRowCap), Some(embedNeardupSql(NdDemo))),
     // round 15 (verdict item 1): the production regime - cos >= 0.9,
     // 16-plane bands, collision-volume cost; ScaleGen plants real
     // near-dup twins so the result is non-trivial at generated SFs
     // (the driver fixture has no cos>=0.9 pair: 0 rows = 0 rows there,
     // with the non-trivial hash gate run on the planted fixture - see
     // PLANS.md round-15 notes)
-    "x_embed_neardup_prod" -> QueryDef(embedNeardupProd,
-      Some(embedNeardupProdSql), bench = true,
+    "x_embed_neardup_prod" -> QueryDef(embedNeardup(_, _, NdProd,
+      PbBroadcastRowCap), Some(embedNeardupSql(NdProd)), bench = true,
       benchNote = Some("production near-dup regime (cos>=0.9, 16-plane " +
         "bands) over ScaleGen-planted twins; both engines run the " +
         "bucketed band self-join, cost tracks collision volume.")),

@@ -355,12 +355,8 @@ object GraphQueries {
 
   /** The DuckDB mirror of bucket + directed-kNN + mutual CTEs. */
   private def knnCtes: String = {
-    import graft.functions.VectorF
-    def planeLit(p: Int) =
-      VectorF.plane(p, Dim).map(d => s"$d").mkString("[", ",", "]")
-    val bucket = (0 until GPlanes).map { p =>
-      s"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), ${planeLit(p)}) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
+    val bucket =
+      OracleSql.signCode("CAST(embedding AS DOUBLE[])", 0 until GPlanes, Dim)
     s"""b AS (
        |  SELECT vec_id, embedding, $bucket AS bucket FROM embeddings
        |), knn AS (
@@ -420,11 +416,11 @@ object GraphQueries {
     val wedges = w1.join(w2, Seq("u")).filter(col("kx") < col("ky"))
     val closing = oriented.select(col("u").as("x"), col("v").as("y"))
     val tri = wedges.join(closing, Seq("x", "y"), "left_semi")
-    val nNodes = deg.count()
-    val nEdges = e.count()
-    tri.agg(count(lit(1)).as("n_triangles"))
-      .select(lit(nNodes).as("n_nodes"), lit(nEdges).as("n_edges"),
-        col("n_triangles"))
+    // node and edge counts are single-row aggregates inside the plan,
+    // so building the frame runs no Spark job
+    deg.agg(count(lit(1)).as("n_nodes"))
+      .crossJoin(e.agg(count(lit(1)).as("n_edges")))
+      .crossJoin(tri.agg(count(lit(1)).as("n_triangles")))
   }
 
   private def triangleCountSql: String =

@@ -81,12 +81,6 @@ object H3OracleGen {
   private def firstNz(l: String): String =
     s"coalesce(list_filter($l, d -> d != 0)[1], 0)"
 
-  /** CTE blocks computing the H3 forward at odd `res` for every row of
-    * CTE `src` (columns: `keys...`, `phi`, `lam` — radians), producing
-    * CTE `out`(`keys...`, `h` BIGINT). Intermediate CTE names are
-    * suffixed `_<out>` so multiple forwards compose in one query.
-    * Returns text to splice into the WITH list (leading comma included).
-    */
   /** Column names the generated stages use internally — a key column
     * shadowing one would silently corrupt joins (found the hard way:
     * a key named `k` captured the bctab lookup's ijk coordinate and
@@ -100,6 +94,12 @@ object H3OracleGen {
       "bpent", "bcw") ++ (0 to 15).map(d => s"d$d") ++
       (0 to 4).map(t => s"pd$t")
 
+  /** CTE blocks computing the H3 forward at odd `res` for every row of
+    * CTE `src` (columns: `keys...`, `phi`, `lam` — radians), producing
+    * CTE `out`(`keys...`, `h` BIGINT). Intermediate CTE names are
+    * suffixed `_<out>` so multiple forwards compose in one query.
+    * Returns text to splice into the WITH list (leading comma included).
+    */
   def forward(src: String, res: Int, keys: Seq[String], out: String): String = {
     require(res % 2 == 1 && res >= 1 && res <= 15,
       s"forward oracle supports odd res 1..15, got $res")

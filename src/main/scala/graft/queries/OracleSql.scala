@@ -9,7 +9,9 @@ package graft.queries
   * Lockstep partners: [[OracleSql.hash]] ↔ `graft.functions.HashF
   * .tokenHash`; [[OracleSql.lowerToks]] ↔ `TextF.lowerTokens`;
   * [[OracleSql.gapsAndIslands]] ↔ the three sessionizers
-  * (`x_sessionize`, `st_stream_session`, `st_sessions_custom_state`).
+  * (`x_sessionize`, `st_stream_session`, `st_sessions_custom_state`);
+  * [[OracleSql.planeLit]] ↔ `VectorF.plane`; [[OracleSql.signCode]] ↔
+  * `VectorF.planeSignBits` / `VectorF.lshBucket`.
   */
 object OracleSql {
 
@@ -43,6 +45,18 @@ object OracleSql {
       s"list_transform(range(1, len(t) - ${k - 2}), " +
       s"i -> {'pos': i, 'sh': ${shingleCat(k)}}) " +
       "ELSE []::STRUCT(pos BIGINT, sh VARCHAR)[] END"
+
+  /** Hyperplane `p` of the `dim`-dimensional family as a DuckDB list
+    * literal (≡ `VectorF.plane(p, dim)`). */
+  def planeLit(p: Int, dim: Int): String =
+    graft.functions.VectorF.plane(p, dim).map(d => s"$d").mkString("[", ",", "]")
+
+  /** Sign code of the DOUBLE[] expression `vec` over hyperplanes
+    * `planes`: bit i is set iff `vec · planes(i) >= 0`. */
+  def signCode(vec: String, planes: Seq[Int], dim: Int): String =
+    planes.zipWithIndex.map { case (p, i) =>
+      s"(CASE WHEN list_dot_product($vec, ${planeLit(p, dim)}) >= 0 THEN ${1L << i} ELSE 0 END)"
+    }.mkString(" + ")
 
   /** Gaps-and-islands sessionization over `events`, parameterized by the
     * one load-bearing character each sessionizer differs in:

@@ -497,6 +497,12 @@ object StreamQueries {
     drainToMemory(s, enriched, "complete").orderBy("cell")
   }
 
+  /** Where `st_shard_stream` delivers — exposed for the layout spec
+    * (`StreamSpec`) so the test cannot drift from the query's own
+    * path construction (the `shardBase` precedent). */
+  private[graft] def shardStreamShards: String =
+    QTmp("stream/shard_stream") + "/shards"
+
   /** `st_shard_stream` — the streaming twin of `x_shard_write`:
     * documents arrive as a file-source stream in ≥2 microbatches
     * (maxFilesPerTrigger < file count); each microbatch derives its
@@ -520,12 +526,6 @@ object StreamQueries {
     * shuffle sized to the BATCH, one new file per shard, yesterday's
     * files untouched; shard count caps the per-batch file fanout, and
     * the manifest aggregate is metadata-sized. */
-  /** Where `st_shard_stream` delivers — exposed for the layout spec
-    * (`StreamSpec`) so the test cannot drift from the query's own
-    * path construction (the `shardBase` precedent). */
-  private[graft] def shardStreamShards: String =
-    QTmp("stream/shard_stream") + "/shards"
-
   private def streamShardDelivery(s: SparkSession, dir: String): DataFrame = {
     val base = freshDir(QTmp("stream/shard_stream"))
     tbl(s, dir, "documents").repartition(8)

@@ -683,20 +683,6 @@ object TrainPrepQueries {
 
   // ------------------------- composite pipeline ---------------------------
 
-  /** End-to-end corpus-prep pipeline — the LLM-data counterpart of the
-    * taxi `c_pipeline_e2e`: clean (mask + canonicalize) → exact-dedup on
-    * the CLEANED fingerprint (keep lowest doc_id) → deterministic
-    * split assignment → quality gate (≥ 5 tokens) → per-(lang, split)
-    * corpus stats. Proves the operators COMPOSE: one declarative plan,
-    * no intermediate materialization, shuffles only at the dedup window
-    * and the final small aggregate. The scan-side projection reduces
-    * each document to (doc_id, lang, fingerprint, n_tokens) BEFORE the
-    * dedup window, so the shuffle moves ~40 bytes/row instead of the
-    * full cleaned text — at 100 TB the dedup exchange is metadata-
-    * sized, not corpus-sized. (Token counts are computed pre-dedup for
-    * dropped duplicates too; that per-row cost is scan-local and far
-    * cheaper than shuffling text.) Stats stay in exact integer math
-    * (counts, token totals) so the composite is hash-comparable. */
   /** The canonical dedup fingerprint of a CLEANED document — ONE
     * definition shared by [[corpusPipeline]] and [[trainDelivery]] so
     * the dedup law cannot fork between the two pipelines. The trim is
@@ -714,6 +700,20 @@ object TrainPrepQueries {
   private[queries] def canonFp(lc: Column): Column =
     md5(trim(lc).cast("binary"))
 
+  /** End-to-end corpus-prep pipeline — the LLM-data counterpart of the
+    * taxi `c_pipeline_e2e`: clean (mask + canonicalize) → exact-dedup on
+    * the CLEANED fingerprint (keep lowest doc_id) → deterministic
+    * split assignment → quality gate (≥ 5 tokens) → per-(lang, split)
+    * corpus stats. Proves the operators COMPOSE: one declarative plan,
+    * no intermediate materialization, shuffles only at the dedup window
+    * and the final small aggregate. The scan-side projection reduces
+    * each document to (doc_id, lang, fingerprint, n_tokens) BEFORE the
+    * dedup window, so the shuffle moves ~40 bytes/row instead of the
+    * full cleaned text — at 100 TB the dedup exchange is metadata-
+    * sized, not corpus-sized. (Token counts are computed pre-dedup for
+    * dropped duplicates too; that per-row cost is scan-local and far
+    * cheaper than shuffling text.) Stats stay in exact integer math
+    * (counts, token totals) so the composite is hash-comparable. */
   private def corpusPipeline(s: SparkSession, dir: String): DataFrame = {
     // three-step select: `clean` / `lc` are each referenced twice below,
     // and a single collapsed projection would re-run the regex chain per
@@ -892,12 +892,6 @@ object TrainPrepQueries {
       .orderBy("shard_id")
   }
 
-  /** The shared delivery derivation both shard queries (and the spec)
-    * depend on: every document with its token count, the md5
-    * permutation key, and the md5-prefix-hash shard — ONE definition so
-    * the shard law cannot fork between the writer, the packer, and the
-    * streaming twin (`st_shard_stream` applies it per microbatch).
-    * SQL twin: [[shardDocsSqlCte]]. */
   /** The delivery-key law alone — skey (md5 permutation) + shard
     * (md5-prefix hash mod [[NShards]]) from `doc_id` — factored out so
     * [[trainDelivery]] (which keys dedup SURVIVORS, not raw documents)
@@ -909,6 +903,12 @@ object TrainPrepQueries {
         pmod(HashF.tokenHash(col("doc_id").cast("string")),
           lit(NShards.toLong)))
 
+  /** The shared delivery derivation both shard queries (and the spec)
+    * depend on: every document with its token count, the md5
+    * permutation key, and the md5-prefix-hash shard — ONE definition so
+    * the shard law cannot fork between the writer, the packer, and the
+    * streaming twin (`st_shard_stream` applies it per microbatch).
+    * SQL twin: [[shardDocsSqlCte]]. */
   private[queries] def shardDocsFrom(docs: DataFrame): DataFrame =
     deliveryKeys(docs
       .select(col("doc_id"), col("lang"),
@@ -1668,6 +1668,13 @@ object TrainPrepQueries {
        |      THEN concat(slice(acc, 1, size(acc) - 1), array('$l$r'))
        |      ELSE concat(acc, array(x)) END) END""".stripMargin)
 
+  /** The ONE corpus scan both BPE arms share: (word-type, frequency). */
+  private def bpeWordFreqs(s: SparkSession, dir: String): DataFrame =
+    tbl(s, dir, "documents")
+      .select(explode(TextF.lowerTokens(col("text"))).as("w"))
+      .filter(col("w").rlike("^[a-z]+$"))
+      .groupBy("w").agg(count(lit(1)).as("f"))
+
   /** Byte-pair-encoding merge training — the tokenizer-training pass
     * (Sennrich et al. 2016, as implemented by production tokenizer
     * trainers): learn the top-[[BpeMerges]] adjacent-symbol merges, each
@@ -1687,18 +1694,12 @@ object TrainPrepQueries {
     * rounds 1..k-1.
     *
     * Output: the learned merge table (merge_rank, left_sym, right_sym,
-    * pair_count) — the BPE artifact a tokenizer ships. */
-  /** The ONE corpus scan both BPE arms share: (word-type, frequency). */
-  private def bpeWordFreqs(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "documents")
-      .select(explode(TextF.lowerTokens(col("text"))).as("w"))
-      .filter(col("w").rlike("^[a-z]+$"))
-      .groupBy("w").agg(count(lit(1)).as("f"))
-
-  /** The distributed merge loop (one pair-count job + 1-row collect per
-    * round) over an arbitrary (w, f) word-frequency table — factored out
-    * so `BpeSpec` can prove it equal to [[graft.ops.Bpe.trainLocal]] on
-    * inputs beyond the fixture. */
+    * pair_count) — the BPE artifact a tokenizer ships.
+    *
+    * This is the distributed merge loop (one pair-count job + 1-row
+    * collect per round) over an arbitrary (w, f) word-frequency table —
+    * factored out so `BpeSpec` can prove it equal to
+    * [[graft.ops.Bpe.trainLocal]] on inputs beyond the fixture. */
   private[queries] def bpeLearnDistributed(
       words: DataFrame, merges: Int): Seq[(Int, String, String, Long)] = {
     var syms = words.select(col("f"),

@@ -373,18 +373,18 @@ object WarehouseQueries {
 
   // -------------------------- partitioned sink ----------------------------
 
-  /** Hive-partitioned sink + pruned read: write events partitioned by UTC
-    * day, read back ONE day through a partition-column predicate. The
-    * predicate resolves at file listing time (PartitionFilters — asserted
-    * in `WarehouseSpec`), so a 100 TB history scan touches exactly one
-    * day's files. This is the `partitionBy` twin of the reference's
-    * date-PATH layout (S1/S9, `s1_s2_datepath_glob`). */
   /** Per-(session, dir) sink path: concurrent sessions must not clobber
     * each other's partition directories mid-read. Package-visible for
     * `WarehouseSpec`'s pruning assertion. */
   private[queries] def psinkBase(s: SparkSession, dir: String): String =
     QTmp.perSession("warehouse/psink", s, dir)
 
+  /** Hive-partitioned sink + pruned read: write events partitioned by UTC
+    * day, read back ONE day through a partition-column predicate. The
+    * predicate resolves at file listing time (PartitionFilters — asserted
+    * in `WarehouseSpec`), so a 100 TB history scan touches exactly one
+    * day's files. This is the `partitionBy` twin of the reference's
+    * date-PATH layout (S1/S9, `s1_s2_datepath_glob`). */
   private def partitionedSink(s: SparkSession, dir: String): DataFrame = {
     val base = psinkBase(s, dir)
     eventsTbl(s, dir)

@@ -105,4 +105,28 @@ class CorpusDedupSpec extends SparkSpec {
       s"sf1 recall $recall over ${planted.size} twins — below the " +
         "96%-minus-tolerance band bound")
   }
+
+  /** The over-cap arm of the banded near-dup body (salted band join,
+    * shuffled confirm joins) against the registered query's default arm
+    * on a planted fixture, where both regimes return rows. */
+  private def overCapMatches(name: String, r: ExtQueries.NdRegime): Unit = {
+    val out = s"${sys.props("user.dir")}/target/qtmp-test/neardup_overcap"
+    graft.ScaleGen.run(spark, sf, out, 2)
+    val default = graft.SparkEntry.queries(name)(spark, out)
+      .collect().toSeq
+    val overCap = ExtQueries.embedNeardup(spark, out, r, broadcastCap = 0L)
+      .collect().toSeq
+    assert(default.nonEmpty, s"$name returns no rows on the planted fixture")
+    assert(overCap === default)
+  }
+
+  test("x_embed_neardup: the over-cap salted band join equals the " +
+      "default arm row-for-row") {
+    overCapMatches("x_embed_neardup", ExtQueries.NdDemo)
+  }
+
+  test("x_embed_neardup_prod: the over-cap salted band join equals the " +
+      "default arm row-for-row") {
+    overCapMatches("x_embed_neardup_prod", ExtQueries.NdProd)
+  }
 }

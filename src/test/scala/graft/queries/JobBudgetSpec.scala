@@ -21,4 +21,14 @@ class JobBudgetSpec extends SparkSpec {
     val got = budget.keys.map(name => name -> jobsToRun(name)).toMap
     assert(got === budget)
   }
+
+  test("job budget: the near-dup family") {
+    TableStats.analyze(spark, sf)
+    val budget = Map("x_ngram_jaccard_pairs" -> 9,
+      "x_containment_pairs" -> 9, "x_containment_recall" -> 19,
+      "x_embed_neardup" -> 8, "x_embed_neardup_prod" -> 6,
+      "x_triangle_count" -> 18)
+    val got = budget.keys.map(name => name -> jobsToRun(name)).toMap
+    assert(got === budget)
+  }
 }

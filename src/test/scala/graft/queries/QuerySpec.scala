@@ -25,7 +25,6 @@ class QuerySpec extends SparkSpec {
       "w_moving_bucketed",
       "b_salted_join", "s1_s2_datepath_glob", "s4_csv_roundtrip",
       "s5_catalog_lifecycle", "st_stream_ingest", "st_stream_window",
-      "x_minhash_lsh_pairs", "x_ngram_jaccard_pairs", "x_embed_neardup",
       "st_stream_state",
       "s4b_csv_explicit_schema", "dbt_models")
     graft.SparkEntry.queries.foreach { case (name, fn) =>
@@ -63,13 +62,17 @@ class QuerySpec extends SparkSpec {
 
   test("containment pair-key pack: packed and unpacked rows identical") {
     import graft.core.TableStats
+    val names = Seq("x_containment_pairs", "x_ngram_jaccard_pairs")
     TableStats.clear()
-    val unpacked = run("x_containment_pairs").collect().toSeq
+    val unpacked = names.map(run(_).collect().toSeq)
     TableStats.analyze(spark, sf)
-    val packedDf = run("x_containment_pairs")
-    assert(packedDf.queryExecution.optimizedPlan.toString
-      .contains("shiftleft"), "with proven ranges the pack must fire")
-    assert(packedDf.collect().toSeq === unpacked)
+    val packedDfs = names.map(run)
+    names.zip(packedDfs).foreach { case (name, df) =>
+      assert(df.queryExecution.optimizedPlan.toString.contains("shiftleft"),
+        s"$name: with proven ranges the pack must fire")
+    }
+    assert(packedDfs.map(_.collect().toSeq) === unpacked)
+    assert(unpacked.forall(_.nonEmpty))
   }
 
   test("minhash est_jaccard is consistent with true jaccard for near-dups") {
